@@ -5,14 +5,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Engine.session(cpus, "graft-bench")
-    // Dev-only selective run, same contract as Verify: unset = all.
-    // A token is an exact query name unless it ends in `*` (prefix) —
-    // bare-prefix matching made exact lists impossible ("ann_recall"
-    // dragged in ann_recall_pq/rp), which broke like-for-like bisects.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(tok =>
-      if (tok.endsWith("*")) name.startsWith(tok.dropRight(1)) else name == tok))
-    val queries = SparkEntry.queries.filter(q => selected(q._1))
+    val gates = Harness.selectedGates
     // Warm-up pass: run every query once (same SF) before the timed pass —
     // the standard measure-the-second-run benchmark discipline, in effect
     // since round 3 (numbers before that are cold-run and not comparable).
@@ -32,9 +25,9 @@ object Bench {
     try SparkEntry.entry(spark).count() catch {
       case t: Throwable => System.err.println(s"[bench] WARM-UP FAILURE entry: $t")
     }
-    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try fn(spark, sfDir).count() catch {
-        case t: Throwable => System.err.println(s"[bench] WARM-UP FAILURE $name: $t")
+    gates.foreach { g =>
+      try g.run(spark, sfDir).count() catch {
+        case t: Throwable => System.err.println(s"[bench] WARM-UP FAILURE ${g.name}: $t")
       }
     }
     val coldTotal = (System.nanoTime() - coldT0) / 1e9
@@ -68,24 +61,20 @@ object Bench {
     // itself, not only on stderr.
     sampleCanary()
     val results: Seq[(String, Either[String, Double])] =
-      queries.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, fn), i) =>
+      gates.zipWithIndex.map { case (g, i) =>
         if (i > 0 && i % canaryEvery == 0) sampleCanary()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); name -> Right((System.nanoTime() - t0) / 1e9) }
+        try { g.run(spark, sfDir).count(); g.name -> Right((System.nanoTime() - t0) / 1e9) }
         catch { case t: Throwable =>
-          System.err.println(s"[bench] FAILURE $name: $t")
-          name -> Left(Option(t.getMessage).getOrElse(t.getClass.getName))
+          System.err.println(s"[bench] FAILURE ${g.name}: $t")
+          g.name -> Left(Option(t.getMessage).getOrElse(t.getClass.getName))
         }
       }
     sampleCanary()
     // 3-decimal (millisecond) formatting: ms resolution is below run-to-run
     // noise and keeps lines short (the driver's tail capture is bounded).
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+    import Harness.{jsonString => jstr}
     def qmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => jstr(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val ok = results.collect { case (k, Right(v)) => k -> v }
@@ -97,16 +86,8 @@ object Bench {
     val emap = errs.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     // every committed artifact self-identifies the code it measured
-    // (round-11 verdict #8) — "-dirty" when the working tree has
-    // uncommitted changes, so a number can never masquerade as a
-    // clean-SHA measurement
-    val commit = try {
-      val sha = scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD")).!!.trim
-      val dirty = scala.sys.process.Process(
-        Seq("git", "status", "--porcelain")).!!.trim.nonEmpty
-      if (dirty) sha + "-dirty" else sha
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
+    // (round-11 verdict #8)
+    val commit = Harness.commit
     // Box-speed canary (round-12 verdict #5/#7): q13_scalar_fns is a pure
     // scalar-codegen scan whose cost is plan-stable (~0.1 s) and code-
     // change-insensitive, so cross-round tables can normalize out the
@@ -127,25 +108,9 @@ object Bench {
       if (validCanaries.isEmpty) -1.0 else validCanaries(validCanaries.size / 2)
     val canaryNorm =
       if (canaryMedian > 0) total * (canaryRefSec / canaryMedian) else -1.0
-    // Gates whose TIMED pass reads a PlanCache-warm materialized
-    // intermediate (the near-dup pair table / sentence segmentation,
-    // built during the warm-up pass — the production landed-intermediate
-    // shape). Their warm times price the downstream computation only;
-    // the full recompute is priced by the dedicated uncached gates
-    // (dedup_prefix, sent_segment) and by cold_total. Named in the
-    // artifact (round-14 verdict #4) so round-over-round totals can
-    // separate accounting moves from plan wins without re-deriving it.
-    val cachedGates = Seq("dedup_clusters", "dedup_clusters_loop",
-        "dedup_survivors", "dedup_weights", "dup_curve",
-        "sent_dedup", "sent_chunks",
-        // round-16: the sorted-turns table is a PlanCache intermediate
-        // shared by the post-training family (Posttraining.turnsCache),
-        // and the split-leak audit + stats rollup read the landed
-        // pair table (one shared 4/5-threshold cache entry)
-        "chat_assemble", "chat_truncate", "posttrain_curate",
-        "split_leak_audit", "split_leak_stats")
-      .filter(queries.contains)
-    val cachedArr = cachedGates.map(jstr).mkString("[", ",", "]")
+    // named in the artifact (round-14 verdict #4): see Gate.cachedIntermediate
+    val cachedArr =
+      gates.filter(_.cachedIntermediate).map(g => jstr(g.name)).mkString("[", ",", "]")
     val common = s""""value":${fmt(total)},"unit":"sec","n_queries":${results.size},""" +
       s""""n_err":${errs.size},"cold_total":${fmt(coldTotal)},"warm_total":${fmt(total)},""" +
       s""""canary_sec":${fmt(canary)},"canary_series":$canaryArr,""" +
@@ -174,7 +139,7 @@ object Bench {
     // tracked full artifact with a partial one; it gets a suffixed file
     // unless the caller named an output explicitly.
     val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT").getOrElse(
-      if (only.isDefined) "BENCH_PARTIAL.json" else "BENCH_FULL.json")
+      if (Harness.only.isDefined) "BENCH_PARTIAL.json" else "BENCH_FULL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case t: Throwable => System.err.println(s"[bench] could not write $outPath: $t") }

@@ -21,19 +21,7 @@ object Engine {
     * SQL-level ones (AQE, shuffle partitions) matter for plan shape.
     */
   def session(cpus: Int = 32, appName: String = "graft"): SparkSession = {
-    // RETIRED as a default in round 14 (was 256 in round 13, added for
-    // AQE parallelism headroom on the heavy verify joins): a same-box
-    // A/B at the round-14 SHA measured the finer initial granularity a
-    // WASH at 1× (90.86 s vs 90.70 s full suite) and a clear LOSS at
-    // 10× on the very queries it was meant to help — dedup_containment
-    // 50.4 → 24.7 s, the clustering family ~0.65×, heavy-gate total
-    // 98.2 → 71.2 s with the override off (numbers in STRESS.md §r14).
-    // The r12 beneficiaries were the PRE-shuffle_hash verify plans; with
-    // builds pinned to per-partition sets slices, 8× more shuffle tasks
-    // is pure scheduling/locality overhead. "0" = leave Spark's default
-    // (initial = shuffle.partitions); any value sets the conf for A/B.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "0")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       // native expressions (graft.functions.*) enter through the public
@@ -74,6 +62,9 @@ object Engine {
       // build.sbt already sizes for hundreds of codegen units.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.adaptive.enabled", "true")
+      // AQE's initial partition count stays Spark's default (=
+      // shuffle.partitions): a finer 256 measured a wash at 1× and a loss
+      // at 10× on the heavy joins it was meant to help (STRESS.md §r14)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // events.ts is parquet TIMESTAMP(NANOS) which Spark 4 refuses by
       // default; read as Long (ns since epoch) and do exact integer time
@@ -81,9 +72,6 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val spark = (if (initParts == "0") builder
-      else builder.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -110,16 +98,17 @@ object Engine {
     * rewritten path (a regenerated temp fixture inside one JVM — the
     * r19 ADVICE stale-read trap) bumps the file/dir mtime, so the stale
     * entry simply stops being hit and the schema is re-inferred. The
-    * stat is one local metadata call (~µs) per table reference —
+    * stat is one metadata call per table reference through the path's
+    * Hadoop FileSystem (so a remote URI is keyed on its real mtime too),
     * noise next to the listing + footer read it avoids; entries are a
     * few hundred bytes against a bounded fixture-path population, so
     * stale keys need no eviction.
     */
   private[graft] def cachedSchema(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
-    // local-path fixtures only (testdata dirs, temp gate dirs); a
-    // non-local URI stats as mtime 0 and simply caches on path alone
-    val mtime = new java.io.File(path.stripPrefix("file:")).lastModified()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
     schemaCache.computeIfAbsent((path, mtime),
       _ => spark.read.parquet(path).schema)
   }

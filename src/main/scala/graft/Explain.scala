@@ -1,25 +1,25 @@
 package graft
 
-/** Plan inspector: `runMain graft.Explain [sfDir] [query ...]` prints the
-  * formatted physical plan of the named SparkEntry queries (all when none
-  * named) — the feedback loop for the 100 TB design review: check
-  * PushedFilters/ReadSchema on scans, broadcast vs shuffle join choices,
-  * and WholeStageCodegen span width.
+/** Plan inspector: `runMain graft.Explain [sfDir] [gate ...]` prints the
+  * formatted physical plan of the named SparkEntry gates (all when none
+  * named; a name ending in `*` is a prefix) — the feedback loop for the
+  * 100 TB design review: check PushedFilters/ReadSchema on scans,
+  * broadcast vs shuffle join choices, and WholeStageCodegen span width.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
+    val tokens = Some(args.drop(1).toSeq).filter(_.nonEmpty)
+    val unknown = tokens.toSeq.flatten.filter(t => Harness.select(Some(Seq(t))).isEmpty)
     if (unknown.nonEmpty) {
-      System.err.println(s"unknown queries: ${unknown.mkString(", ")}\n" +
-        s"available: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+      System.err.println(s"unknown gates: ${unknown.mkString(", ")}\n" +
+        s"available: ${Harness.select(None).map(_.name).mkString(", ")}")
       sys.exit(2)
     }
     val spark = Engine.session(cpus = 4, appName = "graft-explain")
-    names.foreach { name =>
-      println(s"\n===================== $name =====================")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    Harness.select(tokens).foreach { g =>
+      println(s"\n===================== ${g.name} =====================")
+      g.run(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -5,9 +5,9 @@ import graft.operators.{Analytics, Clustering, Dedup, HeavyHitters, Monitoring, 
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every entry in [[queries]] is one operator/workload from SURVEY.md §2's
-  * inventory (or a pipeline extension); [[oracleSql]] carries the DuckDB
-  * equivalent the driver hash-compares against at sf0.01. Column names and
+  * Every entry in [[gates]] is one operator/workload from SURVEY.md §2's
+  * inventory (or a pipeline extension) with the DuckDB equivalent the
+  * correctness gate hash-compares against at sf0.01. Column names and
   * rounding are aligned on both sides by construction.
   */
 object SparkEntry {
@@ -16,345 +16,40 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- relational core (Catalyst-native generalizations of §2.3/§2.4)
-    "q1_pricing_summary"   -> (Relational.q1PricingSummary(_, _)),
-    "q2_market_share"      -> (Relational.q2MarketShare(_, _)),
-    "q3_top_orders"        -> (Relational.q3TopOrders(_, _)),
-    "q4_order_priority"    -> (Relational.q4OrderPriority(_, _)),
-    "q5_local_supplier"    -> (Relational.q5LocalSupplierVolume(_, _)),
-    "q6_forecast_revenue"  -> (Relational.q6ForecastRevenue(_, _)),
-    "q7_top_per_customer"  -> (Relational.q7TopOrdersPerCustomer(_, _)),
-    "topk_agg"             -> (Relational.topkAggOrders(_, _)),
-    "q8_running_revenue"   -> (Relational.q8RunningRevenue(_, _)),
-    "q9_set_ops"           -> (Relational.q9SetOps(_, _)),
-    "q10_anti_join"        -> (Relational.q10CustomersWithoutOrders(_, _)),
-    "q11_rollup"           -> (Relational.q11RollupCustomers(_, _)),
-    "q12_argmax"           -> (Relational.q12ArgmaxCustomer(_, _)),
-    "q13_scalar_fns"       -> (Relational.q13ScalarFunctions(_, _)),
-    "q14_events_hourly"    -> (Relational.q14EventsHourly(_, _)),
-    "q15_distinct_agg"     -> (Relational.q15DistinctAgg(_, _)),
-    "q16_asof_join"        -> (Relational.q16AsofJoin(_, _)),
-    "q17_json_props"       -> (Relational.q17JsonProps(_, _)),
-    "q18_sketches"         -> (Relational.q18Sketches(_, _)),
-    "q19_pivot"            -> (Relational.q19Pivot(_, _)),
-    // --- second-tier analytics (ordered/moment stats, sessions, windows)
-    "q20_percentiles"      -> (Analytics.q20Percentiles(_, _)),
-    "q21_stats"            -> (Analytics.q21Stats(_, _)),
-    "q22_sessions"         -> (Analytics.q22Sessions(_, _)),
-    "q23_grouping_sets"    -> (Analytics.q23GroupingSets(_, _)),
-    "q24_window_suite"     -> (Analytics.q24WindowSuite(_, _)),
-    "q25_tfidf"            -> (Analytics.q25Tfidf(_, _)),
-    "q26_correlated"       -> (Analytics.q26Correlated(_, _)),
-    "q27_range_window"     -> (Analytics.q27RangeWindow(_, _)),
-    "q28_array_fns"        -> (Analytics.q28ArrayFns(_, _)),
-    "q29_dates_regex"      -> (Analytics.q29DatesRegex(_, _)),
-    "q30_unpivot"          -> (Analytics.q30Unpivot(_, _)),
-    "q31_resample"         -> (Analytics.q31Resample(_, _)),
-    "q32_full_outer"       -> (Relational.q32FullOuter(_, _)),
-    "q33_multiset_ops"     -> (Relational.q33MultisetOps(_, _)),
-    "q34_lateral_topk"     -> (Relational.q34LateralTopk(_, _)),
-    "cohort_retention"     -> (Analytics.cohortRetention(_, _)),
-    "funnel_stages"        -> (Analytics.funnelStages(_, _)),
-    "skew_salted_agg"      -> (Analytics.skewSaltedAgg(_, _)),
-    "skew_split_join"      -> (Skew.skewSplitJoinEvents(_, _)),
-    "bucket_join"          -> (Skew.bucketJoinOrders(_, _)),
-    "hh_heavy_hitters"     -> (HeavyHitters.frequentUsers(_, _)),
-    // --- reference workloads A/B/C (SURVEY §2.3) on driver testdata
-    "wc_wordcount"         -> (Workloads.wcDocuments(_, _)),
-    "vote_condorcet"       -> (Workloads.voteCondorcet(_, _)),
-    "vote_winner"          -> (Workloads.voteWinner(_, _)),
-    "trace_contact"        -> (Workloads.traceContacts(_, _)),
-    // --- the MapleJuice engine surface itself (SURVEY §2.1 E1-E11)
-    "mj_wordcount"         -> (Workloads.mjWordCount(_, _)),
-    "mj_wordcount_exe"     -> (Workloads.mjWordCountExe(_, _)),
-    "mj_wordcount_range"   -> (Workloads.mjWordCountRange(_, _)),
-    "line_table_keys"      -> (sources.LineTable.keyStats(_, _)),
-    "line_table_rt"        -> (sources.LineTable.roundTrip(_, _)),
-    "stream_line_rt"       -> (sources.LineTable.streamRoundTrip(_, _)),
-    // --- training-data pipeline: dedup (SURVEY §7.2-M6)
-    "dedup_exact"          -> (Dedup.exactDedup(_, _)),
-    "dedup_jaccard"        -> (Dedup.ngramJaccard(_, _)),
-    "dedup_prefix"         -> (Dedup.prefixJaccardDocs(_, _)),
-    "dedup_minhash_lsh"    -> (Dedup.minhashLsh(_, _)),
-    "dedup_simhash"        -> (Dedup.simhashDocs(_, _)),
-    "dedup_clusters"       -> (Dedup.dedupClusters(_, _)),
-    "dedup_clusters_loop"  -> (Dedup.dedupClustersLoop(_, _)),
-    "dedup_survivors"      -> (Dedup.dedupSurvivors(_, _)),
-    "decon_survivors"      -> (Dedup.deconSurvivors(_, _)),
-    "decon_bloom"          -> (Dedup.deconBloomSurvivors(_, _)),
-    "decon_report"         -> (Dedup.deconReportDocs(_, _)),
-    "decon_overlap"        -> (Dedup.deconOverlapDocs(_, _)),
-    "ngram_coverage"       -> (Dedup.ngramCoverageDocs(_, _)),
-    "dup_stats"            -> (Dedup.dupStatsDocs(_, _)),
-    "ingest_dedup"         -> (Dedup.ingestDedupDocs(_, _)),
-    "dedup_substr"         -> (Dedup.substrDupStatsDocs(_, _)),
-    "dedup_span_rm"        -> (Dedup.spanRemoveDocs(_, _)),
-    "dedup_norm"           -> (Dedup.normDedupDocs(_, _)),
-    "snapshot_diff"        -> (Dedup.snapshotDiffDocs(_, _)),
-    "cdc_apply"            -> (Dedup.cdcApplyDocs(_, _)),
-    "dedup_containment"    -> (Dedup.containmentDocs(_, _)),
-    "dedup_weights"        -> (Dedup.softDedupWeightsDocs(_, _)),
-    "dup_curve"            -> (Dedup.dupCurveDocs(_, _)),
-    "minhash_mergeable"    -> (Dedup.minhashMergeableDocs(_, _)),
-    "corpus_card"          -> (Monitoring.corpusCardDocs(_, _)),
-    // --- training-data pipeline: similarity search over embeddings
-    "ann_topk"             -> (Similarity.annBruteForce(_, _)),
-    "ann_lsh"              -> (Similarity.annLsh(_, _)),
-    "ann_recall"           -> (Similarity.annRecall(_, _)),
-    "ann_mrr"              -> (Similarity.annMrr(_, _)),
-    "ann_recall_ivf"       -> (Similarity.annRecallIvf(_, _)),
-    "ann_recall_pq"        -> (Similarity.annRecallPq(_, _)),
-    "ivf_upsert"           -> (Similarity.ivfUpsertDocs(_, _)),
-    "bitext_mine"          -> (Similarity.bitextMarginDocs(_, _)),
-    "bitext_mine_ivf"      -> (Similarity.bitextMarginIvfDocs(_, _)),
-    "source_overlap"       -> (Monitoring.sourceOverlapDocs(_, _)),
-    "quality_calibration"  -> (QualityModel.calibrationDocs(_, _)),
-    "weak_labels"          -> (QualityModel.weakLabelsDocs(_, _)),
-    "label_agreement"      -> (QualityModel.labelAgreementDocs(_, _)),
-    "hll_mergeable"        -> (Monitoring.hllMergeableDocs(_, _)),
-    "kanon_audit"          -> (Monitoring.kanonDocs(_, _)),
-    "ldiv_audit"           -> (Monitoring.ldivDocs(_, _)),
-    "text_entropy"         -> (TextAnalysis.tokenEntropyDocs(_, _)),
-    "ann_ivf"              -> (Similarity.annIvf(_, _)),
-    "ann_ivf_kmeans"       -> (Similarity.annIvfKmeans(_, _)),
-    "ann_ivf_kmeans_sampled" -> (Similarity.annIvfKmeansSampled(_, _)),
-    "ann_recall_ivf_kmeans" -> (Similarity.annRecallIvfKmeans(_, _)),
-    "ann_recall_ivf_sampled" -> (Similarity.annRecallIvfSampled(_, _)),
-    "ivf_pq_trained_topk"  -> (Similarity.ivfPqTrainedTopKDocs(_, _)),
-    "ann_recall_ivf_pq_trained" -> (Similarity.annRecallIvfPqTrained(_, _)),
-    "ivf_pq_trained_sampled" -> (Similarity.ivfPqTrainedSampledTopKDocs(_, _)),
-    "ann_recall_ivf_pq_sampled" -> (Similarity.annRecallIvfPqSampled(_, _)),
-    "embed_neardup"        -> (Similarity.embedNearDup(_, _)),
-    "kmeans_assign"        -> (Clustering.kmeansAssign(_, _)),
-    "kmeans_fixed_assign"  -> (Clustering.kmeansFixedAssign(_, _)),
-    "semdedup"             -> (Clustering.semDedupDocs(_, _)),
-    "pq_codes"             -> (Similarity.pqCodesDocs(_, _)),
-    "pq_trained_codes"     -> (Similarity.pqTrainedCodesDocs(_, _)),
-    "pq_adc_topk"          -> (Similarity.pqAdcTopKDocs(_, _)),
-    "ivf_pq_topk"          -> (Similarity.ivfPqTopKDocs(_, _)),
-    "hard_negatives"       -> (Similarity.hardNegativesDocs(_, _)),
-    "embed_quantize_i8"    -> (Similarity.quantizeI8Docs(_, _)),
-    "ann_i8_topk"          -> (Similarity.i8TopKDocs(_, _)),
-    "matryoshka_topk"      -> (Similarity.matryoshkaTopKDocs(_, _)),
-    "rp_project"           -> (Similarity.rpProjectDocs(_, _)),
-    "ann_rp_topk"          -> (Similarity.rpTopKDocs(_, _)),
-    "ann_recall_rp"        -> (Similarity.annRecallRp(_, _)),
-    "embed_binarize"       -> (Similarity.binarizeDocs(_, _)),
-    "embed_center_binarize" -> (Similarity.centerBinarizeDocs(_, _)),
-    "ann_ham_topk"         -> (Similarity.hammingTopKDocs(_, _)),
-    "ann_ham_lsh"          -> (Similarity.hammingLshTopKDocs(_, _)),
-    "ann_recall_ham_lsh"   -> (Similarity.annRecallHamLsh(_, _)),
-    "ann_ham_rerank"       -> (Similarity.hammingRerankDocs(_, _)),
-    "ann_recall_ham"       -> (Similarity.annRecallHam(_, _)),
-    "pq_rerank_topk"       -> (Similarity.pqRerankTopKDocs(_, _)),
-    "ann_recall_pq_rerank" -> (Similarity.annRecallPqRerank(_, _)),
-    "pq_trained_rerank"    -> (Similarity.pqTrainedRerankTopKDocs(_, _)),
-    "ann_recall_pq_trained" -> (Similarity.annRecallPqTrained(_, _)),
-    "ann_lsh_mp"           -> (Similarity.annLshMp(_, _)),
-    "ann_recall_lsh_mp"    -> (Similarity.annRecallLshMp(_, _)),
-    // --- training-data pipeline: post-training (SFT / preference) prep
-    "dpo_pairs"            -> (Posttraining.dpoPairsDocs(_, _)),
-    "chat_assemble"        -> (Posttraining.chatAssembleDocs(_, _)),
-    "grpo_advantage"       -> (Posttraining.grpoAdvantageDocs(_, _)),
-    "reward_norm"          -> (Posttraining.rewardNormDocs(_, _)),
-    "chat_truncate"        -> (Posttraining.chatTruncateDocs(_, _)),
-    "stream_dpo"           -> (streaming.StreamQueries.dpoEvents(_, _)),
-    "stream_best_of_n"     -> (streaming.StreamQueries.bestOfNEvents(_, _)),
-    "posttrain_curate"     -> (Posttraining.posttrainCurateDocs(_, _)),
-    "pass_at_k"            -> (Posttraining.passAtKDocs(_, _)),
-    "best_of_n"            -> (Posttraining.bestOfNDocs(_, _)),
-    "bt_scores"            -> (Posttraining.btScoresDocs(_, _)),
-    "knn_classify"         -> (Similarity.knnClassifyDocs(_, _)),
-    "knn_classify_ivf"     -> (Similarity.knnClassifyIvfDocs(_, _)),
-    "label_centroids"      -> (Clustering.labelCentroidsDocs(_, _)),
-    "embed_drift"          -> (Clustering.embedDriftDocs(_, _)),
-    "balanced_assign"      -> (Clustering.balancedAssignDocs(_, _)),
-    "kcenter_coreset"      -> (Clustering.kCenterCoresetDocs(_, _)),
-    // --- training-data pipeline: text analysis
-    "text_stats"           -> (TextAnalysis.textStats(_, _)),
-    "text_quality"         -> (TextAnalysis.qualityScore(_, _)),
-    "text_langid"          -> (TextAnalysis.langId(_, _)),
-    "text_fingerprint"     -> (TextAnalysis.fingerprint(_, _)),
-    "text_winnow"          -> (TextAnalysis.winnowDocs(_, _)),
-    "text_repetition"      -> (TextAnalysis.repetition(_, _)),
-    "text_pii_redact"      -> (TextAnalysis.piiRedactDocs(_, _)),
-    "ngram_lm"             -> ((s, d) => TextAnalysis.ngramLm(s, d)),
-    "doc_chunks"           -> (TextAnalysis.docChunksDocs(_, _)),
-    "vocab_coverage"       -> (TextAnalysis.vocabCoverageDocs(_, _)),
-    "filter_cascade"       -> (TextAnalysis.filterCascade(_, _)),
-    "text_normalize"       -> (TextAnalysis.normFingerprint(_, _)),
-    "text_novelty"         -> (TextAnalysis.noveltyDocs(_, _)),
-    "doc_perplexity"       -> (TextAnalysis.docPerplexityDocs(_, _)),
-    "bpe_pairs"            -> (TextAnalysis.bpePairCountsDocs(_, _)),
-    "bpe_encode"           -> (TextAnalysis.bpeEncodeDocs(_, _)),
-    "bpe_fertility"        -> (TextAnalysis.bpeFertilityDocs(_, _)),
-    "unigram_encode"       -> (TextAnalysis.unigramEncodeDocs(_, _)),
-    "wordpiece_encode"     -> (TextAnalysis.wordpieceEncodeDocs(_, _)),
-    "tok_compare"          -> (TextAnalysis.tokenizerCompareDocs(_, _)),
-    "fim_transform"        -> (TextAnalysis.fimTransformDocs(_, _)),
-    "t5_spans"             -> (TextAnalysis.t5SpansDocs(_, _)),
-    // --- sentence-aware family (synthesized punctuation, see Sentences)
-    "sent_segment"         -> (operators.Sentences.segmentDocs(_, _)),
-    "sent_dedup"           -> (operators.Sentences.dedupDocs(_, _)),
-    "sent_chunks"          -> (operators.Sentences.chunksDocs(_, _)),
-    "lang_balance"         -> ((s, d) =>
-      operators.Sampling.langBalance(graft.Engine.Tables(s, d).documents)),
-    "quality_ntile"        -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Ranking.distributedNtile(
-        TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
-        .select(col("doc_id"), col("quality"), col("rank"), col("bin"))
-        .orderBy(col("doc_id"))
-    }),
-    // quality-proportional soft filter: decile bin b keeps ~b/10 of its
-    // docs, decided by the same md5 bucket gate as sample_det
-    // cross-split near-dup leakage audit: the dedup_jaccard pair set with
-    // both sides' split labels derived in-row (zero extra joins/shuffles)
-    "split_leak_audit"     -> ((s, d) => {
-      operators.Dedup.splitLeakAudit(
-        graft.Engine.Tables(s, d).documents, SplitWeights, SplitNames)
-    }),
-    "split_leak_stats"     -> ((s, d) => {
-      operators.Dedup.splitLeakStats(
-        graft.Engine.Tables(s, d).documents, SplitWeights, SplitNames)
-    }),
-    "split_assign"         -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.splitAssign(
-          graft.Engine.Tables(s, d).documents.select("doc_id"),
-          "doc_id", SplitWeights, SplitNames)
-        .select(col("doc_id"), col("split")).orderBy(col("doc_id"))
-    }),
-    // leakage-safe GROUPED split: keyed on source, so every doc of a
-    // source (where near-dups concentrate) lands in the same split
-    "group_split"          -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.splitAssign(
-          graft.Engine.Tables(s, d).documents.select("doc_id", "source"),
-          "source", SplitWeights, SplitNames, salt = "gsplit:")
-        .select(col("doc_id"), col("source"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-    // curriculum order: quality-decile phases descending, hash-shuffled
-    // within each phase, exact global rank with no corpus-wide window
-    "curriculum_order"     -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val binned = operators.Ranking.distributedNtile(
-        TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
-        .select(col("doc_id"), col("bin"))
-      operators.Ranking.curriculumOrder(binned, "bin", "doc_id")
-        .select(col("doc_id"), col("bin"), col("train_rank"))
-        .orderBy(col("doc_id"))
-    }),
-    // DSIR importance weights: target LM = the src0 slice, raw LM = the
-    // full corpus; micro-nat integer sums → engine-exact
-    "dsir_weights"         -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.dsirWeights(
-        graft.Engine.Tables(s, d).documents, col("source") === "src0")
-    }),
-    "quality_logit"        -> (QualityModel.logitScoreDocs(_, _)),
-    "weighted_sample"      -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val scored = operators.Ranking.distributedNtile(
-        TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
-      operators.Sampling.weightedSample(
-          scored.withColumn("w", col("bin") / 10.0), "doc_id", "w")
-        .select(col("doc_id"), col("bin")).orderBy(col("doc_id"))
-    }),
-    // --- training-data pipeline: deterministic corpus shuffle
-    "shuffle_train"        -> ((s, d) =>
-      operators.Sampling.trainOrderShuffle(
-        graft.Engine.Tables(s, d).documents.select("doc_id"), "doc_id")),
-    // --- training-data pipeline: deterministic sampling
-    "sample_det"           -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.deterministicSample(
-        graft.Engine.Tables(s, d).documents, "doc_id", 0.3)
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
-    "strat_sample"         -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.stratifiedSample(
-        graft.Engine.Tables(s, d).documents, "lang", "doc_id",
-        StratFractions, "strat:")
-        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-    }),
-    // --- training-data pipeline: per-domain capping + shard packing
-    "source_cap"           -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      operators.Sampling.capPerGroup(
-        graft.Engine.Tables(s, d).documents.select(col("doc_id"), col("source")),
-        "source", "doc_id", 15)
-        .orderBy(col("doc_id"))
-    }),
-    "mix_temperature"      -> ((s, d) => operators.Sampling.mixTemperature(
-      graft.Engine.Tables(s, d).documents, MixTempBudget)),
-    "mix_upsample"         -> ((s, d) => operators.Sampling.mixUpsample(
-      graft.Engine.Tables(s, d).documents, MixUpBudget)),
-    "length_batches"       -> ((s, d) =>
-      Packing.lengthBatchesDocs(s, d, LengthBatchBudget)),
-    "pack_shards"          -> ((s, d) => Packing.packShardsDocs(s, d, PackBudget)),
-    "pack_efficiency"      -> ((s, d) =>
-      Packing.packEfficiencyDocs(s, d, LengthBatchBudget)),
-    "pack_sequences"       -> ((s, d) => Packing.packSequencesDocs(s, d, SeqLen)),
-    "pack_masks"           -> ((s, d) => Packing.packMasksDocs(s, d, SeqLen)),
-    "mix_budget"           -> ((s, d) => Packing.mixBudgetDocs(s, d, MixBudget)),
-    "bm25_topk"            -> (Retrieval.bm25Docs(_, _)),
-    "hybrid_topk"          -> (Retrieval.hybridDocs(_, _)),
-    "maxsim_topk"          -> (Retrieval.maxSimDocs(_, _)),
-    // --- training-data pipeline: multimodal binary columns
-    "mm_metadata"          -> ((s, d) => Multimodal.blobMetadata(s, d).drop("content_hash")),
-    "mm_decode"            -> (Multimodal.decodeDims(_, _)),
-    "mm_frames"            -> (Multimodal.sampleFrames(_, _)),
-    // gate on the decode's EXACT integer histogram (square-sum + md5 of
-    // the 64 zero-filled counts) — engine-exact, so DuckDB hash-gates
-    // the full decode path; the Float normalization of the embedding is
-    // MultimodalSpec-pinned (no cross-engine promise on Float division)
-    "mm_features"          -> ((s, d) =>
-      Multimodal.extractFeaturesAudit(s, d).drop("embedding")),
-    // cross-modal retrieval: text-side queries → trained-centroid IVF
-    // over image-side features (integer byte-histogram domain, so the
-    // whole funnel — train, assign, probe, cosine — is engine-exact)
-    "mm_xmodal_topk"       -> ((s, d) => Multimodal.xmodalTopK(s, d)),
-    // --- streaming surface, driven through the gate: each entry runs a
-    // REAL Structured Streaming query (file source → transform →
-    // idempotent parquet sink) to completion and returns the landed
-    // output, so the DuckDB oracle checks genuine streaming results —
-    // stateless admission, dropDuplicatesWithinWatermark, stateful
-    // mapGroups funnel, watermarked append windows, budget admission.
-    "stream_quality"       -> (streaming.StreamQueries.qualityDocs(_, _)),
-    "stream_dedup"         -> (streaming.StreamQueries.dedupDocs(_, _)),
-    "stream_funnel"        -> (streaming.StreamQueries.funnelEvents(_, _)),
-    "stream_hourly"        -> (streaming.StreamQueries.hourlyEvents(_, _)),
-    "stream_mixdrift"      -> (streaming.StreamQueries.mixDriftEvents(_, _)),
-    "stream_admit"         -> (streaming.StreamQueries.admitDocs(_, _)),
-    "stream_quarantine"    -> (streaming.StreamQueries.quarantineDocs(_, _)),
-    "stream_sessions"      -> (streaming.StreamQueries.sessionsEvents(_, _)),
-    "stream_join"          -> (streaming.StreamQueries.joinEvents(_, _)),
-    "stream_enrich"        -> (streaming.StreamQueries.enrichEvents(_, _)),
-    "stream_topk"          -> (streaming.StreamQueries.leaderboardEvents(_, _)),
-    "stream_fingerprint"   -> (streaming.StreamQueries.fingerprintDocs(_, _)),
-    "stream_upsert"        -> (streaming.StreamQueries.upsertVectors(_, _)),
-    "stream_cdc"           -> (streaming.StreamQueries.cdcDocs(_, _)),
-    "stream_line_ingest"   -> (streaming.StreamQueries.lineIngest(_, _)),
-    "stream_weak_labels"   -> (streaming.StreamQueries.weakLabelDocs(_, _)),
-    "stream_pipeline"      -> (streaming.StreamQueries.pipelineDocs(_, _)),
-    // --- the composed curation pipeline (dedup → decon → quality →
-    // sample) as one plan, gated end to end
-    "pipeline_curate"      -> (operators.Pipeline.curateDocs(_, _)),
-    // --- link-graph centrality (crawl prioritization): fixed-iteration
-    // integer-micro PageRank over the synthesized doc link graph
-    "graph_pagerank"       -> (operators.Graph.pageRankDocs(_, _)),
-    // --- data-layout optimization: Z-order file assignment + the
-    // per-file min/max manifest data skipping prunes on
-    "zorder_layout"        -> (operators.Layout.zorderLineitem(_, _)),
-    "hilbert_layout"       -> (operators.Layout.hilbertLineitem(_, _)),
-    "skip_audit"           -> (operators.Layout.skipAuditLineitem(_, _)),
-    "range_join"           -> (operators.RangeJoin.rangeJoinEvents(_, _)),
-  )
+  /** One gate: an operator or workload from SURVEY.md §2's inventory (or
+    * a pipeline extension) as the Spark function `run(spark, sfDir)`,
+    * and `oracleSql`, its DuckDB equivalent over the same parquet tables,
+    * which the correctness gate hash-compares against at sf0.01.
+    *
+    * `cachedIntermediate` marks a gate whose timed Bench pass reads a
+    * PlanCache-warm materialized intermediate built during the warm-up
+    * pass (the near-dup pair table, the sentence segmentation, the
+    * sorted-turns table of the post-training family), the production
+    * landed-intermediate shape. Its warm time prices the downstream
+    * computation only; the full recompute is priced by the uncached
+    * gates (dedup_prefix, sent_segment) and by Bench's cold_total. Bench
+    * names these gates in its artifact so round-over-round totals can
+    * separate accounting moves from plan wins.
+    */
+  final case class Gate(name: String, run: (SparkSession, String) => DataFrame,
+      oracleSql: String, cachedIntermediate: Boolean = false)
+
+  /** The gate table from its entries, refusing a repeated name (a map
+    * literal would silently keep only one of the two).
+    */
+  private[graft] def registry(entries: Gate*): Seq[Gate] = {
+    val repeated = entries.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(repeated.isEmpty,
+      s"gate names registered twice: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries
+  }
+
+  /** Gate name → Spark function: a view over [[gates]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.run).toMap
+
+  /** Gate name → DuckDB SQL: a view over [[gates]]. */
+  lazy val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracleSql).toMap
 
   /** The engine-portable 60-bit md5 digest, DuckDB spelling — the same
     * value graft computes as `conv(substr(md5(x),1,15),16,10)::long`
@@ -1620,11 +1315,12 @@ object SparkEntry {
          WHERE rk <= 10 ORDER BY q_id, rk"""
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** Every gate, declared once with its Spark function and its oracle
+    * side by side. Lazy: the oracle strings read the helpers above.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  lazy val gates: Seq[Gate] = registry(
+    // --- relational core (Catalyst-native generalizations of §2.3/§2.4)
+    Gate("q1_pricing_summary", Relational.q1PricingSummary(_, _),
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity), 2) AS sum_qty,
          round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -1632,15 +1328,15 @@ object SparkEntry {
          count(*) AS count_order
          FROM lineitem WHERE l_quantity > 0
          GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q2_market_share" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Gate("q2_market_share", Relational.q2MarketShare(_, _),
       """SELECT r_name, n_name, count(*) AS n_customers,
          round(sum(c_acctbal), 2) AS total_acctbal
          FROM customer
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q3_top_orders" ->
+         GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
+    Gate("q3_top_orders", Relational.q3TopOrders(_, _),
       """SELECT o_orderkey, round(rev, 2) AS revenue, o_orderpriority
          FROM orders
          JOIN (SELECT l_orderkey,
@@ -1648,14 +1344,14 @@ object SparkEntry {
                FROM lineitem GROUP BY l_orderkey) r
            ON o_orderkey = l_orderkey
          WHERE o_orderstatus = 'O'
-         ORDER BY rev DESC, o_orderkey LIMIT 10""",
-    "q4_order_priority" ->
+         ORDER BY rev DESC, o_orderkey LIMIT 10"""),
+    Gate("q4_order_priority", Relational.q4OrderPriority(_, _),
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders
          WHERE EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey AND l_quantity >= 25)
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q5_local_supplier" ->
+         GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    Gate("q5_local_supplier", Relational.q5LocalSupplierVolume(_, _),
       """SELECT r_name, n_name,
          round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
          count(*) AS n_items
@@ -1665,61 +1361,61 @@ object SparkEntry {
          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
          JOIN nation ON s_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q6_forecast_revenue" ->
+         GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
+    Gate("q6_forecast_revenue", Relational.q6ForecastRevenue(_, _),
       """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
          count(*) AS n_items
          FROM lineitem
-         WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""",
-    "q7_top_per_customer" ->
+         WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"""),
+    Gate("q7_top_per_customer", Relational.q7TopOrdersPerCustomer(_, _),
       """SELECT o_custkey, rn, o_orderkey, round(o_totalprice, 2) AS totalprice
          FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                       row_number() OVER (PARTITION BY o_custkey
                         ORDER BY o_totalprice DESC, o_orderkey) AS rn
                FROM orders) t
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
+         WHERE rn <= 3 ORDER BY o_custkey, rn"""),
     // same semantics as q7 on purpose — the Spark side is the bounded
     // topk_structs AGGREGATE plan (map-side k-row heaps, no window sort);
     // q7 keeps the window plan, so the bench carries the A/B every round.
-    "topk_agg" ->
+    Gate("topk_agg", Relational.topkAggOrders(_, _),
       """SELECT o_custkey, rn, o_orderkey, round(o_totalprice, 2) AS totalprice
          FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                       row_number() OVER (PARTITION BY o_custkey
                         ORDER BY o_totalprice DESC, o_orderkey) AS rn
                FROM orders) t
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q8_running_revenue" ->
+         WHERE rn <= 3 ORDER BY o_custkey, rn"""),
+    Gate("q8_running_revenue", Relational.q8RunningRevenue(_, _),
       """SELECT l_suppkey, l_orderkey, l_linenumber,
          strftime(l_shipdate, '%Y-%m-%d') AS ship_day,
          round(sum(l_quantity) OVER (PARTITION BY l_suppkey
            ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty
          FROM lineitem
-         ORDER BY l_suppkey, ship_day, l_orderkey, l_linenumber""",
-    "q9_set_ops" ->
+         ORDER BY l_suppkey, ship_day, l_orderkey, l_linenumber"""),
+    Gate("q9_set_ops", Relational.q9SetOps(_, _),
       """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
          EXCEPT
          SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-         ORDER BY o_custkey""",
-    "q10_anti_join" ->
+         ORDER BY o_custkey"""),
+    Gate("q10_anti_join", Relational.q10CustomersWithoutOrders(_, _),
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-    "q11_rollup" ->
+         ORDER BY c_custkey"""),
+    Gate("q11_rollup", Relational.q11RollupCustomers(_, _),
       """SELECT r_name, n_name, count(*) AS n_customers
          FROM customer
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
          GROUP BY ROLLUP (r_name, n_name)
-         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""",
-    "q12_argmax" ->
+         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST"""),
+    Gate("q12_argmax", Relational.q12ArgmaxCustomer(_, _),
       """SELECT n_name, c_custkey, c_name, round(c_acctbal, 2) AS acctbal
          FROM (SELECT *, row_number() OVER (PARTITION BY c_nationkey
                  ORDER BY c_acctbal DESC, c_custkey) AS rn
                FROM customer) c
          JOIN nation ON c_nationkey = n_nationkey
-         WHERE rn = 1 ORDER BY n_name""",
-    "q13_scalar_fns" ->
+         WHERE rn = 1 ORDER BY n_name"""),
+    Gate("q13_scalar_fns", Relational.q13ScalarFunctions(_, _),
       """SELECT p_partkey,
          upper(p_brand) AS brand_upper,
          length(p_name) AS name_len,
@@ -1728,35 +1424,35 @@ object SparkEntry {
          abs(p_size - 25) AS size_dev,
          round(p_retailprice * 1.1, 2) AS uplift_price,
          CASE WHEN p_size >= 25 THEN 'large' ELSE 'small' END AS size_class
-         FROM part ORDER BY p_partkey""",
-    "q14_events_hourly" ->
+         FROM part ORDER BY p_partkey"""),
+    Gate("q14_events_hourly", Relational.q14EventsHourly(_, _),
       """SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
          count(*) AS n_events, round(sum(value), 2) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q15_distinct_agg" ->
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Gate("q15_distinct_agg", Relational.q15DistinctAgg(_, _),
       """SELECT c_mktsegment,
          count(DISTINCT c_nationkey) AS n_nations,
          count(DISTINCT c_custkey) AS n_customers,
          count(o_orderkey) AS n_orders
          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q16_asof_join" ->
+         GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    Gate("q16_asof_join", Relational.q16AsofJoin(_, _),
       """SELECT p.event_id, p.user_id,
          (SELECT max(epoch_us(c.ts)) FROM events c
           WHERE c.event_type = 'click' AND c.user_id = p.user_id
             AND epoch_us(c.ts) <= epoch_us(p.ts)) AS last_click_us
          FROM events p WHERE p.event_type = 'purchase'
-         ORDER BY p.event_id""",
-    "q17_json_props" ->
+         ORDER BY p.event_id"""),
+    Gate("q17_json_props", Relational.q17JsonProps(_, _),
       """SELECT event_type, count(*) AS n,
          CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
          max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // q18: exact companions hashed; each sketch's error-bound verdict
     // is asserted TRUE (the Spark side computes the sketch for real and
     // compares in-plan — a sketch outside its contract flips a boolean
     // and the hash goes red)
-    "q18_sketches" ->
+    Gate("q18_sketches", Relational.q18Sketches(_, _),
       """WITH u AS (
            SELECT event_type, count(DISTINCT user_id) AS n_users,
              count(*) AS n
@@ -1773,21 +1469,240 @@ object SparkEntry {
          SELECT u.event_type, u.n_users, TRUE AS approx_users_ok,
            p.p50_value, p.p99_value,
            TRUE AS p50_approx_ok, TRUE AS p99_approx_ok
-         FROM u JOIN p USING (event_type) ORDER BY event_type""",
-    "q19_pivot" ->
+         FROM u JOIN p USING (event_type) ORDER BY event_type"""),
+    Gate("q19_pivot", Relational.q19Pivot(_, _),
       """SELECT CAST(user_id % 10 AS BIGINT) AS user_bucket,
          CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click,
          CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS view,
          CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase,
          CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS signup,
          CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS error
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "wc_wordcount" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    // --- second-tier analytics (ordered/moment stats, sessions, windows)
+    Gate("q20_percentiles", Analytics.q20Percentiles(_, _),
+      """SELECT l_returnflag,
+         quantile_cont(l_quantity, 0.25) AS p25,
+         quantile_cont(l_quantity, 0.5) AS p50,
+         quantile_cont(l_quantity, 0.75) AS p75,
+         min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
+         count(*) AS n
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Gate("q21_stats", Analytics.q21Stats(_, _),
+      """SELECT l_returnflag,
+         round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
+         round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price,
+         round(stddev_samp(l_extendedprice), 2) AS stddev_price,
+         round(regr_slope(l_extendedprice, l_quantity), 2) AS slope_price_qty,
+         count(*) AS n
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    // µs resolution on BOTH sides: DuckDB loads TIMESTAMP(NANOS) parquet
+    // at µs, so comparing at ns would flake on sub-µs knife-edge gaps
+    Gate("q22_sessions", Analytics.q22Sessions(_, _),
+      """WITH flagged AS (
+           SELECT user_id, event_id, epoch_us(ts) AS tus,
+             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+                    OR lag(epoch_us(ts)) OVER w IS NULL
+                  THEN 1 ELSE 0 END AS new_session
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
+         numbered AS (
+           SELECT user_id, tus, event_id,
+             CAST(sum(new_session) OVER (PARTITION BY user_id
+               ORDER BY tus, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+           FROM flagged)
+         SELECT user_id, session_id, count(*) AS n_events,
+           min(tus) AS start_us,
+           max(tus) AS end_us,
+           max(tus) - min(tus) AS duration_us
+         FROM numbered GROUP BY user_id, session_id
+         ORDER BY user_id, session_id"""),
+    Gate("q23_grouping_sets", Analytics.q23GroupingSets(_, _),
+      """SELECT r_name, c_mktsegment, count(*) AS n_customers,
+         round(sum(c_acctbal), 2) AS total_acctbal
+         FROM customer
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY CUBE (r_name, c_mktsegment)
+         ORDER BY r_name ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST"""),
+    Gate("q24_window_suite", Analytics.q24WindowSuite(_, _),
+      """SELECT o_custkey, o_orderkey,
+         CAST(row_number() OVER k AS INT) AS rn,
+         CAST(rank() OVER p AS INT) AS prio_rank,
+         CAST(dense_rank() OVER p AS INT) AS prio_dense,
+         round(percent_rank() OVER p, 6) AS prio_prank,
+         CAST(ntile(4) OVER k AS INT) AS tile4,
+         round(lag(o_totalprice, 1) OVER k, 2) AS prev_price,
+         round(lead(o_totalprice, 1) OVER k, 2) AS next_price
+         FROM orders
+         WINDOW k AS (PARTITION BY o_custkey ORDER BY o_orderkey),
+                p AS (PARTITION BY o_custkey ORDER BY o_orderpriority)
+         ORDER BY o_orderkey"""),
+    Gate("q25_tfidf", Analytics.q25Tfidf(_, _),
+      """WITH tf AS (
+           SELECT doc_id, term, count(*) AS tf
+           FROM (SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+                 FROM documents)
+           WHERE length(term) > 0 GROUP BY doc_id, term),
+         df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         scored AS (
+           SELECT tf.doc_id, tf.term, tf.tf, df.df,
+             round(tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)), 6) AS score
+           FROM tf JOIN df USING (term) CROSS JOIN n),
+         ranked AS (
+           SELECT doc_id, term, tf, df, score,
+             CAST(row_number() OVER (PARTITION BY doc_id
+               ORDER BY score DESC, term) AS INT) AS rk
+           FROM scored)
+         SELECT doc_id, rk, term, score, tf, df FROM ranked
+         WHERE rk <= 3 ORDER BY doc_id, rk"""),
+    Gate("q26_correlated", Analytics.q26Correlated(_, _),
+      """SELECT p_brand,
+         round(sum(l_extendedprice) / 7.0, 2) AS avg_weekly,
+         count(*) AS n_small_orders
+         FROM lineitem JOIN part ON p_partkey = l_partkey
+         WHERE l_quantity < (SELECT 0.2 * avg(l_quantity)
+                             FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)
+         GROUP BY p_brand ORDER BY p_brand"""),
+    Gate("q27_range_window", Analytics.q27RangeWindow(_, _),
+      """SELECT event_id, user_id,
+         round(sum(value) OVER w, 2) AS hour_sum,
+         count(*) OVER w AS hour_n
+         FROM events
+         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+         ORDER BY event_id"""),
+    Gate("q28_array_fns", Analytics.q28ArrayFns(_, _),
+      """SELECT l_orderkey,
+           len(qtys) AS n_items,
+           CAST(list_aggregate(qtys, 'sum') AS BIGINT) AS total_qty,
+           len(list_filter(qtys, x -> x > 25)) AS n_heavy,
+           qtys[1] * 2 AS min_qty_x2,
+           qtys[-1] AS max_qty
+         FROM (SELECT l_orderkey,
+                      list_sort(array_agg(CAST(l_quantity AS BIGINT))) AS qtys
+               FROM lineitem GROUP BY l_orderkey)
+         ORDER BY l_orderkey"""),
+    Gate("q29_dates_regex", Analytics.q29DatesRegex(_, _),
+      """SELECT o_orderkey,
+           year(o_orderdate) AS o_year,
+           quarter(o_orderdate) AS o_quarter,
+           month(o_orderdate) AS o_month,
+           day(o_orderdate) AS o_day,
+           epoch_us(date_trunc('month', o_orderdate)) AS month_start_us,
+           date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
+             AS days_since_95,
+           CAST(last_day(CAST(o_orderdate AS DATE)) AS VARCHAR) AS eom,
+           CAST(regexp_extract(o_orderpriority, '^(\d)-', 1) AS INT)
+             AS priority_num,
+           regexp_replace(lower(o_orderpriority), '^\d-', '') AS priority_name
+         FROM orders ORDER BY o_orderkey"""),
+    Gate("q30_unpivot", Analytics.q30Unpivot(_, _),
+      """WITH wide AS (
+           SELECT l_returnflag,
+             CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
+             CAST(count(*) AS DOUBLE) AS n_rows,
+             CAST(max(l_linenumber) AS DOUBLE) AS max_line
+           FROM lineitem GROUP BY l_returnflag)
+         SELECT l_returnflag, measure, val FROM (
+           SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS val FROM wide
+           UNION ALL
+           SELECT l_returnflag, 'n_rows', n_rows FROM wide
+           UNION ALL
+           SELECT l_returnflag, 'max_line', max_line FROM wide)
+         ORDER BY l_returnflag, measure"""),
+    Gate("q31_resample", Analytics.q31Resample(_, _),
+      """WITH ev AS (
+           SELECT user_id, epoch_us(ts) // 3600000000 AS hr, value
+           FROM events WHERE user_id % 50 = 0),
+         h AS (SELECT user_id, hr, max(value) AS hr_max FROM ev GROUP BY 1, 2),
+         s AS (SELECT user_id, min(hr) AS h0, max(hr) AS h1 FROM h GROUP BY 1),
+         slots AS (SELECT user_id, UNNEST(generate_series(h0, h1)) AS hr FROM s),
+         j AS (SELECT sl.user_id, sl.hr, h.hr_max
+               FROM slots sl LEFT JOIN h ON h.user_id = sl.user_id AND h.hr = sl.hr)
+         SELECT user_id, CAST(hr AS BIGINT) AS hr,
+           hr_max IS NOT NULL AS is_observed,
+           last_value(hr_max IGNORE NULLS) OVER (
+             PARTITION BY user_id ORDER BY hr) AS filled
+         FROM j ORDER BY user_id, hr"""),
+    Gate("q32_full_outer", Relational.q32FullOuter(_, _),
+      """WITH o_open AS (
+           SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_open
+           FROM orders WHERE o_orderstatus = 'O' GROUP BY 1),
+         o_fin AS (
+           SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_fin
+           FROM orders WHERE o_orderstatus = 'F' GROUP BY 1)
+         SELECT coalesce(o_open.o_custkey, o_fin.o_custkey) AS o_custkey,
+           o_open.o_custkey IS NOT NULL AS has_open,
+           o_fin.o_custkey IS NOT NULL AS has_fin,
+           coalesce(n_open, 0) AS n_open,
+           coalesce(n_fin, 0) AS n_fin
+         FROM o_open FULL OUTER JOIN o_fin
+           ON o_open.o_custkey = o_fin.o_custkey
+         ORDER BY 1"""),
+    Gate("q33_multiset_ops", Relational.q33MultisetOps(_, _),
+      """WITH hi AS (SELECT l_orderkey FROM lineitem WHERE l_quantity > 25),
+         disc AS (SELECT l_orderkey FROM lineitem WHERE l_discount > 0.05)
+         SELECT 'except_all' AS tag, l_orderkey
+         FROM (SELECT l_orderkey FROM hi EXCEPT ALL SELECT l_orderkey FROM disc)
+         UNION ALL
+         SELECT 'intersect_all' AS tag, l_orderkey
+         FROM (SELECT l_orderkey FROM hi INTERSECT ALL SELECT l_orderkey FROM disc)
+         ORDER BY tag, l_orderkey"""),
+    Gate("q34_lateral_topk", Relational.q34LateralTopk(_, _),
+      """SELECT n_nationkey, n_name, c_custkey,
+           round(c_acctbal, 2) AS acctbal
+         FROM nation, LATERAL (
+           SELECT c_custkey, c_acctbal FROM customer
+           WHERE c_nationkey = n_nationkey
+           ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
+         ORDER BY n_nationkey, acctbal DESC, c_custkey"""),
+    Gate("cohort_retention", Analytics.cohortRetention(_, _),
+      """WITH e AS (
+           SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
+         c AS (
+           SELECT user_id, day,
+             min(day) OVER (PARTITION BY user_id) AS cohort_day
+           FROM e)
+         SELECT cohort_day, day - cohort_day AS day_offset,
+           count(DISTINCT user_id) AS n_users
+         FROM c GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Gate("funnel_stages", Analytics.funnelStages(_, _), funnelOracleSql),
+    Gate("skew_salted_agg", Analytics.skewSaltedAgg(_, _),
+      """SELECT event_type, count(*) AS n_events,
+         round(sum(value), 2) AS total_value
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    // the hot/cold split is routing only — ANY hot set unions back to
+    // exactly the plain inner join, which is what the oracle states
+    Gate("skew_split_join", Skew.skewSplitJoinEvents(_, _),
+      """SELECT event_id, user_id, event_type, c_mktsegment,
+         round(value, 2) AS value
+         FROM events JOIN customer ON user_id = c_custkey
+         ORDER BY event_id"""),
+    // bucketing is a physical layout choice — the oracle is the plain
+    // join + rollup the bucketed plan must reproduce byte-for-byte
+    Gate("bucket_join", Skew.bucketJoinOrders(_, _),
+      """SELECT o_custkey AS c_custkey, c_mktsegment,
+         count(*) AS n_orders,
+         round(sum(o_totalprice), 2) AS total_spend
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY 1, 2 ORDER BY 1"""),
+    // the sketch pass is recall-guaranteed and the count pass is exact,
+    // so the plain GROUP BY ... HAVING is a true oracle for the
+    // Misra-Gries pipeline
+    Gate("hh_heavy_hitters", HeavyHitters.frequentUsers(_, _),
+      """SELECT user_id, count(*) AS n_events FROM events
+         GROUP BY user_id HAVING count(*) * 2000 >= (SELECT count(*) FROM events)
+         ORDER BY user_id"""),
+    // --- reference workloads A/B/C (SURVEY §2.3) on the fixture tables
+    Gate("wc_wordcount", Workloads.wcDocuments(_, _),
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
                FROM documents)
-         WHERE length(word) > 0 GROUP BY word ORDER BY word""",
-    "vote_condorcet" ->
+         WHERE length(word) > 0 GROUP BY word ORDER BY word"""),
+    Gate("vote_condorcet", Workloads.voteCondorcet(_, _),
       """WITH counted AS (
            SELECT user_id, event_type, count(*) AS n
            FROM events GROUP BY user_id, event_type),
@@ -1817,9 +1732,9 @@ object SparkEntry {
            SELECT CASE WHEN lo_votes * 2 > n THEN lo ELSE hi END AS winner
            FROM pairwise)
          SELECT winner, count(*) AS wins FROM winners
-         GROUP BY winner ORDER BY wins DESC, winner""",
+         GROUP BY winner ORDER BY wins DESC, winner"""),
     // the reference's argmax-only output line (juice_vote_two.go:17-23)
-    "vote_winner" ->
+    Gate("vote_winner", Workloads.voteWinner(_, _),
       """WITH counted AS (
            SELECT user_id, event_type, count(*) AS n
            FROM events GROUP BY user_id, event_type),
@@ -1850,8 +1765,8 @@ object SparkEntry {
            FROM pairwise)
          SELECT winner || ' win!' AS line FROM (
            SELECT winner, count(*) AS wins FROM winners
-           GROUP BY winner ORDER BY wins DESC, winner LIMIT 1)""",
-    "trace_contact" ->
+           GROUP BY winner ORDER BY wins DESC, winner LIMIT 1)"""),
+    Gate("trace_contact", Workloads.traceContacts(_, _),
       """SELECT DISTINCT t.event_id AS name
          FROM (SELECT event_id, user_id, value FROM events
                WHERE event_type = 'view') t
@@ -1859,41 +1774,40 @@ object SparkEntry {
                WHERE event_type = 'error') p
            ON t.user_id = p.user_id
           AND t.value < p.value + 50 AND p.value < t.value + 50
-         ORDER BY name""",
-    "mj_wordcount" ->
+         ORDER BY name"""),
+    // --- the MapleJuice engine surface itself (SURVEY §2.1 E1-E11)
+    Gate("mj_wordcount", Workloads.mjWordCount(_, _),
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
                FROM documents)
-         WHERE length(word) > 0 GROUP BY word ORDER BY word""",
+         WHERE length(word) > 0 GROUP BY word ORDER BY word"""),
     // the literal exe tier computes the same wordcount through external
     // processes (RDD.pipe + one process per key): same oracle
-    "mj_wordcount_exe" ->
+    Gate("mj_wordcount_exe", Workloads.mjWordCountExe(_, _),
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
                FROM documents)
-         WHERE length(word) > 0 GROUP BY word ORDER BY word""",
+         WHERE length(word) > 0 GROUP BY word ORDER BY word"""),
     // range partitioning is placement-only (not output-visible): same oracle
-    "mj_wordcount_range" ->
+    Gate("mj_wordcount_range", Workloads.mjWordCountRange(_, _),
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
                FROM documents)
-         WHERE length(word) > 0 GROUP BY word ORDER BY word""",
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-         FROM documents GROUP BY md5(text) ORDER BY keep_id""",
+         WHERE length(word) > 0 GROUP BY word ORDER BY word"""),
     // the DSv2 line-table round trip: the oracle derives the same
     // per-key rollup straight from documents — a split-boundary bug
     // (lost / duplicated / torn line) cannot hash-match
-    "line_table_keys" -> lineTableOracle,
+    Gate("line_table_keys", sources.LineTable.keyStats(_, _), lineTableOracle),
     // the DSv2 WRITE path round trip (append + truncating overwrite)
     // must land the identical rollup — one shared oracle string
-    "line_table_rt" -> lineTableOracle,
-    // streaming ingest through the same source's MicroBatchStream must
-    // land exactly the batch row set — one shared oracle string
-    "stream_line_ingest" -> lineTableOracle,
+    Gate("line_table_rt", sources.LineTable.roundTrip(_, _), lineTableOracle),
     // streaming WRITE through the source's StreamingWrite (epoch-
     // addressed append) must land the identical rollup too
-    "stream_line_rt" -> lineTableOracle,
+    Gate("stream_line_rt", sources.LineTable.streamRoundTrip(_, _), lineTableOracle),
+    // --- training-data pipeline: dedup (SURVEY §7.2-M6)
+    Gate("dedup_exact", Dedup.exactDedup(_, _),
+      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
+         FROM documents GROUP BY md5(text) ORDER BY keep_id"""),
     // Mirrors the DF-capped scale path with the CORPUS-DERIVED cap
     // (Dedup.derivedDfCap): min of the 99.9%-of-distinct-shingles
     // quantile bound and the 1000-pairs-per-doc candidate-volume budget
@@ -1902,7 +1816,7 @@ object SparkEntry {
     // identical stats. Candidate pairs must share at least one under-cap
     // shingle; the reported value is the exact Jaccard over ALL
     // shingles.
-    "dedup_jaccard" ->
+    Gate("dedup_jaccard", Dedup.ngramJaccard(_, _),
       s"""$jaccardAdaptiveCteSql
          SELECT doc_a, doc_b,
                 round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jac
@@ -1910,56 +1824,285 @@ object SparkEntry {
          JOIN sizes sa ON sa.doc_id = doc_a
          JOIN sizes sb ON sb.doc_id = doc_b
          WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.8
-         ORDER BY doc_a, doc_b""",
-    // the two-keyings leakage rollup over the same uncapped pair set:
-    // doc-keyed labels vs source-grouped labels, counted per keying
-    "split_leak_stats" ->
-      s"""WITH pairs AS ($uncappedJaccardPairsOracle),
-         ps AS (
-           SELECT p.doc_a, p.doc_b, da.source AS src_a, db.source AS src_b
-           FROM pairs p
-           JOIN documents da ON da.doc_id = p.doc_a
-           JOIN documents db ON db.doc_id = p.doc_b),
-         labeled AS (
-           SELECT 'doc' AS keying,
-             ${splitCaseOnSql("doc_a")} AS split_a,
-             ${splitCaseOnSql("doc_b")} AS split_b
-           FROM ps
-           UNION ALL
-           SELECT 'source',
-             ${splitCaseOnSql("src_a", "gsplit:")},
-             ${splitCaseOnSql("src_b", "gsplit:")}
-           FROM ps)
-         SELECT keying, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_leaked,
-           CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
-             * 1000000 // count(*) AS BIGINT) AS leak_micro
-         FROM labeled GROUP BY keying ORDER BY keying""",
-    // cross-split leakage: the pair set is the EXACT prefix screen's
-    // (dedup_prefix's uncapped oracle — the audit reads the landed pair
-    // table it shares with split_leak_stats), each side's split derived from its
-    // own id by the split_assign md5 CASE — pairs whose splits differ
-    // are the contamination work-list
-    "split_leak_audit" ->
-      s"""WITH pairs AS ($uncappedJaccardPairsOracle)
-         SELECT doc_a, doc_b,
-           ${splitCaseOnSql("doc_a")} AS split_a,
-           ${splitCaseOnSql("doc_b")} AS split_b,
-           jac
-         FROM pairs
-         WHERE ${splitCaseOnSql("doc_a")} <> ${splitCaseOnSql("doc_b")}
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
     // The PPJoin prefix screen is EXACT (zero recall loss), so its oracle
     // is the full UNCAPPED Jaccard pair set — stated without any cap or
     // prefix machinery. DuckDB never reproduces the xxhash64 prefix
     // order; a single pair the prefix filter wrongly dropped (or a float
     // ceil that shortened a prefix) hash-mismatches here.
-    "dedup_prefix" -> uncappedJaccardPairsOracle,
+    Gate("dedup_prefix", Dedup.prefixJaccardDocs(_, _), uncappedJaccardPairsOracle),
+    // LSH output = the exact-Jaccard pair set at the same threshold
+    // (candidates are re-verified exactly; banding miss probability at the
+    // 0.9 threshold is < 1e-7) — so the exact SQL is a genuine oracle for
+    // the approximate path.
+    Gate("dedup_minhash_lsh", Dedup.minhashLsh(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
+           WHERE len(w) >= 3),
+         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         inter AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+           GROUP BY 1, 2)
+         SELECT doc_a, doc_b,
+                round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jac
+         FROM inter
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.9
+         ORDER BY doc_a, doc_b"""),
+    Gate("dedup_simhash", Dedup.simhashDocs(_, _), simhashOracle),
+    // clusters = transitive closure over the exact near-dup pairs (the
+    // LSH pair set equals the exact set — see dedup_minhash_lsh above)
+    Gate("dedup_clusters", Dedup.dedupClusters(_, _),
+      dedupClustersOracle, cachedIntermediate = true),
+    // the forced distributed-label-propagation twin must produce the
+    // IDENTICAL clustering — one shared oracle string pins driver-
+    // union-find vs RDD-loop path equality at every gated SF
+    Gate("dedup_clusters_loop", Dedup.dedupClustersLoop(_, _),
+      dedupClustersOracle, cachedIntermediate = true),
+    // retention contract: every cluster keeps its minimum member, docs in
+    // no cluster keep themselves (same pair set + closure as dedup_clusters)
+    Gate("dedup_survivors", Dedup.dedupSurvivors(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
+           WHERE len(w) >= 3),
+         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         inter AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+           GROUP BY 1, 2),
+         pairs AS (
+           SELECT doc_a, doc_b FROM inter
+           JOIN sizes sa ON sa.doc_id = doc_a
+           JOIN sizes sb ON sb.doc_id = doc_b
+           WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.9),
+         edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+                   UNION ALL SELECT doc_b, doc_a FROM pairs),
+         reach AS (
+           WITH RECURSIVE r(u, comp) AS (
+             SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+             UNION
+             SELECT e.u, r.comp FROM edges e JOIN r ON e.v = r.u)
+           SELECT u, min(comp) AS component FROM r GROUP BY u)
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN (SELECT u FROM reach WHERE u != component)
+         ORDER BY doc_id""", cachedIntermediate = true),
+    // 5-gram train/eval leakage: eval = doc_id % 20 == 0, drop train docs
+    // sharing any 5-gram with eval, keep the rest
+    Gate("decon_survivors", Dedup.deconSurvivors(_, _), deconOracleSql),
+    Gate("decon_bloom", Dedup.deconBloomSurvivors(_, _), deconOracleSql),
+    // report form of the same %20 split: engine joins on xxhash64(shingle),
+    // oracle on the shingle string — the gate re-checks the substitution
+    Gate("decon_report", Dedup.deconReportDocs(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
+           WHERE len(w) >= 5),
+         e AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 = 0),
+         t AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 != 0),
+         m AS (
+           SELECT e.doc_id AS eval_id, t.doc_id AS train_id, e.shingle
+           FROM e JOIN t ON e.shingle = t.shingle),
+         agg AS (
+           SELECT eval_id,
+             count(DISTINCT train_id) AS n_leaky_train_docs,
+             count(DISTINCT shingle) AS n_shared_shingles
+           FROM m GROUP BY 1)
+         SELECT d.doc_id,
+           CAST(coalesce(a.n_leaky_train_docs, 0) AS BIGINT)
+             AS n_leaky_train_docs,
+           CAST(coalesce(a.n_shared_shingles, 0) AS BIGINT)
+             AS n_shared_shingles
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 20 = 0) d
+         LEFT JOIN agg a ON a.eval_id = d.doc_id
+         ORDER BY d.doc_id"""),
+    // bloom path: false positives are exact-verified away, so the result
+    // is defined to equal the exact decontamination — ONE shared oracle
+    // string, so the two entries can never drift apart
+    // per-train-doc contamination fraction: distinct-shingle overlap
+    // with the whole eval suite as an exact integer micro-rate (hash
+    // join Spark-side, string join here — the standing decon collision
+    // argument); shingle-less docs are undefined and absent both sides
+    Gate("decon_overlap", Dedup.deconOverlapDocs(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
+           WHERE len(w) >= 5),
+         e AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0),
+         t AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 != 0)
+         SELECT t.doc_id,
+           CAST(count(*) AS BIGINT) AS n_shingles,
+           CAST(count(e.shingle) AS BIGINT) AS n_hit,
+           (CAST(count(e.shingle) AS BIGINT) * 1000000)
+             // CAST(count(*) AS BIGINT) AS overlap_micro
+         FROM t LEFT JOIN e ON e.shingle = t.shingle
+         GROUP BY t.doc_id ORDER BY t.doc_id"""),
+    // coverage rolls the same split up to the EVAL side: per eval doc,
+    // what fraction of its distinct 5-grams the train corpus contains
+    Gate("ngram_coverage", Dedup.ngramCoverageDocs(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
+           WHERE len(w) >= 5),
+         e AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 = 0),
+         t AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 != 0)
+         SELECT e.doc_id,
+           CAST(count(*) AS BIGINT) AS n_grams,
+           CAST(count(t.shingle) AS BIGINT) AS n_covered,
+           (CAST(count(t.shingle) AS BIGINT) * 1000000)
+             // CAST(count(*) AS BIGINT) AS coverage_micro
+         FROM e LEFT JOIN t ON t.shingle = e.shingle
+         GROUP BY e.doc_id ORDER BY e.doc_id"""),
+    Gate("dup_stats", Dedup.dupStatsDocs(_, _),
+      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
+           round(1.0 - CAST(count(DISTINCT md5(text)) AS DOUBLE)
+                       / CAST(count(*) AS DOUBLE), 6) AS dup_ratio
+         FROM documents GROUP BY source ORDER BY source"""),
+    // ingest (delta-vs-corpus) dedup: LSH candidates are exact-verified, so
+    // the exact cross-split formulation is the oracle (same recall argument
+    // as dedup_minhash_lsh)
+    Gate("ingest_dedup", Dedup.ingestDedupDocs(_, _),
+      """WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
+           WHERE len(w) >= 3),
+         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         near AS (
+           SELECT d.doc_id
+           FROM (SELECT a.doc_id, b.doc_id AS corpus_id, count(*) AS ni
+                 FROM sh a JOIN sh b ON a.shingle = b.shingle
+                 WHERE a.doc_id % 10 = 7 AND b.doc_id % 10 != 7
+                 GROUP BY 1, 2) d
+           JOIN sizes sa ON sa.doc_id = d.doc_id
+           JOIN sizes sb ON sb.doc_id = d.corpus_id
+           WHERE ni * 1.0 / (sa.n + sb.n - ni) >= 0.9),
+         ex AS (
+           SELECT DISTINCT d.doc_id
+           FROM documents d JOIN documents c ON d.text = c.text
+           WHERE d.doc_id % 10 = 7 AND c.doc_id % 10 != 7)
+         SELECT doc_id FROM documents
+         WHERE doc_id % 10 = 7
+           AND doc_id NOT IN (SELECT doc_id FROM near UNION SELECT doc_id FROM ex)
+         ORDER BY doc_id"""),
+    // oracle keys the cross-doc flag on the shingle STRING; the engine
+    // keys on md5(shingle) — the gate re-checks the hash-for-string
+    // substitution, as for text_novelty
+    Gate("dedup_substr", Dedup.substrDupStatsDocs(_, _),
+      """WITH pos AS (
+           SELECT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
+           WHERE len(w) >= 5),
+         crossdoc AS (
+           SELECT shingle FROM (SELECT DISTINCT doc_id, shingle FROM pos)
+           GROUP BY shingle HAVING count(*) >= 2),
+         tot AS (SELECT doc_id, count(*) AS total_positions
+                 FROM pos GROUP BY 1),
+         dup AS (SELECT doc_id, count(*) AS dup_positions FROM pos
+                 WHERE shingle IN (SELECT shingle FROM crossdoc)
+                 GROUP BY 1)
+         SELECT t.doc_id,
+           CAST(t.total_positions AS BIGINT) AS total_positions,
+           CAST(coalesce(d.dup_positions, 0) AS BIGINT) AS dup_positions,
+           round(coalesce(d.dup_positions, 0) / (1.0 * t.total_positions),
+             6) AS dup_frac
+         FROM tot t LEFT JOIN dup d ON d.doc_id = t.doc_id
+         ORDER BY t.doc_id"""),
+    // span REMOVAL: tokens covered by any df>=2 5-gram are cut and the
+    // doc is reassembled; oracle keys flagging on the shingle STRING,
+    // engine on md5(shingle) — the same hash-for-string substitution the
+    // dedup_substr gate re-checks. The compare is on the rebuilt
+    // clean_text itself, so the cut-and-stitch logic is value-gated.
+    Gate("dedup_span_rm", Dedup.spanRemoveDocs(_, _),
+      """WITH w AS (
+           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+           FROM documents),
+         pos AS (
+           SELECT doc_id, i, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM w, UNNEST(generate_series(1, len(w) - 4)) AS t(i)
+           WHERE len(w) >= 5),
+         crossdoc AS (
+           SELECT shingle FROM (SELECT DISTINCT doc_id, shingle FROM pos)
+           GROUP BY shingle HAVING count(*) >= 2),
+         cov AS (
+           SELECT DISTINCT p.doc_id, j
+           FROM (SELECT doc_id, i FROM pos
+                 WHERE shingle IN (SELECT shingle FROM crossdoc)) p,
+                UNNEST(generate_series(p.i, p.i + 4)) AS t(j)),
+         toks AS (
+           SELECT doc_id, j, w[j] AS tok
+           FROM w, UNNEST(generate_series(1, len(w))) AS t(j)),
+         kept AS (
+           SELECT tk.doc_id, tk.j, tk.tok
+           FROM toks tk LEFT JOIN cov c
+             ON tk.doc_id = c.doc_id AND tk.j = c.j
+           WHERE c.j IS NULL),
+         agg AS (
+           SELECT doc_id, count(*) AS n_kept,
+             string_agg(tok, ' ' ORDER BY j) AS clean_text
+           FROM kept GROUP BY doc_id)
+         SELECT w.doc_id, CAST(len(w.w) AS BIGINT) AS n_total,
+           CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
+           coalesce(a.clean_text, '') AS clean_text
+         FROM w LEFT JOIN agg a ON a.doc_id = w.doc_id
+         ORDER BY w.doc_id"""),
+    // exact dedup over the SAME normalization chain text_normalize
+    // gates (NFC + casefold + whitespace collapse); oracle groups by
+    // the normalized string, engine by its full md5 — the gate
+    // re-checks the hash-for-string substitution
+    Gate("dedup_norm", Dedup.normDedupDocs(_, _),
+      """WITH n AS (
+           SELECT doc_id,
+             trim(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g'))
+               AS norm
+           FROM documents)
+         SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
+           count(*) AS n_variants
+         FROM n GROUP BY norm ORDER BY doc_id"""),
+    // synthetic re-crawl: old misses %10==7 (added), new drops %10==9
+    // (removed) and rewrites %10==3 (changed); unchanged not emitted
+    Gate("snapshot_diff", Dedup.snapshotDiffDocs(_, _),
+      """WITH o AS (
+           SELECT doc_id, md5(text) AS old_fp FROM documents
+           WHERE doc_id % 10 != 7),
+         n AS (
+           SELECT doc_id,
+             md5(CASE WHEN doc_id % 10 = 3 THEN text || ' v2'
+                      ELSE text END) AS new_fp
+           FROM documents WHERE doc_id % 10 != 9),
+         j AS (
+           SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+             CASE WHEN o.old_fp IS NULL THEN 'added'
+                  WHEN n.new_fp IS NULL THEN 'removed'
+                  WHEN o.old_fp != n.new_fp THEN 'changed'
+                  ELSE 'unchanged' END AS status
+           FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
+         SELECT doc_id, status FROM j
+         WHERE status != 'unchanged' ORDER BY doc_id"""),
+    // MERGE semantics: touched ids (updates ∪ inserts ∪ deletes) leave
+    // the base; upsert payloads come back in — same synthetic changeset
+    Gate("cdc_apply", Dedup.cdcApplyDocs(_, _), cdcApplyOracle),
     // Same df-capped candidate screen as dedup_jaccard, but verified on
     // CONTAINMENT |∩|/min(|A|,|B|) with NO size-ratio prune — the
     // asymmetric (doc-inside-doc) pairs Jaccard structurally misses.
-    "dedup_containment" ->
+    Gate("dedup_containment", Dedup.containmentDocs(_, _),
       s"""WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -2004,656 +2147,10 @@ object SparkEntry {
          JOIN sizes sa ON sa.doc_id = doc_a
          JOIN sizes sb ON sb.doc_id = doc_b
          WHERE n_inter * 1.0 / least(sa.n, sb.n) >= 0.8
-         ORDER BY doc_a, doc_b""",
-    // novelty over shingle STRINGS — also re-checks the Spark side's
-    // hash-for-string substitution
-    "text_novelty" ->
-      s"""WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-           WHERE len(w) >= 3),
-         dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-         SELECT s.doc_id, count(*) AS n_shingles,
-           CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_unique,
-           round(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) * 1.0 / count(*),
-             6) AS novelty
-         FROM sh s JOIN dfreq d ON d.shingle = s.shingle
-         GROUP BY s.doc_id ORDER BY s.doc_id""",
-    // fixed-point micro-nat terms (round 6 → ×1e6 → BIGINT) make the
-    // per-doc float sum an exact integer sum — same trick as q25's
-    // per-term rounding, so the gate is order-independent
-    "doc_perplexity" ->
-      """WITH toks AS (
-           SELECT doc_id, w[i] AS token
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w))) AS t(i)
-           WHERE len(w[i]) > 0),
-         tf AS (SELECT doc_id, token, count(*) AS tf
-                FROM toks GROUP BY 1, 2),
-         cnt AS (SELECT token, count(*) AS c FROM toks GROUP BY 1),
-         tot AS (SELECT CAST(sum(c) + count(*) AS DOUBLE) AS nv FROM cnt),
-         terms AS (
-           SELECT tf.doc_id, tf.tf,
-             CAST(round(round(tf.tf * ln(tot.nv / (cnt.c + 1.0)), 6) * 1e6)
-               AS BIGINT) AS term_micro
-           FROM tf JOIN cnt USING (token) CROSS JOIN tot)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-           CAST(sum(term_micro) AS BIGINT) AS xent_micro,
-           round(exp(sum(term_micro) / (1e6 * sum(tf))), 3) AS ppl
-         FROM terms GROUP BY doc_id ORDER BY doc_id""",
-    // DSIR: same token/micro-nat machinery as doc_perplexity but with
-    // floor-quantized terms (floor(x*1e6) is a binary floor — identical
-    // in both engines even at exact decimal halves); the target LM is
-    // the src0 slice (conditional sum in the same groupBy), the
-    // smoothing normalizer is one scalar subselect
-    "dsir_weights" ->
-      """WITH toks AS (
-           SELECT doc_id, source = 'src0' AS is_t, w[i] AS token
-           FROM (SELECT doc_id, source,
-                   regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w))) AS t(i)
-           WHERE len(w[i]) > 0),
-         tf AS (SELECT doc_id, token, count(*) AS tf
-                FROM toks GROUP BY 1, 2),
-         cnt AS (SELECT token, count(*) AS cr,
-                   sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct
-                 FROM toks GROUP BY 1),
-         tot AS (SELECT CAST(sum(cr) + count(*) AS DOUBLE)
-                      / CAST(sum(ct) + count(*) AS DOUBLE) AS s FROM cnt),
-         terms AS (
-           SELECT tf.doc_id, tf.tf,
-             CAST(floor(tf.tf * ln(((cnt.ct + 1.0) / (cnt.cr + 1.0))
-                 * tot.s) * 1e6) AS BIGINT) AS term_micro
-           FROM tf JOIN cnt USING (token) CROSS JOIN tot)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-           CAST(sum(term_micro) AS BIGINT) AS lr_micro
-         FROM terms GROUP BY doc_id ORDER BY doc_id""",
-    "bpe_encode" -> bpeEncodeOracleSql,
-    "bpe_fertility" -> bpeFertilityOracleSql,
-    "unigram_encode" -> unigramEncodeOracleSql,
-    "wordpiece_encode" -> wordpieceEncodeOracleSql,
-    // the bake-off table: the three family oracles composed as CTEs —
-    // each family's chain is the SAME string its own gate uses
-    "tok_compare" ->
-      s"""WITH b AS ($bpeEncodeOracleSql),
-         u AS ($unigramEncodeOracleSql),
-         w AS ($wordpieceEncodeOracleSql)
-         SELECT b.doc_id, b.n_words, b.n_bpe_tokens,
-           u.n_pieces AS n_unigram, w.n_pieces AS n_wordpiece,
-           CAST(b.n_bpe_tokens * 1000000 // b.n_words AS BIGINT)
-             AS bpe_fert_micro,
-           CAST(u.n_pieces * 1000000 // b.n_words AS BIGINT)
-             AS unigram_fert_micro,
-           CAST(w.n_pieces * 1000000 // b.n_words AS BIGINT)
-             AS wordpiece_fert_micro
-         FROM b JOIN u ON u.doc_id = b.doc_id
-         JOIN w ON w.doc_id = b.doc_id
-         ORDER BY b.doc_id""",
-    "sent_segment" ->
-      s"""WITH $sentenceCtes
-         SELECT doc_id, sent_id, sentence, n_tokens FROM sents
-         ORDER BY doc_id, sent_id""",
-    // first occurrence keeps; the oracle's window spelling cross-checks
-    // the engine's aggregate-then-join spelling of the same policy
-    "sent_dedup" ->
-      s"""WITH $sentenceCtes,
-         normed AS (
-           SELECT doc_id, sent_id, n_tokens,
-             lower(regexp_replace(sentence, '[.!?]+$$', '')) AS norm
-           FROM sents)
-         SELECT doc_id, sent_id, n_tokens,
-           CASE WHEN row_number() OVER (PARTITION BY norm
-               ORDER BY doc_id, sent_id) = 1 THEN 1 ELSE 0 END AS keep
-         FROM normed ORDER BY doc_id, sent_id""",
-    // start-offset bucketing: chunk = tokens-before div budget, so the
-    // chunk rule is one running sum in both engines; digest rebuilt from
-    // sent_id-ordered sentences
-    "sent_chunks" ->
-      s"""WITH $sentenceCtes,
-         cum AS (
-           SELECT doc_id, sent_id, sentence, n_tokens,
-             coalesce(sum(n_tokens) OVER (PARTITION BY doc_id
-               ORDER BY sent_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-           FROM sents)
-         SELECT doc_id,
-           CAST(cb // ${operators.Sentences.ChunkBudget} AS BIGINT)
-             AS chunk_id,
-           count(*) AS n_sents, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           ${duckMd5_60("string_agg(sentence, ' ' ORDER BY sent_id)")}
-             AS chunk_md5_60
-         FROM cum GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id""",
-    "quality_logit" -> qualityLogitOracleSql,
-    // FIM: selection gate and both character cut points all md5-derived,
-    // so the oracle replays the transform character for character
-    "fim_transform" ->
-      s"""WITH h AS (
-           SELECT doc_id, text, length(text) AS n,
-             ${duckMd5_60("'fim1:' || CAST(doc_id AS VARCHAR)")}
-               % greatest(length(text), 1) AS h1,
-             ${duckMd5_60("'fim2:' || CAST(doc_id AS VARCHAR)")}
-               % greatest(length(text), 1) AS h2,
-             ${duckMd5_60("'fim:' || CAST(doc_id AS VARCHAR)")}
-               % 1000000 AS g
-           FROM documents),
-         c AS (
-           SELECT doc_id, text, n, g,
-             CAST(least(h1, h2) + 1 AS INT) AS c1,
-             CAST(greatest(h1, h2) + 1 AS INT) AS c2
-           FROM h)
-         SELECT doc_id,
-           CASE WHEN g < 500000 THEN 1 ELSE 0 END AS transformed,
-           CASE WHEN g < 500000
-             THEN '<PRE>' || substr(text, 1, c1 - 1)
-               || '<SUF>' || substr(text, c2, n - c2 + 1)
-               || '<MID>' || substr(text, c1, c2 - c1)
-             ELSE text END AS fim_text
-         FROM c ORDER BY doc_id""",
-    // T5 span corruption: the oracle's gaps-and-islands windows are a
-    // structurally different spelling of the engine's in-row fold — the
-    // gate cross-checks two independent formulations of the policy
-    "t5_spans" ->
-      s"""WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-           FROM documents),
-         t AS (
-           SELECT doc_id, i, w[i] AS tok,
-             ${duckMd5_60("'t5:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)")}
-               % 1000000 < 150000 AS noisy
-           FROM w, UNNEST(generate_series(1, len(w))) AS s(i)),
-         r AS (
-           SELECT *, CASE WHEN noisy AND NOT coalesce(
-               lag(noisy) OVER (PARTITION BY doc_id ORDER BY i), false)
-             THEN 1 ELSE 0 END AS span_start
-           FROM t),
-         s AS (
-           SELECT *, sum(span_start) OVER (PARTITION BY doc_id ORDER BY i)
-             AS span_id
-           FROM r),
-         inp AS (
-           SELECT doc_id, string_agg(
-               CASE WHEN NOT noisy THEN tok
-                    ELSE '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>'
-               END, ' ' ORDER BY i) AS input_text
-           FROM s WHERE NOT noisy OR span_start = 1 GROUP BY doc_id),
-         tgt AS (
-           SELECT doc_id, string_agg(
-               CASE WHEN span_start = 1
-                 THEN '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '> ' || tok
-                 ELSE tok END, ' ' ORDER BY i) AS tgt_body
-           FROM s WHERE noisy GROUP BY doc_id),
-         ns AS (
-           SELECT doc_id, CAST(coalesce(max(span_id), 0) AS INT) AS n_spans
-           FROM s GROUP BY doc_id)
-         SELECT w.doc_id, ns.n_spans,
-           coalesce(i.input_text, '') AS input_text,
-           CASE WHEN t.tgt_body IS NULL
-             THEN '<extra_id_' || CAST(ns.n_spans AS VARCHAR) || '>'
-             ELSE t.tgt_body || ' <extra_id_'
-               || CAST(ns.n_spans AS VARCHAR) || '>' END AS target_text
-         FROM w
-         JOIN ns ON ns.doc_id = w.doc_id
-         LEFT JOIN inp i ON i.doc_id = w.doc_id
-         LEFT JOIN tgt t ON t.doc_id = w.doc_id
-         ORDER BY w.doc_id""",
-    "split_assign" -> splitAssignOracleSql,
-    "group_split" -> groupSplitOracleSql,
-    // exact dedup over the SAME normalization chain text_normalize
-    // gates (NFC + casefold + whitespace collapse); oracle groups by
-    // the normalized string, engine by its full md5 — the gate
-    // re-checks the hash-for-string substitution
-    "dedup_norm" ->
-      """WITH n AS (
-           SELECT doc_id,
-             trim(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g'))
-               AS norm
-           FROM documents)
-         SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
-           count(*) AS n_variants
-         FROM n GROUP BY norm ORDER BY doc_id""",
-    // synthetic re-crawl: old misses %10==7 (added), new drops %10==9
-    // (removed) and rewrites %10==3 (changed); unchanged not emitted
-    "snapshot_diff" ->
-      """WITH o AS (
-           SELECT doc_id, md5(text) AS old_fp FROM documents
-           WHERE doc_id % 10 != 7),
-         n AS (
-           SELECT doc_id,
-             md5(CASE WHEN doc_id % 10 = 3 THEN text || ' v2'
-                      ELSE text END) AS new_fp
-           FROM documents WHERE doc_id % 10 != 9),
-         j AS (
-           SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-             CASE WHEN o.old_fp IS NULL THEN 'added'
-                  WHEN n.new_fp IS NULL THEN 'removed'
-                  WHEN o.old_fp != n.new_fp THEN 'changed'
-                  ELSE 'unchanged' END AS status
-           FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
-         SELECT doc_id, status FROM j
-         WHERE status != 'unchanged' ORDER BY doc_id""",
-    // MERGE semantics: touched ids (updates ∪ inserts ∪ deletes) leave
-    // the base; upsert payloads come back in — same synthetic changeset
-    "cdc_apply" -> cdcApplyOracle,
-    "corpus_card" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
-             AS BIGINT) AS n_tokens,
-           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique_texts,
-           round(1.0 - CAST(count(DISTINCT md5(text)) AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE), 6) AS dup_ratio
-         FROM documents""",
-    // oracle masks key on the shingle STRING; the engine keys on
-    // xxhash64(shingle) — the gate re-checks the substitution, as for
-    // text_novelty / dedup_substr
-    "source_overlap" ->
-      """WITH sh AS (
-           SELECT CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) AS sid,
-             array_to_string(w[i:i+7], ' ') AS shingle
-           FROM (SELECT source, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 7)) AS t(i)
-           WHERE len(w) >= 8),
-         masks AS (
-           SELECT shingle, bit_or(1::BIGINT << sid) AS mask
-           FROM sh GROUP BY shingle),
-         hist AS (SELECT mask, count(*) AS n FROM masks GROUP BY mask),
-         grid AS (
-           SELECT s1.a, s2.b
-           FROM generate_series(0, 19) s1(a), generate_series(0, 19) s2(b)
-           WHERE s1.a <= s2.b)
-         SELECT CAST(g.a AS INT) AS src_a, CAST(g.b AS INT) AS src_b,
-           CAST(sum(h.n) AS BIGINT) AS n_shared
-         FROM hist h JOIN grid g
-           ON ((h.mask >> g.a) & 1) = 1 AND ((h.mask >> g.b) & 1) = 1
-         GROUP BY g.a, g.b ORDER BY src_a, src_b""",
-    "kanon_audit" ->
-      """SELECT lang, source, n_chars // 100 AS len_bucket,
-           count(*) AS n
-         FROM documents
-         GROUP BY 1, 2, 3 HAVING count(*) < 5
-         ORDER BY lang, source, len_bucket""",
-    // weak supervision: four integer-statistic labeling functions with
-    // abstention; label = vote sign, confidence = |sum|/non-abstaining
-    "weak_labels" -> weakLabelsOracle,
-    // the stateless streaming twin lands the identical votes
-    "stream_weak_labels" -> weakLabelsOracle,
-    // pairwise Cohen's kappa over the LF votes — chance-corrected
-    // agreement as a (num, den) pair (negative kappa never divides:
-    // truncating vs flooring division diverges below zero)
-    "label_agreement" -> labelAgreementOracle,
-    // l-diversity: class size + exact distinct sensitive-value count,
-    // classes below l — the homogeneity-attack audit on top of kanon
-    "ldiv_audit" ->
-      s"""SELECT source, n_chars // 100 AS len_bucket, count(*) AS n,
-           CAST(count(DISTINCT lang) AS BIGINT) AS n_sensitive
-         FROM documents
-         GROUP BY 1, 2
-         HAVING count(DISTINCT lang) < ${graft.operators.Monitoring.LDivL}
-         ORDER BY source, len_bucket""",
-    // oracle keys token counts on the token STRING; the engine keys on
-    // xxhash64(token) — the gate re-checks the substitution. Every
-    // per-token term floors to integer micro-nats BEFORE the sum, so
-    // float summation order cannot leak into the hash.
-    "text_entropy" ->
-      """WITH t AS (
-           SELECT doc_id, tok, count(*) AS k
-           FROM (SELECT doc_id,
-                   UNNEST(regexp_split_to_array(trim(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 GROUP BY doc_id, tok),
-         d AS (
-           SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_tokens,
-             count(*) AS n_distinct,
-             CAST(sum(CAST(floor(k * ln(k) * 1000000) AS BIGINT))
-               AS BIGINT) AS sm
-           FROM t GROUP BY doc_id)
-         SELECT doc_id, n_tokens, n_distinct,
-           greatest(0, CAST(floor(ln(n_tokens) * 1000000) AS BIGINT)
-             - sm // n_tokens) AS entropy_micro
-         FROM d ORDER BY doc_id""",
-    // prob_micro is the gate's own 4-decimal probability lifted to an
-    // exact integer, so binning and both rates are pure BIGINT arithmetic
-    "quality_calibration" ->
-      """WITH f AS (
-           SELECT ln(1.0 + len(w)) AS f1,
-             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS f2,
-             CAST(len(list_filter(w, t -> len(t) >= 3)) AS DOUBLE) / len(w)
-               AS f3,
-             len(w) AS n_tok,
-             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / greatest(length(text), 1) AS ar,
-             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS dr
-           FROM (SELECT text, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents)),
-         s AS (
-           SELECT CAST(round(round(1.0 / (1.0 + exp(
-               -(-3.15 + 0.45 * f1 + 1.2 * f2 + 0.8 * f3))), 4) * 10000)
-               AS BIGINT) AS prob_micro,
-             CASE WHEN n_tok < 12 OR ar < 0.78 OR dr < 0.35
-               THEN 0 ELSE 1 END AS ck
-           FROM f),
-         b AS (
-           SELECT least(prob_micro * 20 // 10000, 19) AS bin,
-             prob_micro, ck
-           FROM s)
-         SELECT CAST(bin AS BIGINT) AS bin, count(*) AS n,
-           CAST(sum(ck) AS BIGINT) AS n_cascade_keep,
-           (CAST(sum(ck) AS BIGINT) * 1000000) // count(*)
-             AS cascade_keep_micro,
-           (CAST(sum(prob_micro) AS BIGINT) * 100) // count(*)
-             AS mean_prob_micro
-         FROM b GROUP BY bin ORDER BY bin""",
-    // oracle keys the cross-doc flag on the shingle STRING; the engine
-    // keys on md5(shingle) — the gate re-checks the hash-for-string
-    // substitution, as for text_novelty
-    "dedup_substr" ->
-      """WITH pos AS (
-           SELECT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
-           WHERE len(w) >= 5),
-         crossdoc AS (
-           SELECT shingle FROM (SELECT DISTINCT doc_id, shingle FROM pos)
-           GROUP BY shingle HAVING count(*) >= 2),
-         tot AS (SELECT doc_id, count(*) AS total_positions
-                 FROM pos GROUP BY 1),
-         dup AS (SELECT doc_id, count(*) AS dup_positions FROM pos
-                 WHERE shingle IN (SELECT shingle FROM crossdoc)
-                 GROUP BY 1)
-         SELECT t.doc_id,
-           CAST(t.total_positions AS BIGINT) AS total_positions,
-           CAST(coalesce(d.dup_positions, 0) AS BIGINT) AS dup_positions,
-           round(coalesce(d.dup_positions, 0) / (1.0 * t.total_positions),
-             6) AS dup_frac
-         FROM tot t LEFT JOIN dup d ON d.doc_id = t.doc_id
-         ORDER BY t.doc_id""",
-    // span REMOVAL: tokens covered by any df>=2 5-gram are cut and the
-    // doc is reassembled; oracle keys flagging on the shingle STRING,
-    // engine on md5(shingle) — the same hash-for-string substitution the
-    // dedup_substr gate re-checks. The compare is on the rebuilt
-    // clean_text itself, so the cut-and-stitch logic is value-gated.
-    "dedup_span_rm" ->
-      """WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-           FROM documents),
-         pos AS (
-           SELECT doc_id, i, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM w, UNNEST(generate_series(1, len(w) - 4)) AS t(i)
-           WHERE len(w) >= 5),
-         crossdoc AS (
-           SELECT shingle FROM (SELECT DISTINCT doc_id, shingle FROM pos)
-           GROUP BY shingle HAVING count(*) >= 2),
-         cov AS (
-           SELECT DISTINCT p.doc_id, j
-           FROM (SELECT doc_id, i FROM pos
-                 WHERE shingle IN (SELECT shingle FROM crossdoc)) p,
-                UNNEST(generate_series(p.i, p.i + 4)) AS t(j)),
-         toks AS (
-           SELECT doc_id, j, w[j] AS tok
-           FROM w, UNNEST(generate_series(1, len(w))) AS t(j)),
-         kept AS (
-           SELECT tk.doc_id, tk.j, tk.tok
-           FROM toks tk LEFT JOIN cov c
-             ON tk.doc_id = c.doc_id AND tk.j = c.j
-           WHERE c.j IS NULL),
-         agg AS (
-           SELECT doc_id, count(*) AS n_kept,
-             string_agg(tok, ' ' ORDER BY j) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT w.doc_id, CAST(len(w.w) AS BIGINT) AS n_total,
-           CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-           coalesce(a.clean_text, '') AS clean_text
-         FROM w LEFT JOIN agg a ON a.doc_id = w.doc_id
-         ORDER BY w.doc_id""",
-    // LSH output = the exact-Jaccard pair set at the same threshold
-    // (candidates are re-verified exactly; banding miss probability at the
-    // 0.9 threshold is < 1e-7) — so the exact SQL is a genuine oracle for
-    // the approximate path.
-    "dedup_minhash_lsh" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-           WHERE len(w) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-                round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jac
-         FROM inter
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.9
-         ORDER BY doc_a, doc_b""",
-    "ann_topk" -> annTopkOracle,
-    // margin-based bitext mining: floor-micro cosines, exact BIGINT
-    // neighborhood sums, positive-domain integer-division margin — the
-    // ratio-margin criterion restated over the parity split
-    "bitext_mine" -> bitextOracle(
-      s"""pos AS (
-           SELECT * FROM (
-             SELECT x.vec_id AS x_id, y.vec_id AS y_id,
-               CAST(floor(list_sum(list_transform(generate_series(1, 64),
-                   d -> CAST(x.embedding[d] AS DOUBLE)
-                     * CAST(y.embedding[d] AS DOUBLE)))
-                 / (x.norm * y.norm) * 1e6) AS BIGINT) AS cos_micro
-             FROM base x JOIN base y
-               ON x.vec_id % 2 = 0
-                 AND x.vec_id < ${operators.Similarity.BitextGateXMaxId}
-                 AND y.vec_id % 2 = 1)
-           WHERE cos_micro > 0)"""),
-    // the IVF-probed spelling: ann_ivf's cell/probe CTEs generate the
-    // candidate pairs, then the identical margin chain
-    "bitext_mine_ivf" -> bitextOracle(
-      s"""cents AS (
-           SELECT vec_id AS c_id, embedding AS c_emb, norm AS c_norm
-           FROM base WHERE vec_id < 16),
-         scores AS (
-           SELECT b.vec_id, c.c_id,
-             list_sum(list_transform(generate_series(1, 64),
-               d -> CAST(b.embedding[d] AS DOUBLE) * CAST(c.c_emb[d] AS DOUBLE)))
-               / (b.norm * c.c_norm) AS ccos
-           FROM base b CROSS JOIN cents c),
-         assigned AS (
-           SELECT vec_id, c_id AS cell FROM (
-             SELECT vec_id, c_id,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY ccos DESC, c_id DESC) AS rn
-             FROM scores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS x_id, c_id AS probe_cell FROM (
-             SELECT vec_id, c_id,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY ccos DESC, c_id DESC) AS rn
-             FROM scores) WHERE rn <= 4 AND vec_id % 2 = 0
-               AND vec_id < ${operators.Similarity.BitextGateXMaxId}),
-         pos AS (
-           SELECT * FROM (
-             SELECT p.x_id, a.vec_id AS y_id,
-               CAST(floor(list_sum(list_transform(generate_series(1, 64),
-                   d -> CAST(bx.embedding[d] AS DOUBLE)
-                     * CAST(by.embedding[d] AS DOUBLE)))
-                 / (bx.norm * by.norm) * 1e6) AS BIGINT) AS cos_micro
-             FROM probes p
-             JOIN assigned a ON a.cell = p.probe_cell AND a.vec_id % 2 = 1
-             JOIN base bx ON bx.vec_id = p.x_id
-             JOIN base by ON by.vec_id = a.vec_id)
-           WHERE cos_micro > 0)"""),
-    // recall@10 audit: LEFT JOIN keeps zero-candidate queries as 0-recall
-    // rows; integer micro-rate, no float division (engine-exact)
-    "ann_recall" ->
-      s"""WITH brute AS ($annTopkOracle),
-         approx AS ($annLshOracle)
-         SELECT b.q_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM brute b LEFT JOIN approx a
-           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.q_id ORDER BY b.q_id""",
-    // MRR audit: where the TRUE nearest neighbor (exact rank-1) landed in
-    // the approximate list — reciprocal rank as exact integer micro-units
-    // (1e6 // rank), 0 when missing; position-sensitive where recall@k
-    // is overlap-only
-    "ann_mrr" ->
-      s"""WITH brute AS ($annTopkOracle),
-         approx AS ($annLshOracle)
-         SELECT b.q_id,
-           CAST(coalesce(a.rk, 0) AS BIGINT) AS true_nn_rank,
-           CAST(CASE WHEN a.rk IS NULL THEN 0
-             ELSE 1000000 // a.rk END AS BIGINT) AS rr_micro
-         FROM brute b LEFT JOIN approx a
-           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         WHERE b.rk = 1
-         ORDER BY b.q_id""",
-    // kNN majority vote: queries (vec_id < 10) against the labeled pool
-    // (vec_id >= 10); same rounded-cosine ranking as ann_topk, majority
-    // label with smaller-label tiebreak
-    "knn_classify" ->
-      """WITH base AS (
-           SELECT vec_id, label, embedding,
-             sqrt(list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
-           FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS q_id, c.vec_id, c.label,
-             round(list_sum(list_transform(generate_series(1, 64),
-                 d -> CAST(c.embedding[d] AS DOUBLE) * CAST(q.embedding[d] AS DOUBLE)))
-               / (c.norm * q.norm), 4) AS cos
-           FROM base q JOIN base c ON q.vec_id < 10 AND c.vec_id >= 10),
-         ranked AS (
-           SELECT q_id, label,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos DESC, vec_id) AS rk
-           FROM scored),
-         votes AS (
-           SELECT q_id, label, count(*) AS n_votes
-           FROM ranked WHERE rk <= 10 GROUP BY q_id, label),
-         best AS (
-           SELECT q_id, label, n_votes,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY n_votes DESC, label) AS vr
-           FROM votes)
-         SELECT q_id, label AS pred_label, n_votes
-         FROM best WHERE vr = 1 ORDER BY q_id""",
-    // IVF-probed kNN labeling: the ann_ivf CTE chain (seed centroids =
-    // first 16 vectors, argmax-cosine cells with larger-id ties, top-4
-    // probe lists) restricted to the labeled pool, then the
-    // knn_classify vote over the probed candidates
-    "knn_classify_ivf" ->
-      """WITH base AS (
-           SELECT vec_id, label, embedding,
-             sqrt(list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
-           FROM embeddings),
-         cents AS (
-           SELECT vec_id AS c_id, embedding AS c_emb, norm AS c_norm
-           FROM base WHERE vec_id < 16),
-         scores AS (
-           SELECT b.vec_id, c.c_id,
-             list_sum(list_transform(generate_series(1, 64),
-               d -> CAST(b.embedding[d] AS DOUBLE) * CAST(c.c_emb[d] AS DOUBLE)))
-               / (b.norm * c.c_norm) AS ccos
-           FROM base b CROSS JOIN cents c),
-         assigned AS (
-           SELECT vec_id, c_id AS cell FROM (
-             SELECT vec_id, c_id,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY ccos DESC, c_id DESC) AS rn
-             FROM scores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS q_id, c_id AS probe_cell FROM (
-             SELECT vec_id, c_id,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY ccos DESC, c_id DESC) AS rn
-             FROM scores) WHERE rn <= 4 AND vec_id < 10),
-         cand AS (
-           SELECT p.q_id, a.vec_id
-           FROM probes p JOIN assigned a ON a.cell = p.probe_cell
-           WHERE a.vec_id >= 10),
-         scored AS (
-           SELECT c.q_id, c.vec_id, bc.label,
-             round(list_sum(list_transform(generate_series(1, 64),
-               d -> CAST(bc.embedding[d] AS DOUBLE) * CAST(bq.embedding[d] AS DOUBLE)))
-               / (bc.norm * bq.norm), 4) AS cos
-           FROM cand c
-           JOIN base bc ON bc.vec_id = c.vec_id
-           JOIN base bq ON bq.vec_id = c.q_id),
-         ranked AS (
-           SELECT q_id, label,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos DESC, vec_id) AS rk
-           FROM scored),
-         votes AS (
-           SELECT q_id, label, count(*) AS n_votes
-           FROM ranked WHERE rk <= 10 GROUP BY q_id, label),
-         best AS (
-           SELECT q_id, label, n_votes,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY n_votes DESC, label) AS vr
-           FROM votes)
-         SELECT q_id, label AS pred_label, n_votes
-         FROM best WHERE vr = 1 ORDER BY q_id""",
-    // class centroids: floor-quantized micro sums (binary floor — never
-    // round(), whose decimal half-up can diverge across engines); the
-    // 64-long sum vector gates as an md5 digest of its comma-join
-    "label_centroids" ->
-      """WITH e AS (
-           SELECT label, d,
-             CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
-               AS micro
-           FROM embeddings,
-                UNNEST(generate_series(1, len(embedding))) AS t(d)),
-         g AS (SELECT label, d, CAST(sum(micro) AS BIGINT) AS s,
-                 count(*) AS n
-               FROM e GROUP BY 1, 2)
-         SELECT label, CAST(max(n) AS BIGINT) AS n_vecs,
-           CAST(min(CASE WHEN d = 1 THEN s END) AS BIGINT) AS s0_micro,
-           md5(string_agg(CAST(s AS VARCHAR), ',' ORDER BY d))
-             AS centroid_digest
-         FROM g GROUP BY label ORDER BY label""",
-    // centroid drift between the vec_id-parity slices, cross-multiplied
-    // (|so·nn − sn·no|) so no signed integer division is ever taken —
-    // Spark div truncates, DuckDB // floors, products agree exactly
-    "embed_drift" ->
-      """WITH e AS (
-           SELECT label, vec_id % 2 = 0 AS is_old, d,
-             CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
-               AS micro
-           FROM embeddings,
-                UNNEST(generate_series(1, len(embedding))) AS t(d)),
-         g AS (SELECT label, d,
-             CAST(coalesce(sum(CASE WHEN is_old THEN micro END), 0)
-               AS BIGINT) AS so,
-             CAST(count(CASE WHEN is_old THEN 1 END) AS BIGINT) AS no,
-             CAST(coalesce(sum(CASE WHEN NOT is_old THEN micro END), 0)
-               AS BIGINT) AS sn,
-             CAST(count(CASE WHEN NOT is_old THEN 1 END) AS BIGINT) AS nn
-           FROM e GROUP BY 1, 2)
-         SELECT label, min(no) AS n_old, min(nn) AS n_new,
-           CAST(sum(abs(so * nn - sn * no)) AS BIGINT) AS l1_scaled
-         FROM g GROUP BY label ORDER BY label""",
-    // clusters = transitive closure over the exact near-dup pairs (the
-    // LSH pair set equals the exact set — see dedup_minhash_lsh above)
-    "dedup_clusters" -> dedupClustersOracle,
-    // the forced distributed-label-propagation twin must produce the
-    // IDENTICAL clustering — one shared oracle string pins driver-
-    // union-find vs RDD-loop path equality at every gated SF
-    "dedup_clusters_loop" -> dedupClustersOracle,
+         ORDER BY doc_a, doc_b"""),
     // soft dedup: same pair set + closure as dedup_clusters, but every
     // doc stays with weight 1/cluster-size in positive micro ints
-    "dedup_weights" ->
+    Gate("dedup_weights", Dedup.softDedupWeightsDocs(_, _),
       """WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -2685,10 +2182,10 @@ object SparkEntry {
          FROM documents d
          LEFT JOIN reach r ON d.doc_id = r.u
          LEFT JOIN csize s ON r.component = s.component
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id""", cachedIntermediate = true),
     // duplication-rate curve: same pair set + closure; fixed power-of-two
     // k ladder with zero-count rows kept
-    "dup_curve" ->
+    Gate("dup_curve", Dedup.dupCurveDocs(_, _),
       """WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -2726,350 +2223,51 @@ object SparkEntry {
              // n_total AS BIGINT) AS frac_micro
          FROM perdoc CROSS JOIN (VALUES (1), (2), (4), (8), (16), (32)) ks(k),
               tot
-         GROUP BY k, n_total ORDER BY k""",
-    // retention contract: every cluster keeps its minimum member, docs in
-    // no cluster keep themselves (same pair set + closure as dedup_clusters)
-    "dedup_survivors" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-           WHERE len(w) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sizes sa ON sa.doc_id = doc_a
-           JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.9),
-         edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                   UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach AS (
-           WITH RECURSIVE r(u, comp) AS (
-             SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-             UNION
-             SELECT e.u, r.comp FROM edges e JOIN r ON e.v = r.u)
-           SELECT u, min(comp) AS component FROM r GROUP BY u)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT u FROM reach WHERE u != component)
-         ORDER BY doc_id""",
-    // 5-gram train/eval leakage: eval = doc_id % 20 == 0, drop train docs
-    // sharing any 5-gram with eval, keep the rest
-    "decon_survivors" -> deconOracleSql,
-    // report form of the same %20 split: engine joins on xxhash64(shingle),
-    // oracle on the shingle string — the gate re-checks the substitution
-    "decon_report" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
-           WHERE len(w) >= 5),
-         e AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 = 0),
-         t AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 != 0),
-         m AS (
-           SELECT e.doc_id AS eval_id, t.doc_id AS train_id, e.shingle
-           FROM e JOIN t ON e.shingle = t.shingle),
-         agg AS (
-           SELECT eval_id,
-             count(DISTINCT train_id) AS n_leaky_train_docs,
-             count(DISTINCT shingle) AS n_shared_shingles
-           FROM m GROUP BY 1)
-         SELECT d.doc_id,
-           CAST(coalesce(a.n_leaky_train_docs, 0) AS BIGINT)
-             AS n_leaky_train_docs,
-           CAST(coalesce(a.n_shared_shingles, 0) AS BIGINT)
-             AS n_shared_shingles
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 20 = 0) d
-         LEFT JOIN agg a ON a.eval_id = d.doc_id
-         ORDER BY d.doc_id""",
-    // bloom path: false positives are exact-verified away, so the result
-    // is defined to equal the exact decontamination — ONE shared oracle
-    // string, so the two entries can never drift apart
-    // per-train-doc contamination fraction: distinct-shingle overlap
-    // with the whole eval suite as an exact integer micro-rate (hash
-    // join Spark-side, string join here — the standing decon collision
-    // argument); shingle-less docs are undefined and absent both sides
-    "decon_overlap" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
-           WHERE len(w) >= 5),
-         e AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0),
-         t AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 != 0)
-         SELECT t.doc_id,
-           CAST(count(*) AS BIGINT) AS n_shingles,
-           CAST(count(e.shingle) AS BIGINT) AS n_hit,
-           (CAST(count(e.shingle) AS BIGINT) * 1000000)
-             // CAST(count(*) AS BIGINT) AS overlap_micro
-         FROM t LEFT JOIN e ON e.shingle = t.shingle
-         GROUP BY t.doc_id ORDER BY t.doc_id""",
-    // coverage rolls the same split up to the EVAL side: per eval doc,
-    // what fraction of its distinct 5-grams the train corpus contains
-    "ngram_coverage" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 4)) AS t(i)
-           WHERE len(w) >= 5),
-         e AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 20 = 0),
-         t AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 != 0)
-         SELECT e.doc_id,
-           CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(count(t.shingle) AS BIGINT) AS n_covered,
-           (CAST(count(t.shingle) AS BIGINT) * 1000000)
-             // CAST(count(*) AS BIGINT) AS coverage_micro
-         FROM e LEFT JOIN t ON t.shingle = e.shingle
-         GROUP BY e.doc_id ORDER BY e.doc_id""",
-    "decon_bloom" -> deconOracleSql,
-    // ingest (delta-vs-corpus) dedup: LSH candidates are exact-verified, so
-    // the exact cross-split formulation is the oracle (same recall argument
-    // as dedup_minhash_lsh)
-    "ingest_dedup" ->
-      """WITH sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-           WHERE len(w) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         near AS (
-           SELECT d.doc_id
-           FROM (SELECT a.doc_id, b.doc_id AS corpus_id, count(*) AS ni
-                 FROM sh a JOIN sh b ON a.shingle = b.shingle
-                 WHERE a.doc_id % 10 = 7 AND b.doc_id % 10 != 7
-                 GROUP BY 1, 2) d
-           JOIN sizes sa ON sa.doc_id = d.doc_id
-           JOIN sizes sb ON sb.doc_id = d.corpus_id
-           WHERE ni * 1.0 / (sa.n + sb.n - ni) >= 0.9),
-         ex AS (
-           SELECT DISTINCT d.doc_id
-           FROM documents d JOIN documents c ON d.text = c.text
-           WHERE d.doc_id % 10 = 7 AND c.doc_id % 10 != 7)
-         SELECT doc_id FROM documents
-         WHERE doc_id % 10 = 7
-           AND doc_id NOT IN (SELECT doc_id FROM near UNION SELECT doc_id FROM ex)
-         ORDER BY doc_id""",
-    "dup_stats" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
+         GROUP BY k, n_total ORDER BY k""", cachedIntermediate = true),
+    Gate("minhash_mergeable", Dedup.minhashMergeableDocs(_, _), minhashMergeableOracleSql),
+    Gate("corpus_card", Monitoring.corpusCardDocs(_, _),
+      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
+             AS BIGINT) AS n_tokens,
+           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique_texts,
            round(1.0 - CAST(count(DISTINCT md5(text)) AS DOUBLE)
                        / CAST(count(*) AS DOUBLE), 6) AS dup_ratio
-         FROM documents GROUP BY source ORDER BY source""",
-    "vocab_coverage" ->
-      s"""WITH tok AS (
-           SELECT UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS token
-           FROM documents),
-         c AS (
-           SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok
-           WHERE token != '' GROUP BY token),
-         r AS (
-           SELECT token, cnt,
-             CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INT) AS rk,
-             CAST(sum(cnt) OVER (ORDER BY cnt DESC, token
-               ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum
-           FROM c)
-         SELECT rk, token, cnt,
-           round(cum / (SELECT CAST(sum(cnt) AS DOUBLE) FROM c), 6) AS cum_share
-         FROM r WHERE rk <= ${TextAnalysis.VocabK} ORDER BY rk""",
-    // one BPE training iteration: adjacent char pairs weighted by word
-    // frequency; (cnt DESC, a, b) is a total order — all integers
-    "bpe_pairs" ->
-      s"""WITH words AS (
-           SELECT w[i] AS word, count(*) AS c
-           FROM (SELECT regexp_split_to_array(trim(text), '\\s+') AS w
-                 FROM documents),
-                UNNEST(generate_series(1, len(w))) AS t(i)
-           WHERE length(w[i]) >= 2
-           GROUP BY 1),
-         pairs AS (
-           SELECT substr(word, i, 1) AS a, substr(word, i + 1, 1) AS b,
-             CAST(sum(c) AS BIGINT) AS cnt
-           FROM words, UNNEST(generate_series(1, length(word) - 1)) AS t(i)
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT a, b, cnt,
-             CAST(row_number() OVER (ORDER BY cnt DESC, a, b) AS INT) AS rk
-           FROM pairs)
-         SELECT rk, a, b, cnt FROM ranked
-         WHERE rk <= ${TextAnalysis.BpePairK} ORDER BY rk""",
-    "text_repetition" ->
-      """WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-           FROM documents),
-         bg AS (
-           SELECT doc_id, w[i] || ' ' || w[i+1] AS b
-           FROM w, UNNEST(generate_series(1, len(w) - 1)) t(i)
-           WHERE len(w) >= 2),
-         bgc AS (
-           SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
-                  count(*) AS n_dbg, CAST(max(cnt) AS BIGINT) AS top
-           FROM (SELECT doc_id, b, count(*) AS cnt FROM bg GROUP BY 1, 2)
-           GROUP BY doc_id)
-         SELECT w.doc_id, len(w.w) AS n_words,
-           round(1.0 - CAST(len(list_distinct(w.w)) AS DOUBLE) / len(w.w), 4)
-             AS dup_word_frac,
-           round(1.0 - CAST(n_dbg AS DOUBLE) / n_bg, 4) AS dup_bigram_frac,
-           top AS top_bigram_n
-         FROM w JOIN bgc ON w.doc_id = bgc.doc_id
-         WHERE len(w.w) >= 2
-         ORDER BY w.doc_id""",
-    "shuffle_train" ->
-      """SELECT doc_id, md5('shuf42:' || CAST(doc_id AS VARCHAR)) AS skey
-         FROM documents ORDER BY skey""",
-    "q28_array_fns" ->
-      """SELECT l_orderkey,
-           len(qtys) AS n_items,
-           CAST(list_aggregate(qtys, 'sum') AS BIGINT) AS total_qty,
-           len(list_filter(qtys, x -> x > 25)) AS n_heavy,
-           qtys[1] * 2 AS min_qty_x2,
-           qtys[-1] AS max_qty
-         FROM (SELECT l_orderkey,
-                      list_sort(array_agg(CAST(l_quantity AS BIGINT))) AS qtys
-               FROM lineitem GROUP BY l_orderkey)
-         ORDER BY l_orderkey""",
-    "q29_dates_regex" ->
-      """SELECT o_orderkey,
-           year(o_orderdate) AS o_year,
-           quarter(o_orderdate) AS o_quarter,
-           month(o_orderdate) AS o_month,
-           day(o_orderdate) AS o_day,
-           epoch_us(date_trunc('month', o_orderdate)) AS month_start_us,
-           date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-             AS days_since_95,
-           CAST(last_day(CAST(o_orderdate AS DATE)) AS VARCHAR) AS eom,
-           CAST(regexp_extract(o_orderpriority, '^(\d)-', 1) AS INT)
-             AS priority_num,
-           regexp_replace(lower(o_orderpriority), '^\d-', '') AS priority_name
-         FROM orders ORDER BY o_orderkey""",
-    "q30_unpivot" ->
-      """WITH wide AS (
-           SELECT l_returnflag,
-             CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-             CAST(count(*) AS DOUBLE) AS n_rows,
-             CAST(max(l_linenumber) AS DOUBLE) AS max_line
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag, measure, val FROM (
-           SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS val FROM wide
-           UNION ALL
-           SELECT l_returnflag, 'n_rows', n_rows FROM wide
-           UNION ALL
-           SELECT l_returnflag, 'max_line', max_line FROM wide)
-         ORDER BY l_returnflag, measure""",
-    "q31_resample" ->
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) // 3600000000 AS hr, value
-           FROM events WHERE user_id % 50 = 0),
-         h AS (SELECT user_id, hr, max(value) AS hr_max FROM ev GROUP BY 1, 2),
-         s AS (SELECT user_id, min(hr) AS h0, max(hr) AS h1 FROM h GROUP BY 1),
-         slots AS (SELECT user_id, UNNEST(generate_series(h0, h1)) AS hr FROM s),
-         j AS (SELECT sl.user_id, sl.hr, h.hr_max
-               FROM slots sl LEFT JOIN h ON h.user_id = sl.user_id AND h.hr = sl.hr)
-         SELECT user_id, CAST(hr AS BIGINT) AS hr,
-           hr_max IS NOT NULL AS is_observed,
-           last_value(hr_max IGNORE NULLS) OVER (
-             PARTITION BY user_id ORDER BY hr) AS filled
-         FROM j ORDER BY user_id, hr""",
-    "q32_full_outer" ->
-      """WITH o_open AS (
-           SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_open
-           FROM orders WHERE o_orderstatus = 'O' GROUP BY 1),
-         o_fin AS (
-           SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_fin
-           FROM orders WHERE o_orderstatus = 'F' GROUP BY 1)
-         SELECT coalesce(o_open.o_custkey, o_fin.o_custkey) AS o_custkey,
-           o_open.o_custkey IS NOT NULL AS has_open,
-           o_fin.o_custkey IS NOT NULL AS has_fin,
-           coalesce(n_open, 0) AS n_open,
-           coalesce(n_fin, 0) AS n_fin
-         FROM o_open FULL OUTER JOIN o_fin
-           ON o_open.o_custkey = o_fin.o_custkey
-         ORDER BY 1""",
-    "q33_multiset_ops" ->
-      """WITH hi AS (SELECT l_orderkey FROM lineitem WHERE l_quantity > 25),
-         disc AS (SELECT l_orderkey FROM lineitem WHERE l_discount > 0.05)
-         SELECT 'except_all' AS tag, l_orderkey
-         FROM (SELECT l_orderkey FROM hi EXCEPT ALL SELECT l_orderkey FROM disc)
-         UNION ALL
-         SELECT 'intersect_all' AS tag, l_orderkey
-         FROM (SELECT l_orderkey FROM hi INTERSECT ALL SELECT l_orderkey FROM disc)
-         ORDER BY tag, l_orderkey""",
-    "q34_lateral_topk" ->
-      """SELECT n_nationkey, n_name, c_custkey,
-           round(c_acctbal, 2) AS acctbal
-         FROM nation, LATERAL (
-           SELECT c_custkey, c_acctbal FROM customer
-           WHERE c_nationkey = n_nationkey
-           ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-         ORDER BY n_nationkey, acctbal DESC, c_custkey""",
-    // the IVF index is fully relational (centroids ARE data vectors), so
-    // the approximate path itself is oracle-checkable, probe-for-probe
-    "ann_ivf" -> annIvfOracle,
-    // trained-centroid IVF: the Lloyd chain over unit vectors + the
-    // ann_ivf probe spelling — the formerly spec-only path, hash-gated
-    "ann_ivf_kmeans" -> annIvfKmeansOracle,
-    // sampled-trainer arm: the same chain + probe spelling with the
-    // trainer input gated to the deterministic quarter sample — the
-    // bounded-training 100 TB path, still hash-exact
-    "ann_ivf_kmeans_sampled" -> annIvfKmeansSampledOracle,
-    // recall audits for the trained and sample-trained IVF paths — the
-    // ann_recall_ivf pattern with the Lloyd-chain oracles as approx
-    "ann_recall_ivf_kmeans" ->
+         FROM documents"""),
+    // --- training-data pipeline: similarity search over embeddings
+    Gate("ann_topk", Similarity.annBruteForce(_, _), annTopkOracle),
+    Gate("ann_lsh", Similarity.annLsh(_, _), annLshOracle),
+    // recall@10 audit: LEFT JOIN keeps zero-candidate queries as 0-recall
+    // rows; integer micro-rate, no float division (engine-exact)
+    Gate("ann_recall", Similarity.annRecall(_, _),
       s"""WITH brute AS ($annTopkOracle),
-         approx AS ($annIvfKmeansOracle)
+         approx AS ($annLshOracle)
          SELECT b.q_id,
            CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
            (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
              AS recall_micro
          FROM brute b LEFT JOIN approx a
            ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.q_id ORDER BY b.q_id""",
-    // the trained IVF-PQ + exact-refine stack (five Lloyd chains) and
-    // its three-layer recall audit vs the exact-L2 baseline
-    "ivf_pq_trained_topk" -> ivfPqTrainedOracle,
-    "ann_recall_ivf_pq_trained" ->
-      s"""WITH exact AS ($exactL2TopkOracle),
-         approx AS ($ivfPqTrainedOracle)
-         SELECT x.q_id,
-           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM exact x LEFT JOIN approx a
-           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
-         GROUP BY x.q_id ORDER BY x.q_id""",
-    // the sample-trained arm of the stack (all five chains gated to the
-    // md5 quarter slice) and its recall-parity audit
-    "ivf_pq_trained_sampled" -> ivfPqTrainedSampledOracle,
-    "ann_recall_ivf_pq_sampled" ->
-      s"""WITH exact AS ($exactL2TopkOracle),
-         approx AS ($ivfPqTrainedSampledOracle)
-         SELECT x.q_id,
-           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM exact x LEFT JOIN approx a
-           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
-         GROUP BY x.q_id ORDER BY x.q_id""",
-    "ann_recall_ivf_sampled" ->
+         GROUP BY b.q_id ORDER BY b.q_id"""),
+    // MRR audit: where the TRUE nearest neighbor (exact rank-1) landed in
+    // the approximate list — reciprocal rank as exact integer micro-units
+    // (1e6 // rank), 0 when missing; position-sensitive where recall@k
+    // is overlap-only
+    Gate("ann_mrr", Similarity.annMrr(_, _),
       s"""WITH brute AS ($annTopkOracle),
-         approx AS ($annIvfKmeansSampledOracle)
+         approx AS ($annLshOracle)
          SELECT b.q_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
+           CAST(coalesce(a.rk, 0) AS BIGINT) AS true_nn_rank,
+           CAST(CASE WHEN a.rk IS NULL THEN 0
+             ELSE 1000000 // a.rk END AS BIGINT) AS rr_micro
          FROM brute b LEFT JOIN approx a
            ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.q_id ORDER BY b.q_id""",
+         WHERE b.rk = 1
+         ORDER BY b.q_id"""),
     // IVF recall@10 audit — the LSH path's ann_recall twin, same
     // brute-force-vs-index LEFT JOIN and integer micro-rate
-    "ann_recall_ivf" ->
+    Gate("ann_recall_ivf", Similarity.annRecallIvf(_, _),
       s"""WITH brute AS ($annTopkOracle),
          approx AS ($annIvfOracle)
          SELECT b.q_id,
@@ -3078,11 +2276,11 @@ object SparkEntry {
              AS recall_micro
          FROM brute b LEFT JOIN approx a
            ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.q_id ORDER BY b.q_id""",
+         GROUP BY b.q_id ORDER BY b.q_id"""),
     // PQ/ADC recall@10 audit: exact squared-L2 baseline (x.x - 2 x.q +
     // q.q, each dot the same fixed-order list_sum as Spark's vec_dot,
     // floor-micro-quantized) vs the pqAdcOracle chain verbatim
-    "ann_recall_pq" ->
+    Gate("ann_recall_pq", Similarity.annRecallPq(_, _),
       s"""WITH exact AS ($exactL2TopkOracle),
          approx AS ($pqAdcOracle)
          SELECT x.q_id,
@@ -3091,52 +2289,234 @@ object SparkEntry {
              AS recall_micro
          FROM exact x LEFT JOIN approx a
            ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
-         GROUP BY x.q_id ORDER BY x.q_id""",
-    // PQ funnel: the ADC chain at shortlist width + exact-L2 rerank —
-    // the near-tie remedy as an oracle-gated operator, not prose
-    "pq_rerank_topk" -> pqRerankOracle,
-    // the funnel's recall audit vs the same exact-L2 baseline raw ADC
-    // is audited against — the jitter probe's falsification target
-    "ann_recall_pq_rerank" ->
-      s"""WITH exact AS ($exactL2TopkOracle),
-         approx AS ($pqRerankOracle)
-         SELECT x.q_id,
-           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM exact x LEFT JOIN approx a
-           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
-         GROUP BY x.q_id ORDER BY x.q_id""",
-    // TRAINED-book funnel: four Lloyd trainings + the shared ADC body at
-    // the constant k-proportional shortlist + the shared exact-L2 rerank
-    "pq_trained_rerank" -> pqTrainedRerankOracle,
-    // the trained funnel's recall audit vs the same exact-L2 baseline —
-    // must hold the floor at j=0.15 AND j=0.3 (the untrained funnel's
-    // corpus/4 shortlist reads 0.50 at j=0.3)
-    "ann_recall_pq_trained" ->
-      s"""WITH exact AS ($exactL2TopkOracle),
-         approx AS ($pqTrainedRerankOracle)
-         SELECT x.q_id,
-           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM exact x LEFT JOIN approx a
-           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
-         GROUP BY x.q_id ORDER BY x.q_id""",
+         GROUP BY x.q_id ORDER BY x.q_id"""),
     // incremental IVF upsert: delta slice assigned to BASE-derived seed
     // centroids — same argmax-cosine + larger-c_id tie spelling as
     // ann_ivf, same fixed-order double arithmetic, floor-micro cosine
-    "ivf_upsert" -> ivfUpsertOracle,
+    Gate("ivf_upsert", Similarity.ivfUpsertDocs(_, _), ivfUpsertOracle),
+    // margin-based bitext mining: floor-micro cosines, exact BIGINT
+    // neighborhood sums, positive-domain integer-division margin — the
+    // ratio-margin criterion restated over the parity split
+    Gate("bitext_mine", Similarity.bitextMarginDocs(_, _),
+      bitextOracle(
+        s"""pos AS (
+           SELECT * FROM (
+             SELECT x.vec_id AS x_id, y.vec_id AS y_id,
+               CAST(floor(list_sum(list_transform(generate_series(1, 64),
+                   d -> CAST(x.embedding[d] AS DOUBLE)
+                     * CAST(y.embedding[d] AS DOUBLE)))
+                 / (x.norm * y.norm) * 1e6) AS BIGINT) AS cos_micro
+             FROM base x JOIN base y
+               ON x.vec_id % 2 = 0
+                 AND x.vec_id < ${operators.Similarity.BitextGateXMaxId}
+                 AND y.vec_id % 2 = 1)
+           WHERE cos_micro > 0)""")),
+    // the IVF-probed spelling: ann_ivf's cell/probe CTEs generate the
+    // candidate pairs, then the identical margin chain
+    Gate("bitext_mine_ivf", Similarity.bitextMarginIvfDocs(_, _),
+      bitextOracle(
+        s"""cents AS (
+           SELECT vec_id AS c_id, embedding AS c_emb, norm AS c_norm
+           FROM base WHERE vec_id < 16),
+         scores AS (
+           SELECT b.vec_id, c.c_id,
+             list_sum(list_transform(generate_series(1, 64),
+               d -> CAST(b.embedding[d] AS DOUBLE) * CAST(c.c_emb[d] AS DOUBLE)))
+               / (b.norm * c.c_norm) AS ccos
+           FROM base b CROSS JOIN cents c),
+         assigned AS (
+           SELECT vec_id, c_id AS cell FROM (
+             SELECT vec_id, c_id,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY ccos DESC, c_id DESC) AS rn
+             FROM scores) WHERE rn = 1),
+         probes AS (
+           SELECT vec_id AS x_id, c_id AS probe_cell FROM (
+             SELECT vec_id, c_id,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY ccos DESC, c_id DESC) AS rn
+             FROM scores) WHERE rn <= 4 AND vec_id % 2 = 0
+               AND vec_id < ${operators.Similarity.BitextGateXMaxId}),
+         pos AS (
+           SELECT * FROM (
+             SELECT p.x_id, a.vec_id AS y_id,
+               CAST(floor(list_sum(list_transform(generate_series(1, 64),
+                   d -> CAST(bx.embedding[d] AS DOUBLE)
+                     * CAST(by.embedding[d] AS DOUBLE)))
+                 / (bx.norm * by.norm) * 1e6) AS BIGINT) AS cos_micro
+             FROM probes p
+             JOIN assigned a ON a.cell = p.probe_cell AND a.vec_id % 2 = 1
+             JOIN base bx ON bx.vec_id = p.x_id
+             JOIN base by ON by.vec_id = a.vec_id)
+           WHERE cos_micro > 0)""")),
+    // oracle masks key on the shingle STRING; the engine keys on
+    // xxhash64(shingle) — the gate re-checks the substitution, as for
+    // text_novelty / dedup_substr
+    Gate("source_overlap", Monitoring.sourceOverlapDocs(_, _),
+      """WITH sh AS (
+           SELECT CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) AS sid,
+             array_to_string(w[i:i+7], ' ') AS shingle
+           FROM (SELECT source, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 7)) AS t(i)
+           WHERE len(w) >= 8),
+         masks AS (
+           SELECT shingle, bit_or(1::BIGINT << sid) AS mask
+           FROM sh GROUP BY shingle),
+         hist AS (SELECT mask, count(*) AS n FROM masks GROUP BY mask),
+         grid AS (
+           SELECT s1.a, s2.b
+           FROM generate_series(0, 19) s1(a), generate_series(0, 19) s2(b)
+           WHERE s1.a <= s2.b)
+         SELECT CAST(g.a AS INT) AS src_a, CAST(g.b AS INT) AS src_b,
+           CAST(sum(h.n) AS BIGINT) AS n_shared
+         FROM hist h JOIN grid g
+           ON ((h.mask >> g.a) & 1) = 1 AND ((h.mask >> g.b) & 1) = 1
+         GROUP BY g.a, g.b ORDER BY src_a, src_b"""),
+    // prob_micro is the gate's own 4-decimal probability lifted to an
+    // exact integer, so binning and both rates are pure BIGINT arithmetic
+    Gate("quality_calibration", QualityModel.calibrationDocs(_, _),
+      """WITH f AS (
+           SELECT ln(1.0 + len(w)) AS f1,
+             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS f2,
+             CAST(len(list_filter(w, t -> len(t) >= 3)) AS DOUBLE) / len(w)
+               AS f3,
+             len(w) AS n_tok,
+             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+               / greatest(length(text), 1) AS ar,
+             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS dr
+           FROM (SELECT text, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents)),
+         s AS (
+           SELECT CAST(round(round(1.0 / (1.0 + exp(
+               -(-3.15 + 0.45 * f1 + 1.2 * f2 + 0.8 * f3))), 4) * 10000)
+               AS BIGINT) AS prob_micro,
+             CASE WHEN n_tok < 12 OR ar < 0.78 OR dr < 0.35
+               THEN 0 ELSE 1 END AS ck
+           FROM f),
+         b AS (
+           SELECT least(prob_micro * 20 // 10000, 19) AS bin,
+             prob_micro, ck
+           FROM s)
+         SELECT CAST(bin AS BIGINT) AS bin, count(*) AS n,
+           CAST(sum(ck) AS BIGINT) AS n_cascade_keep,
+           (CAST(sum(ck) AS BIGINT) * 1000000) // count(*)
+             AS cascade_keep_micro,
+           (CAST(sum(prob_micro) AS BIGINT) * 100) // count(*)
+             AS mean_prob_micro
+         FROM b GROUP BY bin ORDER BY bin"""),
+    // weak supervision: four integer-statistic labeling functions with
+    // abstention; label = vote sign, confidence = |sum|/non-abstaining
+    Gate("weak_labels", QualityModel.weakLabelsDocs(_, _), weakLabelsOracle),
+    // pairwise Cohen's kappa over the LF votes — chance-corrected
+    // agreement as a (num, den) pair (negative kappa never divides:
+    // truncating vs flooring division diverges below zero)
+    Gate("label_agreement", QualityModel.labelAgreementDocs(_, _), labelAgreementOracle),
     // mergeable-sketch audit: the oracle owns the exact distinct and
     // asserts every sketch verdict TRUE (the q18 sketch-gating pattern)
-    "hll_mergeable" ->
+    Gate("hll_mergeable", Monitoring.hllMergeableDocs(_, _),
       """SELECT CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_exact,
            TRUE AS direct_ok, TRUE AS merged_ok, TRUE AS merge_consistent
-         FROM documents""",
+         FROM documents"""),
+    Gate("kanon_audit", Monitoring.kanonDocs(_, _),
+      """SELECT lang, source, n_chars // 100 AS len_bucket,
+           count(*) AS n
+         FROM documents
+         GROUP BY 1, 2, 3 HAVING count(*) < 5
+         ORDER BY lang, source, len_bucket"""),
+    // l-diversity: class size + exact distinct sensitive-value count,
+    // classes below l — the homogeneity-attack audit on top of kanon
+    Gate("ldiv_audit", Monitoring.ldivDocs(_, _),
+      s"""SELECT source, n_chars // 100 AS len_bucket, count(*) AS n,
+           CAST(count(DISTINCT lang) AS BIGINT) AS n_sensitive
+         FROM documents
+         GROUP BY 1, 2
+         HAVING count(DISTINCT lang) < ${graft.operators.Monitoring.LDivL}
+         ORDER BY source, len_bucket"""),
+    // oracle keys token counts on the token STRING; the engine keys on
+    // xxhash64(token) — the gate re-checks the substitution. Every
+    // per-token term floors to integer micro-nats BEFORE the sum, so
+    // float summation order cannot leak into the hash.
+    Gate("text_entropy", TextAnalysis.tokenEntropyDocs(_, _),
+      """WITH t AS (
+           SELECT doc_id, tok, count(*) AS k
+           FROM (SELECT doc_id,
+                   UNNEST(regexp_split_to_array(trim(text), '\s+')) AS tok
+                 FROM documents)
+           WHERE len(tok) > 0 GROUP BY doc_id, tok),
+         d AS (
+           SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_tokens,
+             count(*) AS n_distinct,
+             CAST(sum(CAST(floor(k * ln(k) * 1000000) AS BIGINT))
+               AS BIGINT) AS sm
+           FROM t GROUP BY doc_id)
+         SELECT doc_id, n_tokens, n_distinct,
+           greatest(0, CAST(floor(ln(n_tokens) * 1000000) AS BIGINT)
+             - sm // n_tokens) AS entropy_micro
+         FROM d ORDER BY doc_id"""),
+    // the IVF index is fully relational (centroids ARE data vectors), so
+    // the approximate path itself is oracle-checkable, probe-for-probe
+    Gate("ann_ivf", Similarity.annIvf(_, _), annIvfOracle),
+    // trained-centroid IVF: the Lloyd chain over unit vectors + the
+    // ann_ivf probe spelling — the formerly spec-only path, hash-gated
+    Gate("ann_ivf_kmeans", Similarity.annIvfKmeans(_, _), annIvfKmeansOracle),
+    // sampled-trainer arm: the same chain + probe spelling with the
+    // trainer input gated to the deterministic quarter sample — the
+    // bounded-training 100 TB path, still hash-exact
+    Gate("ann_ivf_kmeans_sampled", Similarity.annIvfKmeansSampled(_, _), annIvfKmeansSampledOracle),
+    // recall audits for the trained and sample-trained IVF paths — the
+    // ann_recall_ivf pattern with the Lloyd-chain oracles as approx
+    Gate("ann_recall_ivf_kmeans", Similarity.annRecallIvfKmeans(_, _),
+      s"""WITH brute AS ($annTopkOracle),
+         approx AS ($annIvfKmeansOracle)
+         SELECT b.q_id,
+           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM brute b LEFT JOIN approx a
+           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
+         GROUP BY b.q_id ORDER BY b.q_id"""),
+    Gate("ann_recall_ivf_sampled", Similarity.annRecallIvfSampled(_, _),
+      s"""WITH brute AS ($annTopkOracle),
+         approx AS ($annIvfKmeansSampledOracle)
+         SELECT b.q_id,
+           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM brute b LEFT JOIN approx a
+           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
+         GROUP BY b.q_id ORDER BY b.q_id"""),
+    // the trained IVF-PQ + exact-refine stack (five Lloyd chains) and
+    // its three-layer recall audit vs the exact-L2 baseline
+    Gate("ivf_pq_trained_topk", Similarity.ivfPqTrainedTopKDocs(_, _), ivfPqTrainedOracle),
+    Gate("ann_recall_ivf_pq_trained", Similarity.annRecallIvfPqTrained(_, _),
+      s"""WITH exact AS ($exactL2TopkOracle),
+         approx AS ($ivfPqTrainedOracle)
+         SELECT x.q_id,
+           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM exact x LEFT JOIN approx a
+           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
+         GROUP BY x.q_id ORDER BY x.q_id"""),
+    // the sample-trained arm of the stack (all five chains gated to the
+    // md5 quarter slice) and its recall-parity audit
+    Gate("ivf_pq_trained_sampled", Similarity.ivfPqTrainedSampledTopKDocs(_, _),
+      ivfPqTrainedSampledOracle),
+    Gate("ann_recall_ivf_pq_sampled", Similarity.annRecallIvfPqSampled(_, _),
+      s"""WITH exact AS ($exactL2TopkOracle),
+         approx AS ($ivfPqTrainedSampledOracle)
+         SELECT x.q_id,
+           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM exact x LEFT JOIN approx a
+           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
+         GROUP BY x.q_id ORDER BY x.q_id"""),
     // exact all-pairs restatement: the Spark side is LSH-bucketed with
     // exact verify, so its output is a (full-recall at these cosines)
     // subset of this — equality checked over the whole table
-    "embed_neardup" ->
+    Gate("embed_neardup", Similarity.embedNearDup(_, _),
       """WITH base AS (
            SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding,
@@ -3150,799 +2530,15 @@ object SparkEntry {
          WHERE list_sum(list_transform(generate_series(1, 64),
                d -> CAST(a.embedding[d] AS DOUBLE) * CAST(b.embedding[d] AS DOUBLE)))
              / (a.norm * b.norm) >= 0.9
-         ORDER BY id_a, id_b""",
-    "text_stats" ->
-      """SELECT doc_id,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-         len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS n_distinct_tokens,
-         len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_subwords,
-         length(text) AS n_chars_measured,
-         length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
-         FROM documents ORDER BY doc_id""",
-    "text_quality" -> s"$qualityOracleBody ORDER BY doc_id",
-    "text_langid" ->
-      """WITH scored AS (
-           SELECT doc_id,
-             len(list_filter(w, t -> t IN ('the','and','of','to','in','is','a'))) AS s_en,
-             len(list_filter(w, t -> t IN ('le','la','les','des','et','une'))) AS s_fr,
-             len(list_filter(w, t -> t IN ('el','los','las','que','y','una'))) AS s_es,
-             len(list_filter(w, t -> t IN ('der','die','das','und','ein','nicht'))) AS s_de,
-             len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS s_zh
-           FROM (SELECT doc_id, text,
-                        regexp_split_to_array(trim(text), '\s+') AS w
-                 FROM documents))
-         SELECT doc_id,
-           CASE WHEN greatest(s_en,s_fr,s_es,s_de,s_zh) = 0 THEN 'und'
-                WHEN s_de = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'de'
-                WHEN s_en = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'en'
-                WHEN s_es = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'es'
-                WHEN s_fr = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'fr'
-                ELSE 'zh' END AS lang_pred, s_en, s_zh
-         FROM scored ORDER BY doc_id""",
-    "mm_metadata" ->
-      """SELECT doc_id,
-         CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-              WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         octet_length(encode(text)) AS n_bytes,
-         upper(substr(hex(encode(text)), 1, 16)) AS magic_hex
-         FROM documents ORDER BY doc_id""",
-    "q20_percentiles" ->
-      """SELECT l_returnflag,
-         quantile_cont(l_quantity, 0.25) AS p25,
-         quantile_cont(l_quantity, 0.5) AS p50,
-         quantile_cont(l_quantity, 0.75) AS p75,
-         min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
-         count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q21_stats" ->
-      """SELECT l_returnflag,
-         round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-         round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price,
-         round(stddev_samp(l_extendedprice), 2) AS stddev_price,
-         round(regr_slope(l_extendedprice, l_quantity), 2) AS slope_price_qty,
-         count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // µs resolution on BOTH sides: DuckDB loads TIMESTAMP(NANOS) parquet
-    // at µs, so comparing at ns would flake on sub-µs knife-edge gaps
-    "q22_sessions" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                    OR lag(epoch_us(ts)) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-         numbered AS (
-           SELECT user_id, tus, event_id,
-             CAST(sum(new_session) OVER (PARTITION BY user_id
-               ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-           FROM flagged)
-         SELECT user_id, session_id, count(*) AS n_events,
-           min(tus) AS start_us,
-           max(tus) AS end_us,
-           max(tus) - min(tus) AS duration_us
-         FROM numbered GROUP BY user_id, session_id
-         ORDER BY user_id, session_id""",
-    "q23_grouping_sets" ->
-      """SELECT r_name, c_mktsegment, count(*) AS n_customers,
-         round(sum(c_acctbal), 2) AS total_acctbal
-         FROM customer
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY CUBE (r_name, c_mktsegment)
-         ORDER BY r_name ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST""",
-    "q24_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-         CAST(row_number() OVER k AS INT) AS rn,
-         CAST(rank() OVER p AS INT) AS prio_rank,
-         CAST(dense_rank() OVER p AS INT) AS prio_dense,
-         round(percent_rank() OVER p, 6) AS prio_prank,
-         CAST(ntile(4) OVER k AS INT) AS tile4,
-         round(lag(o_totalprice, 1) OVER k, 2) AS prev_price,
-         round(lead(o_totalprice, 1) OVER k, 2) AS next_price
-         FROM orders
-         WINDOW k AS (PARTITION BY o_custkey ORDER BY o_orderkey),
-                p AS (PARTITION BY o_custkey ORDER BY o_orderpriority)
-         ORDER BY o_orderkey""",
-    "q25_tfidf" ->
-      """WITH tf AS (
-           SELECT doc_id, term, count(*) AS tf
-           FROM (SELECT doc_id,
-                   unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-                 FROM documents)
-           WHERE length(term) > 0 GROUP BY doc_id, term),
-         df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         scored AS (
-           SELECT tf.doc_id, tf.term, tf.tf, df.df,
-             round(tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)), 6) AS score
-           FROM tf JOIN df USING (term) CROSS JOIN n),
-         ranked AS (
-           SELECT doc_id, term, tf, df, score,
-             CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, term) AS INT) AS rk
-           FROM scored)
-         SELECT doc_id, rk, term, score, tf, df FROM ranked
-         WHERE rk <= 3 ORDER BY doc_id, rk""",
-    "skew_salted_agg" ->
-      """SELECT event_type, count(*) AS n_events,
-         round(sum(value), 2) AS total_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    // the hot/cold split is routing only — ANY hot set unions back to
-    // exactly the plain inner join, which is what the oracle states
-    "skew_split_join" ->
-      """SELECT event_id, user_id, event_type, c_mktsegment,
-         round(value, 2) AS value
-         FROM events JOIN customer ON user_id = c_custkey
-         ORDER BY event_id""",
-    // bucketing is a physical layout choice — the oracle is the plain
-    // join + rollup the bucketed plan must reproduce byte-for-byte
-    "bucket_join" ->
-      """SELECT o_custkey AS c_custkey, c_mktsegment,
-         count(*) AS n_orders,
-         round(sum(o_totalprice), 2) AS total_spend
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1, 2 ORDER BY 1""",
-    "q26_correlated" ->
-      """SELECT p_brand,
-         round(sum(l_extendedprice) / 7.0, 2) AS avg_weekly,
-         count(*) AS n_small_orders
-         FROM lineitem JOIN part ON p_partkey = l_partkey
-         WHERE l_quantity < (SELECT 0.2 * avg(l_quantity)
-                             FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q27_range_window" ->
-      """SELECT event_id, user_id,
-         round(sum(value) OVER w, 2) AS hour_sum,
-         count(*) OVER w AS hour_n
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-    // the sketch pass is recall-guaranteed and the count pass is exact,
-    // so the plain GROUP BY ... HAVING is a true oracle for the
-    // Misra-Gries pipeline
-    "hh_heavy_hitters" ->
-      """SELECT user_id, count(*) AS n_events FROM events
-         GROUP BY user_id HAVING count(*) * 2000 >= (SELECT count(*) FROM events)
-         ORDER BY user_id""",
-    "dedup_simhash" -> simhashOracle,
-    "ann_lsh" -> annLshOracle,
-    // banded multi-probe float LSH + its recall audit vs the exact
-    // cosine baseline — the jitter-hardened candidate generator gated
-    "ann_lsh_mp" -> annLshMpOracle,
-    "ann_recall_lsh_mp" ->
-      s"""WITH brute AS ($annTopkOracle),
-         approx AS ($annLshMpOracle)
-         SELECT b.q_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
-             AS recall_micro
-         FROM brute b LEFT JOIN approx a
-           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.q_id ORDER BY b.q_id""",
-    "text_pii_redact" ->
-      s"""WITH p AS (
-           SELECT doc_id,
-             CASE CAST(doc_id % 3 AS INT)
-               WHEN 0 THEN 'reach user' || CAST(doc_id AS VARCHAR) || '@' || source
-                 || '.example.com or 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                 || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 || ' re: ' || text
-               WHEN 1 THEN 'server 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-                 || '.7 logged: ' || text
-               ELSE text END AS pii_text
-           FROM documents)
-         SELECT doc_id,
-           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.EmailRe}')) AS n_emails,
-           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.PhoneRe}')) AS n_phones,
-           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.Ipv4Re}')) AS n_ips,
-           ${duckMd5_60(
-             s"""regexp_replace(regexp_replace(regexp_replace(pii_text,
-                '${operators.TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
-                '${operators.TextAnalysis.PhoneRe}', '<PHONE>', 'g'),
-                '${operators.TextAnalysis.Ipv4Re}', '<IP>', 'g')""")} AS red_fp
-         FROM p ORDER BY doc_id""",
-    "ngram_lm" ->
-      """WITH toks AS (
-           SELECT lang, regexp_split_to_array(trim(text), '\s+') AS w
-           FROM documents),
-         bg AS (
-           SELECT lang, w[i] AS w1, w[i + 1] AS w2
-           FROM toks, UNNEST(generate_series(1, len(w) - 1)) t(i)
-           WHERE len(w) >= 2),
-         c AS (SELECT lang, w1, w2, count(*) AS n FROM bg GROUP BY 1, 2, 3),
-         p AS (
-           SELECT lang, w1, w2, n,
-             CAST(sum(n) OVER (PARTITION BY lang, w1) AS BIGINT) AS n_prefix,
-             row_number() OVER (PARTITION BY lang ORDER BY n DESC, w1, w2) AS rk
-           FROM c)
-         SELECT lang, rk, w1, w2, n, n_prefix FROM p
-         WHERE rk <= 20 ORDER BY lang, rk""",
-    "cohort_retention" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-         c AS (
-           SELECT user_id, day,
-             min(day) OVER (PARTITION BY user_id) AS cohort_day
-           FROM e)
-         SELECT cohort_day, day - cohort_day AS day_offset,
-           count(DISTINCT user_id) AS n_users
-         FROM c GROUP BY 1, 2 ORDER BY 1, 2""",
-    "funnel_stages" -> funnelOracleSql,
-    // the streaming funnel must land the SAME frontier table
-    "stream_funnel" -> funnelOracleSql,
-    "stream_quality" -> streamQualityOracleSql,
-    "stream_quarantine" -> streamQuarantineOracle,
-    "pipeline_curate" -> pipelineCurateOracleSql,
-    "stream_pipeline" -> streamPipelineOracleSql,
-    // watermarked stream-stream join: inner matches emit as found, so
-    // the landed set equals the batch interval join
-    "stream_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-           epoch_us(p.ts) AS purchase_us, epoch_us(c.ts) AS click_us
-         FROM events p JOIN events c
-           ON p.event_type = 'purchase' AND c.event_type = 'click'
-           AND p.user_id = c.user_id
-           AND epoch_us(c.ts) <= epoch_us(p.ts)
-           AND epoch_us(c.ts) >= epoch_us(p.ts) - 3600000000
-         ORDER BY purchase_id, click_us""",
-    // stream-static broadcast enrichment: modal event type per user
-    // with the same (count, type) lexicographic tie rule max_by applies
-    "stream_enrich" ->
-      """WITH c AS (
-           SELECT user_id, event_type, count(*) AS n
-           FROM events GROUP BY 1, 2),
-         r AS (
-           SELECT user_id, event_type, row_number() OVER (
-             PARTITION BY user_id ORDER BY n DESC, event_type DESC) AS rk
-           FROM c),
-         dim AS (SELECT user_id, event_type AS home_type FROM r WHERE rk = 1)
-         SELECT e.event_id, e.user_id, e.event_type,
-           d.home_type IS NOT NULL AS is_known,
-           coalesce(d.home_type, 'unknown') AS home_type
-         FROM events e LEFT JOIN dim d USING (user_id)
-         ORDER BY e.event_id""",
-    // complete-mode leaderboard: the final emission equals the batch top-k
-    "stream_topk" ->
-      """SELECT user_id, count(*) AS n_events FROM events
-         GROUP BY 1 ORDER BY n_events DESC, user_id LIMIT 10""",
-    // stateless fingerprint enrichment: md5-60 digest + per-doc distinct
-    // winnow-fp count (same rolling-hash chain as the text_winnow gate)
-    "stream_upsert" -> ivfUpsertOracle,
-    "stream_cdc" -> cdcApplyOracle,
-    "stream_fingerprint" ->
-      s"""WITH cs AS (
-           SELECT doc_id, list_transform(generate_series(1, length(text)),
-             i -> CAST(ord(substr(text, i, 1)) AS BIGINT)) AS cs
-           FROM documents WHERE length(text) >= 8),
-         g AS (
-           SELECT doc_id, list_transform(generate_series(1, len(cs) - 4),
-             i -> (cs[i] * 4362470401 + cs[i+1] * 16974593 + cs[i+2] * 66049
-                   + cs[i+3] * 257 + cs[i+4]) % 1000000007) AS grams
-           FROM cs),
-         w AS (
-           SELECT DISTINCT doc_id, list_min(grams[j:j+3]) AS wfp
-           FROM g, UNNEST(generate_series(1, len(grams) - 3)) t(j)),
-         wc AS (SELECT doc_id, CAST(count(*) AS INT) AS n_winnow_fps
-                FROM w GROUP BY 1)
-         SELECT d.doc_id, ${duckMd5_60("text")} AS fp,
-           coalesce(wc.n_winnow_fps, 0) AS n_winnow_fps
-         FROM documents d LEFT JOIN wc USING (doc_id)
-         ORDER BY doc_id""",
-    // gap sessionization with event-time-timeout eviction: emitted =
-    // gap-closed in batch (every non-last session of a user) plus last
-    // sessions whose armed timeout (end + gap) fell strictly below the
-    // final ms-floored watermark. value pre-quantized to micro-units so
-    // session sums are exact integers in any accumulation order.
-    "stream_sessions" ->
-      """WITH ev AS (
-           SELECT user_id, epoch_ms(ts) AS ms, floor(value * 1e6) AS v
-           FROM events),
-         lagd AS (
-           SELECT user_id, ms, v,
-             lag(ms) OVER (PARTITION BY user_id ORDER BY ms) AS pms
-           FROM ev),
-         isl AS (
-           SELECT user_id, ms, v,
-             sum(CASE WHEN pms IS NULL OR ms - pms > 1800000 THEN 1
-                      ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ms
-                     ROWS UNBOUNDED PRECEDING) AS sid
-           FROM lagd),
-         sess AS (
-           SELECT user_id, sid, min(ms) AS start_ms, max(ms) AS end_ms,
-             CAST(count(*) AS INT) AS n_events,
-             CAST(sum(v) AS DOUBLE) AS total_value,
-             sid < max(sid) OVER (PARTITION BY user_id) AS closed_in_batch
-           FROM isl GROUP BY 1, 2),
-         wm AS (SELECT max(epoch_ms(ts)) - 3600000 AS wm_ms FROM events)
-         SELECT user_id, start_ms, end_ms, n_events, total_value
-         FROM sess, wm
-         WHERE closed_in_batch OR end_ms + 1800000 < wm_ms
-         ORDER BY user_id, start_ms""",
-    // deterministic projection of the streaming content dedup: exactly
-    // one survivor per content class
-    "stream_dedup" ->
-      "SELECT DISTINCT md5(text) AS fp FROM documents ORDER BY fp",
-    // append-mode watermark cutoff applied oracle-side: windows whose
-    // end is <= max(event time) - 1h delay are exactly the finalized
-    // (emitted) set. Watermark is tracked in WHOLE MILLISECONDS by the
-    // engine (EventTimeStats), so the oracle floors to ms before
-    // subtracting the delay — an hour-boundary max-event edge case
-    // would otherwise disagree in the sub-ms remainder.
-    "stream_hourly" ->
-      """WITH wm AS (
-           SELECT (epoch_ms(max(ts)) - 3600000) * 1000 AS wm_us FROM events)
-         SELECT * FROM (
-           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-           FROM events GROUP BY 1, 2)
-         WHERE hour_us + 3600000000 <= (SELECT wm_us FROM wm)
-         ORDER BY hour_us, event_type""",
-    // mix-drift alarm: same watermark cutoff as stream_hourly; reference
-    // shares and window shares are exact integer micro-units (Long `div`
-    // ≡ `//` on non-negative BIGINTs), zero-count tracked types included
-    "stream_mixdrift" ->
-      s"""WITH wm AS (
-           SELECT (epoch_ms(max(ts)) - 3600000) * 1000 AS wm_us FROM events),
-         tot AS (SELECT count(*) AS t FROM events),
-         ref AS (
-           SELECT event_type,
-             CAST(count(*) * 1000000 // (SELECT t FROM tot) AS BIGINT)
-               AS ref_micro
-           FROM events GROUP BY 1),
-         h AS (
-           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us,
-             count(*) AS n_total
-           FROM events GROUP BY 1),
-         tn AS (
-           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
-             count(*) AS n
-           FROM events GROUP BY 1, 2),
-         grid AS (
-           SELECT h.hour_us, t.event_type, h.n_total
-           FROM h CROSS JOIN (VALUES ${
-        streaming.Streaming.MixEventTypes.map(t => s"('$t')").mkString(", ")
-      }) t(event_type))
-         SELECT g.hour_us, g.event_type,
-           CAST(coalesce(tn.n, 0) AS BIGINT) AS n, g.n_total,
-           CAST(coalesce(tn.n, 0) * 1000000 // g.n_total AS BIGINT)
-             AS share_micro,
-           coalesce(r.ref_micro, 0) AS ref_micro,
-           CAST(abs(CAST(coalesce(tn.n, 0) * 1000000 // g.n_total AS BIGINT)
-             - coalesce(r.ref_micro, 0))
-             > ${streaming.Streaming.MixDriftThresholdMicro} AS INTEGER)
-             AS drift
-         FROM grid g
-         LEFT JOIN tn ON g.hour_us = tn.hour_us
-           AND g.event_type = tn.event_type
-         LEFT JOIN ref r ON g.event_type = r.event_type
-         WHERE g.hour_us + 3600000000 <= (SELECT wm_us FROM wm)
-         ORDER BY g.hour_us, g.event_type""",
-    // per-language admission prefix sum, arrival order = doc_id
-    "stream_admit" ->
-      s"""WITH t AS (
-           SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok
-           FROM documents),
-         s AS (SELECT doc_id, lang, tok,
-                 CAST(coalesce(sum(tok) OVER (PARTITION BY lang
-                   ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-                   PRECEDING), 0) AS BIGINT) AS "off"
-               FROM t)
-         SELECT doc_id, lang, tok, "off" FROM s
-         WHERE "off" < ${streaming.StreamQueries.AdmitBudget}
-         ORDER BY doc_id""",
-    "doc_chunks" ->
-      s"""WITH t AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-           FROM documents),
-         n AS (SELECT doc_id, w, len(w) AS nw FROM t),
-         c AS (
-           SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-             array_to_string(w[i * ${TextAnalysis.ChunkStride} + 1 : i * ${TextAnalysis.ChunkStride} + ${TextAnalysis.ChunkTokens}], ' ') AS chunk
-           FROM n, UNNEST(generate_series(0,
-             CASE WHEN nw <= ${TextAnalysis.ChunkTokens} THEN 0
-                  ELSE (${TextAnalysis.ChunkStride - 1} + nw - ${TextAnalysis.ChunkTokens}) // ${TextAnalysis.ChunkStride} END)) t2(i))
-         SELECT doc_id, chunk_idx,
-           len(regexp_split_to_array(chunk, '\\s+')) AS n_chunk_tokens,
-           ${duckMd5_60("chunk")} AS chunk_fp
-         FROM c ORDER BY doc_id, chunk_idx""",
-    "quality_ntile" ->
-      s"""WITH q AS ($qualityOracleBody)
-         SELECT doc_id, quality,
-           row_number() OVER (ORDER BY quality, doc_id) AS rank,
-           ntile(10) OVER (ORDER BY quality, doc_id) AS bin
-         FROM q ORDER BY doc_id""",
-    // same ntile bins as quality_ntile, then the curriculum rank: bins
-    // descending, md5-shuffled inside each bin
-    "curriculum_order" ->
-      s"""WITH q AS ($qualityOracleBody),
-         b AS (SELECT doc_id,
-                 ntile(10) OVER (ORDER BY quality, doc_id) AS bin
-               FROM q)
-         SELECT doc_id, bin,
-           row_number() OVER (ORDER BY bin DESC,
-             md5('curr42:' || CAST(doc_id AS VARCHAR)), doc_id)
-             AS train_rank
-         FROM b ORDER BY doc_id""",
-    // bin/10 keep-fraction over the 1e6 md5 buckets. Thresholds are
-    // interpolated from the SAME double arithmetic Spark runs
-    // (1e6 * (bin/10.0) truncated) — naive bin*100000 would be off by
-    // one for bins where bin/10.0 rounds down in binary (e.g. 7 →
-    // 699999), the strat_sample interpolation precedent
-    "weighted_sample" ->
-      s"""WITH q AS ($qualityOracleBody),
-         nt AS (
-           SELECT doc_id, ntile(10) OVER (ORDER BY quality, doc_id) AS bin
-           FROM q)
-         SELECT doc_id, bin FROM nt
-         WHERE ${duckMd5_60("'qw:' || CAST(doc_id AS VARCHAR)")} % 1000000
-               < CASE bin ${(1 to 10).map(b =>
-                   s"WHEN $b THEN ${(1000000L * (b / 10.0)).toLong}")
-                 .mkString(" ")} END
-         ORDER BY doc_id""",
-    "filter_cascade" ->
-      s"""WITH r AS (
-           SELECT doc_id, len(w) AS n_tok,
-             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / greatest(length(text), 1) AS ar,
-             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS dr
-           FROM (SELECT doc_id, text,
-                        regexp_split_to_array(trim(text), '\\s+') AS w
-                 FROM documents))
-         SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
-           round(ar, 4) AS alpha_ratio, round(dr, 4) AS distinct_ratio,
-           CASE WHEN n_tok < ${TextAnalysis.CascadeMinTokens} THEN 'too_short'
-                WHEN ar < ${TextAnalysis.CascadeMinAlpha} THEN 'low_alpha'
-                WHEN dr < ${TextAnalysis.CascadeMinDistinct} THEN 'high_dup'
-                ELSE 'keep' END AS verdict
-         FROM r ORDER BY doc_id""",
-    "text_normalize" ->
-      s"""WITH n AS (
-           SELECT doc_id,
-             trim(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')) AS norm
-           FROM documents)
-         SELECT doc_id, CAST(length(norm) AS INT) AS n_norm_chars,
-           ${duckMd5_60("norm")} AS norm_fp
-         FROM n ORDER BY doc_id""",
-    "lang_balance" ->
-      s"""WITH d AS (
-           SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) AS tok
-           FROM documents),
-         lt AS (SELECT lang, sum(tok) AS lang_tok FROM d GROUP BY lang),
-         f AS (SELECT lang,
-                 least(1.0, sum(lang_tok) OVER () / count(*) OVER ()
-                            / lang_tok) AS frac
-               FROM lt)
-         SELECT d.doc_id, d.lang
-         FROM d JOIN f ON d.lang IS NOT DISTINCT FROM f.lang
-         WHERE ${duckMd5_60("'bal:' || CAST(d.doc_id AS VARCHAR)")} % 1000000
-               < CAST(floor(1000000.0 * frac) AS BIGINT)
-         ORDER BY d.doc_id""",
-    "strat_sample" ->
-      s"""SELECT doc_id, lang FROM documents
-         WHERE ${duckMd5_60("'strat:' || CAST(doc_id AS VARCHAR)")} % 1000000
-               < $stratCaseSql
-         ORDER BY doc_id""",
-    "source_cap" ->
-      """WITH r AS (
-           SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5('cap:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-           FROM documents)
-         SELECT doc_id, source, rk FROM r WHERE rk <= 15 ORDER BY doc_id""",
-    // temperature mixture: sqrt-share weights floor-quantized to micro
-    // ints, target tokens and admission thresholds in pure BIGINT
-    // division — a double quotient + floor could cross an integer where
-    // true integer division doesn't
-    "mix_temperature" ->
-      s"""WITH d AS (
-           SELECT doc_id, source,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok
-           FROM documents),
-         s AS (SELECT source, CAST(sum(tok) AS BIGINT) AS n_s
-               FROM d GROUP BY 1),
-         tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n FROM s),
-         wts AS (SELECT source, n_s,
-             CAST(floor(sqrt(CAST(n_s AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6)
-               AS BIGINT) AS w
-           FROM s, tot),
-         wt AS (SELECT CAST(sum(w) AS BIGINT) AS ws FROM wts),
-         rates AS (SELECT source,
-             least(1000000, (1000000 * (($MixTempBudget * w) // ws)) // n_s)
-               AS rate_micro
-           FROM wts, wt)
-         SELECT doc_id, source, tok, rate_micro
-         FROM d JOIN rates USING (source)
-         WHERE ${duckMd5_60("'mixt:' || CAST(doc_id AS VARCHAR)")} % 1000000
-               < rate_micro
-         ORDER BY doc_id""",
-    // epoch upsampling: same rate chain as mix_temperature WITHOUT the
-    // clamp; full copies from integer division, the fractional copy
-    // from the md5 gate, expanded with generate_series
-    "mix_upsample" ->
-      s"""WITH d AS (
-           SELECT doc_id, source,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok
-           FROM documents),
-         s AS (SELECT source, CAST(sum(tok) AS BIGINT) AS n_s
-               FROM d GROUP BY 1),
-         tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n FROM s),
-         wts AS (SELECT source, n_s,
-             CAST(floor(sqrt(CAST(n_s AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6)
-               AS BIGINT) AS w
-           FROM s, tot),
-         wt AS (SELECT CAST(sum(w) AS BIGINT) AS ws FROM wts),
-         rates AS (SELECT source,
-             (1000000 * (($MixUpBudget * w) // ws)) // n_s AS f_micro
-           FROM wts, wt),
-         j AS (SELECT doc_id, d.source, tok,
-             f_micro // 1000000 +
-               CASE WHEN ${duckMd5_60("'ups:' || CAST(doc_id AS VARCHAR)")}
-                      % 1000000 < f_micro % 1000000
-                    THEN 1 ELSE 0 END AS n_copies
-           FROM d JOIN rates USING (source))
-         SELECT doc_id, source, CAST(c AS INT) AS copy, tok
-         FROM j, UNNEST(generate_series(1, n_copies)) t(c)
-         ORDER BY doc_id, copy""",
-    // length-bucketed batching: per-bucket md5-ordered token prefix sum
-    // (pid is a PREFIX of skey, so the two-level order == skey order —
-    // the equivalence the pack_shards gate already proves)
-    "length_batches" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok,
-             md5('lb:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         b AS (SELECT *,
-             CASE WHEN tok < 64 THEN 0 WHEN tok < 128 THEN 1
-                  WHEN tok < 256 THEN 2 ELSE 3 END AS bucket
-           FROM d),
-         o AS (SELECT doc_id, bucket, tok,
-             coalesce(sum(tok) OVER (PARTITION BY bucket
-               ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-           FROM b)
-         SELECT doc_id, CAST(bucket AS INT) AS bucket,
-           CAST(off // $LengthBatchBudget AS BIGINT) AS batch_id, tok
-         FROM o ORDER BY doc_id""",
-    // padding-waste rollup over the SAME md5-ordered stream packed two
-    // ways (naive vs length-bucketed) — per batch waste = max·n − Σ,
-    // exact integer micro-rates
-    "pack_efficiency" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok,
-             md5('lb:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         b AS (SELECT *,
-             CASE WHEN tok < 64 THEN 0 WHEN tok < 128 THEN 1
-                  WHEN tok < 256 THEN 2 ELSE 3 END AS bucket
-           FROM d),
-         o AS (SELECT bucket, tok,
-             coalesce(sum(tok) OVER (PARTITION BY bucket
-               ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-           FROM b),
-         g1 AS (
-           SELECT bucket, off // $LengthBatchBudget AS batch_id,
-             count(*) AS n_docs, sum(tok) AS real_tok, max(tok) AS max_tok
-           FROM o GROUP BY 1, 2),
-         o2 AS (SELECT tok,
-             coalesce(sum(tok) OVER (ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-           FROM d),
-         g2 AS (
-           SELECT off // $LengthBatchBudget AS batch_id,
-             count(*) AS n_docs, sum(tok) AS real_tok, max(tok) AS max_tok
-           FROM o2 GROUP BY 1),
-         u AS (
-           SELECT 'bucketed' AS strategy, count(*) AS n_batches,
-             sum(real_tok) AS tokens_real,
-             sum(max_tok * n_docs - real_tok) AS tokens_padded
-           FROM g1
-           UNION ALL
-           SELECT 'naive', count(*), sum(real_tok),
-             sum(max_tok * n_docs - real_tok)
-           FROM g2)
-         SELECT strategy, CAST(n_batches AS BIGINT) AS n_batches,
-           CAST(tokens_real AS BIGINT) AS tokens_real,
-           CAST(tokens_padded AS BIGINT) AS tokens_padded,
-           CAST(tokens_padded * 1000000 // (tokens_real + tokens_padded)
-             AS BIGINT) AS waste_micro
-         FROM u ORDER BY strategy""",
-    "pack_shards" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
-             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         c AS (
-           SELECT tok,
-             sum(tok) OVER (ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM d)
-         SELECT CAST((cum - tok) // $PackBudget AS BIGINT) AS shard_id,
-           count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS n_tokens
-         FROM c GROUP BY 1 ORDER BY 1""",
-    // same deterministic layout as pack_shards; docs split across fixed
-    // seqLen boundaries, one row per (sequence, doc) span
-    "pack_sequences" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
-             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         o AS (
-           SELECT doc_id, tok,
-             CAST(sum(tok) OVER (ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
-               AS BIGINT) AS off
-           FROM d),
-         spans AS (
-           -- generate_series as a LIST function + unnest: the table-
-           -- function form can't take lateral column parameters
-           SELECT doc_id, tok, off,
-             unnest(generate_series(off // $SeqLen,
-               (off + tok - 1) // $SeqLen)) AS seq_id
-           FROM o)
-         SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-           CAST(greatest(off, seq_id * $SeqLen) - off AS BIGINT)
-             AS doc_start,
-           CAST(greatest(off, seq_id * $SeqLen) - seq_id * $SeqLen
-             AS BIGINT) AS seq_start,
-           CAST(least(off + tok, (seq_id + 1) * $SeqLen)
-             - greatest(off, seq_id * $SeqLen) AS BIGINT) AS n_toks
-         FROM spans
-         ORDER BY seq_id, doc_id""",
-    // mask metadata rollup of the pack_sequences span table: ordered
-    // seq_start:n_toks boundary digest + pad, same layout CTEs
-    "pack_masks" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
-             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         o AS (
-           SELECT doc_id, tok,
-             CAST(sum(tok) OVER (ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
-               AS BIGINT) AS off
-           FROM d),
-         spans AS (
-           SELECT doc_id, tok, off,
-             unnest(generate_series(off // $SeqLen,
-               (off + tok - 1) // $SeqLen)) AS seq_id
-           FROM o),
-         segs AS (
-           SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-             CAST(greatest(off, seq_id * $SeqLen) - seq_id * $SeqLen
-               AS BIGINT) AS seq_start,
-             CAST(least(off + tok, (seq_id + 1) * $SeqLen)
-               - greatest(off, seq_id * $SeqLen) AS BIGINT) AS n_toks
-           FROM spans)
-         SELECT seq_id, count(*) AS n_segments,
-           CAST(sum(n_toks) AS BIGINT) AS n_toks_used,
-           CAST($SeqLen - sum(n_toks) AS BIGINT) AS n_pad,
-           md5(string_agg(CAST(seq_start AS VARCHAR) || ':'
-             || CAST(n_toks AS VARCHAR), ','
-             ORDER BY seq_start, n_toks, doc_id)) AS segments_digest
-         FROM segs GROUP BY seq_id ORDER BY seq_id""",
-    // bucketed range join restated as DuckDB's native range predicate —
-    // the oracle checks the SEMANTICS (point-in-interval), not the
-    // bucketing rewrite, so a bucket-boundary bug cannot hash-match
-    "range_join" ->
-      """WITH iv AS (
-           SELECT event_id AS iv_id, value - 40 AS lo, value + 40 AS hi
-           FROM events WHERE event_id % 50 = 0 AND event_id < 1000)
-         SELECT iv_id, count(*) AS n_points,
-           min(e.event_id) AS min_event, max(e.event_id) AS max_event
-         FROM iv JOIN events e ON e.value >= iv.lo AND e.value <= iv.hi
-         GROUP BY iv_id ORDER BY iv_id""",
-    // per-language greedy fill in the same md5-salted order; a doc is
-    // admitted when its first token falls inside the lang budget
-    "mix_budget" ->
-      s"""WITH d AS (
-           SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS tok,
-             md5('mix:' || CAST(doc_id AS VARCHAR)) AS skey
-           FROM documents),
-         c AS (
-           SELECT doc_id, lang, tok,
-             sum(tok) OVER (PARTITION BY lang ORDER BY skey, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
-               AS off
-           FROM d)
-         SELECT doc_id, lang, tok, CAST(off AS BIGINT) AS off
-         FROM c WHERE off < $MixBudget ORDER BY doc_id""",
-    // BM25: constants written as the same arithmetic Spark evaluates
-    // ((1.2 + 1), not 2.2) so both engines produce bit-identical doubles
-    "bm25_topk" -> bm25OracleSql,
-    "hybrid_topk" -> hybridOracleSql,
-    // late interaction: each <q_i, d_j> sub-dot floor-micro-quantized
-    // BEFORE the max/sum, so the whole MaxSim is integer arithmetic
-    "maxsim_topk" ->
-      """WITH q AS (
-           SELECT vec_id AS q_id, embedding AS qv FROM embeddings
-           WHERE vec_id < 10),
-         scored AS (
-           SELECT q_id, c.vec_id,
-             CAST(list_sum(list_transform(generate_series(0, 3), i ->
-               list_max(list_transform(generate_series(0, 3), j ->
-                 CAST(floor(list_sum(list_transform(generate_series(1, 16),
-                   k -> CAST(qv[i * 16 + k] AS DOUBLE)
-                      * CAST(c.embedding[j * 16 + k] AS DOUBLE)))
-                   * 1e6) AS BIGINT))))) AS BIGINT) AS maxsim
-           FROM embeddings c JOIN q ON c.vec_id != q.q_id),
-         ranked AS (
-           SELECT q_id, vec_id, maxsim, row_number() OVER (
-             PARTITION BY q_id ORDER BY maxsim DESC, vec_id) AS rk
-           FROM scored)
-         SELECT q_id, rk, vec_id, maxsim FROM ranked
-         WHERE rk <= 10 ORDER BY q_id, rk""",
-    "sample_det" ->
-      s"""SELECT doc_id FROM documents
-         WHERE ${duckMd5_60("CAST(doc_id AS VARCHAR)")} % 1000000
-               < ${(1000000L * 0.3).toLong}
-         ORDER BY doc_id""",
-    "text_fingerprint" ->
-      s"""SELECT doc_id,
-         ${duckMd5_60("text")} AS fp,
-         ${duckMd5_60("array_to_string(list_sort(regexp_split_to_array(trim(text), '\\s+')), ' ')")} AS bag_fp
-         FROM documents ORDER BY doc_id""",
-    // winnow: same degree-4 polynomial gram hash (base 257 mod 1e9+7) over
-    // code points, same least-of-4 window minimum, same distinct
-    "text_winnow" ->
-      """WITH cs AS (
-           SELECT doc_id, list_transform(generate_series(1, length(text)),
-             i -> CAST(ord(substr(text, i, 1)) AS BIGINT)) AS cs
-           FROM documents WHERE length(text) >= 8),
-         g AS (
-           SELECT doc_id, list_transform(generate_series(1, len(cs) - 4),
-             i -> (cs[i] * 4362470401 + cs[i+1] * 16974593 + cs[i+2] * 66049
-                   + cs[i+3] * 257 + cs[i+4]) % 1000000007) AS grams
-           FROM cs)
-         SELECT DISTINCT doc_id, list_min(grams[j:j+3]) AS fp
-         FROM g, UNNEST(generate_series(1, len(grams) - 3)) t(j)
-         ORDER BY doc_id, fp""",
-    "mm_decode" ->
-      s"""WITH h AS (
-           SELECT doc_id, ${duckMd5_60("text")} AS h FROM documents)
-         SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-                WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-           CAST(64 + (h % 8) * 32 AS INT) AS width,
-           CAST(64 + ((h >> 8) % 8) * 32 AS INT) AS height,
-           CAST(3 AS INT) AS channels,
-           CAST(1 + ((h >> 16) % 30) AS INT) AS n_frames
-         FROM h ORDER BY doc_id""",
-    "mm_frames" ->
-      s"""WITH h AS (
-           SELECT doc_id, ${duckMd5_60("text")} AS h FROM documents
-           WHERE CAST(doc_id % 3 AS INT) = 2),
-         d AS (
-           SELECT doc_id, CAST(1 + ((h >> 16) % 30) AS INT) AS n_frames FROM h)
-         SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx
-         FROM d, UNNEST(generate_series(0, n_frames - 1,
-           greatest(CAST(ceil(n_frames / 4.0) AS INT), 1))) t(f)
-         ORDER BY doc_id, frame_idx""",
+         ORDER BY id_a, id_b"""),
+    Gate("kmeans_assign", Clustering.kmeansAssign(_, _), kmeansAssignOracleSql),
     // The deterministic half of k-means, fully value-gated: assignment
     // against the fixed dyadic-grid centroids (Clustering.fixedCentroids),
     // inlined below as exact decimal literals (each coordinate is k/1024 −
     // 0.5 and each interpolated square-sum is an exact dyadic double, so
     // both engines parse bit-identical values and run the identical
     // left-to-right double arithmetic).
-    "kmeans_fixed_assign" ->
+    Gate("kmeans_fixed_assign", Clustering.kmeansFixedAssign(_, _),
       s"""WITH cents(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          scored AS (
@@ -3957,53 +2553,12 @@ object SparkEntry {
              row_number() OVER (PARTITION BY vec_id ORDER BY d, c_id) AS rk
            FROM scored)
          SELECT vec_id, c_id AS cluster, round(v2 + d, 4) AS dist2
-         FROM ranked WHERE rk = 1 ORDER BY vec_id""",
-    // capacity-balanced assignment: top-2 centroids per vector (same
-    // VALUES), md5-salted per-cluster sub-windows split cap = q·64 + r,
-    // overflow rows take their second-nearest centroid
-    "balanced_assign" ->
-      s"""WITH cents(c_id, c, c2) AS (VALUES
-           ${kmeansCentroidValues()}),
-         scored AS (
-           SELECT e.vec_id, c.c_id,
-             c.c2 - 2 * list_sum(list_transform(generate_series(1, 64),
-                 d -> CAST(e.embedding[d] AS DOUBLE) * c.c[d])) AS d
-           FROM embeddings e CROSS JOIN cents c),
-         top2 AS (
-           SELECT vec_id, c_id, d,
-             row_number() OVER (PARTITION BY vec_id ORDER BY d, c_id) AS rn
-           FROM scored),
-         a AS (
-           SELECT vec_id,
-             max(CASE WHEN rn = 1 THEN c_id END) AS c1,
-             max(CASE WHEN rn = 1 THEN d END) AS d1,
-             max(CASE WHEN rn = 2 THEN c_id END) AS c2
-           FROM top2 WHERE rn <= 2 GROUP BY vec_id),
-         s AS (
-           SELECT *, ('0x' || substr(md5('bal:' || CAST(vec_id AS VARCHAR)),
-             1, 15))::BIGINT % ${operators.Clustering.BalancedSaltBuckets}
-             AS salt
-           FROM a),
-         caps AS (SELECT (count(*) + 15) // 16 AS cap FROM embeddings),
-         r AS (
-           SELECT s.*, cap,
-             cap // ${operators.Clustering.BalancedSaltBuckets}
-               + (CASE WHEN salt <
-                   cap % ${operators.Clustering.BalancedSaltBuckets}
-                 THEN 1 ELSE 0 END) AS cap_local,
-             row_number() OVER (PARTITION BY c1, salt
-               ORDER BY d1, vec_id) AS rk
-           FROM s, caps)
-         SELECT vec_id,
-           CAST(CASE WHEN rk > cap_local THEN c2 ELSE c1 END AS INT)
-             AS cluster,
-           rk > cap_local AS moved
-         FROM r ORDER BY vec_id""",
+         FROM ranked WHERE rk = 1 ORDER BY vec_id"""),
     // SemDeDup: fixed-centroid assignment (same VALUES as kmeans_fixed),
     // then within-cluster cosine pruning keeping the lowest vec_id; the
     // τ compare is raw doubles — SemDedupTau sits in a measured 1.3e-4
     // gap of the pairwise-cosine distribution, ulp-safe on both engines
-    "semdedup" ->
+    Gate("semdedup", Clustering.semDedupDocs(_, _),
       s"""WITH cents(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          scored AS (
@@ -4031,10 +2586,10 @@ object SparkEntry {
              / (u.norm * v.norm) >= ${operators.Clustering.SemDedupTau})
          SELECT b.vec_id, b.cluster FROM base b
          WHERE b.vec_id NOT IN (SELECT vec_id FROM dominated)
-         ORDER BY b.vec_id""",
+         ORDER BY b.vec_id"""),
     // PQ: integer codes only — argmin of the same c²−2·v·c doubles the
     // kmeans_fixed gate proved bit-identical, ties broken by centroid id
-    "pq_codes" ->
+    Gate("pq_codes", Similarity.pqCodesDocs(_, _),
       s"""WITH cents(sub, c_id, c, c2) AS (VALUES
            ${pqCentroidValues()}),
          scored AS (
@@ -4053,16 +2608,20 @@ object SparkEntry {
            CAST(max(CASE WHEN sub = 1 THEN c_id END) AS INTEGER) AS code1,
            CAST(max(CASE WHEN sub = 2 THEN c_id END) AS INTEGER) AS code2,
            CAST(max(CASE WHEN sub = 3 THEN c_id END) AS INTEGER) AS code3
-         FROM ranked WHERE rk = 1 GROUP BY vec_id ORDER BY vec_id""",
+         FROM ranked WHERE rk = 1 GROUP BY vec_id ORDER BY vec_id"""),
+    // trained per-subspace PQ codebooks: four unrolled Lloyd chains +
+    // the shared argmin CTE — the adaptive-codebook production path,
+    // hash-gated because the trainer is engine-exact
+    Gate("pq_trained_codes", Similarity.pqTrainedCodesDocs(_, _), pqTrainedCodesOracle),
     // ADC probe over the PQ codes: same codebook VALUES + argmin CTE as
     // pq_codes; per-(query, subspace, centroid) table entries are the
     // same fixed-order doubles floor-quantized to micro BIGINTs, so the
     // GROUP BY distance sum is an exact integer sum in any order
-    "pq_adc_topk" -> pqAdcOracle,
+    Gate("pq_adc_topk", Similarity.pqAdcTopKDocs(_, _), pqAdcOracle),
     // IVF-PQ: coarse cells from the kmeans_fixed centroid VALUES, probe
     // lists from the same distance ranking, ADC via the pq codebook
     // VALUES — every ranking input integer or fixed-order double
-    "ivf_pq_topk" ->
+    Gate("ivf_pq_topk", Similarity.ivfPqTopKDocs(_, _),
       s"""WITH kc(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          pc(sub, p_id, pcv, pc2) AS (VALUES
@@ -4117,10 +2676,10 @@ object SparkEntry {
                ORDER BY adist_micro, vec_id) AS rk
            FROM adist)
          SELECT q_id, rk, vec_id, adist_micro FROM ranked
-         WHERE rk <= 10 ORDER BY q_id, rk""",
+         WHERE rk <= 10 ORDER BY q_id, rk"""),
     // hard negatives: ann_topk's rounded-cosine ranking with the
     // different-label predicate in the join
-    "hard_negatives" ->
+    Gate("hard_negatives", Similarity.hardNegativesDocs(_, _),
       """WITH base AS (
            SELECT vec_id, label, embedding,
              sqrt(list_sum(list_transform(embedding,
@@ -4141,17 +2700,17 @@ object SparkEntry {
            FROM scored)
          SELECT q_id, q_label, rk, vec_id AS neg_id, label AS neg_label,
            cos
-         FROM ranked WHERE rk <= 5 ORDER BY q_id, rk""",
+         FROM ranked WHERE rk <= 5 ORDER BY q_id, rk"""),
     // int8 scalar quantization: the oracle derives the SAME per-dim
     // scales from the parquet (max|x|/127) and replays the identical
     // clamp(floor(x/s + 0.5)) — float→double widening, the division
     // and floor are all engine-exact, so codes compare raw
-    "embed_quantize_i8" ->
+    Gate("embed_quantize_i8", Similarity.quantizeI8Docs(_, _),
       s"""$i8Ctes
-         SELECT vec_id, i AS dim, q8 FROM q ORDER BY vec_id, dim""",
+         SELECT vec_id, i AS dim, q8 FROM q ORDER BY vec_id, dim"""),
     // int8 serving path: integer dot products (exact in any order),
     // ties on vec_id
-    "ann_i8_topk" ->
+    Gate("ann_i8_topk", Similarity.i8TopKDocs(_, _),
       s"""$i8Ctes,
          pairs AS (
            SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
@@ -4164,11 +2723,11 @@ object SparkEntry {
              ORDER BY dot DESC, vec_id) AS rk
            FROM pairs)
          SELECT q_id, rk, vec_id, dot FROM ranked
-         WHERE rk <= 10 ORDER BY q_id, rk""",
+         WHERE rk <= 10 ORDER BY q_id, rk"""),
     // matryoshka funnel: prefix-dim shortlist then full-dim rerank,
     // both scores floor-micro-quantized so both rankings are
     // integer-exact; the oracle replays the same two-stage cut
-    "matryoshka_topk" ->
+    Gate("matryoshka_topk", Similarity.matryoshkaTopKDocs(_, _),
       """WITH q AS (
            SELECT vec_id AS q_id, embedding AS qv FROM embeddings
            WHERE vec_id < 10),
@@ -4194,16 +2753,12 @@ object SparkEntry {
              ORDER BY d64 DESC, vec_id) AS rk
            FROM s2)
          SELECT q_id, rk, vec_id, d64 FROM r2
-         WHERE rk <= 10 ORDER BY q_id, rk""",
-    "graph_pagerank" -> pageRankOracleSql,
-    "zorder_layout" -> zorderOracleSql,
-    "hilbert_layout" -> hilbertOracleSql,
-    "skip_audit" -> skipAuditOracleSql,
-    "rp_project" -> rpProjectOracleSql,
-    "ann_rp_topk" -> rpTopKOracleSql,
+         WHERE rk <= 10 ORDER BY q_id, rk"""),
+    Gate("rp_project", Similarity.rpProjectDocs(_, _), rpProjectOracleSql),
+    Gate("ann_rp_topk", Similarity.rpTopKDocs(_, _), rpTopKOracleSql),
     // RP-funnel recall audit against the exact raw-dot baseline (the
     // funnel's own metric — cosine would mischarge the projection)
-    "ann_recall_rp" ->
+    Gate("ann_recall_rp", Similarity.annRecallRp(_, _),
       s"""WITH exact AS (
            WITH q AS (
              SELECT vec_id AS q_id, embedding AS qv FROM embeddings
@@ -4226,28 +2781,21 @@ object SparkEntry {
              AS recall_micro
          FROM exact e LEFT JOIN approx a
            ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-         GROUP BY e.q_id ORDER BY e.q_id""",
-    "kmeans_assign" -> kmeansAssignOracleSql,
-    // trained per-subspace PQ codebooks: four unrolled Lloyd chains +
-    // the shared argmin CTE — the adaptive-codebook production path,
-    // hash-gated because the trainer is engine-exact
-    "pq_trained_codes" -> pqTrainedCodesOracle,
-    "kcenter_coreset" -> kCenterOracleSql,
-    "minhash_mergeable" -> minhashMergeableOracleSql,
+         GROUP BY e.q_id ORDER BY e.q_id"""),
     // 1-bit binarization: the oracle replays the identical CASE-gated
     // power-of-two folds (a sum of distinct bits IS their OR); the only
     // float op on either side is the >= 0 sign test
-    "embed_binarize" ->
+    Gate("embed_binarize", Similarity.binarizeDocs(_, _),
       s"""WITH $binSigCte
          SELECT vec_id, sig_lo, sig_hi,
            CAST(bit_count(sig_lo) + bit_count(sig_hi) AS BIGINT) AS n_pos
-         FROM sig ORDER BY vec_id""",
+         FROM sig ORDER BY vec_id"""),
     // mean-centered binarization: per-dim means re-derived in-query as
     // floor-quantized micro sums divided by the count — DuckDB's integer
     // // TRUNCATES toward zero (it floors only on doubles), matching
     // Scala Long division — then the same CASE-gated power-of-two folds
     // over the centered micro values
-    "embed_center_binarize" ->
+    Gate("embed_center_binarize", Similarity.centerBinarizeDocs(_, _),
       """WITH q AS (
            SELECT i,
              CAST(sum(CAST(floor(embedding[i] * 1e6) AS BIGINT))
@@ -4270,10 +2818,10 @@ object SparkEntry {
            FROM embeddings, ml)
          SELECT vec_id, sig_lo, sig_hi,
            CAST(bit_count(sig_lo) + bit_count(sig_hi) AS BIGINT) AS n_pos
-         FROM sig ORDER BY vec_id""",
+         FROM sig ORDER BY vec_id"""),
     // Hamming serving path: distance = two xor+popcount words,
     // integer-exact in any engine; ascending ties on vec_id
-    "ann_ham_topk" ->
+    Gate("ann_ham_topk", Similarity.hammingTopKDocs(_, _),
       s"""WITH $binSigCte,
          q AS (
            SELECT vec_id AS q_id, sig_lo AS q_lo, sig_hi AS q_hi
@@ -4288,14 +2836,14 @@ object SparkEntry {
              ORDER BY ham, vec_id) AS rk
            FROM pairs)
          SELECT q_id, rk, vec_id, ham FROM ranked
-         WHERE rk <= 10 ORDER BY q_id, rk""",
+         WHERE rk <= 10 ORDER BY q_id, rk"""),
     // banded Hamming ANN: candidates share >= 1 of the eight 8-bit
     // bands (equi-join, never a per-query corpus scan), then the exact
     // two-popcount rank — the simhash-banding pattern on the 1-bit index
-    "ann_ham_lsh" -> hamLshOracleSql,
+    Gate("ann_ham_lsh", Similarity.hammingLshTopKDocs(_, _), hamLshOracleSql),
     // banded-path recall audit vs the exact Hamming scan — prices the
     // bucket-collision recall loss past the pigeonhole radius
-    "ann_recall_ham_lsh" ->
+    Gate("ann_recall_ham_lsh", Similarity.annRecallHamLsh(_, _),
       s"""WITH exact AS (
            WITH $binSigCte,
            q AS (
@@ -4318,13 +2866,13 @@ object SparkEntry {
              AS recall_micro
          FROM exact e LEFT JOIN approx a
            ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-         GROUP BY e.q_id ORDER BY e.q_id""",
+         GROUP BY e.q_id ORDER BY e.q_id"""),
     // 1-bit funnel: Hamming shortlist, then the matryoshka-style
     // full-dim floor-micro dot rerank behind the shortlist cut
-    "ann_ham_rerank" -> hamRerankOracleSql,
+    Gate("ann_ham_rerank", Similarity.hammingRerankDocs(_, _), hamRerankOracleSql),
     // 1-bit funnel recall audit vs the exact raw-dot baseline (the
     // funnel reranks by the micro dot, so that is its own metric)
-    "ann_recall_ham" ->
+    Gate("ann_recall_ham", Similarity.annRecallHam(_, _),
       s"""WITH exact AS (
            WITH q AS (
              SELECT vec_id AS q_id, embedding AS qv FROM embeddings
@@ -4347,18 +2895,151 @@ object SparkEntry {
              AS recall_micro
          FROM exact e LEFT JOIN approx a
            ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-         GROUP BY e.q_id ORDER BY e.q_id""",
+         GROUP BY e.q_id ORDER BY e.q_id"""),
+    // PQ funnel: the ADC chain at shortlist width + exact-L2 rerank —
+    // the near-tie remedy as an oracle-gated operator, not prose
+    Gate("pq_rerank_topk", Similarity.pqRerankTopKDocs(_, _), pqRerankOracle),
+    // the funnel's recall audit vs the same exact-L2 baseline raw ADC
+    // is audited against — the jitter probe's falsification target
+    Gate("ann_recall_pq_rerank", Similarity.annRecallPqRerank(_, _),
+      s"""WITH exact AS ($exactL2TopkOracle),
+         approx AS ($pqRerankOracle)
+         SELECT x.q_id,
+           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM exact x LEFT JOIN approx a
+           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
+         GROUP BY x.q_id ORDER BY x.q_id"""),
+    // TRAINED-book funnel: four Lloyd trainings + the shared ADC body at
+    // the constant k-proportional shortlist + the shared exact-L2 rerank
+    Gate("pq_trained_rerank", Similarity.pqTrainedRerankTopKDocs(_, _), pqTrainedRerankOracle),
+    // the trained funnel's recall audit vs the same exact-L2 baseline —
+    // must hold the floor at j=0.15 AND j=0.3 (the untrained funnel's
+    // corpus/4 shortlist reads 0.50 at j=0.3)
+    Gate("ann_recall_pq_trained", Similarity.annRecallPqTrained(_, _),
+      s"""WITH exact AS ($exactL2TopkOracle),
+         approx AS ($pqTrainedRerankOracle)
+         SELECT x.q_id,
+           CAST(count(a.vec_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.vec_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM exact x LEFT JOIN approx a
+           ON a.q_id = x.q_id AND a.vec_id = x.neighbor_id
+         GROUP BY x.q_id ORDER BY x.q_id"""),
+    // banded multi-probe float LSH + its recall audit vs the exact
+    // cosine baseline — the jitter-hardened candidate generator gated
+    Gate("ann_lsh_mp", Similarity.annLshMp(_, _), annLshMpOracle),
+    Gate("ann_recall_lsh_mp", Similarity.annRecallLshMp(_, _),
+      s"""WITH brute AS ($annTopkOracle),
+         approx AS ($annLshMpOracle)
+         SELECT b.q_id,
+           CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
+           (CAST(count(a.neighbor_id) AS BIGINT) * 1000000) // 10
+             AS recall_micro
+         FROM brute b LEFT JOIN approx a
+           ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
+         GROUP BY b.q_id ORDER BY b.q_id"""),
+    // --- training-data pipeline: post-training (SFT / preference) prep
     // DPO preference pairs: the oracle restates the max/min-of-struct
     // selection as two row_number windows over the identical
     // (micro-score, id) total order; all-tie groups drop on both sides
-    "dpo_pairs" -> dpoPairsOracle,
+    Gate("dpo_pairs", Posttraining.dpoPairsDocs(_, _), dpoPairsOracle),
+    // SFT assembly: ordered group-concat replayed via string_agg with
+    // the same (ts, event_id) order key; ts is only a sort key (never
+    // rendered), so timestamp formatting can't leak into the md5
+    Gate("chat_assemble", Posttraining.chatAssembleDocs(_, _),
+      """WITH t AS (
+           SELECT user_id, ts, event_id,
+             event_type || ':' ||
+               CAST(CAST(floor(value * 1e6) AS BIGINT) AS VARCHAR) AS s
+           FROM events),
+         a AS (
+           SELECT user_id,
+             CAST(count(*) AS BIGINT) AS n_turns,
+             string_agg(s, '|' ORDER BY ts, event_id) AS transcript
+           FROM t GROUP BY user_id)
+         SELECT user_id, n_turns,
+           CAST(length(transcript) AS BIGINT) AS total_chars,
+           string_split(transcript, '|')[1] AS first_turn,
+           string_split(transcript, '|')[-1] AS last_turn,
+           md5(transcript) AS fp
+         FROM a ORDER BY user_id""", cachedIntermediate = true),
+    // GRPO advantage: exact integer numerator v·n − Σv (the engine never
+    // divides); DuckDB's windowed sum over BIGINT is HUGEINT, so cast.
+    // The quantization mirrors boundedMicro's ±2^41 loud bound (see
+    // boundedMicroSql) so the guard errors on both engines alike.
+    Gate("grpo_advantage", Posttraining.grpoAdvantageDocs(_, _),
+      s"""WITH c AS (
+           SELECT user_id, event_id,
+             ${boundedMicroSql("grpoAdvantage")} AS v
+           FROM events),
+         g AS (
+           SELECT user_id, event_id, v,
+             count(*) OVER (PARTITION BY user_id) AS n,
+             CAST(sum(v) OVER (PARTITION BY user_id) AS BIGINT) AS s
+           FROM c)
+         SELECT user_id AS prompt_id, event_id, v AS reward_micro,
+           v * n - s AS adv_num, n AS n_candidates
+         FROM g ORDER BY prompt_id, event_id"""),
+    // per-group min-max normalization: non-negative operands make
+    // truncating (Spark div) and flooring (DuckDB //) division agree;
+    // zero-spread groups normalize to 0 by contract on both sides; the
+    // quantization mirrors boundedMicro's ±2^41 loud bound (boundedMicroSql)
+    Gate("reward_norm", Posttraining.rewardNormDocs(_, _),
+      s"""WITH c AS (
+           SELECT user_id, event_id,
+             ${boundedMicroSql("rewardNorm")} AS v
+           FROM events),
+         g AS (
+           SELECT user_id, event_id, v,
+             min(v) OVER (PARTITION BY user_id) AS mn,
+             max(v) OVER (PARTITION BY user_id) AS mx
+           FROM c)
+         SELECT user_id AS prompt_id, event_id, v AS reward_micro,
+           CASE WHEN mx = mn THEN CAST(0 AS BIGINT)
+                ELSE (v - mn) * 1000000 // (mx - mn) END AS norm_micro
+         FROM g ORDER BY prompt_id, event_id"""),
+    // chat-history truncation: the DESC running cost is monotone, so the
+    // oracle's `cum <= budget+1` cut is the same whole-turn suffix the
+    // Spark in-row fold counts; zero-kept groups fingerprint ''
+    Gate("chat_truncate", Posttraining.chatTruncateDocs(_, _),
+      """WITH t AS (
+           SELECT user_id, ts, event_id,
+             event_type || ':' ||
+               CAST(CAST(floor(value * 1e6) AS BIGINT) AS VARCHAR) AS s
+           FROM events),
+         r AS (
+           SELECT user_id, ts, event_id, s,
+             CAST(sum(length(s) + 1) OVER (PARTITION BY user_id
+               ORDER BY ts DESC, event_id DESC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS BIGINT) AS cum
+           FROM t),
+         k AS (SELECT user_id, ts, event_id, s FROM r WHERE cum <= 201),
+         a AS (
+           SELECT user_id, count(*) AS nk,
+             string_agg(s, '|' ORDER BY ts, event_id) AS transcript
+           FROM k GROUP BY user_id),
+         tot AS (
+           SELECT user_id, CAST(count(*) AS BIGINT) AS n_turns
+           FROM t GROUP BY user_id)
+         SELECT tot.user_id, n_turns,
+           CAST(coalesce(a.nk, 0) AS BIGINT) AS n_kept,
+           CAST(length(coalesce(a.transcript, '')) AS BIGINT) AS kept_chars,
+           md5(coalesce(a.transcript, '')) AS fp_kept
+         FROM tot LEFT JOIN a ON tot.user_id = a.user_id
+         ORDER BY tot.user_id""", cachedIntermediate = true),
     // the UPDATE-mode streaming spelling of the same transform must land
     // the identical pair set — one oracle string, zero drift possible
-    "stream_dpo" -> dpoPairsOracle,
+    Gate("stream_dpo", streaming.StreamQueries.dpoEvents(_, _), dpoPairsOracle),
+    // the UPDATE-mode streaming spelling of the same selection must land
+    // the identical set — one oracle string, zero drift possible
+    Gate("stream_best_of_n", streaming.StreamQueries.bestOfNEvents(_, _), bestOfNOracle),
     // the composed post-training pipeline: assembly, fp-dedup, shape
     // admission and pairing restated as one CTE chain over the same
     // micro-exact arithmetic
-    "posttrain_curate" ->
+    Gate("posttrain_curate", Posttraining.posttrainCurateDocs(_, _),
       """WITH t AS (
            SELECT user_id, ts, event_id,
              event_type || ':' ||
@@ -4390,62 +3071,12 @@ object SparkEntry {
          FROM (SELECT * FROM r WHERE rb = 1) b
          JOIN (SELECT * FROM r WHERE rw = 1) w ON b.user_id = w.user_id
          WHERE b.v > w.v
-         ORDER BY prompt_id""",
-    // chat-history truncation: the DESC running cost is monotone, so the
-    // oracle's `cum <= budget+1` cut is the same whole-turn suffix the
-    // Spark in-row fold counts; zero-kept groups fingerprint ''
-    "chat_truncate" ->
-      """WITH t AS (
-           SELECT user_id, ts, event_id,
-             event_type || ':' ||
-               CAST(CAST(floor(value * 1e6) AS BIGINT) AS VARCHAR) AS s
-           FROM events),
-         r AS (
-           SELECT user_id, ts, event_id, s,
-             CAST(sum(length(s) + 1) OVER (PARTITION BY user_id
-               ORDER BY ts DESC, event_id DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS cum
-           FROM t),
-         k AS (SELECT user_id, ts, event_id, s FROM r WHERE cum <= 201),
-         a AS (
-           SELECT user_id, count(*) AS nk,
-             string_agg(s, '|' ORDER BY ts, event_id) AS transcript
-           FROM k GROUP BY user_id),
-         tot AS (
-           SELECT user_id, CAST(count(*) AS BIGINT) AS n_turns
-           FROM t GROUP BY user_id)
-         SELECT tot.user_id, n_turns,
-           CAST(coalesce(a.nk, 0) AS BIGINT) AS n_kept,
-           CAST(length(coalesce(a.transcript, '')) AS BIGINT) AS kept_chars,
-           md5(coalesce(a.transcript, '')) AS fp_kept
-         FROM tot LEFT JOIN a ON tot.user_id = a.user_id
-         ORDER BY tot.user_id""",
-    // SFT assembly: ordered group-concat replayed via string_agg with
-    // the same (ts, event_id) order key; ts is only a sort key (never
-    // rendered), so timestamp formatting can't leak into the md5
-    "chat_assemble" ->
-      """WITH t AS (
-           SELECT user_id, ts, event_id,
-             event_type || ':' ||
-               CAST(CAST(floor(value * 1e6) AS BIGINT) AS VARCHAR) AS s
-           FROM events),
-         a AS (
-           SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n_turns,
-             string_agg(s, '|' ORDER BY ts, event_id) AS transcript
-           FROM t GROUP BY user_id)
-         SELECT user_id, n_turns,
-           CAST(length(transcript) AS BIGINT) AS total_chars,
-           string_split(transcript, '|')[1] AS first_turn,
-           string_split(transcript, '|')[-1] AS last_turn,
-           md5(transcript) AS fp
-         FROM a ORDER BY user_id""",
+         ORDER BY prompt_id""", cachedIntermediate = true),
     // pass@k (Chen et al. 2021): both binomials cancel to products of k
     // consecutive non-negative longs — exact integer division; n < k
     // groups report the degenerate any-pass verdict (and dodge the zero
     // denominator DuckDB raises on)
-    "pass_at_k" ->
+    Gate("pass_at_k", Posttraining.passAtKDocs(_, _),
       """WITH c0 AS (
            SELECT user_id, CAST(floor(value * 1e6) AS BIGINT) AS v
            FROM events),
@@ -4462,62 +3093,1059 @@ object SparkEntry {
                ((n-c) * (n-c-1) * (n-c-2) * (n-c-3) * 1000000)
                  // (n * (n-1) * (n-2) * (n-3))
            END AS BIGINT) AS passk_micro
-         FROM g ORDER BY prompt_id""",
+         FROM g ORDER BY prompt_id"""),
+    // best-of-n rejection sampling: per-prompt argmax (ties to the larger
+    // event_id, the max(struct) tiebreak) gated on the ABSOLUTE threshold
+    Gate("best_of_n", Posttraining.bestOfNDocs(_, _), bestOfNOracle),
     // Bradley-Terry generator ranking: per-prompt argmax beats every
     // other candidate's generator; Hunter's MM iterations unrolled as
     // CTEs over the T² rate table in the identical non-negative integer
     // arithmetic (Scala / ≡ DuckDB // on non-negatives)
-    "bt_scores" -> btScoresOracle,
-    // best-of-n rejection sampling: per-prompt argmax (ties to the larger
-    // event_id, the max(struct) tiebreak) gated on the ABSOLUTE threshold
-    "best_of_n" -> bestOfNOracle,
-    // the UPDATE-mode streaming spelling of the same selection must land
-    // the identical set — one oracle string, zero drift possible
-    "stream_best_of_n" -> bestOfNOracle,
-    // GRPO advantage: exact integer numerator v·n − Σv (the engine never
-    // divides); DuckDB's windowed sum over BIGINT is HUGEINT, so cast.
-    // The quantization mirrors boundedMicro's ±2^41 loud bound (see
-    // boundedMicroSql) so the guard errors on both engines alike.
-    "grpo_advantage" ->
-      s"""WITH c AS (
-           SELECT user_id, event_id,
-             ${boundedMicroSql("grpoAdvantage")} AS v
-           FROM events),
+    Gate("bt_scores", Posttraining.btScoresDocs(_, _), btScoresOracle),
+    // kNN majority vote: queries (vec_id < 10) against the labeled pool
+    // (vec_id >= 10); same rounded-cosine ranking as ann_topk, majority
+    // label with smaller-label tiebreak
+    Gate("knn_classify", Similarity.knnClassifyDocs(_, _),
+      """WITH base AS (
+           SELECT vec_id, label, embedding,
+             sqrt(list_sum(list_transform(embedding,
+               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
+           FROM embeddings),
+         scored AS (
+           SELECT q.vec_id AS q_id, c.vec_id, c.label,
+             round(list_sum(list_transform(generate_series(1, 64),
+                 d -> CAST(c.embedding[d] AS DOUBLE) * CAST(q.embedding[d] AS DOUBLE)))
+               / (c.norm * q.norm), 4) AS cos
+           FROM base q JOIN base c ON q.vec_id < 10 AND c.vec_id >= 10),
+         ranked AS (
+           SELECT q_id, label,
+             row_number() OVER (PARTITION BY q_id
+               ORDER BY cos DESC, vec_id) AS rk
+           FROM scored),
+         votes AS (
+           SELECT q_id, label, count(*) AS n_votes
+           FROM ranked WHERE rk <= 10 GROUP BY q_id, label),
+         best AS (
+           SELECT q_id, label, n_votes,
+             row_number() OVER (PARTITION BY q_id
+               ORDER BY n_votes DESC, label) AS vr
+           FROM votes)
+         SELECT q_id, label AS pred_label, n_votes
+         FROM best WHERE vr = 1 ORDER BY q_id"""),
+    // IVF-probed kNN labeling: the ann_ivf CTE chain (seed centroids =
+    // first 16 vectors, argmax-cosine cells with larger-id ties, top-4
+    // probe lists) restricted to the labeled pool, then the
+    // knn_classify vote over the probed candidates
+    Gate("knn_classify_ivf", Similarity.knnClassifyIvfDocs(_, _),
+      """WITH base AS (
+           SELECT vec_id, label, embedding,
+             sqrt(list_sum(list_transform(embedding,
+               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
+           FROM embeddings),
+         cents AS (
+           SELECT vec_id AS c_id, embedding AS c_emb, norm AS c_norm
+           FROM base WHERE vec_id < 16),
+         scores AS (
+           SELECT b.vec_id, c.c_id,
+             list_sum(list_transform(generate_series(1, 64),
+               d -> CAST(b.embedding[d] AS DOUBLE) * CAST(c.c_emb[d] AS DOUBLE)))
+               / (b.norm * c.c_norm) AS ccos
+           FROM base b CROSS JOIN cents c),
+         assigned AS (
+           SELECT vec_id, c_id AS cell FROM (
+             SELECT vec_id, c_id,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY ccos DESC, c_id DESC) AS rn
+             FROM scores) WHERE rn = 1),
+         probes AS (
+           SELECT vec_id AS q_id, c_id AS probe_cell FROM (
+             SELECT vec_id, c_id,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY ccos DESC, c_id DESC) AS rn
+             FROM scores) WHERE rn <= 4 AND vec_id < 10),
+         cand AS (
+           SELECT p.q_id, a.vec_id
+           FROM probes p JOIN assigned a ON a.cell = p.probe_cell
+           WHERE a.vec_id >= 10),
+         scored AS (
+           SELECT c.q_id, c.vec_id, bc.label,
+             round(list_sum(list_transform(generate_series(1, 64),
+               d -> CAST(bc.embedding[d] AS DOUBLE) * CAST(bq.embedding[d] AS DOUBLE)))
+               / (bc.norm * bq.norm), 4) AS cos
+           FROM cand c
+           JOIN base bc ON bc.vec_id = c.vec_id
+           JOIN base bq ON bq.vec_id = c.q_id),
+         ranked AS (
+           SELECT q_id, label,
+             row_number() OVER (PARTITION BY q_id
+               ORDER BY cos DESC, vec_id) AS rk
+           FROM scored),
+         votes AS (
+           SELECT q_id, label, count(*) AS n_votes
+           FROM ranked WHERE rk <= 10 GROUP BY q_id, label),
+         best AS (
+           SELECT q_id, label, n_votes,
+             row_number() OVER (PARTITION BY q_id
+               ORDER BY n_votes DESC, label) AS vr
+           FROM votes)
+         SELECT q_id, label AS pred_label, n_votes
+         FROM best WHERE vr = 1 ORDER BY q_id"""),
+    // class centroids: floor-quantized micro sums (binary floor — never
+    // round(), whose decimal half-up can diverge across engines); the
+    // 64-long sum vector gates as an md5 digest of its comma-join
+    Gate("label_centroids", Clustering.labelCentroidsDocs(_, _),
+      """WITH e AS (
+           SELECT label, d,
+             CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
+               AS micro
+           FROM embeddings,
+                UNNEST(generate_series(1, len(embedding))) AS t(d)),
+         g AS (SELECT label, d, CAST(sum(micro) AS BIGINT) AS s,
+                 count(*) AS n
+               FROM e GROUP BY 1, 2)
+         SELECT label, CAST(max(n) AS BIGINT) AS n_vecs,
+           CAST(min(CASE WHEN d = 1 THEN s END) AS BIGINT) AS s0_micro,
+           md5(string_agg(CAST(s AS VARCHAR), ',' ORDER BY d))
+             AS centroid_digest
+         FROM g GROUP BY label ORDER BY label"""),
+    // centroid drift between the vec_id-parity slices, cross-multiplied
+    // (|so·nn − sn·no|) so no signed integer division is ever taken —
+    // Spark div truncates, DuckDB // floors, products agree exactly
+    Gate("embed_drift", Clustering.embedDriftDocs(_, _),
+      """WITH e AS (
+           SELECT label, vec_id % 2 = 0 AS is_old, d,
+             CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
+               AS micro
+           FROM embeddings,
+                UNNEST(generate_series(1, len(embedding))) AS t(d)),
+         g AS (SELECT label, d,
+             CAST(coalesce(sum(CASE WHEN is_old THEN micro END), 0)
+               AS BIGINT) AS so,
+             CAST(count(CASE WHEN is_old THEN 1 END) AS BIGINT) AS no,
+             CAST(coalesce(sum(CASE WHEN NOT is_old THEN micro END), 0)
+               AS BIGINT) AS sn,
+             CAST(count(CASE WHEN NOT is_old THEN 1 END) AS BIGINT) AS nn
+           FROM e GROUP BY 1, 2)
+         SELECT label, min(no) AS n_old, min(nn) AS n_new,
+           CAST(sum(abs(so * nn - sn * no)) AS BIGINT) AS l1_scaled
+         FROM g GROUP BY label ORDER BY label"""),
+    // capacity-balanced assignment: top-2 centroids per vector (same
+    // VALUES), md5-salted per-cluster sub-windows split cap = q·64 + r,
+    // overflow rows take their second-nearest centroid
+    Gate("balanced_assign", Clustering.balancedAssignDocs(_, _),
+      s"""WITH cents(c_id, c, c2) AS (VALUES
+           ${kmeansCentroidValues()}),
+         scored AS (
+           SELECT e.vec_id, c.c_id,
+             c.c2 - 2 * list_sum(list_transform(generate_series(1, 64),
+                 d -> CAST(e.embedding[d] AS DOUBLE) * c.c[d])) AS d
+           FROM embeddings e CROSS JOIN cents c),
+         top2 AS (
+           SELECT vec_id, c_id, d,
+             row_number() OVER (PARTITION BY vec_id ORDER BY d, c_id) AS rn
+           FROM scored),
+         a AS (
+           SELECT vec_id,
+             max(CASE WHEN rn = 1 THEN c_id END) AS c1,
+             max(CASE WHEN rn = 1 THEN d END) AS d1,
+             max(CASE WHEN rn = 2 THEN c_id END) AS c2
+           FROM top2 WHERE rn <= 2 GROUP BY vec_id),
+         s AS (
+           SELECT *, ('0x' || substr(md5('bal:' || CAST(vec_id AS VARCHAR)),
+             1, 15))::BIGINT % ${operators.Clustering.BalancedSaltBuckets}
+             AS salt
+           FROM a),
+         caps AS (SELECT (count(*) + 15) // 16 AS cap FROM embeddings),
+         r AS (
+           SELECT s.*, cap,
+             cap // ${operators.Clustering.BalancedSaltBuckets}
+               + (CASE WHEN salt <
+                   cap % ${operators.Clustering.BalancedSaltBuckets}
+                 THEN 1 ELSE 0 END) AS cap_local,
+             row_number() OVER (PARTITION BY c1, salt
+               ORDER BY d1, vec_id) AS rk
+           FROM s, caps)
+         SELECT vec_id,
+           CAST(CASE WHEN rk > cap_local THEN c2 ELSE c1 END AS INT)
+             AS cluster,
+           rk > cap_local AS moved
+         FROM r ORDER BY vec_id"""),
+    Gate("kcenter_coreset", Clustering.kCenterCoresetDocs(_, _), kCenterOracleSql),
+    // --- training-data pipeline: text analysis
+    Gate("text_stats", TextAnalysis.textStats(_, _),
+      """SELECT doc_id,
+         len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
+         len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS n_distinct_tokens,
+         len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_subwords,
+         length(text) AS n_chars_measured,
+         length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
+         FROM documents ORDER BY doc_id"""),
+    Gate("text_quality", TextAnalysis.qualityScore(_, _), s"$qualityOracleBody ORDER BY doc_id"),
+    Gate("text_langid", TextAnalysis.langId(_, _),
+      """WITH scored AS (
+           SELECT doc_id,
+             len(list_filter(w, t -> t IN ('the','and','of','to','in','is','a'))) AS s_en,
+             len(list_filter(w, t -> t IN ('le','la','les','des','et','une'))) AS s_fr,
+             len(list_filter(w, t -> t IN ('el','los','las','que','y','una'))) AS s_es,
+             len(list_filter(w, t -> t IN ('der','die','das','und','ein','nicht'))) AS s_de,
+             len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS s_zh
+           FROM (SELECT doc_id, text,
+                        regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents))
+         SELECT doc_id,
+           CASE WHEN greatest(s_en,s_fr,s_es,s_de,s_zh) = 0 THEN 'und'
+                WHEN s_de = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'de'
+                WHEN s_en = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'en'
+                WHEN s_es = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'es'
+                WHEN s_fr = greatest(s_en,s_fr,s_es,s_de,s_zh) THEN 'fr'
+                ELSE 'zh' END AS lang_pred, s_en, s_zh
+         FROM scored ORDER BY doc_id"""),
+    Gate("text_fingerprint", TextAnalysis.fingerprint(_, _),
+      s"""SELECT doc_id,
+         ${duckMd5_60("text")} AS fp,
+         ${duckMd5_60("array_to_string(list_sort(regexp_split_to_array(trim(text), '\\s+')), ' ')")} AS bag_fp
+         FROM documents ORDER BY doc_id"""),
+    // winnow: same degree-4 polynomial gram hash (base 257 mod 1e9+7) over
+    // code points, same least-of-4 window minimum, same distinct
+    Gate("text_winnow", TextAnalysis.winnowDocs(_, _),
+      """WITH cs AS (
+           SELECT doc_id, list_transform(generate_series(1, length(text)),
+             i -> CAST(ord(substr(text, i, 1)) AS BIGINT)) AS cs
+           FROM documents WHERE length(text) >= 8),
          g AS (
-           SELECT user_id, event_id, v,
-             count(*) OVER (PARTITION BY user_id) AS n,
-             CAST(sum(v) OVER (PARTITION BY user_id) AS BIGINT) AS s
+           SELECT doc_id, list_transform(generate_series(1, len(cs) - 4),
+             i -> (cs[i] * 4362470401 + cs[i+1] * 16974593 + cs[i+2] * 66049
+                   + cs[i+3] * 257 + cs[i+4]) % 1000000007) AS grams
+           FROM cs)
+         SELECT DISTINCT doc_id, list_min(grams[j:j+3]) AS fp
+         FROM g, UNNEST(generate_series(1, len(grams) - 3)) t(j)
+         ORDER BY doc_id, fp"""),
+    Gate("text_repetition", TextAnalysis.repetition(_, _),
+      """WITH w AS (
+           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+           FROM documents),
+         bg AS (
+           SELECT doc_id, w[i] || ' ' || w[i+1] AS b
+           FROM w, UNNEST(generate_series(1, len(w) - 1)) t(i)
+           WHERE len(w) >= 2),
+         bgc AS (
+           SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
+                  count(*) AS n_dbg, CAST(max(cnt) AS BIGINT) AS top
+           FROM (SELECT doc_id, b, count(*) AS cnt FROM bg GROUP BY 1, 2)
+           GROUP BY doc_id)
+         SELECT w.doc_id, len(w.w) AS n_words,
+           round(1.0 - CAST(len(list_distinct(w.w)) AS DOUBLE) / len(w.w), 4)
+             AS dup_word_frac,
+           round(1.0 - CAST(n_dbg AS DOUBLE) / n_bg, 4) AS dup_bigram_frac,
+           top AS top_bigram_n
+         FROM w JOIN bgc ON w.doc_id = bgc.doc_id
+         WHERE len(w.w) >= 2
+         ORDER BY w.doc_id"""),
+    Gate("text_pii_redact", TextAnalysis.piiRedactDocs(_, _),
+      s"""WITH p AS (
+           SELECT doc_id,
+             CASE CAST(doc_id % 3 AS INT)
+               WHEN 0 THEN 'reach user' || CAST(doc_id AS VARCHAR) || '@' || source
+                 || '.example.com or 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
+                 || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+                 || ' re: ' || text
+               WHEN 1 THEN 'server 10.0.' || CAST(doc_id % 256 AS VARCHAR)
+                 || '.7 logged: ' || text
+               ELSE text END AS pii_text
+           FROM documents)
+         SELECT doc_id,
+           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.EmailRe}')) AS n_emails,
+           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.PhoneRe}')) AS n_phones,
+           len(regexp_extract_all(pii_text, '${operators.TextAnalysis.Ipv4Re}')) AS n_ips,
+           ${duckMd5_60(
+             s"""regexp_replace(regexp_replace(regexp_replace(pii_text,
+                '${operators.TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
+                '${operators.TextAnalysis.PhoneRe}', '<PHONE>', 'g'),
+                '${operators.TextAnalysis.Ipv4Re}', '<IP>', 'g')""")} AS red_fp
+         FROM p ORDER BY doc_id"""),
+    Gate("ngram_lm", (s, d) => TextAnalysis.ngramLm(s, d),
+      """WITH toks AS (
+           SELECT lang, regexp_split_to_array(trim(text), '\s+') AS w
+           FROM documents),
+         bg AS (
+           SELECT lang, w[i] AS w1, w[i + 1] AS w2
+           FROM toks, UNNEST(generate_series(1, len(w) - 1)) t(i)
+           WHERE len(w) >= 2),
+         c AS (SELECT lang, w1, w2, count(*) AS n FROM bg GROUP BY 1, 2, 3),
+         p AS (
+           SELECT lang, w1, w2, n,
+             CAST(sum(n) OVER (PARTITION BY lang, w1) AS BIGINT) AS n_prefix,
+             row_number() OVER (PARTITION BY lang ORDER BY n DESC, w1, w2) AS rk
            FROM c)
-         SELECT user_id AS prompt_id, event_id, v AS reward_micro,
-           v * n - s AS adv_num, n AS n_candidates
-         FROM g ORDER BY prompt_id, event_id""",
-    // per-group min-max normalization: non-negative operands make
-    // truncating (Spark div) and flooring (DuckDB //) division agree;
-    // zero-spread groups normalize to 0 by contract on both sides; the
-    // quantization mirrors boundedMicro's ±2^41 loud bound (boundedMicroSql)
-    "reward_norm" ->
-      s"""WITH c AS (
-           SELECT user_id, event_id,
-             ${boundedMicroSql("rewardNorm")} AS v
-           FROM events),
-         g AS (
-           SELECT user_id, event_id, v,
-             min(v) OVER (PARTITION BY user_id) AS mn,
-             max(v) OVER (PARTITION BY user_id) AS mx
+         SELECT lang, rk, w1, w2, n, n_prefix FROM p
+         WHERE rk <= 20 ORDER BY lang, rk"""),
+    Gate("doc_chunks", TextAnalysis.docChunksDocs(_, _),
+      s"""WITH t AS (
+           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+           FROM documents),
+         n AS (SELECT doc_id, w, len(w) AS nw FROM t),
+         c AS (
+           SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+             array_to_string(w[i * ${TextAnalysis.ChunkStride} + 1 : i * ${TextAnalysis.ChunkStride} + ${TextAnalysis.ChunkTokens}], ' ') AS chunk
+           FROM n, UNNEST(generate_series(0,
+             CASE WHEN nw <= ${TextAnalysis.ChunkTokens} THEN 0
+                  ELSE (${TextAnalysis.ChunkStride - 1} + nw - ${TextAnalysis.ChunkTokens}) // ${TextAnalysis.ChunkStride} END)) t2(i))
+         SELECT doc_id, chunk_idx,
+           len(regexp_split_to_array(chunk, '\\s+')) AS n_chunk_tokens,
+           ${duckMd5_60("chunk")} AS chunk_fp
+         FROM c ORDER BY doc_id, chunk_idx"""),
+    Gate("vocab_coverage", TextAnalysis.vocabCoverageDocs(_, _),
+      s"""WITH tok AS (
+           SELECT UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS token
+           FROM documents),
+         c AS (
+           SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok
+           WHERE token != '' GROUP BY token),
+         r AS (
+           SELECT token, cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INT) AS rk,
+             CAST(sum(cnt) OVER (ORDER BY cnt DESC, token
+               ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum
            FROM c)
-         SELECT user_id AS prompt_id, event_id, v AS reward_micro,
-           CASE WHEN mx = mn THEN CAST(0 AS BIGINT)
-                ELSE (v - mn) * 1000000 // (mx - mn) END AS norm_micro
-         FROM g ORDER BY prompt_id, event_id""",
+         SELECT rk, token, cnt,
+           round(cum / (SELECT CAST(sum(cnt) AS DOUBLE) FROM c), 6) AS cum_share
+         FROM r WHERE rk <= ${TextAnalysis.VocabK} ORDER BY rk"""),
+    Gate("filter_cascade", TextAnalysis.filterCascade(_, _),
+      s"""WITH r AS (
+           SELECT doc_id, len(w) AS n_tok,
+             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+               / greatest(length(text), 1) AS ar,
+             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS dr
+           FROM (SELECT doc_id, text,
+                        regexp_split_to_array(trim(text), '\\s+') AS w
+                 FROM documents))
+         SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
+           round(ar, 4) AS alpha_ratio, round(dr, 4) AS distinct_ratio,
+           CASE WHEN n_tok < ${TextAnalysis.CascadeMinTokens} THEN 'too_short'
+                WHEN ar < ${TextAnalysis.CascadeMinAlpha} THEN 'low_alpha'
+                WHEN dr < ${TextAnalysis.CascadeMinDistinct} THEN 'high_dup'
+                ELSE 'keep' END AS verdict
+         FROM r ORDER BY doc_id"""),
+    Gate("text_normalize", TextAnalysis.normFingerprint(_, _),
+      s"""WITH n AS (
+           SELECT doc_id,
+             trim(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')) AS norm
+           FROM documents)
+         SELECT doc_id, CAST(length(norm) AS INT) AS n_norm_chars,
+           ${duckMd5_60("norm")} AS norm_fp
+         FROM n ORDER BY doc_id"""),
+    // novelty over shingle STRINGS — also re-checks the Spark side's
+    // hash-for-string substitution
+    Gate("text_novelty", TextAnalysis.noveltyDocs(_, _),
+      s"""WITH sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w) - 2)) AS t(i)
+           WHERE len(w) >= 3),
+         dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
+         SELECT s.doc_id, count(*) AS n_shingles,
+           CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_unique,
+           round(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) * 1.0 / count(*),
+             6) AS novelty
+         FROM sh s JOIN dfreq d ON d.shingle = s.shingle
+         GROUP BY s.doc_id ORDER BY s.doc_id"""),
+    // fixed-point micro-nat terms (round 6 → ×1e6 → BIGINT) make the
+    // per-doc float sum an exact integer sum — same trick as q25's
+    // per-term rounding, so the gate is order-independent
+    Gate("doc_perplexity", TextAnalysis.docPerplexityDocs(_, _),
+      """WITH toks AS (
+           SELECT doc_id, w[i] AS token
+           FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w))) AS t(i)
+           WHERE len(w[i]) > 0),
+         tf AS (SELECT doc_id, token, count(*) AS tf
+                FROM toks GROUP BY 1, 2),
+         cnt AS (SELECT token, count(*) AS c FROM toks GROUP BY 1),
+         tot AS (SELECT CAST(sum(c) + count(*) AS DOUBLE) AS nv FROM cnt),
+         terms AS (
+           SELECT tf.doc_id, tf.tf,
+             CAST(round(round(tf.tf * ln(tot.nv / (cnt.c + 1.0)), 6) * 1e6)
+               AS BIGINT) AS term_micro
+           FROM tf JOIN cnt USING (token) CROSS JOIN tot)
+         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
+           CAST(sum(term_micro) AS BIGINT) AS xent_micro,
+           round(exp(sum(term_micro) / (1e6 * sum(tf))), 3) AS ppl
+         FROM terms GROUP BY doc_id ORDER BY doc_id"""),
+    // one BPE training iteration: adjacent char pairs weighted by word
+    // frequency; (cnt DESC, a, b) is a total order — all integers
+    Gate("bpe_pairs", TextAnalysis.bpePairCountsDocs(_, _),
+      s"""WITH words AS (
+           SELECT w[i] AS word, count(*) AS c
+           FROM (SELECT regexp_split_to_array(trim(text), '\\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w))) AS t(i)
+           WHERE length(w[i]) >= 2
+           GROUP BY 1),
+         pairs AS (
+           SELECT substr(word, i, 1) AS a, substr(word, i + 1, 1) AS b,
+             CAST(sum(c) AS BIGINT) AS cnt
+           FROM words, UNNEST(generate_series(1, length(word) - 1)) AS t(i)
+           GROUP BY 1, 2),
+         ranked AS (
+           SELECT a, b, cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, a, b) AS INT) AS rk
+           FROM pairs)
+         SELECT rk, a, b, cnt FROM ranked
+         WHERE rk <= ${TextAnalysis.BpePairK} ORDER BY rk"""),
+    Gate("bpe_encode", TextAnalysis.bpeEncodeDocs(_, _), bpeEncodeOracleSql),
+    Gate("bpe_fertility", TextAnalysis.bpeFertilityDocs(_, _), bpeFertilityOracleSql),
+    Gate("unigram_encode", TextAnalysis.unigramEncodeDocs(_, _), unigramEncodeOracleSql),
+    Gate("wordpiece_encode", TextAnalysis.wordpieceEncodeDocs(_, _), wordpieceEncodeOracleSql),
+    // the bake-off table: the three family oracles composed as CTEs —
+    // each family's chain is the SAME string its own gate uses
+    Gate("tok_compare", TextAnalysis.tokenizerCompareDocs(_, _),
+      s"""WITH b AS ($bpeEncodeOracleSql),
+         u AS ($unigramEncodeOracleSql),
+         w AS ($wordpieceEncodeOracleSql)
+         SELECT b.doc_id, b.n_words, b.n_bpe_tokens,
+           u.n_pieces AS n_unigram, w.n_pieces AS n_wordpiece,
+           CAST(b.n_bpe_tokens * 1000000 // b.n_words AS BIGINT)
+             AS bpe_fert_micro,
+           CAST(u.n_pieces * 1000000 // b.n_words AS BIGINT)
+             AS unigram_fert_micro,
+           CAST(w.n_pieces * 1000000 // b.n_words AS BIGINT)
+             AS wordpiece_fert_micro
+         FROM b JOIN u ON u.doc_id = b.doc_id
+         JOIN w ON w.doc_id = b.doc_id
+         ORDER BY b.doc_id"""),
+    // FIM: selection gate and both character cut points all md5-derived,
+    // so the oracle replays the transform character for character
+    Gate("fim_transform", TextAnalysis.fimTransformDocs(_, _),
+      s"""WITH h AS (
+           SELECT doc_id, text, length(text) AS n,
+             ${duckMd5_60("'fim1:' || CAST(doc_id AS VARCHAR)")}
+               % greatest(length(text), 1) AS h1,
+             ${duckMd5_60("'fim2:' || CAST(doc_id AS VARCHAR)")}
+               % greatest(length(text), 1) AS h2,
+             ${duckMd5_60("'fim:' || CAST(doc_id AS VARCHAR)")}
+               % 1000000 AS g
+           FROM documents),
+         c AS (
+           SELECT doc_id, text, n, g,
+             CAST(least(h1, h2) + 1 AS INT) AS c1,
+             CAST(greatest(h1, h2) + 1 AS INT) AS c2
+           FROM h)
+         SELECT doc_id,
+           CASE WHEN g < 500000 THEN 1 ELSE 0 END AS transformed,
+           CASE WHEN g < 500000
+             THEN '<PRE>' || substr(text, 1, c1 - 1)
+               || '<SUF>' || substr(text, c2, n - c2 + 1)
+               || '<MID>' || substr(text, c1, c2 - c1)
+             ELSE text END AS fim_text
+         FROM c ORDER BY doc_id"""),
+    // T5 span corruption: the oracle's gaps-and-islands windows are a
+    // structurally different spelling of the engine's in-row fold — the
+    // gate cross-checks two independent formulations of the policy
+    Gate("t5_spans", TextAnalysis.t5SpansDocs(_, _),
+      s"""WITH w AS (
+           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+           FROM documents),
+         t AS (
+           SELECT doc_id, i, w[i] AS tok,
+             ${duckMd5_60("'t5:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)")}
+               % 1000000 < 150000 AS noisy
+           FROM w, UNNEST(generate_series(1, len(w))) AS s(i)),
+         r AS (
+           SELECT *, CASE WHEN noisy AND NOT coalesce(
+               lag(noisy) OVER (PARTITION BY doc_id ORDER BY i), false)
+             THEN 1 ELSE 0 END AS span_start
+           FROM t),
+         s AS (
+           SELECT *, sum(span_start) OVER (PARTITION BY doc_id ORDER BY i)
+             AS span_id
+           FROM r),
+         inp AS (
+           SELECT doc_id, string_agg(
+               CASE WHEN NOT noisy THEN tok
+                    ELSE '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>'
+               END, ' ' ORDER BY i) AS input_text
+           FROM s WHERE NOT noisy OR span_start = 1 GROUP BY doc_id),
+         tgt AS (
+           SELECT doc_id, string_agg(
+               CASE WHEN span_start = 1
+                 THEN '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '> ' || tok
+                 ELSE tok END, ' ' ORDER BY i) AS tgt_body
+           FROM s WHERE noisy GROUP BY doc_id),
+         ns AS (
+           SELECT doc_id, CAST(coalesce(max(span_id), 0) AS INT) AS n_spans
+           FROM s GROUP BY doc_id)
+         SELECT w.doc_id, ns.n_spans,
+           coalesce(i.input_text, '') AS input_text,
+           CASE WHEN t.tgt_body IS NULL
+             THEN '<extra_id_' || CAST(ns.n_spans AS VARCHAR) || '>'
+             ELSE t.tgt_body || ' <extra_id_'
+               || CAST(ns.n_spans AS VARCHAR) || '>' END AS target_text
+         FROM w
+         JOIN ns ON ns.doc_id = w.doc_id
+         LEFT JOIN inp i ON i.doc_id = w.doc_id
+         LEFT JOIN tgt t ON t.doc_id = w.doc_id
+         ORDER BY w.doc_id"""),
+    // --- sentence-aware family (synthesized punctuation, see Sentences)
+    Gate("sent_segment", operators.Sentences.segmentDocs(_, _),
+      s"""WITH $sentenceCtes
+         SELECT doc_id, sent_id, sentence, n_tokens FROM sents
+         ORDER BY doc_id, sent_id"""),
+    // first occurrence keeps; the oracle's window spelling cross-checks
+    // the engine's aggregate-then-join spelling of the same policy
+    Gate("sent_dedup", operators.Sentences.dedupDocs(_, _),
+      s"""WITH $sentenceCtes,
+         normed AS (
+           SELECT doc_id, sent_id, n_tokens,
+             lower(regexp_replace(sentence, '[.!?]+$$', '')) AS norm
+           FROM sents)
+         SELECT doc_id, sent_id, n_tokens,
+           CASE WHEN row_number() OVER (PARTITION BY norm
+               ORDER BY doc_id, sent_id) = 1 THEN 1 ELSE 0 END AS keep
+         FROM normed ORDER BY doc_id, sent_id""", cachedIntermediate = true),
+    // start-offset bucketing: chunk = tokens-before div budget, so the
+    // chunk rule is one running sum in both engines; digest rebuilt from
+    // sent_id-ordered sentences
+    Gate("sent_chunks", operators.Sentences.chunksDocs(_, _),
+      s"""WITH $sentenceCtes,
+         cum AS (
+           SELECT doc_id, sent_id, sentence, n_tokens,
+             coalesce(sum(n_tokens) OVER (PARTITION BY doc_id
+               ORDER BY sent_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+           FROM sents)
+         SELECT doc_id,
+           CAST(cb // ${operators.Sentences.ChunkBudget} AS BIGINT)
+             AS chunk_id,
+           count(*) AS n_sents, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+           ${duckMd5_60("string_agg(sentence, ' ' ORDER BY sent_id)")}
+             AS chunk_md5_60
+         FROM cum GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id""", cachedIntermediate = true),
+    Gate("lang_balance",
+      (s, d) =>
+        operators.Sampling.langBalance(graft.Engine.Tables(s, d).documents),
+      s"""WITH d AS (
+           SELECT doc_id, lang,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) AS tok
+           FROM documents),
+         lt AS (SELECT lang, sum(tok) AS lang_tok FROM d GROUP BY lang),
+         f AS (SELECT lang,
+                 least(1.0, sum(lang_tok) OVER () / count(*) OVER ()
+                            / lang_tok) AS frac
+               FROM lt)
+         SELECT d.doc_id, d.lang
+         FROM d JOIN f ON d.lang IS NOT DISTINCT FROM f.lang
+         WHERE ${duckMd5_60("'bal:' || CAST(d.doc_id AS VARCHAR)")} % 1000000
+               < CAST(floor(1000000.0 * frac) AS BIGINT)
+         ORDER BY d.doc_id"""),
+    Gate("quality_ntile",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Ranking.distributedNtile(
+          TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
+          .select(col("doc_id"), col("quality"), col("rank"), col("bin"))
+          .orderBy(col("doc_id"))
+      },
+      s"""WITH q AS ($qualityOracleBody)
+         SELECT doc_id, quality,
+           row_number() OVER (ORDER BY quality, doc_id) AS rank,
+           ntile(10) OVER (ORDER BY quality, doc_id) AS bin
+         FROM q ORDER BY doc_id"""),
+    // cross-split near-dup leakage audit: the dedup_jaccard pair set with
+    // both sides' split labels derived in-row (zero extra joins/shuffles)
+    // cross-split leakage: the pair set is the EXACT prefix screen's
+    // (dedup_prefix's uncapped oracle — the audit reads the landed pair
+    // table it shares with split_leak_stats), each side's split derived from its
+    // own id by the split_assign md5 CASE — pairs whose splits differ
+    // are the contamination work-list
+    Gate("split_leak_audit",
+      (s, d) => {
+        operators.Dedup.splitLeakAudit(
+          graft.Engine.Tables(s, d).documents, SplitWeights, SplitNames)
+      },
+      s"""WITH pairs AS ($uncappedJaccardPairsOracle)
+         SELECT doc_a, doc_b,
+           ${splitCaseOnSql("doc_a")} AS split_a,
+           ${splitCaseOnSql("doc_b")} AS split_b,
+           jac
+         FROM pairs
+         WHERE ${splitCaseOnSql("doc_a")} <> ${splitCaseOnSql("doc_b")}
+         ORDER BY doc_a, doc_b""", cachedIntermediate = true),
+    // the two-keyings leakage rollup over the same uncapped pair set:
+    // doc-keyed labels vs source-grouped labels, counted per keying
+    Gate("split_leak_stats",
+      (s, d) => {
+        operators.Dedup.splitLeakStats(
+          graft.Engine.Tables(s, d).documents, SplitWeights, SplitNames)
+      },
+      s"""WITH pairs AS ($uncappedJaccardPairsOracle),
+         ps AS (
+           SELECT p.doc_a, p.doc_b, da.source AS src_a, db.source AS src_b
+           FROM pairs p
+           JOIN documents da ON da.doc_id = p.doc_a
+           JOIN documents db ON db.doc_id = p.doc_b),
+         labeled AS (
+           SELECT 'doc' AS keying,
+             ${splitCaseOnSql("doc_a")} AS split_a,
+             ${splitCaseOnSql("doc_b")} AS split_b
+           FROM ps
+           UNION ALL
+           SELECT 'source',
+             ${splitCaseOnSql("src_a", "gsplit:")},
+             ${splitCaseOnSql("src_b", "gsplit:")}
+           FROM ps)
+         SELECT keying, CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_leaked,
+           CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
+             * 1000000 // count(*) AS BIGINT) AS leak_micro
+         FROM labeled GROUP BY keying ORDER BY keying""", cachedIntermediate = true),
+    Gate("split_assign",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.splitAssign(
+            graft.Engine.Tables(s, d).documents.select("doc_id"),
+            "doc_id", SplitWeights, SplitNames)
+          .select(col("doc_id"), col("split")).orderBy(col("doc_id"))
+      },
+      splitAssignOracleSql),
+    // leakage-safe GROUPED split: keyed on source, so every doc of a
+    // source (where near-dups concentrate) lands in the same split
+    Gate("group_split",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.splitAssign(
+            graft.Engine.Tables(s, d).documents.select("doc_id", "source"),
+            "source", SplitWeights, SplitNames, salt = "gsplit:")
+          .select(col("doc_id"), col("source"), col("split"))
+          .orderBy(col("doc_id"))
+      },
+      groupSplitOracleSql),
+    // curriculum order: quality-decile phases descending, hash-shuffled
+    // within each phase, exact global rank with no corpus-wide window
+    // same ntile bins as quality_ntile, then the curriculum rank: bins
+    // descending, md5-shuffled inside each bin
+    Gate("curriculum_order",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        val binned = operators.Ranking.distributedNtile(
+          TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
+          .select(col("doc_id"), col("bin"))
+        operators.Ranking.curriculumOrder(binned, "bin", "doc_id")
+          .select(col("doc_id"), col("bin"), col("train_rank"))
+          .orderBy(col("doc_id"))
+      },
+      s"""WITH q AS ($qualityOracleBody),
+         b AS (SELECT doc_id,
+                 ntile(10) OVER (ORDER BY quality, doc_id) AS bin
+               FROM q)
+         SELECT doc_id, bin,
+           row_number() OVER (ORDER BY bin DESC,
+             md5('curr42:' || CAST(doc_id AS VARCHAR)), doc_id)
+             AS train_rank
+         FROM b ORDER BY doc_id"""),
+    // DSIR importance weights: target LM = the src0 slice, raw LM = the
+    // full corpus; micro-nat integer sums → engine-exact
+    // DSIR: same token/micro-nat machinery as doc_perplexity but with
+    // floor-quantized terms (floor(x*1e6) is a binary floor — identical
+    // in both engines even at exact decimal halves); the target LM is
+    // the src0 slice (conditional sum in the same groupBy), the
+    // smoothing normalizer is one scalar subselect
+    Gate("dsir_weights",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.dsirWeights(
+          graft.Engine.Tables(s, d).documents, col("source") === "src0")
+      },
+      """WITH toks AS (
+           SELECT doc_id, source = 'src0' AS is_t, w[i] AS token
+           FROM (SELECT doc_id, source,
+                   regexp_split_to_array(trim(text), '\s+') AS w
+                 FROM documents),
+                UNNEST(generate_series(1, len(w))) AS t(i)
+           WHERE len(w[i]) > 0),
+         tf AS (SELECT doc_id, token, count(*) AS tf
+                FROM toks GROUP BY 1, 2),
+         cnt AS (SELECT token, count(*) AS cr,
+                   sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct
+                 FROM toks GROUP BY 1),
+         tot AS (SELECT CAST(sum(cr) + count(*) AS DOUBLE)
+                      / CAST(sum(ct) + count(*) AS DOUBLE) AS s FROM cnt),
+         terms AS (
+           SELECT tf.doc_id, tf.tf,
+             CAST(floor(tf.tf * ln(((cnt.ct + 1.0) / (cnt.cr + 1.0))
+                 * tot.s) * 1e6) AS BIGINT) AS term_micro
+           FROM tf JOIN cnt USING (token) CROSS JOIN tot)
+         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
+           CAST(sum(term_micro) AS BIGINT) AS lr_micro
+         FROM terms GROUP BY doc_id ORDER BY doc_id"""),
+    Gate("quality_logit", QualityModel.logitScoreDocs(_, _), qualityLogitOracleSql),
+    // quality-proportional soft filter: decile bin b keeps ~b/10 of its
+    // docs, decided by the same md5 bucket gate as sample_det
+    // bin/10 keep-fraction over the 1e6 md5 buckets. Thresholds are
+    // interpolated from the SAME double arithmetic Spark runs
+    // (1e6 * (bin/10.0) truncated) — naive bin*100000 would be off by
+    // one for bins where bin/10.0 rounds down in binary (e.g. 7 →
+    // 699999), the strat_sample interpolation precedent
+    Gate("weighted_sample",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        val scored = operators.Ranking.distributedNtile(
+          TextAnalysis.qualityScore(s, d), "quality", "doc_id", 10)
+        operators.Sampling.weightedSample(
+            scored.withColumn("w", col("bin") / 10.0), "doc_id", "w")
+          .select(col("doc_id"), col("bin")).orderBy(col("doc_id"))
+      },
+      s"""WITH q AS ($qualityOracleBody),
+         nt AS (
+           SELECT doc_id, ntile(10) OVER (ORDER BY quality, doc_id) AS bin
+           FROM q)
+         SELECT doc_id, bin FROM nt
+         WHERE ${duckMd5_60("'qw:' || CAST(doc_id AS VARCHAR)")} % 1000000
+               < CASE bin ${(1 to 10).map(b =>
+                   s"WHEN $b THEN ${(1000000L * (b / 10.0)).toLong}")
+                 .mkString(" ")} END
+         ORDER BY doc_id"""),
+    // --- training-data pipeline: deterministic corpus shuffle
+    Gate("shuffle_train",
+      (s, d) =>
+        operators.Sampling.trainOrderShuffle(
+          graft.Engine.Tables(s, d).documents.select("doc_id"), "doc_id"),
+      """SELECT doc_id, md5('shuf42:' || CAST(doc_id AS VARCHAR)) AS skey
+         FROM documents ORDER BY skey"""),
+    // --- training-data pipeline: deterministic sampling
+    Gate("sample_det",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.deterministicSample(
+          graft.Engine.Tables(s, d).documents, "doc_id", 0.3)
+          .select(col("doc_id")).orderBy(col("doc_id"))
+      },
+      s"""SELECT doc_id FROM documents
+         WHERE ${duckMd5_60("CAST(doc_id AS VARCHAR)")} % 1000000
+               < ${(1000000L * 0.3).toLong}
+         ORDER BY doc_id"""),
+    Gate("strat_sample",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.stratifiedSample(
+          graft.Engine.Tables(s, d).documents, "lang", "doc_id",
+          StratFractions, "strat:")
+          .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
+      },
+      s"""SELECT doc_id, lang FROM documents
+         WHERE ${duckMd5_60("'strat:' || CAST(doc_id AS VARCHAR)")} % 1000000
+               < $stratCaseSql
+         ORDER BY doc_id"""),
+    // --- training-data pipeline: per-domain capping + shard packing
+    Gate("source_cap",
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        operators.Sampling.capPerGroup(
+          graft.Engine.Tables(s, d).documents.select(col("doc_id"), col("source")),
+          "source", "doc_id", 15)
+          .orderBy(col("doc_id"))
+      },
+      """WITH r AS (
+           SELECT doc_id, source,
+             row_number() OVER (PARTITION BY source
+               ORDER BY md5('cap:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
+           FROM documents)
+         SELECT doc_id, source, rk FROM r WHERE rk <= 15 ORDER BY doc_id"""),
+    // temperature mixture: sqrt-share weights floor-quantized to micro
+    // ints, target tokens and admission thresholds in pure BIGINT
+    // division — a double quotient + floor could cross an integer where
+    // true integer division doesn't
+    Gate("mix_temperature",
+      (s, d) => operators.Sampling.mixTemperature(
+        graft.Engine.Tables(s, d).documents, MixTempBudget),
+      s"""WITH d AS (
+           SELECT doc_id, source,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok
+           FROM documents),
+         s AS (SELECT source, CAST(sum(tok) AS BIGINT) AS n_s
+               FROM d GROUP BY 1),
+         tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n FROM s),
+         wts AS (SELECT source, n_s,
+             CAST(floor(sqrt(CAST(n_s AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6)
+               AS BIGINT) AS w
+           FROM s, tot),
+         wt AS (SELECT CAST(sum(w) AS BIGINT) AS ws FROM wts),
+         rates AS (SELECT source,
+             least(1000000, (1000000 * (($MixTempBudget * w) // ws)) // n_s)
+               AS rate_micro
+           FROM wts, wt)
+         SELECT doc_id, source, tok, rate_micro
+         FROM d JOIN rates USING (source)
+         WHERE ${duckMd5_60("'mixt:' || CAST(doc_id AS VARCHAR)")} % 1000000
+               < rate_micro
+         ORDER BY doc_id"""),
+    // epoch upsampling: same rate chain as mix_temperature WITHOUT the
+    // clamp; full copies from integer division, the fractional copy
+    // from the md5 gate, expanded with generate_series
+    Gate("mix_upsample",
+      (s, d) => operators.Sampling.mixUpsample(
+        graft.Engine.Tables(s, d).documents, MixUpBudget),
+      s"""WITH d AS (
+           SELECT doc_id, source,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok
+           FROM documents),
+         s AS (SELECT source, CAST(sum(tok) AS BIGINT) AS n_s
+               FROM d GROUP BY 1),
+         tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n FROM s),
+         wts AS (SELECT source, n_s,
+             CAST(floor(sqrt(CAST(n_s AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6)
+               AS BIGINT) AS w
+           FROM s, tot),
+         wt AS (SELECT CAST(sum(w) AS BIGINT) AS ws FROM wts),
+         rates AS (SELECT source,
+             (1000000 * (($MixUpBudget * w) // ws)) // n_s AS f_micro
+           FROM wts, wt),
+         j AS (SELECT doc_id, d.source, tok,
+             f_micro // 1000000 +
+               CASE WHEN ${duckMd5_60("'ups:' || CAST(doc_id AS VARCHAR)")}
+                      % 1000000 < f_micro % 1000000
+                    THEN 1 ELSE 0 END AS n_copies
+           FROM d JOIN rates USING (source))
+         SELECT doc_id, source, CAST(c AS INT) AS copy, tok
+         FROM j, UNNEST(generate_series(1, n_copies)) t(c)
+         ORDER BY doc_id, copy"""),
+    // length-bucketed batching: per-bucket md5-ordered token prefix sum
+    // (pid is a PREFIX of skey, so the two-level order == skey order —
+    // the equivalence the pack_shards gate already proves)
+    Gate("length_batches",
+      (s, d) =>
+        Packing.lengthBatchesDocs(s, d, LengthBatchBudget),
+      s"""WITH d AS (
+           SELECT doc_id,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok,
+             md5('lb:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         b AS (SELECT *,
+             CASE WHEN tok < 64 THEN 0 WHEN tok < 128 THEN 1
+                  WHEN tok < 256 THEN 2 ELSE 3 END AS bucket
+           FROM d),
+         o AS (SELECT doc_id, bucket, tok,
+             coalesce(sum(tok) OVER (PARTITION BY bucket
+               ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+           FROM b)
+         SELECT doc_id, CAST(bucket AS INT) AS bucket,
+           CAST(off // $LengthBatchBudget AS BIGINT) AS batch_id, tok
+         FROM o ORDER BY doc_id"""),
+    Gate("pack_shards", (s, d) => Packing.packShardsDocs(s, d, PackBudget),
+      s"""WITH d AS (
+           SELECT doc_id,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
+             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         c AS (
+           SELECT tok,
+             sum(tok) OVER (ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM d)
+         SELECT CAST((cum - tok) // $PackBudget AS BIGINT) AS shard_id,
+           count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS n_tokens
+         FROM c GROUP BY 1 ORDER BY 1"""),
+    // padding-waste rollup over the SAME md5-ordered stream packed two
+    // ways (naive vs length-bucketed) — per batch waste = max·n − Σ,
+    // exact integer micro-rates
+    Gate("pack_efficiency",
+      (s, d) =>
+        Packing.packEfficiencyDocs(s, d, LengthBatchBudget),
+      s"""WITH d AS (
+           SELECT doc_id,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok,
+             md5('lb:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         b AS (SELECT *,
+             CASE WHEN tok < 64 THEN 0 WHEN tok < 128 THEN 1
+                  WHEN tok < 256 THEN 2 ELSE 3 END AS bucket
+           FROM d),
+         o AS (SELECT bucket, tok,
+             coalesce(sum(tok) OVER (PARTITION BY bucket
+               ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+           FROM b),
+         g1 AS (
+           SELECT bucket, off // $LengthBatchBudget AS batch_id,
+             count(*) AS n_docs, sum(tok) AS real_tok, max(tok) AS max_tok
+           FROM o GROUP BY 1, 2),
+         o2 AS (SELECT tok,
+             coalesce(sum(tok) OVER (ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+           FROM d),
+         g2 AS (
+           SELECT off // $LengthBatchBudget AS batch_id,
+             count(*) AS n_docs, sum(tok) AS real_tok, max(tok) AS max_tok
+           FROM o2 GROUP BY 1),
+         u AS (
+           SELECT 'bucketed' AS strategy, count(*) AS n_batches,
+             sum(real_tok) AS tokens_real,
+             sum(max_tok * n_docs - real_tok) AS tokens_padded
+           FROM g1
+           UNION ALL
+           SELECT 'naive', count(*), sum(real_tok),
+             sum(max_tok * n_docs - real_tok)
+           FROM g2)
+         SELECT strategy, CAST(n_batches AS BIGINT) AS n_batches,
+           CAST(tokens_real AS BIGINT) AS tokens_real,
+           CAST(tokens_padded AS BIGINT) AS tokens_padded,
+           CAST(tokens_padded * 1000000 // (tokens_real + tokens_padded)
+             AS BIGINT) AS waste_micro
+         FROM u ORDER BY strategy"""),
+    // same deterministic layout as pack_shards; docs split across fixed
+    // seqLen boundaries, one row per (sequence, doc) span
+    Gate("pack_sequences", (s, d) => Packing.packSequencesDocs(s, d, SeqLen),
+      s"""WITH d AS (
+           SELECT doc_id,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
+             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         o AS (
+           SELECT doc_id, tok,
+             CAST(sum(tok) OVER (ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
+               AS BIGINT) AS off
+           FROM d),
+         spans AS (
+           -- generate_series as a LIST function + unnest: the table-
+           -- function form can't take lateral column parameters
+           SELECT doc_id, tok, off,
+             unnest(generate_series(off // $SeqLen,
+               (off + tok - 1) // $SeqLen)) AS seq_id
+           FROM o)
+         SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
+           CAST(greatest(off, seq_id * $SeqLen) - off AS BIGINT)
+             AS doc_start,
+           CAST(greatest(off, seq_id * $SeqLen) - seq_id * $SeqLen
+             AS BIGINT) AS seq_start,
+           CAST(least(off + tok, (seq_id + 1) * $SeqLen)
+             - greatest(off, seq_id * $SeqLen) AS BIGINT) AS n_toks
+         FROM spans
+         ORDER BY seq_id, doc_id"""),
+    // mask metadata rollup of the pack_sequences span table: ordered
+    // seq_start:n_toks boundary digest + pad, same layout CTEs
+    Gate("pack_masks", (s, d) => Packing.packMasksDocs(s, d, SeqLen),
+      s"""WITH d AS (
+           SELECT doc_id,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
+             md5('pack:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         o AS (
+           SELECT doc_id, tok,
+             CAST(sum(tok) OVER (ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
+               AS BIGINT) AS off
+           FROM d),
+         spans AS (
+           SELECT doc_id, tok, off,
+             unnest(generate_series(off // $SeqLen,
+               (off + tok - 1) // $SeqLen)) AS seq_id
+           FROM o),
+         segs AS (
+           SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
+             CAST(greatest(off, seq_id * $SeqLen) - seq_id * $SeqLen
+               AS BIGINT) AS seq_start,
+             CAST(least(off + tok, (seq_id + 1) * $SeqLen)
+               - greatest(off, seq_id * $SeqLen) AS BIGINT) AS n_toks
+           FROM spans)
+         SELECT seq_id, count(*) AS n_segments,
+           CAST(sum(n_toks) AS BIGINT) AS n_toks_used,
+           CAST($SeqLen - sum(n_toks) AS BIGINT) AS n_pad,
+           md5(string_agg(CAST(seq_start AS VARCHAR) || ':'
+             || CAST(n_toks AS VARCHAR), ','
+             ORDER BY seq_start, n_toks, doc_id)) AS segments_digest
+         FROM segs GROUP BY seq_id ORDER BY seq_id"""),
+    // per-language greedy fill in the same md5-salted order; a doc is
+    // admitted when its first token falls inside the lang budget
+    Gate("mix_budget", (s, d) => Packing.mixBudgetDocs(s, d, MixBudget),
+      s"""WITH d AS (
+           SELECT doc_id, lang,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok,
+             md5('mix:' || CAST(doc_id AS VARCHAR)) AS skey
+           FROM documents),
+         c AS (
+           SELECT doc_id, lang, tok,
+             sum(tok) OVER (PARTITION BY lang ORDER BY skey, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok
+               AS off
+           FROM d)
+         SELECT doc_id, lang, tok, CAST(off AS BIGINT) AS off
+         FROM c WHERE off < $MixBudget ORDER BY doc_id"""),
+    // BM25: constants written as the same arithmetic Spark evaluates
+    // ((1.2 + 1), not 2.2) so both engines produce bit-identical doubles
+    Gate("bm25_topk", Retrieval.bm25Docs(_, _), bm25OracleSql),
+    Gate("hybrid_topk", Retrieval.hybridDocs(_, _), hybridOracleSql),
+    // late interaction: each <q_i, d_j> sub-dot floor-micro-quantized
+    // BEFORE the max/sum, so the whole MaxSim is integer arithmetic
+    Gate("maxsim_topk", Retrieval.maxSimDocs(_, _),
+      """WITH q AS (
+           SELECT vec_id AS q_id, embedding AS qv FROM embeddings
+           WHERE vec_id < 10),
+         scored AS (
+           SELECT q_id, c.vec_id,
+             CAST(list_sum(list_transform(generate_series(0, 3), i ->
+               list_max(list_transform(generate_series(0, 3), j ->
+                 CAST(floor(list_sum(list_transform(generate_series(1, 16),
+                   k -> CAST(qv[i * 16 + k] AS DOUBLE)
+                      * CAST(c.embedding[j * 16 + k] AS DOUBLE)))
+                   * 1e6) AS BIGINT))))) AS BIGINT) AS maxsim
+           FROM embeddings c JOIN q ON c.vec_id != q.q_id),
+         ranked AS (
+           SELECT q_id, vec_id, maxsim, row_number() OVER (
+             PARTITION BY q_id ORDER BY maxsim DESC, vec_id) AS rk
+           FROM scored)
+         SELECT q_id, rk, vec_id, maxsim FROM ranked
+         WHERE rk <= 10 ORDER BY q_id, rk"""),
+    // --- training-data pipeline: multimodal binary columns
+    Gate("mm_metadata", (s, d) => Multimodal.blobMetadata(s, d).drop("content_hash"),
+      """SELECT doc_id,
+         CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
+              WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+         octet_length(encode(text)) AS n_bytes,
+         upper(substr(hex(encode(text)), 1, 16)) AS magic_hex
+         FROM documents ORDER BY doc_id"""),
+    Gate("mm_decode", Multimodal.decodeDims(_, _),
+      s"""WITH h AS (
+           SELECT doc_id, ${duckMd5_60("text")} AS h FROM documents)
+         SELECT doc_id,
+           CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
+                WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+           CAST(64 + (h % 8) * 32 AS INT) AS width,
+           CAST(64 + ((h >> 8) % 8) * 32 AS INT) AS height,
+           CAST(3 AS INT) AS channels,
+           CAST(1 + ((h >> 16) % 30) AS INT) AS n_frames
+         FROM h ORDER BY doc_id"""),
+    Gate("mm_frames", Multimodal.sampleFrames(_, _),
+      s"""WITH h AS (
+           SELECT doc_id, ${duckMd5_60("text")} AS h FROM documents
+           WHERE CAST(doc_id % 3 AS INT) = 2),
+         d AS (
+           SELECT doc_id, CAST(1 + ((h >> 16) % 30) AS INT) AS n_frames FROM h)
+         SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx
+         FROM d, UNNEST(generate_series(0, n_frames - 1,
+           greatest(CAST(ceil(n_frames / 4.0) AS INT), 1))) t(f)
+         ORDER BY doc_id, frame_idx"""),
+    // gate on the decode's EXACT integer histogram (square-sum + md5 of
+    // the 64 zero-filled counts) — engine-exact, so DuckDB hash-gates
+    // the full decode path; the Float normalization of the embedding is
+    // MultimodalSpec-pinned (no cross-engine promise on Float division)
     // mm_features: the stub decode's integer byte-bucket histogram,
     // recomputed from the text characters (the fixture is pure ASCII,
     // FixtureSchemaSpec enforces it — so ord(char) IS the UTF-8 byte),
     // zero-filled over all 64 buckets to match the Spark array shape.
     // The Float-normalized embedding stays out of the hash on purpose.
-    // cross-modal retrieval: image-side histograms train the Lloyd
-    // chain; text-side histograms probe it — see mmXmodalOracle
-    "mm_xmodal_topk" -> mmXmodalOracle,
-    "mm_features" ->
+    Gate("mm_features",
+      (s, d) =>
+        Multimodal.extractFeaturesAudit(s, d).drop("embedding"),
       """WITH chars AS (
            SELECT doc_id, ord(text[i]) % 64 AS b
            FROM documents, UNNEST(generate_series(1, length(text))) t(i)),
@@ -4532,7 +4160,210 @@ object SparkEntry {
              ON grid.doc_id = counts.doc_id AND grid.b = counts.b)
          SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS hist_sq,
            md5(string_agg(CAST(c AS VARCHAR), ',' ORDER BY b)) AS hist_digest
-         FROM full_h GROUP BY doc_id ORDER BY doc_id""",
+         FROM full_h GROUP BY doc_id ORDER BY doc_id"""),
+    // cross-modal retrieval: text-side queries → trained-centroid IVF
+    // over image-side features (integer byte-histogram domain, so the
+    // whole funnel — train, assign, probe, cosine — is engine-exact)
+    // cross-modal retrieval: image-side histograms train the Lloyd
+    // chain; text-side histograms probe it — see mmXmodalOracle
+    Gate("mm_xmodal_topk", (s, d) => Multimodal.xmodalTopK(s, d), mmXmodalOracle),
+    // --- streaming surface, driven through the gate: each entry runs a
+    // REAL Structured Streaming query (file source → transform →
+    // idempotent parquet sink) to completion and returns the landed
+    // output, so the DuckDB oracle checks genuine streaming results —
+    // stateless admission, dropDuplicatesWithinWatermark, stateful
+    // mapGroups funnel, watermarked append windows, budget admission.
+    Gate("stream_quality", streaming.StreamQueries.qualityDocs(_, _), streamQualityOracleSql),
+    // deterministic projection of the streaming content dedup: exactly
+    // one survivor per content class
+    Gate("stream_dedup", streaming.StreamQueries.dedupDocs(_, _),
+      "SELECT DISTINCT md5(text) AS fp FROM documents ORDER BY fp"),
+    // the streaming funnel must land the SAME frontier table
+    Gate("stream_funnel", streaming.StreamQueries.funnelEvents(_, _), funnelOracleSql),
+    // append-mode watermark cutoff applied oracle-side: windows whose
+    // end is <= max(event time) - 1h delay are exactly the finalized
+    // (emitted) set. Watermark is tracked in WHOLE MILLISECONDS by the
+    // engine (EventTimeStats), so the oracle floors to ms before
+    // subtracting the delay — an hour-boundary max-event edge case
+    // would otherwise disagree in the sub-ms remainder.
+    Gate("stream_hourly", streaming.StreamQueries.hourlyEvents(_, _),
+      """WITH wm AS (
+           SELECT (epoch_ms(max(ts)) - 3600000) * 1000 AS wm_us FROM events)
+         SELECT * FROM (
+           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
+             count(*) AS n_events, round(sum(value), 2) AS total_value
+           FROM events GROUP BY 1, 2)
+         WHERE hour_us + 3600000000 <= (SELECT wm_us FROM wm)
+         ORDER BY hour_us, event_type"""),
+    // mix-drift alarm: same watermark cutoff as stream_hourly; reference
+    // shares and window shares are exact integer micro-units (Long `div`
+    // ≡ `//` on non-negative BIGINTs), zero-count tracked types included
+    Gate("stream_mixdrift", streaming.StreamQueries.mixDriftEvents(_, _),
+      s"""WITH wm AS (
+           SELECT (epoch_ms(max(ts)) - 3600000) * 1000 AS wm_us FROM events),
+         tot AS (SELECT count(*) AS t FROM events),
+         ref AS (
+           SELECT event_type,
+             CAST(count(*) * 1000000 // (SELECT t FROM tot) AS BIGINT)
+               AS ref_micro
+           FROM events GROUP BY 1),
+         h AS (
+           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us,
+             count(*) AS n_total
+           FROM events GROUP BY 1),
+         tn AS (
+           SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
+             count(*) AS n
+           FROM events GROUP BY 1, 2),
+         grid AS (
+           SELECT h.hour_us, t.event_type, h.n_total
+           FROM h CROSS JOIN (VALUES ${
+        streaming.Streaming.MixEventTypes.map(t => s"('$t')").mkString(", ")
+      }) t(event_type))
+         SELECT g.hour_us, g.event_type,
+           CAST(coalesce(tn.n, 0) AS BIGINT) AS n, g.n_total,
+           CAST(coalesce(tn.n, 0) * 1000000 // g.n_total AS BIGINT)
+             AS share_micro,
+           coalesce(r.ref_micro, 0) AS ref_micro,
+           CAST(abs(CAST(coalesce(tn.n, 0) * 1000000 // g.n_total AS BIGINT)
+             - coalesce(r.ref_micro, 0))
+             > ${streaming.Streaming.MixDriftThresholdMicro} AS INTEGER)
+             AS drift
+         FROM grid g
+         LEFT JOIN tn ON g.hour_us = tn.hour_us
+           AND g.event_type = tn.event_type
+         LEFT JOIN ref r ON g.event_type = r.event_type
+         WHERE g.hour_us + 3600000000 <= (SELECT wm_us FROM wm)
+         ORDER BY g.hour_us, g.event_type"""),
+    // per-language admission prefix sum, arrival order = doc_id
+    Gate("stream_admit", streaming.StreamQueries.admitDocs(_, _),
+      s"""WITH t AS (
+           SELECT doc_id, lang,
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+               AS tok
+           FROM documents),
+         s AS (SELECT doc_id, lang, tok,
+                 CAST(coalesce(sum(tok) OVER (PARTITION BY lang
+                   ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1
+                   PRECEDING), 0) AS BIGINT) AS "off"
+               FROM t)
+         SELECT doc_id, lang, tok, "off" FROM s
+         WHERE "off" < ${streaming.StreamQueries.AdmitBudget}
+         ORDER BY doc_id"""),
+    Gate("stream_quarantine", streaming.StreamQueries.quarantineDocs(_, _), streamQuarantineOracle),
+    // gap sessionization with event-time-timeout eviction: emitted =
+    // gap-closed in batch (every non-last session of a user) plus last
+    // sessions whose armed timeout (end + gap) fell strictly below the
+    // final ms-floored watermark. value pre-quantized to micro-units so
+    // session sums are exact integers in any accumulation order.
+    Gate("stream_sessions", streaming.StreamQueries.sessionsEvents(_, _),
+      """WITH ev AS (
+           SELECT user_id, epoch_ms(ts) AS ms, floor(value * 1e6) AS v
+           FROM events),
+         lagd AS (
+           SELECT user_id, ms, v,
+             lag(ms) OVER (PARTITION BY user_id ORDER BY ms) AS pms
+           FROM ev),
+         isl AS (
+           SELECT user_id, ms, v,
+             sum(CASE WHEN pms IS NULL OR ms - pms > 1800000 THEN 1
+                      ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ms
+                     ROWS UNBOUNDED PRECEDING) AS sid
+           FROM lagd),
+         sess AS (
+           SELECT user_id, sid, min(ms) AS start_ms, max(ms) AS end_ms,
+             CAST(count(*) AS INT) AS n_events,
+             CAST(sum(v) AS DOUBLE) AS total_value,
+             sid < max(sid) OVER (PARTITION BY user_id) AS closed_in_batch
+           FROM isl GROUP BY 1, 2),
+         wm AS (SELECT max(epoch_ms(ts)) - 3600000 AS wm_ms FROM events)
+         SELECT user_id, start_ms, end_ms, n_events, total_value
+         FROM sess, wm
+         WHERE closed_in_batch OR end_ms + 1800000 < wm_ms
+         ORDER BY user_id, start_ms"""),
+    // watermarked stream-stream join: inner matches emit as found, so
+    // the landed set equals the batch interval join
+    Gate("stream_join", streaming.StreamQueries.joinEvents(_, _),
+      """SELECT p.event_id AS purchase_id, p.user_id,
+           epoch_us(p.ts) AS purchase_us, epoch_us(c.ts) AS click_us
+         FROM events p JOIN events c
+           ON p.event_type = 'purchase' AND c.event_type = 'click'
+           AND p.user_id = c.user_id
+           AND epoch_us(c.ts) <= epoch_us(p.ts)
+           AND epoch_us(c.ts) >= epoch_us(p.ts) - 3600000000
+         ORDER BY purchase_id, click_us"""),
+    // stream-static broadcast enrichment: modal event type per user
+    // with the same (count, type) lexicographic tie rule max_by applies
+    Gate("stream_enrich", streaming.StreamQueries.enrichEvents(_, _),
+      """WITH c AS (
+           SELECT user_id, event_type, count(*) AS n
+           FROM events GROUP BY 1, 2),
+         r AS (
+           SELECT user_id, event_type, row_number() OVER (
+             PARTITION BY user_id ORDER BY n DESC, event_type DESC) AS rk
+           FROM c),
+         dim AS (SELECT user_id, event_type AS home_type FROM r WHERE rk = 1)
+         SELECT e.event_id, e.user_id, e.event_type,
+           d.home_type IS NOT NULL AS is_known,
+           coalesce(d.home_type, 'unknown') AS home_type
+         FROM events e LEFT JOIN dim d USING (user_id)
+         ORDER BY e.event_id"""),
+    // complete-mode leaderboard: the final emission equals the batch top-k
+    Gate("stream_topk", streaming.StreamQueries.leaderboardEvents(_, _),
+      """SELECT user_id, count(*) AS n_events FROM events
+         GROUP BY 1 ORDER BY n_events DESC, user_id LIMIT 10"""),
+    // stateless fingerprint enrichment: md5-60 digest + per-doc distinct
+    // winnow-fp count (same rolling-hash chain as the text_winnow gate)
+    Gate("stream_fingerprint", streaming.StreamQueries.fingerprintDocs(_, _),
+      s"""WITH cs AS (
+           SELECT doc_id, list_transform(generate_series(1, length(text)),
+             i -> CAST(ord(substr(text, i, 1)) AS BIGINT)) AS cs
+           FROM documents WHERE length(text) >= 8),
+         g AS (
+           SELECT doc_id, list_transform(generate_series(1, len(cs) - 4),
+             i -> (cs[i] * 4362470401 + cs[i+1] * 16974593 + cs[i+2] * 66049
+                   + cs[i+3] * 257 + cs[i+4]) % 1000000007) AS grams
+           FROM cs),
+         w AS (
+           SELECT DISTINCT doc_id, list_min(grams[j:j+3]) AS wfp
+           FROM g, UNNEST(generate_series(1, len(grams) - 3)) t(j)),
+         wc AS (SELECT doc_id, CAST(count(*) AS INT) AS n_winnow_fps
+                FROM w GROUP BY 1)
+         SELECT d.doc_id, ${duckMd5_60("text")} AS fp,
+           coalesce(wc.n_winnow_fps, 0) AS n_winnow_fps
+         FROM documents d LEFT JOIN wc USING (doc_id)
+         ORDER BY doc_id"""),
+    Gate("stream_upsert", streaming.StreamQueries.upsertVectors(_, _), ivfUpsertOracle),
+    Gate("stream_cdc", streaming.StreamQueries.cdcDocs(_, _), cdcApplyOracle),
+    // streaming ingest through the same source's MicroBatchStream must
+    // land exactly the batch row set — one shared oracle string
+    Gate("stream_line_ingest", streaming.StreamQueries.lineIngest(_, _), lineTableOracle),
+    // the stateless streaming twin lands the identical votes
+    Gate("stream_weak_labels", streaming.StreamQueries.weakLabelDocs(_, _), weakLabelsOracle),
+    Gate("stream_pipeline", streaming.StreamQueries.pipelineDocs(_, _), streamPipelineOracleSql),
+    // --- the composed curation pipeline (dedup → decon → quality →
+    // sample) as one plan, gated end to end
+    Gate("pipeline_curate", operators.Pipeline.curateDocs(_, _), pipelineCurateOracleSql),
+    // --- link-graph centrality (crawl prioritization): fixed-iteration
+    // integer-micro PageRank over the synthesized doc link graph
+    Gate("graph_pagerank", operators.Graph.pageRankDocs(_, _), pageRankOracleSql),
+    // --- data-layout optimization: Z-order file assignment + the
+    // per-file min/max manifest data skipping prunes on
+    Gate("zorder_layout", operators.Layout.zorderLineitem(_, _), zorderOracleSql),
+    Gate("hilbert_layout", operators.Layout.hilbertLineitem(_, _), hilbertOracleSql),
+    Gate("skip_audit", operators.Layout.skipAuditLineitem(_, _), skipAuditOracleSql),
+    // bucketed range join restated as DuckDB's native range predicate —
+    // the oracle checks the SEMANTICS (point-in-interval), not the
+    // bucketing rewrite, so a bucket-boundary bug cannot hash-match
+    Gate("range_join", operators.RangeJoin.rangeJoinEvents(_, _),
+      """WITH iv AS (
+           SELECT event_id AS iv_id, value - 40 AS lo, value + 40 AS hi
+           FROM events WHERE event_id % 50 = 0 AND event_id < 1000)
+         SELECT iv_id, count(*) AS n_points,
+           min(e.event_id) AS min_event, max(e.event_id) AS max_event
+         FROM iv JOIN events e ON e.value >= iv.lo AND e.value <= iv.hi
+         GROUP BY iv_id ORDER BY iv_id"""),
   )
 
   /** Trained-k-means oracle: unroll [[operators.Clustering.kmeans]]'s

@@ -172,16 +172,11 @@ object Stress {
     // rows — and the scaling ratios STRESS.md reports compare against
     // the warm-run bench, so the stress pass must be warm too.
     System.err.println("[stress] methodology: warm-run (untimed full pass, then timed)")
-    // Dev-only selective run, same contract as Verify/Bench: unset = all;
-    // exact names, `*` suffix for prefix (see Bench.scala).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(tok =>
-      if (tok.endsWith("*")) name.startsWith(tok.dropRight(1)) else name == tok))
-    val queries = SparkEntry.queries.filter(q => selected(q._1))
-    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try fn(spark, out).count() catch {
+    val gates = Harness.selectedGates
+    gates.foreach { g =>
+      try g.run(spark, out).count() catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[stress] WARM-UP FAILURE $name: ${e.getMessage}")
+          System.err.println(s"[stress] WARM-UP FAILURE ${g.name}: ${e.getMessage}")
       }
     }
     // Timed pass with a REPRODUCIBILITY contract (round-11 verdict #2):
@@ -232,7 +227,7 @@ object Stress {
     // the trimmed set; < 5 runs: plain median, spread over all runs.
     def trimmed(xs: Seq[Double]): Seq[Double] =
       if (xs.size >= 5) xs.sorted.drop(1).dropRight(1) else xs
-    val results = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = gates.map { case SparkEntry.Gate(name, fn, _, _) =>
       val first = once(name, fn)
       val nRuns = repeatOverrides.getOrElse(name,
         if (first._1 >= repeatThresholdSec) 3 else 1)
@@ -262,13 +257,6 @@ object Stress {
         runs.map(_._3).max, runs.map(_._4).max, kept.max / kept.min.max(1e-9),
         recall)
     }
-    val commit = try {
-      val sha = scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD")).!!.trim
-      val dirty = scala.sys.process.Process(
-        Seq("git", "status", "--porcelain")).!!.trim.nonEmpty
-      if (dirty) sha + "-dirty" else sha
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def mb(bytes: Long): Long = bytes >> 20
     val qs = results.map { case (k, med, runs, n, spill, peak, spread, recall) =>
@@ -277,7 +265,7 @@ object Stress {
       }.getOrElse("")
       val sp = if (runs.size > 1)
         s""","spread":${fmt(spread)},"trimmed":${runs.size >= 5}""" else ""
-      s""""$k":{"sec":${fmt(med)},"runs":[${runs.map(fmt).mkString(",")}],""" +
+      s"""${Harness.jsonString(k)}:{"sec":${fmt(med)},"runs":[${runs.map(fmt).mkString(",")}],""" +
         s""""rows":$n,"spill_mb":${mb(spill)},"peak_heap_mb":${mb(peak)}$sp$rec}"""
     }.mkString("{", ",", "}")
     // n_failed is IN the artifact, not only the exit code: a gate that
@@ -288,7 +276,7 @@ object Stress {
     println(s"""{"metric":"stress_total","value":${fmt(results.map(_._2).sum)},""" +
       s""""unit":"sec","factor":$factor,"repeat_threshold_sec":$repeatThresholdSec,""" +
       s""""jitter":$jitterMagnitude,"n_failed":$nFailed,""" +
-      s""""commit":"$commit","queries":$qs,"base":"$sfDir"}""")
+      s""""commit":"${Harness.commit}","queries":$qs,"base":"$sfDir"}""")
     spark.stop()
     // a smoke that cannot fail is not a smoke
     if (nFailed > 0) sys.exit(1)

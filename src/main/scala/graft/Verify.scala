@@ -1,26 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry gate's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // Dev-only selective run: SPARK_GRAFT_ONLY=<name>[,<name>...]
-    // restricts the dump (and the oracle json) to matching query names —
-    // lets a new operator iterate against tools/check_oracle.py without
-    // re-running the whole surface. Unset (the driver's mode) = run all.
-    // Exact names; `*` suffix for prefix match (see Bench.scala).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(tok =>
-      if (tok.endsWith("*")) name.startsWith(tok.dropRight(1)) else name == tok))
+    // SPARK_GRAFT_ONLY restricts the dump (and the oracle json) to the
+    // selected gates — lets a new operator iterate against
+    // tools/check_oracle.py without re-running the whole surface.
+    val gates = Harness.selectedGates
     val spark = Engine.session(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     var nFailed = 0
-    SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    gates.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
         // A failed query must leave a marker the driver can surface as an
         // err row — round 8's catch-print-skip left the CORRECTNESS
@@ -29,27 +24,15 @@ object Verify {
         // output dir (created if the write died before mkdir), so any
         // consumer globbing the dir sees a non-parquet failure sentinel.
         nFailed += 1
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        val dir = new java.io.File(s"$outDir/$name")
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
+        val dir = new java.io.File(s"$outDir/${g.name}")
         dir.mkdirs()
-        Files.writeString(Paths.get(s"$outDir/$name/_ERROR"),
+        Files.writeString(Paths.get(s"$outDir/${g.name}/_ERROR"),
           Option(e.getMessage).getOrElse(e.getClass.getName) + "\n")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(o => selected(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(g => s"${Harness.jsonString(g.name)}: ${Harness.jsonString(g.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     // Nonzero exit on any failure — the dump is incomplete and the round's

@@ -73,26 +73,10 @@ object StreamGate {
     * MemoryStream callers create their stream inside `build` from the
     * session it receives.
     */
-  /** Dev-only intra-gate timing (`SPARK_GRAFT_STREAM_PROF=1`): dumps the
-    * harness phase times and Spark's own per-micro-batch duration
-    * breakdown (`StreamingQueryProgress.durationMs`) to stderr, so "the
-    * streaming family costs ~0.8 s/gate" can be attributed to planning /
-    * state-store commit / sink write / harness instead of guessed at.
-    * Zero cost when unset.
-    */
-  private val profEnabled = sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1")
-
   def runToParquet(spark: SparkSession, build: SparkSession => DataFrame,
       outDir: String, outputMode: String = "append",
       keepBatchId: Boolean = false)
       (feeds: (() => Unit)*): DataFrame = {
-    val profT0 = System.nanoTime()
-    def profMark(label: String, t0: Long): Long = {
-      val now = System.nanoTime()
-      if (profEnabled)
-        System.err.println(f"[streamprof] $outDir%s $label%-10s ${(now - t0) / 1e9}%.3f s")
-      now
-    }
     // No staged feeds → the fixture is fully present at start, so run
     // under Trigger.AvailableNow: the query drains the source, runs the
     // extra batch stateful operators request after the watermark
@@ -117,19 +101,12 @@ object StreamGate {
       "StreamGate: build(session) must construct its sources from the " +
         "session it receives — a query bound to another session would " +
         "not pick up the gate-scoped conf")
-    val tBuilt = profMark("build", profT0)
     val q = Streaming.idempotentParquetSink(out, s"$outDir/data",
       s"$outDir/_checkpoint", outputMode, availableNow = feeds.isEmpty)
-    val tStarted = profMark("start", tBuilt)
     try {
       if (feeds.isEmpty) q.awaitTermination()
       else feeds.foreach { f => f(); q.processAllAvailable() }
     } finally q.stop()
-    val tDrained = profMark("drain", tStarted)
-    if (profEnabled) q.recentProgress.foreach { p =>
-      System.err.println(s"[streamprof] $outDir batch=${p.batchId} " +
-        s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-    }
     // Read back with the KNOWN schema (the sink landed exactly `out`'s
     // columns; `batch_id` is the sink's directory partition column,
     // discovered as int) — an explicit schema skips the footer-read
@@ -150,20 +127,18 @@ object StreamGate {
     if (outputMode == "update") {
       // "batches that emitted rows" counted from the sink's own layout —
       // a batch_id=N dir holds a part file iff that batch wrote ≥1 row
-      // (empty partitions produce no files) — so the check is two local
-      // directory listings instead of a Spark job per gate.
-      val dataDir = new java.io.File(s"$outDir/data")
-      val batches = Option(dataDir.listFiles()).toSeq.flatten
-        .filter(d => d.isDirectory && d.getName.startsWith("batch_id="))
-        .count(d => Option(d.listFiles()).toSeq.flatten
-          .exists(_.getName.startsWith("part-")))
+      // (empty partitions produce no files) — so the check is directory
+      // listings through the sink path's FileSystem, not a Spark job.
+      val data = new org.apache.hadoop.fs.Path(s"$outDir/data")
+      val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val batches = fs.listStatus(data)
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("batch_id="))
+        .count(d => fs.listStatus(d.getPath).exists(_.getPath.getName.startsWith("part-")))
       require(batches <= 1,
         s"StreamGate: update-mode gate landed $batches micro-batches; " +
           "the read-back would contain stale re-emitted group rows - " +
           "keep only each group's max-batch_id row before comparing")
     }
-    val res = if (keepBatchId) landed else landed.drop("batch_id")
-    if (profEnabled) { res.count(); profMark("readback", tDrained); profMark("total", profT0) }
-    res
+    if (keepBatchId) landed else landed.drop("batch_id")
   }
 }

@@ -2,36 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gate-surface hygiene: the driver treats a `queries` entry WITHOUT an
-  * `oracleSql` entry as a weaker rows-only check, so a typo'd oracle key
-  * would silently downgrade a gate. Pin the mapping.
+/** Gate-registry hygiene: one table declares each gate with its oracle,
+  * so the surface itself is pinned here, not the sync of two maps.
   */
 class SparkEntrySpec extends AnyFunSuite {
 
-  /** Queries deliberately left rows-only. EMPTY since round 10: the
-    * last three holdouts gained value-level oracles (kmeans_assign via
-    * the micro-quantized trainer + unrolled-iteration SQL; mm_features
-    * via the integer decode histogram; q18_sketches via exact
-    * companions + in-plan error-bound verdicts). Adding a name here
-    * requires a documented portability reason at the oracle map.
-    */
-  private val declaredRowsOnly = Set.empty[String]
-
-  test("every oracle key names a real query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("the registry rejects a gate name registered twice") {
+    val g = SparkEntry.Gate("g", (s, d) => Engine.Tables(s, d).region, "SELECT 1")
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.registry(g, g.copy(oracleSql = "SELECT 2")))
+    assert(err.getMessage.contains("registered twice: g"), err.getMessage)
+    assert(SparkEntry.registry(g, g.copy(name = "h")).map(_.name) === Seq("g", "h"))
   }
 
-  test("every query is oracle-gated unless declared rows-only") {
-    val ungated = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(ungated === declaredRowsOnly,
-      s"silently rows-only: ${ungated -- declaredRowsOnly}; " +
-        s"stale declaration: ${declaredRowsOnly -- ungated}")
+  test("the registry holds exactly the 225 pinned gate names") {
+    val names = SparkEntry.gates.map(_.name).sorted
+    assert(names.size === 225)
+    // sha-256 of the sorted names, one per line
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(names.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(digest === "8c8fa188e12682c74b85caca4c939f6844ad6ccdf764b45c9f188e82eb814c52", names.mkString(","))
   }
 
   test("oracle SQL strings are non-empty") {
-    SparkEntry.oracleSql.foreach { case (name, sql) =>
-      assert(sql.trim.nonEmpty, s"$name oracle is empty")
+    SparkEntry.gates.foreach { g =>
+      assert(g.oracleSql.trim.nonEmpty, s"${g.name} oracle is empty")
     }
   }
 }

@@ -626,6 +626,26 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(batch.nonEmpty && batch.size < docs.size)
   }
 
+  test("StreamGate: an update-mode gate with two emitting micro-batches fails loudly") {
+    import spark.implicits._
+    // each feed updates a group, so both micro-batches land rows and the
+    // read-back would hold a stale batch-0 row beside its batch-1 update
+    var input: MemoryStream[Long] = null
+    val outDir = java.nio.file.Files.createTempDirectory("graft-sgate").toString
+    val err = intercept[IllegalArgumentException] {
+      graft.streaming.StreamGate.runToParquet(spark,
+        { s =>
+          input = MemoryStream[Long](
+            implicitly[org.apache.spark.sql.Encoder[Long]], s.sqlContext)
+          input.toDF().groupBy("value").count()
+        },
+        outDir, outputMode = "update")(
+        () => input.addData(1L, 2L),
+        () => input.addData(2L, 3L))
+    }
+    assert(err.getMessage.contains("landed 2 micro-batches"), err.getMessage)
+  }
+
   private implicit class TripleOps(s: Array[(Long, Double, Double)]) {
     def toMap2: Map[Long, (Double, Double)] =
       s.map { case (id, z, p) => id -> ((z, p)) }.toMap
