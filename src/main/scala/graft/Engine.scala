@@ -72,6 +72,14 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // `file:` through the fork-free local filesystem, both its
+      // FileSystem and its FileContext (streaming checkpoints) face; the
+      // stock one forks a shell per local create, mkdir and rename
+      // (graft.sources.LocalFs)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.LocalFs.Context].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -15,6 +16,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader for the reference's native table format — SDFS
   * line-text tables where each line is `<key> <rest...>` and the key is
@@ -68,6 +70,17 @@ object LineTable {
     * many ranges per file).
     */
   val DefaultSplitBytes: Long = 128L * 1024 * 1024
+
+  /** The session's Hadoop conf for this source's tasks, broadcast by the
+    * driver-side factory. A fresh Hadoop conf built in the task would miss
+    * the session's settings (the `file:` binding, `spark.hadoop.*`, viewfs
+    * mounts) and re-parse the default XML resources in every task; a conf
+    * captured in the factory itself would be serialized into every task.
+    */
+  private[sources] def taskConf(): Broadcast[SerializableConfiguration] = {
+    val sc = SparkSession.active.sparkContext
+    sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+  }
 
   /** Gated entry: the documents fixture round-trips through the
     * reference's own table format — each doc's text becomes one line in
@@ -258,7 +271,7 @@ private final case class LineCommit(tmp: String, finalName: String)
 
 private class LineBatchWrite(path: String, truncate: Boolean) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new LineWriterFactory(path)
+    new LineWriterFactory(path, LineTable.taskConf())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -305,8 +318,11 @@ private class LineBatchWrite(path: String, truncate: Boolean) extends BatchWrite
   * sink, SURVEY §2.1-E11); truncation is the batch overwrite path's job.
   */
 private class LineStreamingWrite(path: String) extends StreamingWrite {
+  // one broadcast per query, not per epoch
+  private lazy val taskConf = LineTable.taskConf()
+
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LineStreamingWriterFactory(path)
+    new LineStreamingWriterFactory(path, taskConf)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -358,31 +374,32 @@ private object LineStreamingWrite {
   def manifestName(epochId: Long): String = f"_epoch-$epochId%05d.committed"
 }
 
-private class LineStreamingWriterFactory(path: String) extends StreamingDataWriterFactory {
+private class LineStreamingWriterFactory(path: String,
+    conf: Broadcast[SerializableConfiguration]) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new LineWriter(path,
+    new LineWriter(path, conf,
       finalName = f"part-e$epochId%05d-$partitionId%05d.line",
       tmpSuffix = s".$taskId.tmp")
 }
 
-private class LineWriterFactory(path: String) extends DataWriterFactory {
+private class LineWriterFactory(path: String,
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     // taskId (globally unique per attempt) in the FINAL name: batch
     // commits happen exactly once per job, so uniqueness is all that's
     // needed and speculative twins can never collide
-    new LineWriter(path, finalName = f"part-$partitionId%05d-$taskId.line",
+    new LineWriter(path, conf, finalName = f"part-$partitionId%05d-$taskId.line",
       tmpSuffix = ".tmp")
 }
 
-private class LineWriter(path: String, finalName: String, tmpSuffix: String)
-    extends DataWriter[InternalRow] {
+private class LineWriter(path: String, conf: Broadcast[SerializableConfiguration],
+    finalName: String, tmpSuffix: String) extends DataWriter[InternalRow] {
   // dot prefix = invisible to LineScan.fileLengths until commit renames
   private val dir = new Path(path)
   private val tmpPath = new Path(dir, s".$finalName$tmpSuffix")
   private val fs = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val f = dir.getFileSystem(conf)
+    val f = dir.getFileSystem(conf.value.value)
     f.mkdirs(dir)
     f
   }
@@ -440,7 +457,7 @@ private class LineScan(path: String, splitBytes: Long, required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LineReaderFactory(required.fieldNames.toSeq)
+    new LineReaderFactory(required.fieldNames.toSeq, LineTable.taskConf())
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new LineMicroBatchStream(path, splitBytes, required)
@@ -482,6 +499,8 @@ private class LineMicroBatchStream(path: String, splitBytes: Long,
   // AvailableNow contract: snapshot the end offset once at query start,
   // drain up to it, terminate — later appends wait for the next run
   private var availableNowCap: Option[Map[String, Long]] = None
+  // one broadcast per query, not per micro-batch
+  private lazy val taskConf = LineTable.taskConf()
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(LineScan.fileLengths(path))
@@ -508,7 +527,7 @@ private class LineMicroBatchStream(path: String, splitBytes: Long,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LineReaderFactory(required.fieldNames.toSeq)
+    new LineReaderFactory(required.fieldNames.toSeq, taskConf)
 
   override def deserializeOffset(json: String): Offset =
     LineOffset(LineOffset.fromJson(json))
@@ -567,23 +586,20 @@ private object LineOffset {
 private case class LinePartition(file: String, start: Long, end: Long)
     extends InputPartition
 
-private class LineReaderFactory(fields: Seq[String])
-    extends PartitionReaderFactory {
+private class LineReaderFactory(fields: Seq[String],
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new LineReader(partition.asInstanceOf[LinePartition], fields)
+    new LineReader(partition.asInstanceOf[LinePartition], fields, conf)
 }
 
 /** Reads the lines whose FIRST byte falls inside [start, end): skip to
   * the first boundary after `start` (unless at file start), finish the
   * last line past `end`. Exactly-once coverage for any split plan.
   */
-private class LineReader(part: LinePartition, fields: Seq[String])
-    extends PartitionReader[InternalRow] {
-  // default Hadoop conf: resolves file:// and the cluster's core-site
-  // defaults on the executor; the source carries no custom FS options
-  private val hconf = new org.apache.hadoop.conf.Configuration()
+private class LineReader(part: LinePartition, fields: Seq[String],
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReader[InternalRow] {
   private val p = new Path(part.file)
-  private val in = p.getFileSystem(hconf).open(p)
+  private val in = p.getFileSystem(conf.value.value).open(p)
   private var pos: Long = part.start
   private val needKey = fields.contains("key")
   private val needValue = fields.contains("value")

@@ -29,17 +29,6 @@ object StreamGate {
       if (child == null) {
         child = spark.newSession()
         child.conf.set("spark.sql.shuffle.partitions", "8")
-        // Per-micro-batch sink-commit cost: every batch's foreachBatch
-        // parquet write pays the full FileOutputCommitter protocol.
-        // v2 commits task output directly at task commit (no job-level
-        // re-rename pass) and the _SUCCESS marker is pure overhead here
-        // (read-back uses partition discovery, and batch idempotence
-        // comes from the per-batch-dir overwrite, not the marker). Both
-        // scoped to the gate child session.
-        child.conf.set(
-          "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        child.conf.set(
-          "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         gateSessions.put(spark, child)
       }
       child

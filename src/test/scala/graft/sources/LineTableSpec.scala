@@ -243,4 +243,18 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(ex.getMessage.contains("no such path"), ex.getMessage)
   }
+
+  test("tasks resolve paths through the session's Hadoop conf: a viewfs mount only it has") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("lt-viewfs-")
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.viewfs.mounttable.graftlinetable.link./t", root.toUri.toString)
+    val table = "viewfs://graftlinetable/t/table"
+    val rows = (0 until 50).map(i => (s"k${i % 5}", s"v $i"))
+    rows.toDF("key", "value").write.format("graft.sources.LineTable")
+      .option("path", table).mode("append").save()
+    val got = read(table, 64).collect().map(r => (r.getString(0), r.getString(1)))
+    assert(got.sorted.toSeq === rows.sorted)
+    assert(java.nio.file.Files.list(root.resolve("table")).count() > 0)
+  }
 }
