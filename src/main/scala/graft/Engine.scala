@@ -26,22 +26,7 @@ object Engine {
       .appName(appName)
       // native expressions (graft.functions.*) enter through the public
       // extensions API — Spark 4 has no public Column<->Expression bridge.
-      .withExtensions(graft.functions.Fnv1a64.register)
-      .withExtensions(graft.functions.VecDot.register)
-      .withExtensions(graft.functions.WinnowFps.register)
-      .withExtensions(graft.functions.SimHash60.register)
-      .withExtensions(graft.functions.BloomFn.register)
-      .withExtensions(graft.functions.NormText.register)
-      .withExtensions(graft.functions.NgramAnyIn.register)
-      .withExtensions(graft.functions.LshBandHashes.register)
-      .withExtensions(graft.functions.PqArgmin.register)
-      .withExtensions(graft.functions.SortedIntersectCount.register)
-      .withExtensions(graft.functions.PqArgminDist.register)
-      .withExtensions(graft.functions.HilbertIdx.register)
-      .withExtensions(graft.functions.SignPack.register)
-      .withExtensions(graft.functions.TopKStructs.register)
-      .withExtensions(graft.functions.MaxSimMicro.register)
-      .withExtensions(graft.functions.ShingleHashes.register)
+      .withExtensions(graft.functions.Natives.register)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // BloomFilterAggregate silently clamps its size arguments to these
       // confs (Spark tunes them for its own runtime join filters); raise

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.call_function
 
 /** Session-level exposure of Spark's own runtime-filter Bloom expressions
@@ -24,31 +21,6 @@ import org.apache.spark.sql.functions.call_function
   * pure scale infrastructure for the training-data pipeline tier.
   */
 object BloomFn {
-
-  val aggRegistration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c)       => new BloomFilterAggregate(c)
-        case Seq(c, n)    => new BloomFilterAggregate(c, n)
-        case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-        case other => throw new IllegalArgumentException(
-          s"bloom_agg takes 1-3 arguments, got ${other.length}")
-      })
-
-  val mightContainRegistration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2) throw new IllegalArgumentException(
-          s"bloom_might_contain requires exactly 2 arguments, got ${children.length}")
-        BloomFilterMightContain(children.head, children(1))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(aggRegistration)
-    ext.injectFunction(mightContainRegistration)
-  }
 
   /** `bloom_agg(h, expectedItems)` — aggregate a LongType column into a
     * serialized Bloom filter (BinaryType, one row).

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -69,26 +68,8 @@ object Fnv1a64 {
     h
   }
 
-  /** SparkSessionExtensions registration descriptor — the public path to a
-    * native expression in Spark 4 (Column no longer wraps Expression
-    * directly, and the bridge utilities are private[sql]). Injected by
-    * [[graft.Engine.session]]; any externally-built session can do the same
-    * via `SparkSession.builder().withExtensions(Fnv1a64.register)`.
-    */
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("fnv1a64"),
-      new ExpressionInfo(classOf[Fnv1a64].getName, "fnv1a64"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1) throw new IllegalArgumentException(
-          s"fnv1a64 requires exactly 1 argument, got ${children.length}")
-        Fnv1a64(children.head)
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
   /** Column-level entry point: `fnv1a64($"text")` — resolves against the
-    * session's function registry (requires [[register]]ed session).
+    * session's function registry, installed by [[Natives.register]].
     */
   def fnv1a64(c: Column): Column = call_function("fnv1a64", c)
 }

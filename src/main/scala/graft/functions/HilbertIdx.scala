@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert-curve index (classic xy2d) of a `bits`-bit (x, y) cell as a
   * native codegen expression — the hot kernel of `hilbert_layout`.
@@ -98,25 +97,6 @@ object HilbertIdx {
     }
     d
   }
-
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"hilbert_xy2d: $name must be a foldable int literal")
-    e.eval().asInstanceOf[Int]
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("hilbert_xy2d"),
-      new ExpressionInfo(classOf[HilbertIdx].getName, "hilbert_xy2d"),
-      (children: Seq[Expression]) => {
-        if (children.length != 3) throw new IllegalArgumentException(
-          s"hilbert_xy2d requires exactly 3 arguments, got ${children.length}")
-        HilbertIdx(children(0), children(1),
-          foldableInt(children(2), "bits"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
 
   def hilbertXy2d(x: Column, y: Column, bits: Int): Column =
     call_function("hilbert_xy2d", x, y, lit(bits))

@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `lsh_bands(embedding, bits, bands)` — ALL the random-hyperplane LSH
@@ -108,26 +107,7 @@ object LshBandHashes {
     new GenericArrayData(out)
   }
 
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"lsh_bands $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("lsh_bands"),
-      new ExpressionInfo(classOf[LshBandHashes].getName, "lsh_bands"),
-      (children: Seq[Expression]) => {
-        if (children.length != 3) throw new IllegalArgumentException(
-          s"lsh_bands requires exactly 3 arguments (vec, bits, bands), got ${children.length}")
-        LshBandHashes(children.head, foldableInt(children(1), "bits"),
-          foldableInt(children(2), "bands"), dim = 64)
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def lshBands(vec: Column, bits: Int, bands: Int): Column =
     call_function("lsh_bands", vec, lit(bits), lit(bands))
 }

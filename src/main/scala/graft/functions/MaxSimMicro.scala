@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** `maxsim_micro(qv, emb, tokens, subDim)` — the ColBERT-style MaxSim
   * late-interaction score of two flat multi-token vectors as ONE native
@@ -77,7 +76,9 @@ object MaxSimMicro {
     * CAST), quantizes floor(s·1e6) to long, maxes over the corpus
     * token j, sums over the query token i — the identical operation
     * order as the HOF spelling, so every intermediate double and the
-    * final long are bit-equal.
+    * final long are bit-equal. Overflow matches too: `.toLong` saturates
+    * a token's floor like SQL's `CAST(... AS BIGINT)`, and the sum over
+    * tokens raises on overflow like the HOF's ANSI BIGINT `acc + …`.
     */
   def compute(qv: ArrayData, emb: ArrayData, tokens: Int, subDim: Int,
       qFloat: Boolean, eFloat: Boolean): Long = {
@@ -107,33 +108,13 @@ object MaxSimMicro {
         if (d > best) best = d
         j += 1
       }
-      acc += best
+      acc = Math.addExact(acc, best)
       i += 1
     }
     acc
   }
 
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"maxsim_micro $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("maxsim_micro"),
-      new ExpressionInfo(classOf[MaxSimMicro].getName, "maxsim_micro"),
-      (children: Seq[Expression]) => {
-        if (children.length != 4) throw new IllegalArgumentException(
-          s"maxsim_micro requires exactly 4 arguments (qv, emb, tokens, subDim), " +
-            s"got ${children.length}")
-        MaxSimMicro(children.head, children(1),
-          foldableInt(children(2), "tokens"), foldableInt(children(3), "subDim"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def maxSim(qv: Column, emb: Column, tokens: Int, subDim: Int): Column =
     call_function("maxsim_micro", qv, emb, lit(tokens), lit(subDim))
 }

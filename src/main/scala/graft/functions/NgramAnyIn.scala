@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `ngram_any_in(text, n, hashes)` — true iff ANY word n-gram of `text`
@@ -96,37 +94,7 @@ object NgramAnyIn {
     false
   }
 
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"ngram_any_in $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  private def foldableLongArray(e: Expression, name: String): Array[Long] = {
-    val ok = e.foldable && (e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    require(ok, s"ngram_any_in $name must be an array<bigint> literal, got $e")
-    val arr = e.eval().asInstanceOf[ArrayData].toLongArray()
-    java.util.Arrays.sort(arr)
-    arr
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ngram_any_in"),
-      new ExpressionInfo(classOf[NgramAnyIn].getName, "ngram_any_in"),
-      (children: Seq[Expression]) => {
-        if (children.length != 3) throw new IllegalArgumentException(
-          s"ngram_any_in requires exactly 3 arguments (str, n, hashes), got ${children.length}")
-        NgramAnyIn(children.head,
-          foldableInt(children(1), "n"), foldableLongArray(children(2), "hashes"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def ngramAnyIn(c: Column, n: Int, hashes: Array[Long]): Column =
     call_function("ngram_any_in", c, lit(n), lit(hashes))
 }

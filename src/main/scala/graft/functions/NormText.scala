@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -86,18 +85,6 @@ object NormText {
 
   def normalizeUTF8(u: UTF8String): UTF8String =
     UTF8String.fromString(normalize(u.toString))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("norm_text"),
-      new ExpressionInfo(classOf[NormText].getName, "norm_text"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1) throw new IllegalArgumentException(
-          s"norm_text requires exactly 1 argument, got ${children.length}")
-        NormText(children.head)
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
 
   def normText(c: Column): Column = call_function("norm_text", c)
 }

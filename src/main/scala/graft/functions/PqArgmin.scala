@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{array, call_function, lit}
@@ -95,37 +94,7 @@ object PqArgmin {
     best
   }
 
-  private[functions] def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"pq_argmin $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  private[functions] def foldableCentroids(e: Expression): Array[Array[Double]] = {
-    val ok = e.foldable && (e.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) => true
-      case _ => false
-    })
-    require(ok, s"pq_argmin centroids must be an array<array<double>> literal, got $e")
-    val outer = e.eval().asInstanceOf[ArrayData]
-    Array.tabulate(outer.numElements())(i =>
-      outer.getArray(i).toDoubleArray())
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("pq_argmin"),
-      new ExpressionInfo(classOf[PqArgmin].getName, "pq_argmin"),
-      (children: Seq[Expression]) => {
-        if (children.length != 4) throw new IllegalArgumentException(
-          s"pq_argmin requires exactly 4 arguments (vec, offset, subDim, centroids), got ${children.length}")
-        PqArgmin(children.head, foldableCentroids(children(3)),
-          foldableInt(children(1), "offset"), foldableInt(children(2), "subDim"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def pqArgmin(v: Column, cents: Seq[Array[Double]], offset: Int,
       subDim: Int): Column =
     call_function("pq_argmin", v, lit(offset), lit(subDim),
@@ -212,18 +181,4 @@ object PqArgminDist {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bestD, best))
   }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("pq_argmin_dist"),
-      new ExpressionInfo(classOf[PqArgminDist].getName, "pq_argmin_dist"),
-      (children: Seq[Expression]) => {
-        if (children.length != 4) throw new IllegalArgumentException(
-          s"pq_argmin_dist requires exactly 4 arguments (vec, offset, subDim, centroids), got ${children.length}")
-        PqArgminDist(children.head, PqArgmin.foldableCentroids(children(3)),
-          PqArgmin.foldableInt(children(1), "offset"),
-          PqArgmin.foldableInt(children(2), "subDim"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
 }

@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** `sign_pack(vec, offset, means_micro)` — 32 sign bits of a float
   * vector's slice packed into one long: bit d is set iff
@@ -86,33 +85,7 @@ object SignPack {
     out
   }
 
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"sign_pack $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  private def foldableLongSeq(e: Expression): Seq[Long] = {
-    require(e.foldable && e.dataType.isInstanceOf[ArrayType],
-      s"sign_pack means must be an array literal, got $e")
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      e.eval().asInstanceOf[ArrayData].toLongArray())
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("sign_pack"),
-      new ExpressionInfo(classOf[SignPack].getName, "sign_pack"),
-      (children: Seq[Expression]) => {
-        if (children.length != 3) throw new IllegalArgumentException(
-          s"sign_pack requires exactly 3 arguments (vec, offset, means), got ${children.length}")
-        SignPack(children.head, foldableInt(children(1), "offset"),
-          foldableLongSeq(children(2)))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def signPack(vec: Column, offset: Int, meansMicro: Array[Long]): Column =
     call_function("sign_pack", vec, lit(offset), lit(meansMicro))
 }

@@ -3,9 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -106,18 +105,6 @@ object SimHash60 {
     out
   }
 
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1) throw new IllegalArgumentException(
-          s"simhash60 requires exactly 1 argument (str), got ${children.length}")
-        SimHash60(children.head)
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def simhash60(c: Column): Column = call_function("simhash60", c)
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -97,19 +96,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2) throw new IllegalArgumentException(
-          s"sorted_intersect_count requires exactly 2 arguments, got ${children.length}")
-        SortedIntersectCount(children(0), children(1))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def sortedIntersectCount(a: Column, b: Column): Column =
     call_function("sorted_intersect_count", a, b)
 

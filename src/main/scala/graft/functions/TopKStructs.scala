@@ -3,10 +3,9 @@ package graft.functions
 import java.util.{PriorityQueue => JPriorityQueue}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions.call_function
@@ -184,19 +183,7 @@ case class TopKStructs(
 }
 
 object TopKStructs {
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("topk_structs"),
-      new ExpressionInfo(classOf[TopKStructs].getName, "topk_structs"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2) throw new IllegalArgumentException(
-          s"topk_structs requires exactly 2 arguments (value, k), got ${children.length}")
-        TopKStructs(children(0), children(1))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def topkStructs(value: Column, k: Int): Column =
     call_function("topk_structs", value, org.apache.spark.sql.functions.lit(k))
 }

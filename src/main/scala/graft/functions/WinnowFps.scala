@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints (the MOSS scheme) as ONE native expression:
@@ -112,26 +111,7 @@ object WinnowFps {
     new GenericArrayData(java.util.Arrays.copyOf(fps, uniq))
   }
 
-  private def foldableInt(e: Expression, name: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"winnow_fps $name must be an int literal, got $e")
-    e.eval().asInstanceOf[Int]
-  }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (children: Seq[Expression]) => {
-        if (children.length != 3) throw new IllegalArgumentException(
-          s"winnow_fps requires exactly 3 arguments (str, k, w), got ${children.length}")
-        WinnowFps(children.head,
-          foldableInt(children(1), "k"), foldableInt(children(2), "w"))
-      })
-
-  def register(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction(registration)
-
-  /** Column-level entry point (requires a [[register]]ed session). */
+  /** Column-level entry point (resolves by name through [[Natives]]). */
   def winnowFps(c: Column, k: Int, w: Int): Column =
     call_function("winnow_fps", c, lit(k), lit(w))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import graft.Engine.Tables
 import graft.functions.VecDot.vecDot
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,11 +127,13 @@ object Clustering {
     * chains over the SAME rows) can pay ONE collect for all chains
     * instead of one per chain — at gate scale the chains' cost is
     * scheduler round-trips, not arithmetic. Returns the rows ordered by
-    * `idCol` (sorted on the DRIVER — ids are unique, so the order equals
-    * the old distributed `orderBy` without paying its range-exchange
-    * job) as exact double-widened arrays when the validated Catalyst
-    * size estimate fits the [[DriverMaxBytesKey]] budget; None = run
-    * distributed, the direction that is always safe.
+    * `idCol` (sorted on the DRIVER under Spark's own ordering for the
+    * id's type — for strings UTF-8 byte order, not Java's `compareTo` —
+    * so with unique ids the order equals the distributed `orderBy`
+    * without paying its range-exchange job) as exact double-widened
+    * arrays when the validated Catalyst size estimate fits the
+    * [[DriverMaxBytesKey]] budget; None = run distributed, the direction
+    * that is always safe.
     */
   private[graft] def driverArmRows(vecs: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): Option[Array[Array[Double]]] = {
@@ -151,10 +155,14 @@ object Clustering {
           org.apache.spark.sql.types.FloatType, _) => true
         case _ => false
       }
+      val idType = vecs.schema(idCol).dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      // None (a null id) sorts first, as in an ascending orderBy
+      val idOrder = Ordering.Option(TypeUtils.getInterpretedOrdering(idType))
       // the float→double element cast is exact, so converting up front
       // preserves the distributed kernel's per-element cast semantics
       Some(vecs.select(col(idCol), col(embCol)).collect()
-        .sortBy(_.getLong(0))
+        .sortBy(r => Option(toCatalyst(r.get(0))))(idOrder)
         .map { r =>
           if (elemIsFloat) r.getSeq[Float](1).map(_.toDouble).toArray
           else r.getSeq[Double](1).toArray

@@ -98,8 +98,9 @@ object Monitoring {
       s"sourceOverlap: nSources must be >= 1, got $nSources")
     val nWords = (nSources + 63) / 64
     val n = OverlapShingle
-    val toks = split(trim(col("text")), "\\s+")
-    val sidRaw = regexp_extract(col("source"), "([0-9]+)", 1).cast("int")
+    // try_cast: under ANSI a plain cast of the digit-less '' raises its
+    // own CAST_INVALID_INPUT before the check below can name the source
+    val sidRaw = regexp_extract(col("source"), "([0-9]+)", 1).try_cast("int")
     val sid = when(sidRaw.isNull || sidRaw < 0 || sidRaw >= nSources,
         raise_error(concat(
           lit(s"sourceOverlap: source id outside [0, $nSources) in source='"),
@@ -108,9 +109,12 @@ object Monitoring {
     // native shingle-hash kernel (one tokenization pass, no per-shingle
     // strings) — the groupBy below consumed only xxhash64(shingle), so
     // the hashes can be produced directly; values are the spec-pinned
-    // xxhash64-of-joined-tokens the oracle replays
+    // xxhash64-of-joined-tokens the oracle replays. `sid` is checked
+    // before the explode: a doc with fewer than n tokens explodes to no
+    // rows, so a check beside the explode would never see its source
     val sh = docs
-      .select(sid.as("sid"),
+      .select(sid.as("sid"), col("text"))
+      .select(col("sid"),
         explode(graft.functions.ShingleHashes.shingleHashes(col("text"), n))
           .as("h"))
     val maskCols = (0 until nWords).map(w =>

@@ -385,6 +385,36 @@ class MaxSimMicroSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("overflow parity: saturated sub-dots match at tokens=1, raise in both at tokens=2") {
+    import spark.implicits._
+    // 2e6·2e6·4 = 1.6e13 per sub-dot, so floor(dot·1e6) is past
+    // Long.MaxValue: both spellings saturate the per-token floor
+    val big = 2e6f
+    val rows = Seq(
+      (Seq.fill(8)(big), Seq.fill(8)(big)),
+      (Seq.fill(8)(big), Seq.fill(8)(-big)),
+      (Seq.fill(8)(-big), Seq.fill(8)(big)))
+    val df = rows.toDF("qv", "embedding")
+    for (s <- Seq(4, 8)) {
+      val got = df.select(MaxSimMicro.maxSim(col("qv"), col("embedding"), 1, s))
+        .as[Long].collect()
+      val want = df.selectExpr(hofSpelling(1, s)).as[Long].collect()
+      assert(got.toSeq === want.toSeq, s"tokens=1 subDim=$s")
+      assert(got.forall(v => v == Long.MaxValue || v == Long.MinValue), got.toSeq)
+    }
+    // two saturated tokens overflow the BIGINT sum: the HOF's ANSI `+`
+    // raises, and so must the kernel (never a silent wrap)
+    for (row <- rows) {
+      val one = Seq(row).toDF("qv", "embedding")
+      val hof = intercept[Exception](one.selectExpr(hofSpelling(2, 4)).collect())
+      assert(hof.getMessage.contains("ARITHMETIC_OVERFLOW"), hof.getMessage)
+      val kernel = intercept[Exception](
+        one.select(MaxSimMicro.maxSim(col("qv"), col("embedding"), 2, 4)).collect())
+      assert(Iterator.iterate[Throwable](kernel)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), kernel.toString)
+    }
+  }
+
   test("null array propagates; short array is a loud error") {
     val r = spark.sql(
       "SELECT maxsim_micro(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)), 1, 1)")

@@ -58,6 +58,30 @@ class ClusteringSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("kmeans driver arm orders int and string ids as the distributed orderBy") {
+    // the driver arm sorts on the driver; it must use Spark's order for
+    // the id's type. The string ids put U+FF01 before an astral code
+    // point under Spark's UTF-8 byte order, but after it under Java's
+    // UTF-16 compareTo, so a Java sort would pick other init vectors.
+    val vecs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").embeddings
+    val intIds = vecs.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    val strIds = vecs.select(
+      concat(when(col("vec_id") % 2 === 0, lit("\uFF01")).otherwise(lit("\uD83D\uDE00")),
+        lpad(col("vec_id").cast("string"), 6, "0")).as("vec_id"),
+      col("embedding"))
+    for (frame <- Seq(intIds, strIds)) {
+      val idType = frame.schema("vec_id").dataType
+      assert(Clustering.driverArmRows(frame).isDefined, s"$idType: driver arm not taken")
+      val (_, cDrv) = Clustering.kmeans(frame, k = 8, iters = 3)
+      spark.conf.set(Clustering.DriverMaxBytesKey, "0")
+      try {
+        val (_, cDist) = Clustering.kmeans(frame, k = 8, iters = 3)
+        assert(cDrv.map(_.toSeq).toSeq === cDist.map(_.toSeq).toSeq,
+          s"$idType: centroids diverged between arms")
+      } finally spark.conf.unset(Clustering.DriverMaxBytesKey)
+    }
+  }
+
   test("kmeans inertia never increases across iterations") {
     val vecs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").embeddings
     def inertia(iters: Int): Double = {

@@ -116,13 +116,22 @@ class MonitoringSpec extends AnyFunSuite with SparkTestSession {
     val e1 = intercept[Exception] {
       Monitoring.sourceOverlap(digitless).collect()
     }
-    assert(e1.getMessage.contains("sourceOverlap"), e1.getMessage)
+    assert(e1.getMessage.contains("source='weird'"), e1.getMessage)
     val tooBig = Seq((1L, "one two three four five six seven eight nine", "src_99"))
       .toDF("doc_id", "text", "source")
     val e2 = intercept[Exception] {
       Monitoring.sourceOverlap(tooBig).collect()
     }
     assert(e2.getMessage.contains("sourceOverlap"), e2.getMessage)
+    // a doc too short to shingle explodes to no rows; its source is
+    // still checked
+    val short = Seq(
+      (1L, "one two three four five six seven eight nine", "src_1"),
+      (2L, "too short", "weird")).toDF("doc_id", "text", "source")
+    val e4 = intercept[Exception] {
+      Monitoring.sourceOverlap(short, nSources = 4).collect()
+    }
+    assert(e4.getMessage.contains("source='weird'"), e4.getMessage)
     // a non-positive source count is rejected up front
     val e3 = intercept[IllegalArgumentException] {
       Monitoring.sourceOverlap(tooBig, nSources = 0)
