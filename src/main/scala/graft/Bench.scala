@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Engine.session(cpus, "graft-bench")
+    val spark = Harness.session("graft-bench")
     val gates = Harness.selectedGates
     // Warm-up pass: run every query once (same SF) before the timed pass —
     // the standard measure-the-second-run benchmark discipline, in effect
@@ -22,14 +20,8 @@ object Bench {
     // round comparisons read warm_total, cold_total bounds the
     // first-run experience a fresh session pays.
     val coldT0 = System.nanoTime()
-    try SparkEntry.entry(spark).count() catch {
-      case t: Throwable => System.err.println(s"[bench] WARM-UP FAILURE entry: $t")
-    }
-    gates.foreach { g =>
-      try g.run(spark, sfDir).count() catch {
-        case t: Throwable => System.err.println(s"[bench] WARM-UP FAILURE ${g.name}: $t")
-      }
-    }
+    val entry = SparkEntry.Gate("entry", (s, _) => SparkEntry.entry(s), "")
+    Harness.eachGate(entry +: gates, "[bench] WARM-UP FAILURE")(_.run(spark, sfDir).count())
     val coldTotal = (System.nanoTime() - coldT0) / 1e9
     // Canary SERIES (round-17 verdict #3): a single start-of-run canary
     // cannot distinguish a mid-run box epoch from a real regression —
@@ -40,19 +32,16 @@ object Bench {
     // so per-epoch normalization is computable from the artifact alone.
     // Canary reruns are timed separately and never added to the totals.
     val canaryEvery = 20
-    val canaryFn = SparkEntry.queries.get("q13_scalar_fns")
+    val canaryGate = SparkEntry.gates.find(_.name == "q13_scalar_fns")
     val canarySeries = scala.collection.mutable.ArrayBuffer[Double]()
-    def sampleCanary(): Unit = canaryFn.foreach { fn =>
+    def sampleCanary(): Unit = canaryGate.foreach { g =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count()
-        canarySeries += (System.nanoTime() - t0) / 1e9 }
-      catch { case t: Throwable =>
-        // -1.0 sentinel keeps the series at fixed positions so per-epoch
-        // normalization can still align samples with gate indices from
-        // the artifact alone — a silently shortened series violates this
-        // harness's own "failures must be loud in the artifact" rule
-        canarySeries += -1.0
-        System.err.println(s"[bench] CANARY FAILURE: $t") }
+      val (_, r) = Harness.eachGate(Seq(g), "[bench] CANARY FAILURE")(_.run(spark, sfDir).count()).head
+      // -1.0 sentinel keeps the series at fixed positions so per-epoch
+      // normalization can still align samples with gate indices from
+      // the artifact alone — a silently shortened series violates this
+      // harness's own "failures must be loud in the artifact" rule
+      canarySeries += r.fold(_ => -1.0, _ => (System.nanoTime() - t0) / 1e9)
     }
     // Timed pass. A failed query is an ERROR row, never a phantom time —
     // round 8 shipped 11 analysis-broken queries that this harness timed
@@ -61,14 +50,13 @@ object Bench {
     // itself, not only on stderr.
     sampleCanary()
     val results: Seq[(String, Either[String, Double])] =
-      gates.zipWithIndex.map { case (g, i) =>
-        if (i > 0 && i % canaryEvery == 0) sampleCanary()
-        val t0 = System.nanoTime()
-        try { g.run(spark, sfDir).count(); g.name -> Right((System.nanoTime() - t0) / 1e9) }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] FAILURE ${g.name}: $t")
-          g.name -> Left(Option(t.getMessage).getOrElse(t.getClass.getName))
-        }
+      gates.grouped(canaryEvery).zipWithIndex.toSeq.flatMap { case (chunk, k) =>
+        if (k > 0) sampleCanary()
+        Harness.eachGate(chunk, "[bench] FAILURE") { g =>
+          val t0 = System.nanoTime()
+          g.run(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }.map { case (g, r) => g.name -> r }
       }
     sampleCanary()
     // 3-decimal (millisecond) formatting: ms resolution is below run-to-run
@@ -85,9 +73,6 @@ object Bench {
     }
     val emap = errs.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
-    // every committed artifact self-identifies the code it measured
-    // (round-11 verdict #8)
-    val commit = Harness.commit
     // Box-speed canary (round-12 verdict #5/#7): q13_scalar_fns is a pure
     // scalar-codegen scan whose cost is plan-stable (~0.1 s) and code-
     // change-insensitive, so cross-round tables can normalize out the
@@ -117,7 +102,9 @@ object Bench {
       s""""canary_ref_sec":${fmt(canaryRefSec)},"canary_median":${fmt(canaryMedian)},""" +
       s""""warm_total_canary_norm":${fmt(canaryNorm)},""" +
       s""""cached_intermediate":$cachedArr,""" +
-      s""""errors":$emap,"commit":"$commit","sf":"$sfDir""""
+      // every committed artifact self-identifies the code it measured
+      // (round-11 verdict #8)
+      s""""errors":$emap,"commit":"${Harness.commit}","sf":"$sfDir""""
     // Two artifacts from one run:
     //  - FULL file (tracked in-repo as BENCH_FULL.json unless overridden):
     //    every per-query time — the audit trail.

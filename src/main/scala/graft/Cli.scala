@@ -78,20 +78,15 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val warehouseDir = args.headOption.getOrElse("warehouse")
-    val spark = Engine.session(cpus = Runtime.getRuntime.availableProcessors(),
-      appName = "graft-cli")
+    val spark = Harness.session("graft-cli")
     val handler = new Handler(spark, warehouseDir)
-    val in = new java.util.Scanner(System.in)
     print("graft> ")
-    while (in.hasNextLine) {
-      val line = in.nextLine()
-      if (line.trim == "exit" || line.trim == "quit") {
-        spark.stop(); return
+    scala.io.Source.stdin.getLines().takeWhile(l => l.trim != "exit" && l.trim != "quit")
+      .foreach { line =>
+        try println(handler.execute(line))
+        catch { case e: Exception => println(s"error: ${e.getMessage}") }
+        print("graft> ")
       }
-      try println(handler.execute(line))
-      catch { case e: Exception => println(s"error: ${e.getMessage}") }
-      print("graft> ")
-    }
     spark.stop()
   }
 }

@@ -16,7 +16,7 @@ object Explain {
         s"available: ${Harness.select(None).map(_.name).mkString(", ")}")
       sys.exit(2)
     }
-    val spark = Engine.session(cpus = 4, appName = "graft-explain")
+    val spark = Harness.session("graft-explain")
     Harness.select(tokens).foreach { g =>
       println(s"\n===================== ${g.name} =====================")
       g.run(spark, sfDir).explain("formatted")

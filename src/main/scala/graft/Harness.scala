@@ -1,12 +1,30 @@
 package graft
 
 import graft.SparkEntry.Gate
+import org.apache.spark.sql.SparkSession
 
-/** Plumbing shared by the gate-running mains (Bench, Verify, Stress,
-  * Explain): which gates a run covers, how a string enters a JSON
-  * artifact, and which code an artifact measured.
+/** Plumbing shared by the mains (Bench, Verify, Stress, Explain, Cli):
+  * the session a main runs on, which gates a run covers and how they
+  * run, how a string enters a JSON artifact, and which code an artifact
+  * measured.
   */
 object Harness {
+
+  /** The core count of a main's session: `SPARK_GRAFT_CPUS` when `env`
+    * sets it, else `available`. Anything but a positive integer fails
+    * loudly rather than falling back.
+    */
+  def cpus(env: Map[String, String], available: Int): Int =
+    env.get("SPARK_GRAFT_CPUS").map { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }.getOrElse(available)
+
+  /** The one session builder for mains: [[Engine.session]] on [[cpus]]
+    * of this process's environment and processor count.
+    */
+  def session(appName: String): SparkSession =
+    Engine.session(cpus(sys.env, Runtime.getRuntime.availableProcessors()), appName)
 
   /** `SPARK_GRAFT_ONLY=<name>[,<name>...]`, the dev-only selective run
     * (tokens as in [[select]]); unset runs all.
@@ -27,6 +45,19 @@ object Harness {
 
   /** The gates this run covers: [[only]]'s selection. */
   def selectedGates: Seq[Gate] = select(only)
+
+  /** Runs `f` over `gates` in order. A gate that throws anything at all
+    * becomes `Left` of its message (logged to stderr after `tag`) and
+    * the loop goes on: one broken gate must show as that gate's failure
+    * in the artifact, never end the run or vanish from it.
+    */
+  def eachGate[A](gates: Seq[Gate], tag: String)(f: Gate => A): Seq[(Gate, Either[String, A])] =
+    gates.map { g =>
+      g -> (try Right(f(g)) catch { case t: Throwable =>
+        System.err.println(s"$tag ${g.name}: $t")
+        Left(Option(t.getMessage).getOrElse(t.getClass.getName))
+      })
+    }
 
   /** `s` as a JSON string literal: quote, backslash and every control
     * character (< 0x20) escaped. A tab or CR in an oracle's SQL would

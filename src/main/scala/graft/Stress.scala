@@ -28,16 +28,11 @@ object Stress {
     * Per-query numbers are deltas between snapshots.
     */
   private final class SpillListener extends SparkListener {
-    private val mem = new java.util.concurrent.atomic.AtomicLong
-    private val disk = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        mem.addAndGet(m.memoryBytesSpilled)
-        disk.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long) = (mem.get, disk.get)
+    private val spilled = new java.util.concurrent.atomic.AtomicLong
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = Option(te.taskMetrics)
+      .foreach(m => spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled))
+    /** Memory plus disk spill bytes so far. */
+    def snapshot: Long = spilled.get
   }
 
   private def heapPools = {
@@ -72,9 +67,7 @@ object Stress {
     sys.env.get("SPARK_GRAFT_STRESS_JITTER").map(_.toDouble).getOrElse(0.0)
 
   /** Materialize the `factor`×-replicated corpus into `out` (the
-    * key-shift scheme in the object scaladoc). Shared by the stress run
-    * itself and by diagnostic tooling ([[StageSpill]]) that needs the
-    * same corpus across many iterations.
+    * key-shift scheme in the object scaladoc).
     */
   def replicate(spark: SparkSession, sfDir: String, factor: Int,
       out: String): Unit = {
@@ -132,16 +125,39 @@ object Stress {
       // dedup_containment settling class); 5 trimmed runs read the tail
       "ann_lsh_mp" -> 5)
 
+  /** The first-run seconds from which a gate runs 3 times ([[timedRuns]]). */
+  val RepeatThresholdSec = 1.0
+
+  /** One timed run of a gate: seconds, rows, spill bytes and peak heap bytes. */
+  private[graft] final case class Run(sec: Double, rows: Long, spill: Long, peakHeap: Long)
+
+  /** The timed runs of one gate, with a REPRODUCIBILITY contract
+    * (round-11 verdict #2): same-code 10× runs of the 44 M-candidate
+    * dedup joins varied up to 7× (dedup_simhash 2.7/19.5/3.3 s — JIT
+    * recompilation + GC landing differently per run), so a single number
+    * on a heavy query proves nothing. Every gate runs once; a
+    * [[BandRepeats]] gate runs its count in all, and any other gate
+    * whose first run costs >= [[RepeatThresholdSec]] runs twice more —
+    * cheap gates stay single-run (their noise is bounded by the
+    * threshold), and the artifact keeps every run, so it says which
+    * regime each number is from. A run that throws ends the gate: it
+    * is the gate loop's failure entry, never a partial median.
+    */
+  private[graft] def timedRuns(name: String)(run: => Run): Seq[Run] = {
+    val first = run
+    val n = BandRepeats.getOrElse(name, if (first.sec >= RepeatThresholdSec) 3 else 1)
+    first +: Seq.fill(n - 1)(run)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     require(factor >= 1, s"replication factor must be >= 1, got $factor")
-    val spark = Engine.session(
-      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-stress")
+    val spark = Harness.session("graft-stress")
     // Replication is untimed setup; SPARK_GRAFT_STRESS_DIR pins it to a
     // reusable directory (marker-checked: reuse only if base+factor
     // match) so repeated medians runs at 40×/50× don't pay the
-    // replication write each time. Unset = fresh tempdir, as before.
+    // replication write each time. Unset = a fresh scratch dir.
     val out = sys.env.get("SPARK_GRAFT_STRESS_DIR") match {
       case Some(dir) if dir.nonEmpty =>
         val marker = java.nio.file.Paths.get(dir, "_replica_marker")
@@ -159,7 +175,7 @@ object Stress {
         } else System.err.println(s"[stress] reusing replicated corpus at $dir")
         dir
       case _ =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-stress").toString
+        val dir = Scratch.dir("graft-stress")
         replicate(spark, sfDir, factor, dir)
         dir
     }
@@ -173,69 +189,28 @@ object Stress {
     // the warm-run bench, so the stress pass must be warm too.
     System.err.println("[stress] methodology: warm-run (untimed full pass, then timed)")
     val gates = Harness.selectedGates
-    gates.foreach { g =>
-      try g.run(spark, out).count() catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[stress] WARM-UP FAILURE ${g.name}: ${e.getMessage}")
-      }
-    }
-    // Timed pass with a REPRODUCIBILITY contract (round-11 verdict #2):
-    // same-code 10× runs of the 44 M-candidate dedup joins varied up to
-    // 7× (dedup_simhash 2.7/19.5/3.3 s — JIT recompilation + GC landing
-    // differently per run), so a single number on a heavy query proves
-    // nothing. Every query runs once; any query whose first timed run
-    // costs >= repeatThresholdSec runs twice more and reports the MEDIAN,
-    // with all runs kept in the artifact so the spread is visible —
-    // cheap queries stay single-run (their noise is bounded by the
-    // threshold), and the artifact says which regime each number is from.
-    val repeatThresholdSec =
-      sys.env.getOrElse("SPARK_GRAFT_STRESS_REPEAT_SEC", "1.0").toDouble
-    // Per-gate repeat override: known GC-band members default to 5 runs
-    // (BandRepeats); SPARK_GRAFT_STRESS_REPEATS="name=n,name=n" replaces
-    // the whole map (so cliff probes can force medians-of-3 on exactly
-    // their screens). Gates with >= 5 runs report the TRIMMED median and
-    // spread (min and max runs dropped) — one GC-unlucky run can no
-    // longer set either number.
-    val repeatOverrides: Map[String, Int] =
-      sys.env.get("SPARK_GRAFT_STRESS_REPEATS") match {
-        case Some(spec) if spec.trim.nonEmpty =>
-          spec.split(",").map { kv =>
-            val Array(k, v) = kv.split("=")
-            k.trim -> v.trim.toInt
-          }.toMap
-        case _ => BandRepeats
-      }
+    Harness.eachGate(gates, "[stress] WARM-UP FAILURE")(_.run(spark, out).count())
+    // Timed pass: each gate's runs by the repeat rule ([[timedRuns]]).
     val spills = new SpillListener
     spark.sparkContext.addSparkListener(spills)
-    // (sec, rows, spillBytes, peakHeapBytes) — spill is memory+disk
-    // spill delta for the run, peak heap the G1 pools' high-water mark
-    def once(name: String, fn: (SparkSession, String) => DataFrame): (Double, Long, Long, Long) = {
-      val (m0, d0) = spills.snapshot
+    def once(g: SparkEntry.Gate): Run = {
+      val spill0 = spills.snapshot
       resetHeapPeaks()
       val t0 = System.nanoTime()
-      val n = try fn(spark, out).count() catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[stress] $name failed: ${e.getMessage}")
-          -1L
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val (m1, d1) = spills.snapshot
-      (sec, n, (m1 - m0) + (d1 - d0), peakHeapBytes())
+      val n = g.run(spark, out).count()
+      Run((System.nanoTime() - t0) / 1e9, n, spills.snapshot - spill0, peakHeapBytes())
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     // >= 5 runs: drop the single min and max, then median/spread over
-    // the trimmed set; < 5 runs: plain median, spread over all runs.
+    // the trimmed set, so one GC-unlucky run can set neither number;
+    // < 5 runs: plain median, spread over all runs.
     def trimmed(xs: Seq[Double]): Seq[Double] =
       if (xs.size >= 5) xs.sorted.drop(1).dropRight(1) else xs
-    val results = gates.map { case SparkEntry.Gate(name, fn, _, _) =>
-      val first = once(name, fn)
-      val nRuns = repeatOverrides.getOrElse(name,
-        if (first._1 >= repeatThresholdSec) 3 else 1)
-      val runs =
-        if (first._2 >= 0 && nRuns > 1)
-          first +: Seq.fill(nRuns - 1)(once(name, fn))
-        else Seq(first)
-      val rows = runs.map(_._2).max // -1 only if every run failed
+    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def mb(bytes: Long): Long = bytes >> 20
+    // per gate: (reported seconds, the gate's JSON fields)
+    val results = Harness.eachGate(gates, "[stress] FAILURE") { g =>
+      val runs = timedRuns(g.name)(once(g))
       // Recall gates carry their quality metric as a column; pin it in
       // the stress artifact so scale runs also gate the RECALL (a
       // replicated corpus changes signature distributions — wall time
@@ -246,35 +221,32 @@ object Stress {
       // adaptive-dedup gates pay their eager corpus-stats jobs) — for
       // the recall gates themselves one extra untimed build + aggregate
       // over a <= queries-row result is the whole cost.
-      val recall: Option[(Long, Double)] =
-        if (rows >= 0 && name.startsWith("ann_recall")) {
-          val r = fn(spark, out)
-            .agg(min(col("recall_micro")), avg(col("recall_micro"))).head()
-          if (r.isNullAt(0)) None else Some((r.getLong(0), r.getDouble(1)))
-        } else None
-      val kept = trimmed(runs.map(_._1))
-      (name, median(kept), runs.map(_._1), rows,
-        runs.map(_._3).max, runs.map(_._4).max, kept.max / kept.min.max(1e-9),
-        recall)
-    }
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def mb(bytes: Long): Long = bytes >> 20
-    val qs = results.map { case (k, med, runs, n, spill, peak, spread, recall) =>
-      val rec = recall.map { case (mn, av) =>
-        s""","recall_min_micro":$mn,"recall_avg_micro":${fmt(av)}"""
-      }.getOrElse("")
+      val rec = if (!g.name.startsWith("ann_recall")) "" else {
+        val r = g.run(spark, out)
+          .agg(min(col("recall_micro")), avg(col("recall_micro"))).head()
+        if (r.isNullAt(0)) ""
+        else s""","recall_min_micro":${r.getLong(0)},"recall_avg_micro":${fmt(r.getDouble(1))}"""
+      }
+      val secs = runs.map(_.sec)
+      val kept = trimmed(secs)
       val sp = if (runs.size > 1)
-        s""","spread":${fmt(spread)},"trimmed":${runs.size >= 5}""" else ""
-      s"""${Harness.jsonString(k)}:{"sec":${fmt(med)},"runs":[${runs.map(fmt).mkString(",")}],""" +
-        s""""rows":$n,"spill_mb":${mb(spill)},"peak_heap_mb":${mb(peak)}$sp$rec}"""
+        s""","spread":${fmt(kept.max / kept.min.max(1e-9))},"trimmed":${runs.size >= 5}""" else ""
+      median(kept) -> (s""""sec":${fmt(median(kept))},"runs":[${secs.map(fmt).mkString(",")}],""" +
+        s""""rows":${runs.map(_.rows).max},"spill_mb":${mb(runs.map(_.spill).max)},""" +
+        s""""peak_heap_mb":${mb(runs.map(_.peakHeap).max)}$sp$rec""")
+    }
+    // a failed gate keeps every key: no runs, rows -1
+    val failedFields = """"sec":0.000,"runs":[],"rows":-1,"spill_mb":0,"peak_heap_mb":0"""
+    val qs = results.map { case (g, r) =>
+      s"${Harness.jsonString(g.name)}:{${r.fold(_ => failedFields, _._2)}}"
     }.mkString("{", ",", "}")
     // n_failed is IN the artifact, not only the exit code: a gate that
     // dies (or a SparkContext lost mid-run — every later gate then
     // fails instantly with rows:-1) must be visible to a reader of the
     // pinned JSON who never saw the process exit status
-    val nFailed = results.count(_._4 < 0)
-    println(s"""{"metric":"stress_total","value":${fmt(results.map(_._2).sum)},""" +
-      s""""unit":"sec","factor":$factor,"repeat_threshold_sec":$repeatThresholdSec,""" +
+    val nFailed = results.count(_._2.isLeft)
+    println(s"""{"metric":"stress_total","value":${fmt(results.flatMap(_._2.toOption).map(_._1).sum)},""" +
+      s""""unit":"sec","factor":$factor,"repeat_threshold_sec":$RepeatThresholdSec,""" +
       s""""jitter":$jitterMagnitude,"n_failed":$nFailed,""" +
       s""""commit":"${Harness.commit}","queries":$qs,"base":"$sfDir"}""")
     spark.stop()

@@ -161,12 +161,9 @@ object Layout {
   /** Per-file manifest under a LINEAR layout (sorted by `xCol` alone):
     * file = x's quantized cell, `zx div (2^Bits / Files)`. The baseline
     * every curve layout is measured against — perfect envelopes on x,
-    * arbitrary ones on y.
+    * arbitrary ones on y. `bounds` is [[skipAudit]]'s one-row
+    * `__mx`/`__my` scaling table.
     */
-  def linearStats(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    linearStatsWith(df, xCol, yCol,
-      df.agg((max(col(xCol)).cast("long") + 1L).as("__mx")))
-
   private def linearStatsWith(df: DataFrame, xCol: String, yCol: String,
       bounds: DataFrame): DataFrame = {
     val cellW = (1L << Bits) / Files

@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -82,15 +83,40 @@ object LineTable {
     sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
   }
 
-  /** Gated entry: the documents fixture round-trips through the
-    * reference's own table format — each doc's text becomes one line in
-    * a 3-file line-text table, read back through THIS source with a
-    * 64 KiB split size (so many byte ranges cover the 3 files and
-    * the exactly-once alignment is load-bearing, not decorative), then
-    * rolled up per key (= first token). The DuckDB oracle derives the
-    * same rollup from the documents table directly: a split-boundary
-    * bug (lost, duplicated, or torn line) cannot hash-match.
+  /** The documents fixture as the lines the line-table gates store:
+    * each doc's trimmed text, blank and multi-line docs skipped.
     */
+  private[graft] def docLines(spark: SparkSession, dir: String): DataFrame =
+    graft.Engine.Tables(spark, dir).documents
+      .filter(length(trim(col("text"))) > 0 && !col("text").contains("\n"))
+      .select(trim(col("text")).as("line"))
+
+  /** Reads the line table at `path` with a 64 KiB split size, so many
+    * byte ranges cover its files and the exactly-once alignment is
+    * load-bearing.
+    */
+  private def readSmallSplits(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("graft.sources.LineTable")
+      .option("path", path).option("maxSplitBytes", 65536).load()
+
+  /** The per-key rollup of a (key, value) table that every line-table
+    * gate's oracle derives straight from the documents fixture.
+    */
+  private[graft] def rollup(table: DataFrame): DataFrame =
+    table.groupBy(col("key"))
+      .agg(count(lit(1)).as("n_lines"), sum(length(col("value"))).as("n_value_chars"))
+      .orderBy(col("key"))
+
+  /** [[docLines]] split into the source's (key, value) shape in Spark:
+    * key = first token, value = the rest.
+    */
+  private def keyedDocLines(spark: SparkSession, dir: String): DataFrame =
+    docLines(spark, dir).select(
+      substring_index(col("line"), " ", 1).as("key"),
+      when(col("line").contains(" "),
+        expr("substring(line, instr(line, ' ') + 1)")).otherwise(lit(""))
+        .as("value"))
+
   /** Gated entry `line_table_rt`: the full DSv2 WRITE → READ round trip.
     * Documents are split into the source's (key, value) shape in Spark,
     * written through [[LineWriteBuilder]] (first APPENDing a decoy row
@@ -102,31 +128,15 @@ object LineTable {
     * bug (lost row, mangled separator, visible temp file, surviving
     * decoy) cannot hash-match.
     */
-  def roundTrip(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-linetable-rt-").toString
-    val lines = graft.Engine.Tables(spark, dir).documents
-      .filter(length(trim(col("text"))) > 0 && !col("text").contains("\n"))
-      .select(trim(col("text")).as("line"))
-      .select(
-        substring_index(col("line"), " ", 1).as("key"),
-        when(col("line").contains(" "),
-          expr("substring(line, instr(line, ' ') + 1)")).otherwise(lit(""))
-          .as("value"))
+  def roundTrip(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = graft.Scratch.dir("graft-linetable-rt-")
     val decoy = spark.range(64).select(
       concat(lit("decoy"), col("id")).as("key"), lit("to be truncated").as("value"))
     decoy.write.format("graft.sources.LineTable").option("path", tmp)
       .mode("append").save()
-    lines.write.format("graft.sources.LineTable").option("path", tmp)
+    keyedDocLines(spark, dir).write.format("graft.sources.LineTable").option("path", tmp)
       .mode("overwrite").save()
-    spark.read.format("graft.sources.LineTable")
-      .option("path", tmp)
-      .option("maxSplitBytes", 65536)
-      .load()
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(length(col("value"))).as("n_value_chars"))
-      .orderBy(col("key"))
+    rollup(readSmallSplits(spark, tmp))
   }
 
   /** Gated entry `stream_line_rt`: the STREAMING write path round trip —
@@ -141,18 +151,10 @@ object LineTable {
     * LineTable capability asymmetry — a streaming pipeline sinking into
     * the reference's format no longer detours through foreachBatch.
     */
-  def streamRoundTrip(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val stage = java.nio.file.Files.createTempDirectory("graft-linetable-srt-in-").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-linetable-srt-out-").toString
-    graft.Engine.Tables(spark, dir).documents
-      .filter(length(trim(col("text"))) > 0 && !col("text").contains("\n"))
-      .select(trim(col("text")).as("line"))
-      .select(
-        substring_index(col("line"), " ", 1).as("key"),
-        when(col("line").contains(" "),
-          expr("substring(line, instr(line, ' ') + 1)")).otherwise(lit(""))
-          .as("value"))
+  def streamRoundTrip(spark: SparkSession, dir: String): DataFrame = {
+    val stage = graft.Scratch.dir("graft-linetable-srt-in-")
+    val out = graft.Scratch.dir("graft-linetable-srt-out-")
+    keyedDocLines(spark, dir)
       .write.format("graft.sources.LineTable").option("path", stage)
       .mode("overwrite").save()
     val q = spark.readStream.format("graft.sources.LineTable")
@@ -165,14 +167,7 @@ object LineTable {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.format("graft.sources.LineTable")
-      .option("path", s"$out/table")
-      .option("maxSplitBytes", 65536)
-      .load()
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(length(col("value"))).as("n_value_chars"))
-      .orderBy(col("key"))
+    rollup(readSmallSplits(spark, s"$out/table"))
   }
 
   /** One staged line-table copy of each documents fixture per JVM: the
@@ -189,25 +184,21 @@ object LineTable {
   private val stagedDocs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def keyStats(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  /** Gated entry `line_table_keys`: the documents fixture round-trips
+    * through the reference's own table format — each doc's text becomes
+    * one line in a 3-file line-text table, read back through THIS source
+    * with a 64 KiB split size, then rolled up per key (= first token).
+    * The DuckDB oracle derives the same rollup from the documents table
+    * directly: a split-boundary bug (lost, duplicated, or torn line)
+    * cannot hash-match.
+    */
+  def keyStats(spark: SparkSession, dir: String): DataFrame = {
     val tmp = stagedDocs.computeIfAbsent(dir, { d =>
-      val t = java.nio.file.Files.createTempDirectory("graft-linetable-").toString
-      graft.Engine.Tables(spark, d).documents
-        .filter(length(trim(col("text"))) > 0 && !col("text").contains("\n"))
-        .select(trim(col("text")).as("value"))
-        .repartition(3)
-        .write.mode("overwrite").text(t)
+      val t = graft.Scratch.dir("graft-linetable-")
+      docLines(spark, d).repartition(3).write.mode("overwrite").text(t)
       t
     })
-    spark.read.format("graft.sources.LineTable")
-      .option("path", tmp)
-      .option("maxSplitBytes", 65536)
-      .load()
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(length(col("value"))).as("n_value_chars"))
-      .orderBy(col("key"))
+    rollup(readSmallSplits(spark, tmp))
   }
 }
 
@@ -601,8 +592,6 @@ private class LineReader(part: LinePartition, fields: Seq[String],
   private val p = new Path(part.file)
   private val in = p.getFileSystem(conf.value.value).open(p)
   private var pos: Long = part.start
-  private val needKey = fields.contains("key")
-  private val needValue = fields.contains("value")
   private var row: InternalRow = _
 
   // align to the first line that STARTS inside the range

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.LineTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +28,9 @@ import org.apache.spark.sql.functions._
   *    class survived (content dedup) are projected down to the class
   *    key, which IS deterministic.
   *
-  * Each run lands in a fresh temp directory (fresh checkpoint + empty
-  * output satisfies the sink's pairing guard), so gate runs are
-  * independent and re-entrant.
+  * Each run lands in a fresh scratch directory (fresh checkpoint + empty
+  * output satisfies the sink's pairing guard; [[graft.Scratch]] deletes
+  * it at JVM exit), so gate runs are independent and re-entrant.
   */
 object StreamQueries {
 
@@ -39,8 +40,7 @@ object StreamQueries {
     */
   val AdmitBudget = 2000L
 
-  private def gateDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-gate-$name-").toString
+  private def gateDir(name: String): String = graft.Scratch.dir(s"graft-gate-$name-")
 
   /** Streaming scan of the documents fixture (schema from a batch peek,
     * as [[Streaming.streamEvents]] does for events).
@@ -389,21 +389,12 @@ object StreamQueries {
     * hash-match.
     */
   def lineIngest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lineingest-").toString
-    graft.Engine.Tables(spark, dir).documents
-      .filter(length(trim(col("text"))) > 0 && !col("text").contains("\n"))
-      .select(trim(col("text")).as("value"))
-      .repartition(3)
-      .write.mode("overwrite").text(tmp)
-    StreamGate.runToParquet(spark,
+    val tmp = graft.Scratch.dir("graft-lineingest-")
+    LineTable.docLines(spark, dir).repartition(3).write.mode("overwrite").text(tmp)
+    LineTable.rollup(StreamGate.runToParquet(spark,
       s => s.readStream.format("graft.sources.LineTable")
         .option("path", tmp).option("maxSplitBytes", 65536).load(),
-      gateDir("lineingest"))()
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(length(col("value"))).as("n_value_chars"))
-      .orderBy(col("key"))
+      gateDir("lineingest"))())
   }
 
   /** Gated [[Streaming.cdcMergeSink]]: the batch `cdc_apply` gate's %10

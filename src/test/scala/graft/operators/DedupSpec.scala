@@ -720,7 +720,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // floor: small corpora (every fixture SF) keep the r17 default
     assert(Dedup.derivedGridB(0L) === 8)
     assert(Dedup.derivedGridB(1000000L) === 8)
-    // measured calibration (StatsProbe, round 18): sf0.1-corpus
+    // measured calibration (round 18, plan-stats estimates): sf0.1-corpus
     // signature-table estimates per side are 226 501 B at 1×,
     // 4 460 573 at 20×, 11 168 220 at 50× — the derived value must
     // land 8, 8, 16 (the measured-optimal band of the 50× A/B)

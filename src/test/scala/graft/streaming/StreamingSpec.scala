@@ -737,6 +737,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(ok === Map("a" -> 333333L, "b" -> 333333L, "c" -> 333333L))
   }
 
+  test("eventTypeSharesMicro: null types are a \"(null)\" share over a total equal to count()") {
+    import spark.implicits._
+    val snap = Seq((0L, "click"), (1L, null), (2L, null), (3L, null))
+      .toDF("ts", "event_type")
+    val total = snap.count()
+    val shares = Streaming.eventTypeSharesMicro(snap)
+    // denominator 4 = count(): dropping the null rows from the total
+    // would make click 1 000 000 µ
+    assert(shares === Map("click" -> 1000000L / total, "(null)" -> 3000000L / total))
+    assert(shares === Map("click" -> 250000L, "(null)" -> 750000L))
+  }
+
   test("mixDriftStream: streaming append emits only finalized windows") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

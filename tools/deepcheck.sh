@@ -11,29 +11,14 @@
 #   tools/deepcheck.sh                 # all gates at sf0.1
 #   tools/deepcheck.sh 'dedup_*,ann_*' # selected gates (SPARK_GRAFT_ONLY syntax)
 #
-# Requires compiled classes (sbt compile). Uses the raw-java invocation
-# so it can run while sbt is busy.
+# Requires compiled classes (sbt compile). Uses the raw-java launcher
+# (tools/jvm.sh) so it can run while sbt is busy.
 set -e
 cd "$(dirname "$0")/.."
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 OUT="$(mktemp -d /tmp/graft-deepcheck-XXXXXX)"
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED \
- --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
- --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
- --add-opens java.base/java.io=ALL-UNNAMED \
- --add-opens java.base/java.net=ALL-UNNAMED \
- --add-opens java.base/java.nio=ALL-UNNAMED \
- --add-opens java.base/java.util=ALL-UNNAMED \
- --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
- --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
- --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
- --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
- --add-opens java.base/sun.security.action=ALL-UNNAMED \
- --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+trap 'rm -rf "$OUT"' EXIT
 [ -n "$1" ] && export SPARK_GRAFT_ONLY="$1"
-# shellcheck disable=SC2086
-java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx8g -XX:ReservedCodeCacheSize=2g -XX:MetaspaceSize=512m \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT"
+. tools/jvm.sh
+graft_java 8g graft.Verify "$SF_DIR" "$OUT"
 python3 tools/check_oracle.py "$SF_DIR" "$OUT"

@@ -14,34 +14,19 @@
 # Knobs via env, all optional (see Stress.scala for semantics):
 #   SPARK_GRAFT_ONLY               gate list/globs, unset = all
 #   SPARK_GRAFT_STRESS_DIR         reusable replica dir (marker-checked)
-#   SPARK_GRAFT_STRESS_REPEAT_SEC  repeat threshold (0 = medians-of-3 everywhere)
-#   SPARK_GRAFT_STRESS_REPEATS     per-gate repeat overrides "name=n,..."
 #   SPARK_GRAFT_STRESS_JITTER      per-replica embedding jitter magnitude
+#   SPARK_GRAFT_CPUS               session cores, unset = the machine's count
 #   SPARK_GRAFT_JAVA_EXTRA         extra JVM flags (e.g. -Dspark.graft.dedup.gridB=16)
 #
-# Requires compiled classes (sbt compile); runs while sbt is busy.
+# Requires compiled classes (sbt compile); runs while sbt is busy. The
+# JVM flags are tools/jvm.sh's, shared with tools/deepcheck.sh.
 set -e
 cd "$(dirname "$0")/.."
 FACTOR="${1:?usage: stress.sh <factor> <out.json> [heap]}"
 OUT="${2:?usage: stress.sh <factor> <out.json> [heap]}"
 HEAP="${3:-96g}"
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED \
- --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
- --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
- --add-opens java.base/java.io=ALL-UNNAMED \
- --add-opens java.base/java.net=ALL-UNNAMED \
- --add-opens java.base/java.nio=ALL-UNNAMED \
- --add-opens java.base/java.util=ALL-UNNAMED \
- --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
- --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
- --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
- --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
- --add-opens java.base/sun.security.action=ALL-UNNAMED \
- --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+. tools/jvm.sh
 # shellcheck disable=SC2086
-java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"$HEAP" -XX:ReservedCodeCacheSize=2g -XX:MetaspaceSize=512m \
-  $SPARK_GRAFT_JAVA_EXTRA \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+graft_java "$HEAP" $SPARK_GRAFT_JAVA_EXTRA \
   graft.Stress /root/testdata/sf0.1 "$FACTOR" 2>/dev/null > "$OUT"
 head -c 400 "$OUT"; echo
