@@ -1,5 +1,15 @@
 package graft
 object Bench {
+
+  /** Where the full per-gate record goes: `SPARK_GRAFT_BENCH_OUT` when
+    * `env` sets it, else BENCH_PARTIAL.json for a `SPARK_GRAFT_ONLY` run
+    * (a dev subset must not silently replace the tracked full artifact),
+    * else BENCH_FULL.json.
+    */
+  def outPath(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (env.contains("SPARK_GRAFT_ONLY")) "BENCH_PARTIAL.json" else "BENCH_FULL.json")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session("graft-bench")
@@ -120,13 +130,9 @@ object Bench {
     // a bare startsWith("q") also caught quality_*, inflating the
     // size-bounded stdout window this filter exists to respect
     val headline = ok.filter { case (k, _) => k.matches("^q\\d.*") }
+    val outPath = Bench.outPath(sys.env)
     val stdoutLine =
-      s"""{"metric":"total",$common,"queries":${qmap(headline)},"queries_full":"BENCH_FULL.json"}"""
-    // A SPARK_GRAFT_ONLY-filtered dev run must not silently replace the
-    // tracked full artifact with a partial one; it gets a suffixed file
-    // unless the caller named an output explicitly.
-    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT").getOrElse(
-      if (Harness.only.isDefined) "BENCH_PARTIAL.json" else "BENCH_FULL.json")
+      s"""{"metric":"total",$common,"queries":${qmap(headline)},"queries_full":${jstr(outPath)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case t: Throwable => System.err.println(s"[bench] could not write $outPath: $t") }

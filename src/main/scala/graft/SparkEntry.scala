@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
+import graft.Engine.Tables
 import graft.operators.{Analytics, Clustering, Dedup, HeavyHitters, Monitoring, Multimodal, Packing, Posttraining, QualityModel, Relational, Retrieval, Similarity, Skew, TextAnalysis, Workloads}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1691,18 +1693,21 @@ object SparkEntry {
          GROUP BY 1, 2 ORDER BY 1"""),
     // the sketch pass is recall-guaranteed and the count pass is exact,
     // so the plain GROUP BY ... HAVING is a true oracle for the
-    // Misra-Gries pipeline
-    Gate("hh_heavy_hitters", HeavyHitters.frequentUsers(_, _),
+    // Misra-Gries pipeline (users producing ≥ 1/2000 of all events)
+    Gate("hh_heavy_hitters",
+      (s, d) => HeavyHitters.heavyHitters(Tables(s, d).events, "user_id",
+        phiDenominator = 2000),
       """SELECT user_id, count(*) AS n_events FROM events
          GROUP BY user_id HAVING count(*) * 2000 >= (SELECT count(*) FROM events)
          ORDER BY user_id"""),
     // --- reference workloads A/B/C (SURVEY §2.3) on the fixture tables
-    Gate("wc_wordcount", Workloads.wcDocuments(_, _),
+    Gate("wc_wordcount",
+      (s, d) => Workloads.wordCount(Tables(s, d).documents, "text").orderBy(col("word")),
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
                FROM documents)
          WHERE length(word) > 0 GROUP BY word ORDER BY word"""),
-    Gate("vote_condorcet", Workloads.voteCondorcet(_, _),
+    Gate("vote_condorcet", (s, d) => Workloads.condorcetWins(Workloads.ballotsFromEvents(s, d)),
       """WITH counted AS (
            SELECT user_id, event_type, count(*) AS n
            FROM events GROUP BY user_id, event_type),
@@ -1733,8 +1738,16 @@ object SparkEntry {
            FROM pairwise)
          SELECT winner, count(*) AS wins FROM winners
          GROUP BY winner ORDER BY wins DESC, winner"""),
-    // the reference's argmax-only output line (juice_vote_two.go:17-23)
-    Gate("vote_winner", Workloads.voteWinner(_, _),
+    // The reference's single output line, verbatim: `<candidate> win!`
+    // (`mj_exe/juice_vote_two.go:17-23` prints only the argmax of the win
+    // table). The reference's argmax follows Go map iteration order on
+    // ties; here the tie-break is deterministic (most wins, then smallest
+    // candidate), which CliSpec pins to the same `Anna win!` answer on the
+    // reference's own fixture.
+    Gate("vote_winner",
+      (s, d) => Workloads.condorcetWins(Workloads.ballotsFromEvents(s, d))
+        .limit(1)
+        .select(concat(col("winner"), lit(" win!")).as("line")),
       """WITH counted AS (
            SELECT user_id, event_type, count(*) AS n
            FROM events GROUP BY user_id, event_type),
@@ -1805,7 +1818,7 @@ object SparkEntry {
     // addressed append) must land the identical rollup too
     Gate("stream_line_rt", sources.LineTable.streamRoundTrip(_, _), lineTableOracle),
     // --- training-data pipeline: dedup (SURVEY §7.2-M6)
-    Gate("dedup_exact", Dedup.exactDedup(_, _),
+    Gate("dedup_exact", (s, d) => Dedup.exactDedupDocs(Tables(s, d).documents),
       """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
          FROM documents GROUP BY md5(text) ORDER BY keep_id"""),
     // Mirrors the DF-capped scale path with the CORPUS-DERIVED cap
@@ -1816,7 +1829,8 @@ object SparkEntry {
     // identical stats. Candidate pairs must share at least one under-cap
     // shingle; the reported value is the exact Jaccard over ALL
     // shingles.
-    Gate("dedup_jaccard", Dedup.ngramJaccard(_, _),
+    Gate("dedup_jaccard",
+      (s, d) => Dedup.jaccardPairsAdaptive(Tables(s, d).documents, threshold = 0.8),
       s"""$jaccardAdaptiveCteSql
          SELECT doc_a, doc_b,
                 round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jac
@@ -1830,7 +1844,9 @@ object SparkEntry {
     // prefix machinery. DuckDB never reproduces the xxhash64 prefix
     // order; a single pair the prefix filter wrongly dropped (or a float
     // ceil that shortened a prefix) hash-mismatches here.
-    Gate("dedup_prefix", Dedup.prefixJaccardDocs(_, _), uncappedJaccardPairsOracle),
+    Gate("dedup_prefix",
+      (s, d) => Dedup.jaccardPairsPrefix(Tables(s, d).documents, tNum = 4, tDen = 5),
+      uncappedJaccardPairsOracle),
     // LSH output = the exact-Jaccard pair set at the same threshold
     // (candidates are re-verified exactly; banding miss probability at the
     // 0.9 threshold is < 1e-7) — so the exact SQL is a genuine oracle for
@@ -1854,7 +1870,9 @@ object SparkEntry {
          JOIN sizes sb ON sb.doc_id = doc_b
          WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.9
          ORDER BY doc_a, doc_b"""),
-    Gate("dedup_simhash", Dedup.simhashDocs(_, _), simhashOracle),
+    Gate("dedup_simhash",
+      (s, d) => Dedup.simhashPairs(Tables(s, d).documents).orderBy(col("doc_a"), col("doc_b")),
+      simhashOracle),
     // clusters = transitive closure over the exact near-dup pairs (the
     // LSH pair set equals the exact set — see dedup_minhash_lsh above)
     Gate("dedup_clusters", Dedup.dedupClusters(_, _),
@@ -1862,11 +1880,18 @@ object SparkEntry {
     // the forced distributed-label-propagation twin must produce the
     // IDENTICAL clustering — one shared oracle string pins driver-
     // union-find vs RDD-loop path equality at every gated SF
-    Gate("dedup_clusters_loop", Dedup.dedupClustersLoop(_, _),
+    // (`smallGraphMaxEdges = 0`: no graph takes the driver fast path).
+    // Every naturally-gated run of the clustering family takes the fast
+    // path (near-dup graphs are duplicate-bounded and sit under the
+    // 1M-edge ceiling up to ~10× stress scale): without this entry the
+    // RDD loop — the code 100 TB corpora actually run — would be
+    // exercised only by un-gated probes.
+    Gate("dedup_clusters_loop",
+      (s, d) => Dedup.clusters(Tables(s, d).documents, smallGraphMaxEdges = 0L),
       dedupClustersOracle, cachedIntermediate = true),
     // retention contract: every cluster keeps its minimum member, docs in
     // no cluster keep themselves (same pair set + closure as dedup_clusters)
-    Gate("dedup_survivors", Dedup.dedupSurvivors(_, _),
+    Gate("dedup_survivors", (s, d) => Dedup.survivors(Tables(s, d).documents),
       """WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -1966,7 +1991,7 @@ object SparkEntry {
              // CAST(count(*) AS BIGINT) AS coverage_micro
          FROM e LEFT JOIN t ON t.shingle = e.shingle
          GROUP BY e.doc_id ORDER BY e.doc_id"""),
-    Gate("dup_stats", Dedup.dupStatsDocs(_, _),
+    Gate("dup_stats", (s, d) => Dedup.dupStats(Tables(s, d).documents),
       """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
            round(1.0 - CAST(count(DISTINCT md5(text)) AS DOUBLE)
@@ -2003,7 +2028,7 @@ object SparkEntry {
     // oracle keys the cross-doc flag on the shingle STRING; the engine
     // keys on md5(shingle) — the gate re-checks the hash-for-string
     // substitution, as for text_novelty
-    Gate("dedup_substr", Dedup.substrDupStatsDocs(_, _),
+    Gate("dedup_substr", (s, d) => Dedup.substrDupStats(Tables(s, d).documents),
       """WITH pos AS (
            SELECT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -2030,7 +2055,7 @@ object SparkEntry {
     // engine on md5(shingle) — the same hash-for-string substitution the
     // dedup_substr gate re-checks. The compare is on the rebuilt
     // clean_text itself, so the cut-and-stitch logic is value-gated.
-    Gate("dedup_span_rm", Dedup.spanRemoveDocs(_, _),
+    Gate("dedup_span_rm", (s, d) => Dedup.spanRemove(Tables(s, d).documents),
       """WITH w AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
            FROM documents),
@@ -2067,7 +2092,7 @@ object SparkEntry {
     // gates (NFC + casefold + whitespace collapse); oracle groups by
     // the normalized string, engine by its full md5 — the gate
     // re-checks the hash-for-string substitution
-    Gate("dedup_norm", Dedup.normDedupDocs(_, _),
+    Gate("dedup_norm", (s, d) => Dedup.normDedup(Tables(s, d).documents),
       """WITH n AS (
            SELECT doc_id,
              trim(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g'))
@@ -2102,7 +2127,8 @@ object SparkEntry {
     // Same df-capped candidate screen as dedup_jaccard, but verified on
     // CONTAINMENT |∩|/min(|A|,|B|) with NO size-ratio prune — the
     // asymmetric (doc-inside-doc) pairs Jaccard structurally misses.
-    Gate("dedup_containment", Dedup.containmentDocs(_, _),
+    Gate("dedup_containment",
+      (s, d) => Dedup.containmentPairs(Tables(s, d).documents, threshold = 0.8),
       s"""WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -2150,7 +2176,7 @@ object SparkEntry {
          ORDER BY doc_a, doc_b"""),
     // soft dedup: same pair set + closure as dedup_clusters, but every
     // doc stays with weight 1/cluster-size in positive micro ints
-    Gate("dedup_weights", Dedup.softDedupWeightsDocs(_, _),
+    Gate("dedup_weights", (s, d) => Dedup.softDedupWeights(Tables(s, d).documents),
       """WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -2185,7 +2211,7 @@ object SparkEntry {
          ORDER BY d.doc_id""", cachedIntermediate = true),
     // duplication-rate curve: same pair set + closure; fixed power-of-two
     // k ladder with zero-count rows kept
-    Gate("dup_curve", Dedup.dupCurveDocs(_, _),
+    Gate("dup_curve", (s, d) => Dedup.dupCurve(Tables(s, d).documents),
       """WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -2224,7 +2250,9 @@ object SparkEntry {
          FROM perdoc CROSS JOIN (VALUES (1), (2), (4), (8), (16), (32)) ks(k),
               tot
          GROUP BY k, n_total ORDER BY k""", cachedIntermediate = true),
-    Gate("minhash_mergeable", Dedup.minhashMergeableDocs(_, _), minhashMergeableOracleSql),
+    Gate("minhash_mergeable",
+      (s, d) => Dedup.minhashMergeable(Tables(s, d).documents),
+      minhashMergeableOracleSql),
     Gate("corpus_card", Monitoring.corpusCardDocs(_, _),
       """SELECT CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
@@ -2254,7 +2282,8 @@ object SparkEntry {
     // the approximate list — reciprocal rank as exact integer micro-units
     // (1e6 // rank), 0 when missing; position-sensitive where recall@k
     // is overlap-only
-    Gate("ann_mrr", Similarity.annMrr(_, _),
+    Gate("ann_mrr",
+      (s, d) => Similarity.mrrAtK(Similarity.annBruteForce(s, d), Similarity.annLsh(s, d)),
       s"""WITH brute AS ($annTopkOracle),
          approx AS ($annLshOracle)
          SELECT b.q_id,
@@ -2293,11 +2322,13 @@ object SparkEntry {
     // incremental IVF upsert: delta slice assigned to BASE-derived seed
     // centroids — same argmax-cosine + larger-c_id tie spelling as
     // ann_ivf, same fixed-order double arithmetic, floor-micro cosine
-    Gate("ivf_upsert", Similarity.ivfUpsertDocs(_, _), ivfUpsertOracle),
+    Gate("ivf_upsert", (s, d) => Similarity.ivfUpsert(Tables(s, d).embeddings), ivfUpsertOracle),
     // margin-based bitext mining: floor-micro cosines, exact BIGINT
     // neighborhood sums, positive-domain integer-division margin — the
     // ratio-margin criterion restated over the parity split
-    Gate("bitext_mine", Similarity.bitextMarginDocs(_, _),
+    Gate("bitext_mine",
+      (s, d) => Similarity.bitextMargin(Tables(s, d).embeddings,
+        xMaxId = Similarity.BitextGateXMaxId),
       bitextOracle(
         s"""pos AS (
            SELECT * FROM (
@@ -2313,7 +2344,9 @@ object SparkEntry {
            WHERE cos_micro > 0)""")),
     // the IVF-probed spelling: ann_ivf's cell/probe CTEs generate the
     // candidate pairs, then the identical margin chain
-    Gate("bitext_mine_ivf", Similarity.bitextMarginIvfDocs(_, _),
+    Gate("bitext_mine_ivf",
+      (s, d) => Similarity.bitextMarginIvf(Tables(s, d).embeddings,
+        xMaxId = Similarity.BitextGateXMaxId),
       bitextOracle(
         s"""cents AS (
            SELECT vec_id AS c_id, embedding AS c_emb, norm AS c_norm
@@ -2375,7 +2408,7 @@ object SparkEntry {
          GROUP BY g.a, g.b ORDER BY src_a, src_b"""),
     // prob_micro is the gate's own 4-decimal probability lifted to an
     // exact integer, so binning and both rates are pure BIGINT arithmetic
-    Gate("quality_calibration", QualityModel.calibrationDocs(_, _),
+    Gate("quality_calibration", (s, d) => QualityModel.calibrationTable(Tables(s, d).documents),
       """WITH f AS (
            SELECT ln(1.0 + len(w)) AS f1,
              CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS f2,
@@ -2407,11 +2440,15 @@ object SparkEntry {
          FROM b GROUP BY bin ORDER BY bin"""),
     // weak supervision: four integer-statistic labeling functions with
     // abstention; label = vote sign, confidence = |sum|/non-abstaining
-    Gate("weak_labels", QualityModel.weakLabelsDocs(_, _), weakLabelsOracle),
+    Gate("weak_labels",
+      (s, d) => QualityModel.weakLabels(Tables(s, d).documents),
+      weakLabelsOracle),
     // pairwise Cohen's kappa over the LF votes — chance-corrected
     // agreement as a (num, den) pair (negative kappa never divides:
     // truncating vs flooring division diverges below zero)
-    Gate("label_agreement", QualityModel.labelAgreementDocs(_, _), labelAgreementOracle),
+    Gate("label_agreement",
+      (s, d) => QualityModel.labelAgreement(Tables(s, d).documents),
+      labelAgreementOracle),
     // mergeable-sketch audit: the oracle owns the exact distinct and
     // asserts every sketch verdict TRUE (the q18 sketch-gating pattern)
     Gate("hll_mergeable", Monitoring.hllMergeableDocs(_, _),
@@ -2437,7 +2474,7 @@ object SparkEntry {
     // xxhash64(token) — the gate re-checks the substitution. Every
     // per-token term floors to integer micro-nats BEFORE the sum, so
     // float summation order cannot leak into the hash.
-    Gate("text_entropy", TextAnalysis.tokenEntropyDocs(_, _),
+    Gate("text_entropy", (s, d) => TextAnalysis.tokenEntropy(Tables(s, d).documents),
       """WITH t AS (
            SELECT doc_id, tok, count(*) AS k
            FROM (SELECT doc_id,
@@ -2488,7 +2525,9 @@ object SparkEntry {
          GROUP BY b.q_id ORDER BY b.q_id"""),
     // the trained IVF-PQ + exact-refine stack (five Lloyd chains) and
     // its three-layer recall audit vs the exact-L2 baseline
-    Gate("ivf_pq_trained_topk", Similarity.ivfPqTrainedTopKDocs(_, _), ivfPqTrainedOracle),
+    Gate("ivf_pq_trained_topk",
+      (s, d) => Similarity.ivfPqTrainedTopK(Tables(s, d).embeddings),
+      ivfPqTrainedOracle),
     Gate("ann_recall_ivf_pq_trained", Similarity.annRecallIvfPqTrained(_, _),
       s"""WITH exact AS ($exactL2TopkOracle),
          approx AS ($ivfPqTrainedOracle)
@@ -2501,7 +2540,8 @@ object SparkEntry {
          GROUP BY x.q_id ORDER BY x.q_id"""),
     // the sample-trained arm of the stack (all five chains gated to the
     // md5 quarter slice) and its recall-parity audit
-    Gate("ivf_pq_trained_sampled", Similarity.ivfPqTrainedSampledTopKDocs(_, _),
+    Gate("ivf_pq_trained_sampled",
+      (s, d) => Similarity.ivfPqTrainedSampledTopK(Tables(s, d).embeddings),
       ivfPqTrainedSampledOracle),
     Gate("ann_recall_ivf_pq_sampled", Similarity.annRecallIvfPqSampled(_, _),
       s"""WITH exact AS ($exactL2TopkOracle),
@@ -2558,7 +2598,7 @@ object SparkEntry {
     // then within-cluster cosine pruning keeping the lowest vec_id; the
     // τ compare is raw doubles — SemDedupTau sits in a measured 1.3e-4
     // gap of the pairwise-cosine distribution, ulp-safe on both engines
-    Gate("semdedup", Clustering.semDedupDocs(_, _),
+    Gate("semdedup", (s, d) => Clustering.semDedup(Tables(s, d).embeddings),
       s"""WITH cents(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          scored AS (
@@ -2589,7 +2629,7 @@ object SparkEntry {
          ORDER BY b.vec_id"""),
     // PQ: integer codes only — argmin of the same c²−2·v·c doubles the
     // kmeans_fixed gate proved bit-identical, ties broken by centroid id
-    Gate("pq_codes", Similarity.pqCodesDocs(_, _),
+    Gate("pq_codes", (s, d) => Similarity.pqCodes(Tables(s, d).embeddings),
       s"""WITH cents(sub, c_id, c, c2) AS (VALUES
            ${pqCentroidValues()}),
          scored AS (
@@ -2612,16 +2652,18 @@ object SparkEntry {
     // trained per-subspace PQ codebooks: four unrolled Lloyd chains +
     // the shared argmin CTE — the adaptive-codebook production path,
     // hash-gated because the trainer is engine-exact
-    Gate("pq_trained_codes", Similarity.pqTrainedCodesDocs(_, _), pqTrainedCodesOracle),
+    Gate("pq_trained_codes",
+      (s, d) => Similarity.pqTrainedCodes(Tables(s, d).embeddings),
+      pqTrainedCodesOracle),
     // ADC probe over the PQ codes: same codebook VALUES + argmin CTE as
     // pq_codes; per-(query, subspace, centroid) table entries are the
     // same fixed-order doubles floor-quantized to micro BIGINTs, so the
     // GROUP BY distance sum is an exact integer sum in any order
-    Gate("pq_adc_topk", Similarity.pqAdcTopKDocs(_, _), pqAdcOracle),
+    Gate("pq_adc_topk", (s, d) => Similarity.pqAdcTopK(Tables(s, d).embeddings), pqAdcOracle),
     // IVF-PQ: coarse cells from the kmeans_fixed centroid VALUES, probe
     // lists from the same distance ranking, ADC via the pq codebook
     // VALUES — every ranking input integer or fixed-order double
-    Gate("ivf_pq_topk", Similarity.ivfPqTopKDocs(_, _),
+    Gate("ivf_pq_topk", (s, d) => Similarity.ivfPqTopK(Tables(s, d).embeddings),
       s"""WITH kc(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          pc(sub, p_id, pcv, pc2) AS (VALUES
@@ -2679,7 +2721,7 @@ object SparkEntry {
          WHERE rk <= 10 ORDER BY q_id, rk"""),
     // hard negatives: ann_topk's rounded-cosine ranking with the
     // different-label predicate in the join
-    Gate("hard_negatives", Similarity.hardNegativesDocs(_, _),
+    Gate("hard_negatives", (s, d) => Similarity.hardNegatives(Tables(s, d).embeddings),
       """WITH base AS (
            SELECT vec_id, label, embedding,
              sqrt(list_sum(list_transform(embedding,
@@ -2710,7 +2752,7 @@ object SparkEntry {
          SELECT vec_id, i AS dim, q8 FROM q ORDER BY vec_id, dim"""),
     // int8 serving path: integer dot products (exact in any order),
     // ties on vec_id
-    Gate("ann_i8_topk", Similarity.i8TopKDocs(_, _),
+    Gate("ann_i8_topk", (s, d) => Similarity.i8TopK(Tables(s, d).embeddings),
       s"""$i8Ctes,
          pairs AS (
            SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
@@ -2727,7 +2769,7 @@ object SparkEntry {
     // matryoshka funnel: prefix-dim shortlist then full-dim rerank,
     // both scores floor-micro-quantized so both rankings are
     // integer-exact; the oracle replays the same two-stage cut
-    Gate("matryoshka_topk", Similarity.matryoshkaTopKDocs(_, _),
+    Gate("matryoshka_topk", (s, d) => Similarity.matryoshkaTopK(Tables(s, d).embeddings),
       """WITH q AS (
            SELECT vec_id AS q_id, embedding AS qv FROM embeddings
            WHERE vec_id < 10),
@@ -2754,8 +2796,8 @@ object SparkEntry {
            FROM s2)
          SELECT q_id, rk, vec_id, d64 FROM r2
          WHERE rk <= 10 ORDER BY q_id, rk"""),
-    Gate("rp_project", Similarity.rpProjectDocs(_, _), rpProjectOracleSql),
-    Gate("ann_rp_topk", Similarity.rpTopKDocs(_, _), rpTopKOracleSql),
+    Gate("rp_project", (s, d) => Similarity.rpProject(Tables(s, d).embeddings), rpProjectOracleSql),
+    Gate("ann_rp_topk", (s, d) => Similarity.rpTopK(Tables(s, d).embeddings), rpTopKOracleSql),
     // RP-funnel recall audit against the exact raw-dot baseline (the
     // funnel's own metric — cosine would mischarge the projection)
     Gate("ann_recall_rp", Similarity.annRecallRp(_, _),
@@ -2821,7 +2863,7 @@ object SparkEntry {
          FROM sig ORDER BY vec_id"""),
     // Hamming serving path: distance = two xor+popcount words,
     // integer-exact in any engine; ascending ties on vec_id
-    Gate("ann_ham_topk", Similarity.hammingTopKDocs(_, _),
+    Gate("ann_ham_topk", (s, d) => Similarity.hammingTopK(Tables(s, d).embeddings),
       s"""WITH $binSigCte,
          q AS (
            SELECT vec_id AS q_id, sig_lo AS q_lo, sig_hi AS q_hi
@@ -2840,7 +2882,9 @@ object SparkEntry {
     // banded Hamming ANN: candidates share >= 1 of the eight 8-bit
     // bands (equi-join, never a per-query corpus scan), then the exact
     // two-popcount rank — the simhash-banding pattern on the 1-bit index
-    Gate("ann_ham_lsh", Similarity.hammingLshTopKDocs(_, _), hamLshOracleSql),
+    Gate("ann_ham_lsh",
+      (s, d) => Similarity.hammingLshTopK(Tables(s, d).embeddings),
+      hamLshOracleSql),
     // banded-path recall audit vs the exact Hamming scan — prices the
     // bucket-collision recall loss past the pigeonhole radius
     Gate("ann_recall_ham_lsh", Similarity.annRecallHamLsh(_, _),
@@ -2869,7 +2913,9 @@ object SparkEntry {
          GROUP BY e.q_id ORDER BY e.q_id"""),
     // 1-bit funnel: Hamming shortlist, then the matryoshka-style
     // full-dim floor-micro dot rerank behind the shortlist cut
-    Gate("ann_ham_rerank", Similarity.hammingRerankDocs(_, _), hamRerankOracleSql),
+    Gate("ann_ham_rerank",
+      (s, d) => Similarity.hammingRerank(Tables(s, d).embeddings),
+      hamRerankOracleSql),
     // 1-bit funnel recall audit vs the exact raw-dot baseline (the
     // funnel reranks by the micro dot, so that is its own metric)
     Gate("ann_recall_ham", Similarity.annRecallHam(_, _),
@@ -2898,7 +2944,9 @@ object SparkEntry {
          GROUP BY e.q_id ORDER BY e.q_id"""),
     // PQ funnel: the ADC chain at shortlist width + exact-L2 rerank —
     // the near-tie remedy as an oracle-gated operator, not prose
-    Gate("pq_rerank_topk", Similarity.pqRerankTopKDocs(_, _), pqRerankOracle),
+    Gate("pq_rerank_topk",
+      (s, d) => Similarity.pqRerankTopK(Tables(s, d).embeddings),
+      pqRerankOracle),
     // the funnel's recall audit vs the same exact-L2 baseline raw ADC
     // is audited against — the jitter probe's falsification target
     Gate("ann_recall_pq_rerank", Similarity.annRecallPqRerank(_, _),
@@ -2913,7 +2961,9 @@ object SparkEntry {
          GROUP BY x.q_id ORDER BY x.q_id"""),
     // TRAINED-book funnel: four Lloyd trainings + the shared ADC body at
     // the constant k-proportional shortlist + the shared exact-L2 rerank
-    Gate("pq_trained_rerank", Similarity.pqTrainedRerankTopKDocs(_, _), pqTrainedRerankOracle),
+    Gate("pq_trained_rerank",
+      (s, d) => Similarity.pqTrainedRerankTopK(Tables(s, d).embeddings),
+      pqTrainedRerankOracle),
     // the trained funnel's recall audit vs the same exact-L2 baseline —
     // must hold the floor at j=0.15 AND j=0.3 (the untrained funnel's
     // corpus/4 shortlist reads 0.50 at j=0.3)
@@ -2930,7 +2980,14 @@ object SparkEntry {
     // banded multi-probe float LSH + its recall audit vs the exact
     // cosine baseline — the jitter-hardened candidate generator gated
     Gate("ann_lsh_mp", Similarity.annLshMp(_, _), annLshMpOracle),
-    Gate("ann_recall_lsh_mp", Similarity.annRecallLshMp(_, _),
+    // the recall audit is the jitter falsification target: min recall at
+    // the 20× j=0.15 probe must hold ≥ the 0.90 full-scan floor where
+    // the unbanded `lshTopK` drops to 0.10. Candidates are exact-
+    // cosine-reranked, so every miss this audit counts is a candidate-
+    // generation miss — the quantity the banding dials control.
+    Gate("ann_recall_lsh_mp",
+      (s, d) => Similarity.recallAtK(Similarity.annBruteForce(s, d),
+        Similarity.annLshMp(s, d), k = 10),
       s"""WITH brute AS ($annTopkOracle),
          approx AS ($annLshMpOracle)
          SELECT b.q_id,
@@ -2944,11 +3001,11 @@ object SparkEntry {
     // DPO preference pairs: the oracle restates the max/min-of-struct
     // selection as two row_number windows over the identical
     // (micro-score, id) total order; all-tie groups drop on both sides
-    Gate("dpo_pairs", Posttraining.dpoPairsDocs(_, _), dpoPairsOracle),
+    Gate("dpo_pairs", (s, d) => Posttraining.dpoPairs(Tables(s, d).events), dpoPairsOracle),
     // SFT assembly: ordered group-concat replayed via string_agg with
     // the same (ts, event_id) order key; ts is only a sort key (never
     // rendered), so timestamp formatting can't leak into the md5
-    Gate("chat_assemble", Posttraining.chatAssembleDocs(_, _),
+    Gate("chat_assemble", (s, d) => Posttraining.chatAssemble(Tables(s, d).events),
       """WITH t AS (
            SELECT user_id, ts, event_id,
              event_type || ':' ||
@@ -2969,7 +3026,7 @@ object SparkEntry {
     // divides); DuckDB's windowed sum over BIGINT is HUGEINT, so cast.
     // The quantization mirrors boundedMicro's ±2^41 loud bound (see
     // boundedMicroSql) so the guard errors on both engines alike.
-    Gate("grpo_advantage", Posttraining.grpoAdvantageDocs(_, _),
+    Gate("grpo_advantage", (s, d) => Posttraining.grpoAdvantage(Tables(s, d).events),
       s"""WITH c AS (
            SELECT user_id, event_id,
              ${boundedMicroSql("grpoAdvantage")} AS v
@@ -2986,7 +3043,7 @@ object SparkEntry {
     // truncating (Spark div) and flooring (DuckDB //) division agree;
     // zero-spread groups normalize to 0 by contract on both sides; the
     // quantization mirrors boundedMicro's ±2^41 loud bound (boundedMicroSql)
-    Gate("reward_norm", Posttraining.rewardNormDocs(_, _),
+    Gate("reward_norm", (s, d) => Posttraining.rewardNorm(Tables(s, d).events),
       s"""WITH c AS (
            SELECT user_id, event_id,
              ${boundedMicroSql("rewardNorm")} AS v
@@ -3003,7 +3060,7 @@ object SparkEntry {
     // chat-history truncation: the DESC running cost is monotone, so the
     // oracle's `cum <= budget+1` cut is the same whole-turn suffix the
     // Spark in-row fold counts; zero-kept groups fingerprint ''
-    Gate("chat_truncate", Posttraining.chatTruncateDocs(_, _),
+    Gate("chat_truncate", (s, d) => Posttraining.chatTruncate(Tables(s, d).events),
       """WITH t AS (
            SELECT user_id, ts, event_id,
              event_type || ':' ||
@@ -3039,7 +3096,7 @@ object SparkEntry {
     // the composed post-training pipeline: assembly, fp-dedup, shape
     // admission and pairing restated as one CTE chain over the same
     // micro-exact arithmetic
-    Gate("posttrain_curate", Posttraining.posttrainCurateDocs(_, _),
+    Gate("posttrain_curate", (s, d) => Posttraining.posttrainCurate(Tables(s, d).events),
       """WITH t AS (
            SELECT user_id, ts, event_id,
              event_type || ':' ||
@@ -3076,7 +3133,7 @@ object SparkEntry {
     // consecutive non-negative longs — exact integer division; n < k
     // groups report the degenerate any-pass verdict (and dodge the zero
     // denominator DuckDB raises on)
-    Gate("pass_at_k", Posttraining.passAtKDocs(_, _),
+    Gate("pass_at_k", (s, d) => Posttraining.passAtK(Tables(s, d).events),
       """WITH c0 AS (
            SELECT user_id, CAST(floor(value * 1e6) AS BIGINT) AS v
            FROM events),
@@ -3096,16 +3153,16 @@ object SparkEntry {
          FROM g ORDER BY prompt_id"""),
     // best-of-n rejection sampling: per-prompt argmax (ties to the larger
     // event_id, the max(struct) tiebreak) gated on the ABSOLUTE threshold
-    Gate("best_of_n", Posttraining.bestOfNDocs(_, _), bestOfNOracle),
+    Gate("best_of_n", (s, d) => Posttraining.bestOfN(Tables(s, d).events), bestOfNOracle),
     // Bradley-Terry generator ranking: per-prompt argmax beats every
     // other candidate's generator; Hunter's MM iterations unrolled as
     // CTEs over the T² rate table in the identical non-negative integer
     // arithmetic (Scala / ≡ DuckDB // on non-negatives)
-    Gate("bt_scores", Posttraining.btScoresDocs(_, _), btScoresOracle),
+    Gate("bt_scores", (s, d) => Posttraining.btScores(Tables(s, d).events), btScoresOracle),
     // kNN majority vote: queries (vec_id < 10) against the labeled pool
     // (vec_id >= 10); same rounded-cosine ranking as ann_topk, majority
     // label with smaller-label tiebreak
-    Gate("knn_classify", Similarity.knnClassifyDocs(_, _),
+    Gate("knn_classify", (s, d) => Similarity.knnClassify(Tables(s, d).embeddings),
       """WITH base AS (
            SELECT vec_id, label, embedding,
              sqrt(list_sum(list_transform(embedding,
@@ -3136,7 +3193,7 @@ object SparkEntry {
     // first 16 vectors, argmax-cosine cells with larger-id ties, top-4
     // probe lists) restricted to the labeled pool, then the
     // knn_classify vote over the probed candidates
-    Gate("knn_classify_ivf", Similarity.knnClassifyIvfDocs(_, _),
+    Gate("knn_classify_ivf", (s, d) => Similarity.knnClassifyIvf(Tables(s, d).embeddings),
       """WITH base AS (
            SELECT vec_id, label, embedding,
              sqrt(list_sum(list_transform(embedding,
@@ -3193,7 +3250,7 @@ object SparkEntry {
     // class centroids: floor-quantized micro sums (binary floor — never
     // round(), whose decimal half-up can diverge across engines); the
     // 64-long sum vector gates as an md5 digest of its comma-join
-    Gate("label_centroids", Clustering.labelCentroidsDocs(_, _),
+    Gate("label_centroids", (s, d) => Clustering.labelCentroids(Tables(s, d).embeddings),
       """WITH e AS (
            SELECT label, d,
              CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
@@ -3211,7 +3268,7 @@ object SparkEntry {
     // centroid drift between the vec_id-parity slices, cross-multiplied
     // (|so·nn − sn·no|) so no signed integer division is ever taken —
     // Spark div truncates, DuckDB // floors, products agree exactly
-    Gate("embed_drift", Clustering.embedDriftDocs(_, _),
+    Gate("embed_drift", (s, d) => Clustering.embedDrift(Tables(s, d).embeddings),
       """WITH e AS (
            SELECT label, vec_id % 2 = 0 AS is_old, d,
              CAST(floor(CAST(embedding[d] AS DOUBLE) * 1e6) AS BIGINT)
@@ -3232,7 +3289,7 @@ object SparkEntry {
     // capacity-balanced assignment: top-2 centroids per vector (same
     // VALUES), md5-salted per-cluster sub-windows split cap = q·64 + r,
     // overflow rows take their second-nearest centroid
-    Gate("balanced_assign", Clustering.balancedAssignDocs(_, _),
+    Gate("balanced_assign", (s, d) => Clustering.balancedAssign(Tables(s, d).embeddings),
       s"""WITH cents(c_id, c, c2) AS (VALUES
            ${kmeansCentroidValues()}),
          scored AS (
@@ -3270,7 +3327,9 @@ object SparkEntry {
              AS cluster,
            rk > cap_local AS moved
          FROM r ORDER BY vec_id"""),
-    Gate("kcenter_coreset", Clustering.kCenterCoresetDocs(_, _), kCenterOracleSql),
+    Gate("kcenter_coreset",
+      (s, d) => Clustering.kCenterCoreset(Tables(s, d).embeddings),
+      kCenterOracleSql),
     // --- training-data pipeline: text analysis
     Gate("text_stats", TextAnalysis.textStats(_, _),
       """SELECT doc_id,
@@ -3307,7 +3366,8 @@ object SparkEntry {
          FROM documents ORDER BY doc_id"""),
     // winnow: same degree-4 polynomial gram hash (base 257 mod 1e9+7) over
     // code points, same least-of-4 window minimum, same distinct
-    Gate("text_winnow", TextAnalysis.winnowDocs(_, _),
+    Gate("text_winnow",
+      (s, d) => TextAnalysis.winnow(Tables(s, d).documents).orderBy(col("doc_id"), col("fp")),
       """WITH cs AS (
            SELECT doc_id, list_transform(generate_series(1, length(text)),
              i -> CAST(ord(substr(text, i, 1)) AS BIGINT)) AS cs
@@ -3379,7 +3439,9 @@ object SparkEntry {
            FROM c)
          SELECT lang, rk, w1, w2, n, n_prefix FROM p
          WHERE rk <= 20 ORDER BY lang, rk"""),
-    Gate("doc_chunks", TextAnalysis.docChunksDocs(_, _),
+    Gate("doc_chunks",
+      (s, d) => TextAnalysis.docChunks(Tables(s, d).documents)
+        .orderBy(col("doc_id"), col("chunk_idx")),
       s"""WITH t AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
            FROM documents),
@@ -3394,7 +3456,7 @@ object SparkEntry {
            len(regexp_split_to_array(chunk, '\\s+')) AS n_chunk_tokens,
            ${duckMd5_60("chunk")} AS chunk_fp
          FROM c ORDER BY doc_id, chunk_idx"""),
-    Gate("vocab_coverage", TextAnalysis.vocabCoverageDocs(_, _),
+    Gate("vocab_coverage", (s, d) => TextAnalysis.vocabCoverage(Tables(s, d).documents),
       s"""WITH tok AS (
            SELECT UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS token
            FROM documents),
@@ -3436,7 +3498,7 @@ object SparkEntry {
          FROM n ORDER BY doc_id"""),
     // novelty over shingle STRINGS — also re-checks the Spark side's
     // hash-for-string substitution
-    Gate("text_novelty", TextAnalysis.noveltyDocs(_, _),
+    Gate("text_novelty", (s, d) => TextAnalysis.novelty(Tables(s, d).documents),
       s"""WITH sh AS (
            SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -3454,7 +3516,7 @@ object SparkEntry {
     // fixed-point micro-nat terms (round 6 → ×1e6 → BIGINT) make the
     // per-doc float sum an exact integer sum — same trick as q25's
     // per-term rounding, so the gate is order-independent
-    Gate("doc_perplexity", TextAnalysis.docPerplexityDocs(_, _),
+    Gate("doc_perplexity", (s, d) => TextAnalysis.docPerplexity(Tables(s, d).documents),
       """WITH toks AS (
            SELECT doc_id, w[i] AS token
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
@@ -3476,7 +3538,7 @@ object SparkEntry {
          FROM terms GROUP BY doc_id ORDER BY doc_id"""),
     // one BPE training iteration: adjacent char pairs weighted by word
     // frequency; (cnt DESC, a, b) is a total order — all integers
-    Gate("bpe_pairs", TextAnalysis.bpePairCountsDocs(_, _),
+    Gate("bpe_pairs", (s, d) => TextAnalysis.bpePairCounts(Tables(s, d).documents),
       s"""WITH words AS (
            SELECT w[i] AS word, count(*) AS c
            FROM (SELECT regexp_split_to_array(trim(text), '\\s+') AS w
@@ -3495,13 +3557,21 @@ object SparkEntry {
            FROM pairs)
          SELECT rk, a, b, cnt FROM ranked
          WHERE rk <= ${TextAnalysis.BpePairK} ORDER BY rk"""),
-    Gate("bpe_encode", TextAnalysis.bpeEncodeDocs(_, _), bpeEncodeOracleSql),
-    Gate("bpe_fertility", TextAnalysis.bpeFertilityDocs(_, _), bpeFertilityOracleSql),
-    Gate("unigram_encode", TextAnalysis.unigramEncodeDocs(_, _), unigramEncodeOracleSql),
-    Gate("wordpiece_encode", TextAnalysis.wordpieceEncodeDocs(_, _), wordpieceEncodeOracleSql),
+    Gate("bpe_encode",
+      (s, d) => TextAnalysis.bpeEncode(Tables(s, d).documents, TextAnalysis.PinnedBpeMerges),
+      bpeEncodeOracleSql),
+    Gate("bpe_fertility",
+      (s, d) => TextAnalysis.bpeFertility(Tables(s, d).documents, TextAnalysis.PinnedBpeMerges),
+      bpeFertilityOracleSql),
+    Gate("unigram_encode",
+      (s, d) => TextAnalysis.unigramEncode(Tables(s, d).documents),
+      unigramEncodeOracleSql),
+    Gate("wordpiece_encode",
+      (s, d) => TextAnalysis.wordpieceEncode(Tables(s, d).documents),
+      wordpieceEncodeOracleSql),
     // the bake-off table: the three family oracles composed as CTEs —
     // each family's chain is the SAME string its own gate uses
-    Gate("tok_compare", TextAnalysis.tokenizerCompareDocs(_, _),
+    Gate("tok_compare", (s, d) => TextAnalysis.tokenizerCompare(Tables(s, d).documents),
       s"""WITH b AS ($bpeEncodeOracleSql),
          u AS ($unigramEncodeOracleSql),
          w AS ($wordpieceEncodeOracleSql)
@@ -3518,7 +3588,7 @@ object SparkEntry {
          ORDER BY b.doc_id"""),
     // FIM: selection gate and both character cut points all md5-derived,
     // so the oracle replays the transform character for character
-    Gate("fim_transform", TextAnalysis.fimTransformDocs(_, _),
+    Gate("fim_transform", (s, d) => TextAnalysis.fimTransform(Tables(s, d).documents),
       s"""WITH h AS (
            SELECT doc_id, text, length(text) AS n,
              ${duckMd5_60("'fim1:' || CAST(doc_id AS VARCHAR)")}
@@ -3544,7 +3614,7 @@ object SparkEntry {
     // T5 span corruption: the oracle's gaps-and-islands windows are a
     // structurally different spelling of the engine's in-row fold — the
     // gate cross-checks two independent formulations of the policy
-    Gate("t5_spans", TextAnalysis.t5SpansDocs(_, _),
+    Gate("t5_spans", (s, d) => TextAnalysis.t5Spans(Tables(s, d).documents),
       s"""WITH w AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
            FROM documents),
@@ -3781,7 +3851,9 @@ object SparkEntry {
          SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
            CAST(sum(term_micro) AS BIGINT) AS lr_micro
          FROM terms GROUP BY doc_id ORDER BY doc_id"""),
-    Gate("quality_logit", QualityModel.logitScoreDocs(_, _), qualityLogitOracleSql),
+    Gate("quality_logit",
+      (s, d) => QualityModel.logitScore(Tables(s, d).documents),
+      qualityLogitOracleSql),
     // quality-proportional soft filter: decile bin b keeps ~b/10 of its
     // docs, decided by the same md5 bucket gate as sample_det
     // bin/10 keep-fraction over the 1e6 md5 buckets. Thresholds are
@@ -4082,11 +4154,13 @@ object SparkEntry {
          FROM c WHERE off < $MixBudget ORDER BY doc_id"""),
     // BM25: constants written as the same arithmetic Spark evaluates
     // ((1.2 + 1), not 2.2) so both engines produce bit-identical doubles
-    Gate("bm25_topk", Retrieval.bm25Docs(_, _), bm25OracleSql),
+    Gate("bm25_topk",
+      (s, d) => Retrieval.bm25TopK(Tables(s, d).documents, Retrieval.DefaultTerms),
+      bm25OracleSql),
     Gate("hybrid_topk", Retrieval.hybridDocs(_, _), hybridOracleSql),
     // late interaction: each <q_i, d_j> sub-dot floor-micro-quantized
     // BEFORE the max/sum, so the whole MaxSim is integer arithmetic
-    Gate("maxsim_topk", Retrieval.maxSimDocs(_, _),
+    Gate("maxsim_topk", (s, d) => Retrieval.maxSimTopK(Tables(s, d).embeddings),
       """WITH q AS (
            SELECT vec_id AS q_id, embedding AS qv FROM embeddings
            WHERE vec_id < 10),
@@ -4347,12 +4421,21 @@ object SparkEntry {
     Gate("pipeline_curate", operators.Pipeline.curateDocs(_, _), pipelineCurateOracleSql),
     // --- link-graph centrality (crawl prioritization): fixed-iteration
     // integer-micro PageRank over the synthesized doc link graph
-    Gate("graph_pagerank", operators.Graph.pageRankDocs(_, _), pageRankOracleSql),
+    Gate("graph_pagerank",
+      (s, d) => operators.Graph.pageRank(Tables(s, d).documents).orderBy(col("doc_id")),
+      pageRankOracleSql),
     // --- data-layout optimization: Z-order file assignment + the
-    // per-file min/max manifest data skipping prunes on
-    Gate("zorder_layout", operators.Layout.zorderLineitem(_, _), zorderOracleSql),
-    Gate("hilbert_layout", operators.Layout.hilbertLineitem(_, _), hilbertOracleSql),
-    Gate("skip_audit", operators.Layout.skipAuditLineitem(_, _), skipAuditOracleSql),
+    // per-file min/max manifest data skipping prunes on, laid out along
+    // (l_orderkey, l_partkey) — the two most-joined/filtered lineitem keys
+    Gate("zorder_layout",
+      (s, d) => operators.Layout.zorderStats(Tables(s, d).lineitem, "l_orderkey", "l_partkey"),
+      zorderOracleSql),
+    Gate("hilbert_layout",
+      (s, d) => operators.Layout.hilbertStats(Tables(s, d).lineitem, "l_orderkey", "l_partkey"),
+      hilbertOracleSql),
+    Gate("skip_audit",
+      (s, d) => operators.Layout.skipAudit(Tables(s, d).lineitem, "l_orderkey", "l_partkey"),
+      skipAuditOracleSql),
     // bucketed range join restated as DuckDB's native range predicate —
     // the oracle checks the SEMANTICS (point-in-interval), not the
     // bucketing rewrite, so a bucket-boundary bug cannot hash-match

@@ -308,9 +308,6 @@ object Clustering {
       tau: Double = SemDedupTau): DataFrame =
     semDedupWith(vecs, fixedCentroids(k), tau)
 
-  def semDedupDocs(spark: SparkSession, dir: String): DataFrame =
-    semDedup(Tables(spark, dir).embeddings)
-
   /** Production SemDeDup: the same within-cluster prune, but clustered
     * by [[kmeans]]-trained centroids instead of the fixed gate grid —
     * data-adapted clusters make the per-cluster pair sets tighter (real
@@ -487,9 +484,6 @@ object Clustering {
       .orderBy(col("label"))
   }
 
-  def labelCentroidsDocs(spark: SparkSession, dir: String): DataFrame =
-    labelCentroids(Tables(spark, dir).embeddings)
-
   // --------------------------------------------- embedding drift monitor
 
   /** Embedding-distribution drift between two corpus slices — the
@@ -530,9 +524,6 @@ object Clustering {
           .as("l1_scaled"))
       .orderBy(col("label"))
   }
-
-  def embedDriftDocs(spark: SparkSession, dir: String): DataFrame =
-    embedDrift(Tables(spark, dir).embeddings)
 
   // ---------------------------------------- capacity-balanced assignment
 
@@ -591,9 +582,6 @@ object Clustering {
       .orderBy(col("vec_id"))
   }
 
-  def balancedAssignDocs(spark: SparkSession, dir: String): DataFrame =
-    balancedAssign(Tables(spark, dir).embeddings)
-
   // --------------------------------------------- greedy k-center coreset
 
   /** Oracle unroll depth for [[kCenterCoreset]] — the loud k bound. */
@@ -645,7 +633,4 @@ object Clustering {
     }
     picked.toDF("step", "center_id", "d_micro").orderBy(col("step"))
   }
-
-  def kCenterCoresetDocs(spark: SparkSession, dir: String): DataFrame =
-    kCenterCoreset(Tables(spark, dir).embeddings)
 }

@@ -82,9 +82,6 @@ object Dedup {
       .select(col("keep_id"), col("n_copies"))
       .orderBy(col("keep_id"))
 
-  def exactDedup(spark: SparkSession, dir: String): DataFrame =
-    exactDedupDocs(Tables(spark, dir).documents)
-
   /** Exact Jaccard verification of a candidate pair set against the full
     * shingle-hash sets — shared by the LSH path and the DF-capped exact
     * path: whatever generated the candidates, every REPORTED value is
@@ -514,9 +511,6 @@ object Dedup {
     }
   }
 
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairsAdaptive(Tables(spark, dir).documents, threshold = 0.8)
-
   /** Train/eval split-leakage audit — the check every pipeline must run
     * AFTER splitting and deduping: a near-dup pair whose two docs landed
     * in DIFFERENT splits is eval contamination that per-split dedup can
@@ -640,9 +634,6 @@ object Dedup {
       .distinct()
     verifiedPairs(candidates, sh, tNum.toDouble / tDen)
   }
-
-  def prefixJaccardDocs(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairsPrefix(Tables(spark, dir).documents, tNum = 4, tDen = 5)
 
   /** Best rational approximation of `t` with denominator ≤ `maxDen`,
     * by continued-fraction convergents. Exact for every decimal-literal
@@ -769,9 +760,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  def containmentDocs(spark: SparkSession, dir: String): DataFrame =
-    containmentPairs(Tables(spark, dir).documents, threshold = 0.8)
-
   /** MinHash signature + banded LSH near-dup pairs (the 100 TB path).
     *
     * Shingles are hashed to 64-bit with xxhash64; the i-th "permutation" is
@@ -894,9 +882,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
-
-  def simhashDocs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairs(Tables(spark, dir).documents).orderBy(col("doc_a"), col("doc_b"))
 
   /** Connected components over a near-dup pair set — the stage that turns
     * PAIRS into duplicate CLUSTERS so exactly one canonical doc survives
@@ -1163,20 +1148,6 @@ object Dedup {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     clusters(Tables(spark, dir).documents)
 
-  /** Gated twin of `dedup_clusters` that FORCES the distributed
-    * label-propagation path (`smallGraphMaxEdges = 0` — no graph
-    * qualifies for the driver union-find fast path), sharing the batch
-    * gate's oracle string so path equality is hash-pinned by the
-    * correctness gate itself, at every SF the driver runs. Exists
-    * because every naturally-gated run of the clustering family takes
-    * the fast path (near-dup graphs are duplicate-bounded and sit under
-    * the 1M-edge ceiling up to ~10× stress scale): without this entry
-    * the RDD loop — the code 100 TB corpora actually run — would be
-    * exercised only by un-gated probes.
-    */
-  def dedupClustersLoop(spark: SparkSession, dir: String): DataFrame =
-    clusters(Tables(spark, dir).documents, smallGraphMaxEdges = 0L)
-
   /** The retention side of fuzzy dedup — the doc_ids that SURVIVE: every
     * cluster keeps exactly its canonical (minimum) member, docs in no
     * cluster keep themselves. This is the pipeline's actual output
@@ -1194,9 +1165,6 @@ object Dedup {
       .join(dropped, Seq("doc_id"), "left_anti")
       .orderBy(col("doc_id"))
   }
-
-  def dedupSurvivors(spark: SparkSession, dir: String): DataFrame =
-    survivors(Tables(spark, dir).documents)
 
   /** SOFT dedup — the reweighting alternative to dropping: every doc
     * stays in the corpus, but docs in a near-dup cluster of size m
@@ -1228,9 +1196,6 @@ object Dedup {
       .select(col("doc_id"), col("n_members"), col("weight_micro"))
       .orderBy(col("doc_id"))
   }
-
-  def softDedupWeightsDocs(spark: SparkSession, dir: String): DataFrame =
-    softDedupWeights(Tables(spark, dir).documents)
 
   /** Duplication-rate curve — the dataset-card figure that summarizes a
     * corpus's duplication STRUCTURE: for each power-of-two k, how many
@@ -1267,9 +1232,6 @@ object Dedup {
       .select(col("k"), col("n_docs"), col("frac_micro"))
       .orderBy(col("k"))
   }
-
-  def dupCurveDocs(spark: SparkSession, dir: String): DataFrame =
-    dupCurve(Tables(spark, dir).documents)
 
   /** Lanes for the [[minhashMergeable]] audit — mergeability needs no
     * recall, so 16 suffice (the production signature keeps 64).
@@ -1313,9 +1275,6 @@ object Dedup {
           .map(i => col(s"m$i").cast("string")): _*)).as("sig_digest"))
       .orderBy(col("doc_id"))
   }
-
-  def minhashMergeableDocs(spark: SparkSession, dir: String): DataFrame =
-    minhashMergeable(Tables(spark, dir).documents)
 
   /** Train/eval decontamination — the overlap-removal pass a training
     * pipeline runs before the data ships: drop from the training split
@@ -1605,9 +1564,6 @@ object Dedup {
         lit(1.0) - col("n_unique").cast("double") / col("n_docs").cast("double"), 6))
       .orderBy(col("source"))
 
-  def dupStatsDocs(spark: SparkSession, dir: String): DataFrame =
-    dupStats(Tables(spark, dir).documents)
-
   // ------------------------------------- cross-doc substring duplication
 
   /** Per-document duplicated-span fraction: of a doc's k-token shingle
@@ -1652,9 +1608,6 @@ object Dedup {
         col("dup_frac"))
       .orderBy(col("doc_id"))
   }
-
-  def substrDupStatsDocs(spark: SparkSession, dir: String): DataFrame =
-    substrDupStats(Tables(spark, dir).documents)
 
   // ------------------------------ cross-doc duplicated-span REMOVAL
 
@@ -1708,9 +1661,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  def spanRemoveDocs(spark: SparkSession, dir: String): DataFrame =
-    spanRemove(Tables(spark, dir).documents)
-
   // ------------------------------------- canonicalized-text exact dedup
 
   /** Exact dedup over CANONICALIZED text (NFC + casefold + whitespace
@@ -1731,9 +1681,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_variants"))
       .select(col("doc_id"), col("n_variants"))
       .orderBy(col("doc_id"))
-
-  def normDedupDocs(spark: SparkSession, dir: String): DataFrame =
-    normDedup(Tables(spark, dir).documents)
 
   // --------------------------------------------- snapshot (crawl) diff
 

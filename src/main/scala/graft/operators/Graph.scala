@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Engine.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality — fixed-iteration PageRank over a document link
@@ -95,7 +94,4 @@ object Graph {
     }
     ranks.select(col("id").as("doc_id"), col("r").as("rank_micro"))
   }
-
-  def pageRankDocs(spark: SparkSession, dir: String): DataFrame =
-    pageRank(Tables(spark, dir).documents).orderBy(col("doc_id"))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Engine.Tables
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -84,8 +83,4 @@ object HeavyHitters {
       .filter(col("n_events") * phiDenominator >= total)
       .orderBy(col(keyCol))
   }
-
-  /** Gated query: users producing ≥ 1/2000 of all events. */
-  def frequentUsers(spark: SparkSession, dir: String): DataFrame =
-    heavyHitters(Tables(spark, dir).events, "user_id", phiDenominator = 2000)
 }

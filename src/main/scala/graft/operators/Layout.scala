@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Engine.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-layout optimization — Z-order (Morton-curve) file assignment with
@@ -99,12 +98,6 @@ object Layout {
         max(col(yCol)).cast("long").as("max_y"))
       .orderBy(col("file_id"))
 
-  /** Gated entry: lay lineitem out along (l_orderkey, l_partkey) — the
-    * two most-joined/filtered lineitem keys.
-    */
-  def zorderLineitem(spark: SparkSession, dir: String): DataFrame =
-    zorderStats(Tables(spark, dir).lineitem, "l_orderkey", "l_partkey")
-
   // ------------------------------------------------ Hilbert-curve layout
 
   /** Hilbert index of a quantized ([[Bits]]-bit x, y) cell — the
@@ -152,9 +145,6 @@ object Layout {
     */
   def hilbertStats(df: DataFrame, xCol: String, yCol: String): DataFrame =
     fileStats(hilbertAssign(df, xCol, yCol), xCol, yCol)
-
-  def hilbertLineitem(spark: SparkSession, dir: String): DataFrame =
-    hilbertStats(Tables(spark, dir).lineitem, "l_orderkey", "l_partkey")
 
   // --------------------------------------------- skipping-effectiveness
 
@@ -226,7 +216,4 @@ object Layout {
         sum(when(col("__hit_y"), col("n_rows")).otherwise(0L)).as("rows_y"))
       .orderBy(col("layout"))
   }
-
-  def skipAuditLineitem(spark: SparkSession, dir: String): DataFrame =
-    skipAudit(Tables(spark, dir).lineitem, "l_orderkey", "l_partkey")
 }

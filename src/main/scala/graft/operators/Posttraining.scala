@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Engine.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,9 +93,6 @@ object Posttraining {
         (col("ch.v") - col("rj.v")).as("margin_micro"),
         col("n_candidates"))
 
-  def dpoPairsDocs(spark: SparkSession, dir: String): DataFrame =
-    dpoPairs(Tables(spark, dir).events)
-
   /** SFT conversation assembly: flatten each prompt group's events into
     * ONE training sample — turns rendered `event_type:score_micro`,
     * ordered by `(ts, event_id)`, joined with `|` — and emit the
@@ -161,9 +157,6 @@ object Posttraining {
         element_at(col("ss"), -1).as("last_turn"),
         md5(col("transcript")).as("fp"))
 
-  def chatAssembleDocs(spark: SparkSession, dir: String): DataFrame =
-    chatAssemble(Tables(spark, dir).events)
-
   /** Group-relative advantage — the GRPO training signal: each
     * candidate's reward relative to its own prompt group's mean,
     * emitted as the EXACT integer numerator `adv_num = v·n − Σv`
@@ -206,9 +199,6 @@ object Posttraining {
       .orderBy(col("prompt_id"), col("event_id"))
   }
 
-  def grpoAdvantageDocs(spark: SparkSession, dir: String): DataFrame =
-    grpoAdvantage(Tables(spark, dir).events)
-
   /** Per-group min–max reward normalization to [0, 1e6] micro-units —
     * the whitening step that makes rewards comparable across prompts
     * before pairing or advantage weighting (a hard prompt's best score
@@ -241,9 +231,6 @@ object Posttraining {
         col("v").as("reward_micro"), col("norm_micro"))
       .orderBy(col("prompt_id"), col("event_id"))
   }
-
-  def rewardNormDocs(spark: SparkSession, dir: String): DataFrame =
-    rewardNorm(Tables(spark, dir).events)
 
   /** Conversation-window truncation: keep each group's LONGEST RECENT
     * SUFFIX of turns whose rendered length fits `budgetChars` — the
@@ -280,9 +267,6 @@ object Posttraining {
         md5(col("transcript")).as("fp_kept"))
       .orderBy(col("user_id"))
 
-  def chatTruncateDocs(spark: SparkSession, dir: String): DataFrame =
-    chatTruncate(Tables(spark, dir).events)
-
   /** End-to-end post-training curation, composed as ONE Catalyst plan in
     * cost-correct order (the [[Pipeline.curate]] demonstration for the
     * preference family): conversation assembly → exact sample-level
@@ -311,9 +295,6 @@ object Posttraining {
     dpoPairsOn(events.join(survivors, Seq("user_id"), "left_semi"))
       .orderBy(col("prompt_id"))
   }
-
-  def posttrainCurateDocs(spark: SparkSession, dir: String): DataFrame =
-    posttrainCurate(Tables(spark, dir).events)
 
   /** Best-of-n rejection sampling — the SFT-set construction an RLHF
     * pipeline runs when it distills a reward model instead of pairing:
@@ -353,9 +334,6 @@ object Posttraining {
         col("best.event_id").as("best_id"),
         col("best.v").as("best_micro"),
         col("n_candidates"), col("n_passing"))
-
-  def bestOfNDocs(spark: SparkSession, dir: String): DataFrame =
-    bestOfN(Tables(spark, dir).events)
 
   /** Exact pass@k evaluation rollup — the unbiased estimator of Chen et
     * al. 2021 ("Evaluating Large Language Models Trained on Code"),
@@ -407,9 +385,6 @@ object Posttraining {
         col("pass1_micro"), col("passk_micro"))
       .orderBy(col("prompt_id"))
   }
-
-  def passAtKDocs(spark: SparkSession, dir: String): DataFrame =
-    passAtK(Tables(spark, dir).events)
 
   /** Bradley-Terry generator ranking from per-prompt preferences — the
     * model-comparison rollup an RLHF pipeline runs over its response
@@ -524,7 +499,4 @@ object Posttraining {
       .toDF("event_type", "n_opponents", "w_micro", "bt_micro")
       .orderBy(col("event_type"))
   }
-
-  def btScoresDocs(spark: SparkSession, dir: String): DataFrame =
-    btScores(Tables(spark, dir).events)
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Engine.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Trainable document-quality filter — the learned counterpart of the
@@ -110,9 +109,6 @@ object QualityModel {
       .withColumn("keep", when(z > 0, lit(1)).otherwise(lit(0)))
   }
 
-  def logitScoreDocs(spark: SparkSession, dir: String): DataFrame =
-    logitScore(Tables(spark, dir).documents)
-
   /** Probability-bucket count for the calibration table. */
   val CalibrationBins = 20
 
@@ -160,9 +156,6 @@ object QualityModel {
         expr("__pm * 100 div n").as("mean_prob_micro"))
       .orderBy(col("bin"))
   }
-
-  def calibrationDocs(spark: SparkSession, dir: String): DataFrame =
-    calibrationTable(Tables(spark, dir).documents)
 
   /** Snorkel-style weak supervision over labeling-function votes — how a
     * quality TRAINING SET gets made when no human labels exist: each
@@ -274,12 +267,6 @@ object QualityModel {
         (lit(1000000L) - col("pe_micro")).as("kappa_den"))
       .orderBy(col("lf_a"), col("lf_b"))
   }
-
-  def labelAgreementDocs(spark: SparkSession, dir: String): DataFrame =
-    labelAgreement(Tables(spark, dir).documents)
-
-  def weakLabelsDocs(spark: SparkSession, dir: String): DataFrame =
-    weakLabels(Tables(spark, dir).documents)
 
   /** Batch gradient descent on the logistic loss. `feats` must carry
     * f1/f2/f3 and a 0/1 `labelCol`. Returns the learned

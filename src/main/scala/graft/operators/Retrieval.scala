@@ -70,9 +70,6 @@ object Retrieval {
       .limit(topK)
   }
 
-  def bm25Docs(spark: SparkSession, dir: String): DataFrame =
-    bm25TopK(Tables(spark, dir).documents, DefaultTerms)
-
   // ------------------------------------------------- hybrid retrieval
 
   /** Deterministic, data-independent query embedding for the gated
@@ -182,9 +179,6 @@ object Retrieval {
         col("item.maxsim").as("maxsim"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def maxSimDocs(spark: SparkSession, dir: String): DataFrame =
-    maxSimTopK(Tables(spark, dir).embeddings)
 
   def hybridDocs(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)

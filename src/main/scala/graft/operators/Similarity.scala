@@ -193,9 +193,6 @@ object Similarity {
           .otherwise(expr("1000000 div a_rk")).cast("long").as("rr_micro"))
       .orderBy(col("q_id"))
 
-  def annMrr(spark: SparkSession, dir: String): DataFrame =
-    mrrAtK(annBruteForce(spark, dir), annLsh(spark, dir))
-
   /** The IVF path's recall@10 audit — same brute-force-vs-index compare
     * as [[annRecall]], so BOTH approximate index families carry a gated
     * quality metric, not just a gated result set.
@@ -549,9 +546,6 @@ object Similarity {
           .as("cos_micro"))
   }
 
-  def ivfUpsertDocs(spark: SparkSession, dir: String): DataFrame =
-    ivfUpsert(Tables(spark, dir).embeddings)
-
   /** Embedding near-duplicate pairs: all pairs with cosine ≥ threshold.
     * Exact all-pairs formulation — the CORRECTNESS oracle only (the
     * self-join is quadratic in rows); the gated scale path is
@@ -701,9 +695,6 @@ object Similarity {
       dim: Int = 64): DataFrame =
     pqEncode(vecs, m, k, dim).orderBy(col("vec_id"))
 
-  def pqCodesDocs(spark: SparkSession, dir: String): DataFrame =
-    pqCodes(Tables(spark, dir).embeddings)
-
   /** TRAINED per-subspace PQ codebooks — the production path the
     * dyadic-grid gate deliberately forgoes: subspace j's codebook is
     * the k centroids of [[Clustering.kmeans]] run on the corpus's j-th
@@ -774,9 +765,6 @@ object Similarity {
     }: _*).orderBy(col("vec_id"))
   }
 
-  def pqTrainedCodesDocs(spark: SparkSession, dir: String): DataFrame =
-    pqTrainedCodes(Tables(spark, dir).embeddings)
-
   /** Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     * exact, each corpus vector is its m codes, and the approximate
     * squared distance is the sum of m table lookups (query-subvector ↔
@@ -828,9 +816,6 @@ object Similarity {
         (-col("__ord")).as("adist_micro"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def pqAdcTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    pqAdcTopK(Tables(spark, dir).embeddings)
 
   /** Per-(query, subspace) ADC lookup tables: ‖q_j − c_jp‖² = q_j·q_j −
     * 2 q_j·c_jp + c²; the q_j·q_j term is constant per (query, subspace)
@@ -911,9 +896,6 @@ object Similarity {
         (-col("__ord")).as("adist_micro"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def ivfPqTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTopK(Tables(spark, dir).embeddings)
 
   /** TRAINED IVF-PQ with exact refine — the three-layer composition
     * production vector serving actually deploys (the FAISS
@@ -1059,12 +1041,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  def ivfPqTrainedTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTrainedTopK(Tables(spark, dir).embeddings)
-
-  def ivfPqTrainedSampledTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTrainedSampledTopK(Tables(spark, dir).embeddings)
-
   /** Recall@10 of the full trained IVF-PQ+refine stack against the
     * exact squared-L2 baseline — the three-layer approximation (cell
     * recall × code distortion × shortlist cut) priced as one number,
@@ -1131,9 +1107,6 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
-  def knnClassifyIvfDocs(spark: SparkSession, dir: String): DataFrame =
-    knnClassifyIvf(Tables(spark, dir).embeddings)
-
   def knnClassify(vecs: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
     val base = withNorm(vecs)
     val queries = broadcast(base
@@ -1146,9 +1119,6 @@ object Similarity {
       .withColumn("cos", cosine(col("embedding"), col("q_emb"), col("norm"), col("q_norm")))
     majorityVote(scored, k)
   }
-
-  def knnClassifyDocs(spark: SparkSession, dir: String): DataFrame =
-    knnClassify(Tables(spark, dir).embeddings)
 
   // ------------------------------------------------ hard-negative mining
 
@@ -1183,9 +1153,6 @@ object Similarity {
         col("__ord").as("cos"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def hardNegativesDocs(spark: SparkSession, dir: String): DataFrame =
-    hardNegatives(Tables(spark, dir).embeddings)
 
   // ------------------------------------------- int8 scalar quantization
 
@@ -1257,9 +1224,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  def i8TopKDocs(spark: SparkSession, dir: String): DataFrame =
-    i8TopK(Tables(spark, dir).embeddings)
-
   // ------------------------------------------------- matryoshka funnel
 
   /** Matryoshka (MRL) two-stage retrieval: score every candidate on the
@@ -1294,9 +1258,6 @@ object Similarity {
       .select(col("q_id"), col("rk"), col("vec_id"), col("__ord").as("d64"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def matryoshkaTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    matryoshkaTopK(Tables(spark, dir).embeddings)
 
   // ------------------------------------------------- bitext mining
 
@@ -1441,9 +1402,6 @@ object Similarity {
       .orderBy(col("x_id"))
   }
 
-  def bitextMarginDocs(spark: SparkSession, dir: String): DataFrame =
-    bitextMargin(Tables(spark, dir).embeddings, xMaxId = BitextGateXMaxId)
-
   /** [[bitextMargin]] through the IVF probe path — the concrete 100 TB
     * spelling its scaladoc promises: instead of scoring X×Y, each
     * X-side vector probes its `nProbe` best inverted-file cells and
@@ -1493,9 +1451,6 @@ object Similarity {
       .select(col("x_id"), col("y_id"), col("cos_micro"))
     marginMine(pairs, k, thresholdMicro)
   }
-
-  def bitextMarginIvfDocs(spark: SparkSession, dir: String): DataFrame =
-    bitextMarginIvf(Tables(spark, dir).embeddings, xMaxId = BitextGateXMaxId)
 
   // ------------------------------------------- sparse random projection
 
@@ -1558,9 +1513,6 @@ object Similarity {
       expr(rpExprSpark(j)).as(f"r${j + 1}%02d")): _*)
       .orderBy(col("vec_id"))
 
-  def rpProjectDocs(spark: SparkSession, dir: String): DataFrame =
-    rpProject(Tables(spark, dir).embeddings)
-
   /** Two-stage retrieval through the projection: score every candidate
     * on the [[RpDim]]-d projected vectors (exact BIGINT dot products of
     * micro-int coordinates — a quarter of the flops, engine-exact),
@@ -1595,9 +1547,6 @@ object Similarity {
       .select(col("q_id"), col("rk"), col("vec_id"), col("__ord").as("d64"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def rpTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    rpTopK(Tables(spark, dir).embeddings)
 
   /** Exact full-dim DOT-product top-k — the correct baseline for the RP
     * funnel's recall audit: [[rpTopK]] ranks by the micro-quantized raw
@@ -1700,9 +1649,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  def hammingTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    hammingTopK(Tables(spark, dir).embeddings)
-
   /** Two-stage retrieval through the 1-bit tier: Hamming-shortlist on
     * the packed signatures, exact micro-quantized dot rerank on the full
     * vectors behind the shortlist filter — [[rpTopK]]'s funnel with
@@ -1733,9 +1679,6 @@ object Similarity {
       .select(col("q_id"), col("rk"), col("vec_id"), col("__ord").as("d64"))
       .orderBy(col("q_id"), col("rk"))
   }
-
-  def hammingRerankDocs(spark: SparkSession, dir: String): DataFrame =
-    hammingRerank(Tables(spark, dir).embeddings)
 
   /** Recall@10 audit for the 1-bit funnel against the exact raw-dot
     * baseline (the funnel reranks by the micro dot, so that is its own
@@ -1875,9 +1818,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  def hammingLshTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    hammingLshTopK(Tables(spark, dir).embeddings)
-
   /** Recall@10 of the banded path against the exact Hamming scan — the
     * number that prices the banding's bucket-collision recall loss
     * before a deployment swaps the corpus scan for the equi-join
@@ -2001,9 +1941,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  def pqRerankTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    pqRerankTopK(Tables(spark, dir).embeddings)
-
   /** Constant shortlist width for the TRAINED funnel — 2.5× headroom
     * over the measured worst true-neighbor ADC rank under trained books
     * (20 = the replica-cluster size on the near-tie jitter corpus, i.e.
@@ -2061,9 +1998,6 @@ object Similarity {
     pqRerankFunnel(vecs, pqCodebooksTrained(vecs, m, k, dim, iters),
       shortlist, numQueries, topK, m, dim)
   }
-
-  def pqTrainedRerankTopKDocs(spark: SparkSession, dir: String): DataFrame =
-    pqTrainedRerankTopK(Tables(spark, dir).embeddings)
 
   /** Recall@10 audit of the TRAINED funnel against the exact squared-L2
     * baseline — the falsification target the round-18 verdict set for
@@ -2157,14 +2091,4 @@ object Similarity {
 
   def annLshMp(spark: SparkSession, dir: String): DataFrame =
     lshMultiProbeTopK(Tables(spark, dir).embeddings)
-
-  /** Recall@10 audit of the banded multi-probe path against the exact
-    * cosine baseline — the jitter falsification target: min recall at
-    * the 20× j=0.15 probe must hold ≥ the 0.90 full-scan floor where
-    * the unbanded [[lshTopK]] drops to 0.10. Candidates are exact-
-    * cosine-reranked, so every miss this audit counts is a candidate-
-    * generation miss — the quantity the banding dials control.
-    */
-  def annRecallLshMp(spark: SparkSession, dir: String): DataFrame =
-    recallAtK(annBruteForce(spark, dir), annLshMp(spark, dir), k = 10)
 }

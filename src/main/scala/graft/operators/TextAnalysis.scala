@@ -200,9 +200,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(graft.functions.WinnowFps.winnowFps(col("text"), k, w)).as("fp"))
 
-  def winnowDocs(spark: SparkSession, dir: String): DataFrame =
-    winnow(Tables(spark, dir).documents).orderBy(col("doc_id"), col("fp"))
-
   // ------------------------------------------------------------ PII scrub
 
   /** Patterns shared by Java regex (Spark) and RE2 (DuckDB, for the
@@ -298,10 +295,6 @@ object TextAnalysis {
         md5_60(col("col")).as("chunk_fp"))
   }
 
-  def docChunksDocs(spark: SparkSession, dir: String): DataFrame =
-    docChunks(Tables(spark, dir).documents)
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
   // ------------------------------------------------------- n-gram LM stats
 
   /** Per-language bigram language-model statistics: for each language the
@@ -383,9 +376,6 @@ object TextAnalysis {
       .select(col("rk"), col("token"), col("cnt"), col("cum_share"))
       .orderBy(col("rk"))
   }
-
-  def vocabCoverageDocs(spark: SparkSession, dir: String): DataFrame =
-    vocabCoverage(Tables(spark, dir).documents)
 
   // --------------------------------------------------- filter cascade
 
@@ -470,9 +460,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def noveltyDocs(spark: SparkSession, dir: String): DataFrame =
-    novelty(Tables(spark, dir).documents)
-
   // ------------------------------------------------ LM perplexity score
 
   /** Per-document cross-entropy under an add-one-smoothed corpus unigram
@@ -521,9 +508,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def docPerplexityDocs(spark: SparkSession, dir: String): DataFrame =
-    docPerplexity(Tables(spark, dir).documents)
-
   /** Per-document token Shannon entropy — the information-theoretic
     * summary of within-doc repetition (Gopher/RefinedWeb-family quality
     * rules threshold on exactly this family of signals; a spam page of
@@ -563,9 +547,6 @@ object TextAnalysis {
             expr("__sm div n_tokens")).as("entropy_micro"))
       .orderBy(col("doc_id"))
   }
-
-  def tokenEntropyDocs(spark: SparkSession, dir: String): DataFrame =
-    tokenEntropy(Tables(spark, dir).documents)
 
   // ------------------------------------------- BPE merge-pair counting
 
@@ -609,9 +590,6 @@ object TextAnalysis {
       .select(col("rk"), col("a"), col("b"), col("cnt"))
       .orderBy(col("rk"))
   }
-
-  def bpePairCountsDocs(spark: SparkSession, dir: String): DataFrame =
-    bpePairCounts(Tables(spark, dir).documents)
 
   /** Full BPE trainer (Sennrich et al. 2016): `nMerges` rounds of
     * count-top-pair-then-merge, returning the learned merge list in
@@ -835,9 +813,6 @@ object TextAnalysis {
     "j" -> "o", "jo" -> "in", "a" -> "s", "as" -> "h", "h" -> "ash",
     "r" -> "ow")
 
-  def bpeEncodeDocs(spark: SparkSession, dir: String): DataFrame =
-    bpeEncode(Tables(spark, dir).documents, PinnedBpeMerges)
-
   /** Per-language tokenizer FERTILITY (BPE tokens per word, exact
     * micro-rate) under a fixed merge list — the multilingual-tokenizer
     * audit every cross-lingual pretraining effort publishes: a
@@ -862,9 +837,6 @@ object TextAnalysis {
       .withColumn("fertility_micro",
         expr("n_bpe_tokens * 1000000 div n_words"))
       .orderBy(col("lang"))
-
-  def bpeFertilityDocs(spark: SparkSession, dir: String): DataFrame =
-    bpeFertility(Tables(spark, dir).documents, PinnedBpeMerges)
 
   // --------------------------------------- unigram-LM (Viterbi) encoding
 
@@ -971,9 +943,6 @@ object TextAnalysis {
         sum(col("wc")).as("cost_micro"))
       .orderBy(col("doc_id"))
   }
-
-  def unigramEncodeDocs(spark: SparkSession, dir: String): DataFrame =
-    unigramEncode(Tables(spark, dir).documents)
 
   // ------------------------------------- WordPiece (greedy) encoding
 
@@ -1089,9 +1058,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def wordpieceEncodeDocs(spark: SparkSession, dir: String): DataFrame =
-    wordpieceEncode(Tables(spark, dir).documents)
-
   /** Cross-family tokenizer comparison — the table a tokenizer BAKE-OFF
     * reads: per document, the piece counts and exact micro-fertilities
     * of all three gated families (BPE merge list, unigram-LM Viterbi,
@@ -1122,9 +1088,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def tokenizerCompareDocs(spark: SparkSession, dir: String): DataFrame =
-    tokenizerCompare(Tables(spark, dir).documents)
-
   def fimTransform(docs: DataFrame, rate: Double = 0.5): DataFrame =
     fimTransformOn(docs, rate).orderBy(col("doc_id"))
 
@@ -1150,9 +1113,6 @@ object TextAnalysis {
         concat(lit("<PRE>"), prefix, lit("<SUF>"), suffix, lit("<MID>"), middle))
         .otherwise(col("text")).as("fim_text"))
   }
-
-  def fimTransformDocs(spark: SparkSession, dir: String): DataFrame =
-    fimTransform(Tables(spark, dir).documents)
 
   // ---------------------------------------- T5-style span corruption
 
@@ -1216,7 +1176,4 @@ object TextAnalysis {
         concat_ws(" ", col("r.tgt")).as("target_text"))
       .orderBy(col("doc_id"))
   }
-
-  def t5SpansDocs(spark: SparkSession, dir: String): DataFrame =
-    t5Spans(Tables(spark, dir).documents)
 }

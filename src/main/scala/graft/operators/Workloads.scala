@@ -40,10 +40,6 @@ object Workloads {
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Oracle-gated wordcount over documents.text. */
-  def wcDocuments(spark: SparkSession, dir: String): DataFrame =
-    wordCount(Tables(spark, dir).documents, "text").orderBy(col("word"))
-
   /** The same wordcount driven through the [[MapleJuice]] engine surface —
     * native maple emits `word 1` lines (`mj_exe/wordcount_maple.go:3-10`),
     * native juice counts each key's group (`mj_exe/juice_wordcount.go:11-29`)
@@ -175,22 +171,6 @@ object Workloads {
         max(when(col("rk") === 3, col("event_type"))).as("c3"))
       .filter(col("c3").isNotNull)
   }
-
-  /** Oracle-gated Condorcet win table over event-derived ballots. */
-  def voteCondorcet(spark: SparkSession, dir: String): DataFrame =
-    condorcetWins(ballotsFromEvents(spark, dir))
-
-  /** The reference's single output line, verbatim: `<candidate> win!`
-    * (`mj_exe/juice_vote_two.go:17-23` prints only the argmax of the win
-    * table). The reference's argmax follows Go map iteration order on
-    * ties; here the tie-break is deterministic (most wins, then smallest
-    * candidate), which CliSpec pins to the same `Anna win!` answer on the
-    * reference's own fixture.
-    */
-  def voteWinner(spark: SparkSession, dir: String): DataFrame =
-    condorcetWins(ballotsFromEvents(spark, dir))
-      .limit(1)
-      .select(concat(col("winner"), lit(" win!")).as("line"))
 
   // ---------------------------------------------------------------- C. contact tracing
 

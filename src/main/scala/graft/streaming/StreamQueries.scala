@@ -52,21 +52,6 @@ object StreamQueries {
     spark.readStream.schema(schema).parquet(s"$dir/{documents.parquet}")
   }
 
-  /** Round-robin fan-out of the streamed fixture scan ahead of per-doc
-    * text kernels (simhash / winnow / logit features): the fixture is a
-    * SINGLE single-row-group parquet file, so each micro-batch scan is
-    * one task and every kernel downstream of it runs serially however
-    * many cores the box has (guide §2.5 — an unsplittable input is
-    * repartitioned right after the read). Gate-scale cost is ~10 MB of
-    * text across one round-robin exchange; the session's own
-    * shuffle-partition dial (8 on the gate child) sizes the fan-out, so
-    * it follows deployment scale. Applied only where the scan feeds a
-    * kernel that dominates the micro-batch (stateless scoring gates and
-    * the simhash quarantine) — cheap per-row gates keep the bare scan.
-    */
-  private def fanOut(df: DataFrame): DataFrame = df.repartition(
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-
   /** Gated [[Streaming.qualityFilterStream]]: stateless logistic
     * admission with the original columns riding through — the landed
     * parquet IS the admitted corpus, checked wide (text and metadata
@@ -170,7 +155,7 @@ object StreamQueries {
     */
   def quarantineDocs(spark: SparkSession, dir: String): DataFrame =
     StreamGate.runToParquet(spark,
-      s => Streaming.simhashQuarantineStream(fanOut(streamDocs(s, dir)),
+      s => Streaming.simhashQuarantineStream(streamDocs(s, dir),
         bucketCap = Int.MaxValue).toDF(),
       gateDir("quarantine"))()
       .orderBy("doc_id", "band")
@@ -256,7 +241,7 @@ object StreamQueries {
     */
   def fingerprintDocs(spark: SparkSession, dir: String): DataFrame =
     StreamGate.runToParquet(spark,
-      s => Streaming.fingerprintStream(fanOut(streamDocs(s, dir))),
+      s => Streaming.fingerprintStream(streamDocs(s, dir)),
       gateDir("fingerprint"))()
       .orderBy("doc_id")
 
@@ -337,7 +322,7 @@ object StreamQueries {
     */
   def weakLabelDocs(spark: SparkSession, dir: String): DataFrame =
     StreamGate.runToParquet(spark,
-      s => graft.operators.QualityModel.weakLabelsOn(fanOut(streamDocs(s, dir))),
+      s => graft.operators.QualityModel.weakLabelsOn(streamDocs(s, dir)),
       gateDir("weaklabels"))()
       .orderBy("doc_id")
 

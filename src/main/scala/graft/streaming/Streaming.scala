@@ -497,21 +497,6 @@ object Streaming {
   def writeBatchIdempotent(batch: DataFrame, id: Long, path: String): Unit =
     batch.write.mode("overwrite").parquet(s"$path/batch_id=$id")
 
-  /** Idempotent batch-addressed parquet sink: each micro-batch lands in
-    * its own `batch_id=<id>` directory with mode=overwrite, so a batch
-    * REPLAYED after a failure (Structured Streaming's contract is
-    * at-least-once delivery to foreachBatch) overwrites its own previous
-    * output instead of appending duplicates — exactly-once EFFECT from
-    * deterministic batch ids + idempotent writes, the standard
-    * production recipe. The guarantee is tied to the path↔checkpoint
-    * pairing: a FRESH checkpoint restarts batch ids at 0, which would
-    * overwrite low-numbered dirs while stale high-numbered ones survive
-    * — so startup refuses a new checkpoint over a non-empty output
-    * (wipe the output when resetting the checkpoint). Readers use
-    * partition discovery over the layout (`spark.read.parquet(path)`);
-    * if micro-batches are small, periodically rewrite old leaf dirs
-    * with a batch job (they are immutable once their id is committed).
-    */
   // ------------------------------------------- near-dup quarantine
 
   /** One (doc, band) probe row for [[simhashQuarantineStream]]. */
@@ -661,6 +646,21 @@ object Streaming {
     }
   }
 
+  /** Idempotent batch-addressed parquet sink: each micro-batch lands in
+    * its own `batch_id=<id>` directory with mode=overwrite, so a batch
+    * REPLAYED after a failure (Structured Streaming's contract is
+    * at-least-once delivery to foreachBatch) overwrites its own previous
+    * output instead of appending duplicates — exactly-once EFFECT from
+    * deterministic batch ids + idempotent writes, the standard
+    * production recipe. The guarantee is tied to the path↔checkpoint
+    * pairing: a FRESH checkpoint restarts batch ids at 0, which would
+    * overwrite low-numbered dirs while stale high-numbered ones survive
+    * — so startup refuses a new checkpoint over a non-empty output
+    * (wipe the output when resetting the checkpoint). Readers use
+    * partition discovery over the layout (`spark.read.parquet(path)`);
+    * if micro-batches are small, periodically rewrite old leaf dirs
+    * with a batch job (they are immutable once their id is committed).
+    */
   def idempotentParquetSink(df: DataFrame, path: String,
       checkpoint: String, outputMode: String = "append",
       availableNow: Boolean = false)

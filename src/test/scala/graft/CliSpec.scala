@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CliSpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val whDir =
-    java.nio.file.Files.createTempDirectory("graft-wh").toString
+    Scratch.dir("graft-wh")
   private lazy val cli = new Cli.Handler(spark, whDir)
 
   test("put / store / ls / get round-trip preserves bytes") {
@@ -18,8 +18,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     assert(cli.execute(s"put $src wc_in").startsWith("put"))
     assert(cli.execute("store").linesIterator.contains("wc_in"))
     assert(cli.execute("ls wc_in").contains("wc_in"))
-    val back = java.nio.file.Files.createTempFile("graft-get", ".txt").toString
-    new java.io.File(back).delete()
+    val back = s"${Scratch.dir("graft-get")}/back.txt"
     cli.execute(s"get wc_in $back")
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
     val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(back))
@@ -30,7 +29,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     * binaries — the CLI receives a path, one token.
     */
   private def exe(body: String): String = {
-    val f = java.nio.file.Files.createTempFile("graft-exe", ".sh")
+    val f = java.nio.file.Paths.get(Scratch.dir("graft-exe"), "exe.sh")
     java.nio.file.Files.writeString(f, s"#!/bin/sh\n$body\n")
     f.toFile.setExecutable(true)
     f.toString
@@ -47,8 +46,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     // intermediate GC'd (delete flag = 1)
     assert(!cli.execute("store").linesIterator.contains("wc__intermediate"))
     // result matches an independent count
-    val out = java.nio.file.Files.createTempFile("graft-wc", ".txt").toString
-    new java.io.File(out).delete()
+    val out = s"${Scratch.dir("graft-wc")}/wc.txt"
     cli.execute(s"get wc_out $out")
     val got = scala.io.Source.fromFile(out).getLines().filter(_.nonEmpty).map { l =>
       val Array(w, c) = l.split(" "); w -> c.toInt
@@ -91,8 +89,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     assert(cli.execute(s"juice $j1 3 v1 v1_out 1 hash").contains("juice done"))
     assert(cli.execute(s"maple $m2 3 v2 v1_out").contains("maple done"))
     assert(cli.execute(s"juice $j2 1 v2 vote_result 1 hash").contains("juice done"))
-    val out = java.nio.file.Files.createTempFile("graft-vote", ".txt").toString
-    new java.io.File(out).delete()
+    val out = s"${Scratch.dir("graft-vote")}/vote.txt"
     cli.execute(s"get vote_result $out")
     val result = scala.io.Source.fromFile(out).getLines().toSeq
     assert(result === Seq("Anna win!"))

@@ -9,7 +9,7 @@ class EngineSpec extends AnyFunSuite with SparkTestSession {
 
   test("Tables re-reads the schema of a parquet path rewritten in place, local or remote URI") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-schema")
+    val root = java.nio.file.Paths.get(Scratch.dir("graft-schema"))
     val table = root.resolve("t.parquet")
     // the same directory behind a non-local URI: a viewfs mount of it
     spark.sparkContext.hadoopConfiguration.set(

@@ -73,6 +73,14 @@ class HarnessSpec extends AnyFunSuite with SparkTestSession {
       """{"ok": "SELECT 1","boom": "SELECT\t2"}""")
   }
 
+  test("Bench.outPath: the full file by default, the partial file for an ONLY run, BENCH_OUT over both") {
+    assert(Bench.outPath(Map.empty) === "BENCH_FULL.json")
+    assert(Bench.outPath(Map("SPARK_GRAFT_ONLY" -> "q1*")) === "BENCH_PARTIAL.json")
+    assert(Bench.outPath(Map("SPARK_GRAFT_BENCH_OUT" -> "/x/b.json")) === "/x/b.json")
+    assert(Bench.outPath(Map("SPARK_GRAFT_ONLY" -> "q1*", "SPARK_GRAFT_BENCH_OUT" -> "/x/b.json")) ===
+      "/x/b.json")
+  }
+
   test("Scratch.dir registers its directory; the hook's cleanup removes it with its files") {
     spark // Spark installs its own shutdown hook with the session
     val d = Paths.get(Scratch.dir("graft-harness-scratch-"))

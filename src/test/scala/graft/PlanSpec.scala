@@ -39,7 +39,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("partitionBy layout prunes partitions at the scan") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tmp = Scratch.dir("graft-part")
     Engine.Tables(spark, dir).events
       .write.partitionBy("event_type").mode("overwrite").parquet(s"$tmp/events_part")
     val df = spark.read.parquet(s"$tmp/events_part")
@@ -54,7 +54,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("co-bucketed tables join and aggregate with zero Exchange") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    val tmp = Scratch.dir("graft-bucket")
     val wh = new sources.Warehouse(spark, tmp)
     val t = Engine.Tables(spark, dir)
     wh.saveBucketed(t.orders, "orders_bkt", 8, "o_custkey")

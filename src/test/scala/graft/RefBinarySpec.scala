@@ -29,12 +29,11 @@ class RefBinarySpec extends AnyFunSuite with SparkTestSession {
   }
 
   private lazy val whDir =
-    java.nio.file.Files.createTempDirectory("graft-refbin").toString
+    Scratch.dir("graft-refbin")
   private lazy val cli = new Cli.Handler(spark, whDir)
 
   private def fetch(name: String): Seq[String] = {
-    val out = java.nio.file.Files.createTempFile("graft-refbin", ".txt").toString
-    new java.io.File(out).delete()
+    val out = s"${Scratch.dir("graft-refbin")}/$name.txt"
     cli.execute(s"get $name $out")
     val src = scala.io.Source.fromFile(out)
     try src.getLines().toVector finally src.close()

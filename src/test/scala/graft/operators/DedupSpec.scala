@@ -286,7 +286,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // RDD loop); clustering must be bit-identical to the driver fast path
     val fast = Dedup.dedupClusters(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val loop = Dedup.dedupClustersLoop(spark, "/root/testdata/sf0.001")
+    val loop = graft.SparkEntry.queries("dedup_clusters_loop")(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(fast.nonEmpty, "fixture should contain near-dup clusters")
     assert(loop === fast)

@@ -32,7 +32,7 @@ class HeavyHittersSpec extends AnyFunSuite with SparkTestSession {
     val dir = "/root/testdata/sf0.001"
     val t = graft.Engine.Tables(spark, dir)
     val total = t.events.count()
-    val got = HeavyHitters.frequentUsers(spark, dir)
+    val got = graft.SparkEntry.queries("hh_heavy_hitters")(spark, dir)
       .collect().map(x => (x.getLong(0), x.getLong(1)))
     assert(got.nonEmpty, "threshold should admit at least one user")
     assert(got.forall { case (_, n) => n * 2000 >= total })

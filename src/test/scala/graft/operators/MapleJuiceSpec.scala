@@ -59,7 +59,7 @@ class MapleJuiceSpec extends AnyFunSuite with SparkTestSession {
     // produce exactly the native plan's result on real testdata — same
     // tokens, same counts, same column names the oracle hashes
     val exe = Workloads.mjWordCountExe(spark, "/root/testdata/sf0.001").collect()
-    val native = Workloads.wcDocuments(spark, "/root/testdata/sf0.001").collect()
+    val native = graft.SparkEntry.queries("wc_wordcount")(spark, "/root/testdata/sf0.001").collect()
     assert(exe.map(r => (r.getString(0), r.getLong(1))).toMap ===
       native.map(r => (r.getString(0), r.getLong(1))).toMap)
     assert(exe.nonEmpty)

@@ -317,7 +317,7 @@ class PosttrainingSpec extends AnyFunSuite with SparkTestSession {
     val b = Posttraining.bestOfN(craftedEvents.repartition(7), 450000L)
       .collect().toSeq
     assert(a === b)
-    val fixture = Posttraining.bestOfNDocs(spark, "/root/testdata/sf0.001")
+    val fixture = graft.SparkEntry.queries("best_of_n")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(fixture.nonEmpty)
     fixture.foreach { r =>

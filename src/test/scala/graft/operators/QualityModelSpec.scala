@@ -72,7 +72,7 @@ class QualityModelSpec extends AnyFunSuite with SparkTestSession {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.Engine.Tables(spark, dir).documents
     val total = docs.count()
-    val rows = QualityModel.calibrationDocs(spark, dir).collect()
+    val rows = graft.SparkEntry.queries("quality_calibration")(spark, dir).collect()
     assert(rows.map(_.getLong(1)).sum === total, "bins must partition the corpus")
     rows.foreach { r =>
       val (bin, n, nk, rate, meanPm) =

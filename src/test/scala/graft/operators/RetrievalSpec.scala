@@ -27,7 +27,7 @@ class RetrievalSpec extends AnyFunSuite with SparkTestSession {
       if (s > 0) Some((id, BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, hits))
       else None
     }.sortBy(t => (-t._2, t._1)).take(100).toSeq
-    val got = Retrieval.bm25Docs(spark, dir).collect()
+    val got = graft.SparkEntry.queries("bm25_topk")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
     assert(got === expected)
     assert(got.nonEmpty && got.forall(_._2 > 0))
@@ -57,7 +57,7 @@ class RetrievalSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
     assert(got.nonEmpty && got.length <= 50)
     // in-memory RRF over the two independently computed candidate lists
-    val lex = Retrieval.bm25Docs(spark, dir).collect()
+    val lex = graft.SparkEntry.queries("bm25_topk")(spark, dir).collect()
       .map(_.getLong(0)).zipWithIndex.map { case (id, i) => id -> (i + 1) }.toMap
     val t = graft.Engine.Tables(spark, dir)
     val q = Retrieval.queryVector()

@@ -789,7 +789,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getLong(0) -> r.getLong(2)).groupBy(_._1)
       .map { case (q, xs) => q -> xs.map(_._2).toSet }
     assert(gotExact === exactMem)
-    val pq = Similarity.pqAdcTopKDocs(spark, dir).collect()
+    val pq = graft.SparkEntry.queries("pq_adc_topk")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
       .map { case (q, xs) => q -> xs.map(_._2).toSet }
     val expected = exactMem.map { case (q, ex) =>

@@ -11,7 +11,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-text").toString
+    val d = graft.Scratch.dir("graft-text")
     Seq(
       (0L, "the cat and the dog, the end."),
       (1L, "le chat et le chien une fois"),
@@ -23,7 +23,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
 
   test("repetition: hand-computed duplicate fractions and top-bigram run") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val d = graft.Scratch.dir("graft-rep")
     Seq(
       (0L, "a b a b a b"), // 6 words {a,b}; bigrams: ab,ba,ab,ba,ab
       (1L, "all words here differ"),
@@ -185,7 +185,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
 
   test("filterCascade: first failing rule wins, in cascade order") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-cascade").toString
+    val d = graft.Scratch.dir("graft-cascade")
     Seq(
       (0L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"),
       (1L, "tiny doc"),                                              // too_short

@@ -15,7 +15,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
       .option("path", dir).option("maxSplitBytes", split).load()
 
   test("every line read exactly once at ANY split size") {
-    val dir = java.nio.file.Files.createTempDirectory("lt-split-").toString
+    val dir = graft.Scratch.dir("lt-split-")
     val lines = (0 until 200).map(i => s"key${i % 7} payload $i with words")
     write(dir, "part-0.txt", lines.take(120).mkString("\n") + "\n")
     write(dir, "part-1.txt", lines.drop(120).mkString("\n") + "\n")
@@ -33,7 +33,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("CRLF terminators, no-newline EOF, keyless and empty-value lines") {
-    val dir = java.nio.file.Files.createTempDirectory("lt-edge-").toString
+    val dir = graft.Scratch.dir("lt-edge-")
     // CRLF line; LF line; line with no space (all key); final line
     // without a terminator; a key with empty value ("k " → value "")
     write(dir, "f.txt", "a one two\r\nb three\nnospace\nk \nc final")
@@ -45,7 +45,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("column pruning reaches the scan: key-only query never reads value") {
-    val dir = java.nio.file.Files.createTempDirectory("lt-prune-").toString
+    val dir = graft.Scratch.dir("lt-prune-")
     write(dir, "f.txt", "a 1\nb 2\na 3\n")
     val df = read(dir, 1L << 20).select("key")
     val scanLine = df.queryExecution.executedPlan.toString.linesIterator
@@ -56,7 +56,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("streaming: staged appends and new files land exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("lt-stream-").toString
+    val dir = graft.Scratch.dir("lt-stream-")
     write(dir, "a.txt", "k1 one\nk2 two\n")
     def append(name: String, content: String): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
@@ -66,7 +66,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
     val landed = graft.streaming.StreamGate.runToParquet(spark,
       s => s.readStream.format("graft.sources.LineTable")
         .option("path", dir).option("maxSplitBytes", 8).load(),
-      java.nio.file.Files.createTempDirectory("lt-stream-out-").toString)(
+      graft.Scratch.dir("lt-stream-out-"))(
       // batch 2: whole-line append to the existing file (the format's
       // append contract) — the new range starts exactly at the old length
       () => append("a.txt", "k1 three\nk3 four\n"),
@@ -80,7 +80,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
 
   test("DSv2 write: append adds, overwrite truncates, rows round-trip exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lt-write-").toString
+    val dir = graft.Scratch.dir("lt-write-")
     def save(rows: Seq[(String, String)], mode: String): Unit =
       rows.toDF("key", "value").repartition(3)
         .write.format("graft.sources.LineTable").option("path", dir)
@@ -102,7 +102,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
 
   test("DSv2 write: unrepresentable rows fail loudly, bad schema is plan-time") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lt-write-bad-").toString
+    val dir = graft.Scratch.dir("lt-write-bad-")
     def attempt(rows: Seq[(String, String)]): Throwable = intercept[Exception] {
       rows.toDF("key", "value").write.format("graft.sources.LineTable")
         .option("path", dir).mode("append").save()
@@ -127,9 +127,9 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("STREAMING_WRITE: rows land exactly once; epoch replay cannot double-append") {
-    val in = java.nio.file.Files.createTempDirectory("lt-sw-in-").toString
-    val out = java.nio.file.Files.createTempDirectory("lt-sw-out-").toString + "/table"
-    val ckpt = java.nio.file.Files.createTempDirectory("lt-sw-ckpt-").toString
+    val in = graft.Scratch.dir("lt-sw-in-")
+    val out = graft.Scratch.dir("lt-sw-out-") + "/table"
+    val ckpt = graft.Scratch.dir("lt-sw-ckpt-")
     write(in, "a.txt", "k1 one\nk2 two\nk1 three\n")
     write(in, "b.txt", "k3 four\n")
     def run(): Unit = {
@@ -176,9 +176,9 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("STREAMING_WRITE: partial epoch + replan with a different split sizing cannot double-append") {
-    val in = java.nio.file.Files.createTempDirectory("lt-sw2-in-").toString
-    val out = java.nio.file.Files.createTempDirectory("lt-sw2-out-").toString + "/table"
-    val ckpt = java.nio.file.Files.createTempDirectory("lt-sw2-ckpt-").toString
+    val in = graft.Scratch.dir("lt-sw2-in-")
+    val out = graft.Scratch.dir("lt-sw2-out-") + "/table"
+    val ckpt = graft.Scratch.dir("lt-sw2-ckpt-")
     write(in, "a.txt", "k1 one\nk2 two\nk1 three\n")
     write(in, "b.txt", "k3 four\n")
     def run(splitBytes: Int): Unit = {
@@ -232,7 +232,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("hidden and empty files are skipped; missing path fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("lt-files-").toString
+    val dir = graft.Scratch.dir("lt-files-")
     write(dir, "f.txt", "a 1\n")
     write(dir, "_SUCCESS", "")
     write(dir, ".hidden", "z 9\n")
@@ -246,7 +246,7 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
 
   test("tasks resolve paths through the session's Hadoop conf: a viewfs mount only it has") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("lt-viewfs-")
+    val root = java.nio.file.Paths.get(graft.Scratch.dir("lt-viewfs-"))
     spark.sparkContext.hadoopConfiguration.set(
       "fs.viewfs.mounttable.graftlinetable.link./t", root.toUri.toString)
     val table = "viewfs://graftlinetable/t/table"

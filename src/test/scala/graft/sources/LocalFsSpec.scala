@@ -38,7 +38,7 @@ class LocalFsSpec extends AnyFunSuite with SparkTestSession {
     val fs = FileSystem.get(fileUri, hconf)
     assert(fs.getClass === classOf[LocalFs.Checksummed])
     assert(fs.asInstanceOf[LocalFileSystem].getRaw.getClass === classOf[LocalFs.Raw])
-    assert(new Path(Files.createTempDirectory("graft-localfs").toString)
+    assert(new Path(graft.Scratch.dir("graft-localfs"))
       .getFileSystem(hconf).getClass === classOf[LocalFs.Checksummed])
     assert(FileContext.getFileContext(fileUri, hconf).getDefaultFileSystem.getClass ===
       classOf[LocalFs.Context])
@@ -58,7 +58,7 @@ class LocalFsSpec extends AnyFunSuite with SparkTestSession {
         "nio" -> (init(new LocalFs.Checksummed, c),
           FileContext.getFileContext(new LocalFs.Context(fileUri, c), c)))
       val modes = faces.map { case (name, (fs, fc)) =>
-        val root = Files.createTempDirectory(s"graft-mode-$name-")
+        val root = java.nio.file.Paths.get(graft.Scratch.dir(s"graft-mode-$name-"))
         val r = new Path(root.toUri)
         fs.mkdirs(new Path(r, "a/b"))
         fs.create(new Path(r, "a/b/f")).close()
@@ -82,7 +82,7 @@ class LocalFsSpec extends AnyFunSuite with SparkTestSession {
     val c = conf("022")
     val stock = init(new RawLocalFileSystem(), c)
     val nio = init(new LocalFs.Raw, c)
-    val root = Files.createTempDirectory("graft-link")
+    val root = java.nio.file.Paths.get(graft.Scratch.dir("graft-link"))
     val file = Files.write(root.resolve("f"), "x".getBytes)
     val dir = Files.createDirectory(root.resolve("d"))
     val link = Files.createSymbolicLink(root.resolve("l"), file)
@@ -103,7 +103,7 @@ class LocalFsSpec extends AnyFunSuite with SparkTestSession {
 
   test("a sticky-bit setPermission still applies") {
     val nio = init(new LocalFs.Raw, conf("022"))
-    val dir = Files.createTempDirectory("graft-sticky")
+    val dir = java.nio.file.Paths.get(graft.Scratch.dir("graft-sticky"))
     nio.setPermission(new Path(dir.toUri), new FsPermission(Integer.parseInt("1777", 8).toShort))
     val unixMode = Files.getAttribute(dir, "unix:mode").asInstanceOf[Int]
     assert((unixMode & Integer.parseInt("7777", 8)) === Integer.parseInt("1777", 8))

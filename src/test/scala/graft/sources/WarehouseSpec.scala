@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class WarehouseSpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val wh =
-    new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    new Warehouse(spark, graft.Scratch.dir("graft-wh"))
 
   private lazy val nation =
     graft.Engine.Tables(spark, "/root/testdata/sf0.001").nation
@@ -90,7 +90,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
 
   test("readCsvPermissive quarantines malformed rows instead of failing") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-badcsv").toString
+    val dir = graft.Scratch.dir("graft-badcsv")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part-00000.csv"),
       "id,n\n1,10\nnot_a_number_row,xx\n3,30\n".getBytes("UTF-8"))
     val schema = StructType(Seq(

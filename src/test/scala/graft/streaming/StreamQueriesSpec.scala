@@ -144,8 +144,7 @@ class StreamQueriesSpec extends AnyFunSuite with SparkTestSession {
 
   test("stream_best_of_n lands the batch rejection-sampling selection") {
     val got = StreamQueries.bestOfNEvents(spark, dir).collect().toSet
-    val want = graft.operators.Posttraining
-      .bestOfNDocs(spark, dir).collect().toSet
+    val want = graft.SparkEntry.queries("best_of_n")(spark, dir).collect().toSet
     assert(got.nonEmpty)
     assert(got === want)
   }

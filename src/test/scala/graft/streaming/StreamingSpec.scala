@@ -134,8 +134,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("idempotentParquetSink: batch-addressed dirs; re-writing a batch id doesn't duplicate") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val out = graft.Scratch.dir("graft-sink")
+    val ckpt = graft.Scratch.dir("graft-ckpt")
     val input = MemoryStream[(Long, String)]
     val q = Streaming.idempotentParquetSink(
       input.toDF().toDF("id", "v"), out, ckpt)
@@ -160,9 +160,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("idempotentParquetSink refuses a fresh checkpoint over non-empty output") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-sink2").toString
+    val out = graft.Scratch.dir("graft-sink2")
     Streaming.writeBatchIdempotent(Seq((9L, "z")).toDF("id", "v"), 7L, out)
-    val freshCkpt = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
+    val freshCkpt = graft.Scratch.dir("graft-ckpt2")
     val input = MemoryStream[(Long, String)]
     val e = intercept[IllegalArgumentException](
       Streaming.idempotentParquetSink(input.toDF().toDF("id", "v"), out, freshCkpt))
@@ -193,13 +193,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
     // feed 1, drain, stop; feed 2, restart on the same checkpoint: the
     // file-source log, offsets and state store all come back from disk
-    val restarted = java.nio.file.Files.createTempDirectory("graft-restart")
+    val restarted = java.nio.file.Paths.get(graft.Scratch.dir("graft-restart"))
     stage(restarted.resolve("in").toString, 0)
     start(restarted, availableNow = true).awaitTermination()
     stage(restarted.resolve("in").toString, 1)
     start(restarted, availableNow = true).awaitTermination()
 
-    val uninterrupted = java.nio.file.Files.createTempDirectory("graft-norestart")
+    val uninterrupted = java.nio.file.Paths.get(graft.Scratch.dir("graft-norestart"))
     stage(uninterrupted.resolve("in").toString, 0)
     val q = start(uninterrupted, availableNow = false)
     try {
@@ -614,7 +614,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val recrawl = docs.map { case (id, t) => (id + 100000L, t) }
     // the stream is created INSIDE build from the gate-scoped session
     var input: MemoryStream[(Long, String, java.sql.Timestamp)] = null
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sgate").toString
+    val outDir = graft.Scratch.dir("graft-sgate")
     val sunk = graft.streaming.StreamGate.runToParquet(spark,
       { s =>
         input = MemoryStream[(Long, String, java.sql.Timestamp)](
@@ -639,7 +639,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val dir = "/root/testdata/sf0.001"
     val streamed = graft.streaming.StreamQueries.upsertVectors(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val batch = graft.operators.Similarity.ivfUpsertDocs(spark, dir)
+    val batch = graft.SparkEntry.queries("ivf_upsert")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(streamed === batch)
     assert(batch.nonEmpty)
@@ -651,7 +651,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     var input: MemoryStream[(Long, String)] = null
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sgate").toString
+    val outDir = graft.Scratch.dir("graft-sgate")
     val (a, b) = docs.splitAt(docs.length / 2)
     val sunk = graft.streaming.StreamGate.runToParquet(spark,
       { s =>
@@ -678,7 +678,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // each feed updates a group, so both micro-batches land rows and the
     // read-back would hold a stale batch-0 row beside its batch-1 update
     var input: MemoryStream[Long] = null
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sgate").toString
+    val outDir = graft.Scratch.dir("graft-sgate")
     val err = intercept[IllegalArgumentException] {
       graft.streaming.StreamGate.runToParquet(spark,
         { s =>
@@ -785,7 +785,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("cdcMergeSink: sequential micro-batch merges; upsert wins in-batch") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-spec-").toString
+    val dir = graft.Scratch.dir("graft-cdc-spec-")
     val base = Seq((1L, "one"), (2L, "two"), (3L, "three"))
       .toDF("doc_id", "text")
     val input = MemoryStream[(Long, String, String)]
@@ -813,5 +813,33 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         below = Some(1L)).get.collect()
       assert(v0.length === 4)
     } finally q.stop()
+  }
+
+  test("stream_cdc's one-scan changeset lands the three-branch union's snapshot") {
+    // parity oracle: the changeset spelled as one unionByName branch per
+    // op class (update, shifted insert, delete), each its own scan
+    val dir = "/root/testdata/sf0.001"
+    val base = graft.Engine.Tables(spark, dir).documents
+    val shift = base.agg(max(col("doc_id"))).head.getLong(0) + 1L
+    val docs = spark.readStream.schema(base.schema).parquet(s"$dir/{documents.parquet}")
+    val changes = docs.filter(col("doc_id") % 10 === 3)
+      .withColumn("text", concat(col("text"), lit(" v2")))
+      .withColumn("op", lit("upsert"))
+      .unionByName(docs.filter(col("doc_id") % 10 === 7)
+        .withColumn("doc_id", col("doc_id") + lit(shift))
+        .withColumn("op", lit("upsert")))
+      .unionByName(docs.filter(col("doc_id") % 10 === 9)
+        .withColumn("op", lit("delete")))
+    val out = graft.Scratch.dir("graft-cdc-union-")
+    val q = Streaming.cdcMergeSink(changes, base, s"$out/state", s"$out/_ckpt",
+      availableNow = true)
+    try q.awaitTermination() finally q.stop()
+    val want = Streaming.latestSnapshot(spark, s"$out/state").get
+      .select(col("doc_id"), md5(col("text")).as("fp"))
+      .orderBy(col("doc_id")).collect().toSeq
+    val ids = want.map(_.getLong(0))
+    // every op class took effect: inserts landed, deletes left
+    assert(ids.exists(_ >= shift) && !ids.exists(i => i < shift && i % 10 == 9))
+    assert(StreamQueries.cdcDocs(spark, dir).collect().toSeq === want)
   }
 }

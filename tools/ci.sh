@@ -14,9 +14,11 @@
 #   3. a grep of `src/main` for harness plumbing outside its one home:
 #                              `def main(` only in Bench, Verify, Stress,
 #                              Explain and Cli; `SPARK_GRAFT_CPUS` only in
-#                              Harness (the one session rule);
-#                              `createTempDirectory` only in Scratch (the
-#                              one scratch dir, deleted at JVM exit).
+#                              Harness (the one session rule); and of
+#                              `src/main` and `src/test` for
+#                              `createTempDirectory`/`createTempFile` only
+#                              in Scratch (the one scratch dir, deleted at
+#                              JVM exit; a temp file goes inside one).
 #   4. `sbt test`            — the full ScalaTest suite (42+ suites).
 #   5. `perfbench/test_metrics.py` — the benchmark harness's self-tests.
 #   6. `tools/deepcheck.sh`  — graft.Verify over EVERY gate at sf0.1,
@@ -47,11 +49,12 @@ if [ "$(echo "$inj" | grep -c .)" != 1 ] ||
   echo "[ci] FAIL: add native functions to graft.functions.Natives; Engine.session installs it once"
   exit 1
 fi
-echo "[ci] 3/6 one harness path in main code"
+echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code"
 stray=$( (grep -rn 'def main(' src/main |
     grep -vE '^src/main/scala/graft/(Bench|Verify|Stress|Explain|Cli)\.scala:'
   grep -rn 'SPARK_GRAFT_CPUS' src/main | grep -v '^src/main/scala/graft/Harness\.scala:'
-  grep -rn 'createTempDirectory' src/main | grep -v '^src/main/scala/graft/Scratch\.scala:'
+  grep -rnE 'createTemp(Directory|File)' src/main src/test |
+    grep -v '^src/main/scala/graft/Scratch\.scala:'
   ) || true)
 if [ -n "$stray" ]; then
   echo "$stray"
