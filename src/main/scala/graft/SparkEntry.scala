@@ -1742,12 +1742,11 @@ object SparkEntry {
     // (`mj_exe/juice_vote_two.go:17-23` prints only the argmax of the win
     // table). The reference's argmax follows Go map iteration order on
     // ties; here the tie-break is deterministic (most wins, then smallest
-    // candidate), which CliSpec pins to the same `Anna win!` answer on the
-    // reference's own fixture.
+    // candidate), which WorkloadsSpec pins, through `winnerLine`, to the
+    // same `Anna win!` answer on the `vote_input_Anna` fixture.
     Gate("vote_winner",
-      (s, d) => Workloads.condorcetWins(Workloads.ballotsFromEvents(s, d))
-        .limit(1)
-        .select(concat(col("winner"), lit(" win!")).as("line")),
+      (s, d) => Workloads.winnerLine(
+        Workloads.condorcetWins(Workloads.ballotsFromEvents(s, d))),
       """WITH counted AS (
            SELECT user_id, event_type, count(*) AS n
            FROM events GROUP BY user_id, event_type),

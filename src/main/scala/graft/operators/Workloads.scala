@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * as native Spark plans, each in two forms:
   *
   *  - a generic form over any input DataFrame (used by ScalaTest against the
-  *    reference's own checked-in fixtures under /root/reference/mj_exe), and
+  *    reference's `mj_exe/` fixtures, FIXTURES.md §A), and
   *  - a testdata form over the driver's parquet tables (used by the DuckDB
   *    oracle gate; the mapping follows FIXTURES.md §B — wordcount over
   *    documents.text, the interval join over events value-ranges).
@@ -148,6 +148,13 @@ object Workloads {
     winners.groupBy(col("winner")).agg(count(lit(1)).as("wins"))
       .orderBy(col("wins").desc, col("winner"))
   }
+
+  /** The reference's single output line, `<candidate> win!`
+    * (`mj_exe/juice_vote_two.go:17-23` prints only the argmax): the first
+    * row of a [[condorcetWins]] table, as one `line` column.
+    */
+  def winnerLine(wins: DataFrame): DataFrame =
+    wins.limit(1).select(concat(col("winner"), lit(" win!")).as("line"))
 
   /** Ballots derived deterministically from the events table: each user's
     * top-3 event types by frequency (ties broken by type name) form their

@@ -14,7 +14,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
   private lazy val cli = new Cli.Handler(spark, whDir)
 
   test("put / store / ls / get round-trip preserves bytes") {
-    val src = "/root/reference/mj_exe/wc_simple_input"
+    val src = RefFixture.path("wc_simple_input")
     assert(cli.execute(s"put $src wc_in").startsWith("put"))
     assert(cli.execute("store").linesIterator.contains("wc_in"))
     assert(cli.execute("ls wc_in").contains("wc_in"))
@@ -36,7 +36,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("maple + juice wordcount pipeline over external executables") {
-    cli.execute(s"put /root/reference/mj_exe/wc_simple_input wc_in")
+    cli.execute(s"put ${RefFixture.path("wc_simple_input")} wc_in")
     val mapleExe = exe("""awk '{for (i = 1; i <= NF; i++) print $i, 1}'""")
     val juiceExe = exe("""awk '{k = $1; s += $2} END {if (k != "") print k, s}'""")
     val m = cli.execute(s"maple $mapleExe 3 wc wc_in")
@@ -51,7 +51,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     val got = scala.io.Source.fromFile(out).getLines().filter(_.nonEmpty).map { l =>
       val Array(w, c) = l.split(" "); w -> c.toInt
     }.toMap
-    val srcLines = scala.io.Source.fromFile("/root/reference/mj_exe/wc_simple_input")
+    val srcLines = scala.io.Source.fromFile(RefFixture.path("wc_simple_input"))
     val expect = srcLines.getLines().flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
       .toSeq.groupBy(identity).map { case (w, ws) => w -> ws.size }
     srcLines.close()
@@ -66,7 +66,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     * vote_input_Anna ⇒ "Anna win!".
     */
   test("two-stage vote pipeline: vote_input_Anna elects Anna") {
-    cli.execute("put /root/reference/mj_exe/vote_input_Anna vote_in")
+    cli.execute(s"put ${RefFixture.path("vote_input_Anna")} vote_in")
     // stage 1 map (mj_exe/maple_vote.go): 3 pairs per ballot, key min,max
     val m1 = exe(
       """awk '{ for (i = 1; i <= 2; i++) for (j = i + 1; j <= 3; j++) {
@@ -96,7 +96,7 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("delete removes from the namespace; members/id report topology") {
-    cli.execute(s"put /root/reference/mj_exe/wc_simple_input doomed")
+    cli.execute(s"put ${RefFixture.path("wc_simple_input")} doomed")
     assert(cli.execute("delete doomed") === "deleted doomed")
     assert(!cli.execute("store").linesIterator.contains("doomed"))
     assert(cli.execute("members").nonEmpty)

@@ -1,16 +1,16 @@
 package graft.operators
 
-import graft.SparkTestSession
+import graft.{RefFixture, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The MapleJuice dataflow surface (SURVEY §2.1), both tiers, against the
-  * reference's own checked-in fixture `mj_exe/wc_simple_input`. All
+  * reference's fixture `mj_exe/wc_simple_input` ([[RefFixture]]). All
   * comparisons are multisets — the reference's shuffle merge is
   * order-nondeterministic (`file_system/file_system.go:1017-1021`).
   */
 class MapleJuiceSpec extends AnyFunSuite with SparkTestSession {
 
-  private val fixture = "/root/reference/mj_exe/wc_simple_input"
+  private val fixture = RefFixture.path("wc_simple_input")
 
   /** Independent in-memory oracle: wordcount of the fixture. */
   private lazy val expected: Map[String, Int] = {

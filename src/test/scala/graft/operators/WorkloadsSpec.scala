@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.SparkTestSession
+import graft.{RefFixture, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Reference workloads A/B/C (SURVEY §2.3) against the reference's own
-  * fixtures and crafted known-answer inputs.
+/** Reference workloads A/B/C (SURVEY §2.3) against the reference's
+  * fixtures ([[RefFixture]]) and crafted known-answer inputs.
   */
 class WorkloadsSpec extends AnyFunSuite with SparkTestSession {
 
@@ -34,21 +34,19 @@ class WorkloadsSpec extends AnyFunSuite with SparkTestSession {
 
   test("vote_input_Anna: Anna wins (the reference's known-answer fixture)") {
     val wins = Workloads.condorcetWins(
-      ballotsFromFile("/root/reference/mj_exe/vote_input_Anna"))
+      ballotsFromFile(RefFixture.path("vote_input_Anna")))
     assert(wins.head().getString(0) === "Anna")
   }
 
   test("voteWinner formats the reference's single output line (juice_vote_two.go)") {
     import spark.implicits._
-    val wins = Workloads.condorcetWins(
-      ballotsFromFile("/root/reference/mj_exe/vote_input_Anna"))
-      .limit(1)
-      .select(concat(col("winner"), lit(" win!")).as("line"))
+    val wins = Workloads.winnerLine(Workloads.condorcetWins(
+      ballotsFromFile(RefFixture.path("vote_input_Anna"))))
     assert(wins.as[String].head() === "Anna win!")
   }
 
   test("condorcet is invariant under ballot permutation") {
-    val ballots = ballotsFromFile("/root/reference/mj_exe/vote_input_Anna")
+    val ballots = ballotsFromFile(RefFixture.path("vote_input_Anna"))
     val shuffled = ballots.orderBy(rand(seed = 7))
     val a = Workloads.condorcetWins(ballots).collect().toSeq
     val b = Workloads.condorcetWins(shuffled).collect().toSeq
@@ -56,8 +54,8 @@ class WorkloadsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("largest reference workload: 21,855 ballots → 65,565 pairs (BASELINE.md)") {
-    val ballots = ballotsFromFile("/root/reference/mj_exe/vote_input")
-    val src = scala.io.Source.fromFile("/root/reference/mj_exe/vote_input")
+    val ballots = ballotsFromFile(RefFixture.path("vote_input"))
+    val src = scala.io.Source.fromFile(RefFixture.path("vote_input"))
     val expected = try src.getLines().count(_.trim.split("\\s+").length == 3)
       finally src.close()
     assert(ballots.count() === expected.toLong) // ~21,855 (BASELINE.md)
