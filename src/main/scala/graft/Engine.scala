@@ -16,11 +16,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Engine {
 
-  /** Build a local session tuned for the harness (local[32], 128 GiB box).
+  /** Build a local session on `cpus` cores (`local[cpus]`, with as many
+    * shuffle partitions). The mains get `cpus` from [[Harness.session]].
     * On a real cluster these settings come from spark-submit; only the
     * SQL-level ones (AQE, shuffle partitions) matter for plan shape.
     */
-  def session(cpus: Int = 32, appName: String = "graft"): SparkSession = {
+  def session(cpus: Int, appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

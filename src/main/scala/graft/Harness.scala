@@ -77,11 +77,17 @@ object Harness {
     * working tree has uncommitted changes, so a number can never
     * masquerade as a clean-SHA measurement; "unknown" outside git.
     */
-  def commit: String = try {
-    val sha = scala.sys.process.Process(
-      Seq("git", "rev-parse", "--short", "HEAD")).!!.trim
-    val dirty = scala.sys.process.Process(
-      Seq("git", "status", "--porcelain")).!!.trim.nonEmpty
-    if (dirty) sha + "-dirty" else sha
+  def commit: String = commitIn(new java.io.File("."))
+
+  /** [[commit]] of the work tree holding `dir`. Git's stderr is
+    * swallowed: outside a work tree its complaint is what "unknown"
+    * already says.
+    */
+  private[graft] def commitIn(dir: java.io.File): String = try {
+    val quiet = scala.sys.process.ProcessLogger(_ => ())
+    def git(args: String*): String =
+      scala.sys.process.Process("git" +: args, dir).!!(quiet).trim
+    val sha = git("rev-parse", "--short", "HEAD")
+    if (git("status", "--porcelain").nonEmpty) sha + "-dirty" else sha
   } catch { case scala.util.control.NonFatal(_) => "unknown" }
 }

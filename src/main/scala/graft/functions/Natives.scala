@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
 /** The one registrar of the native SQL functions: one row per SQL name,
   * injected by [[register]] through the public extensions API (Spark 4
   * has no public Column↔Expression bridge, so the kernels' Column entry
-  * points — `fnv1a64(c)`, `vecDot(a, b)`, … — resolve by name through
+  * points — `vecDot(a, b)`, `normText(c)`, … — resolve by name through
   * the session's function registry).
   *
   * [[graft.Engine.session]] installs it; any externally built session
@@ -71,7 +71,6 @@ object Natives {
     }),
     Native("bloom_might_contain", classOf[BloomFilterMightContain], 2 to 2,
       a => BloomFilterMightContain(a(0), a(1))),
-    Native("fnv1a64", classOf[Fnv1a64], 1 to 1, a => Fnv1a64(a(0))),
     Native("hilbert_xy2d", classOf[HilbertIdx], 3 to 3,
       a => HilbertIdx(a(0), a(1), a.int(2, "bits"))),
     Native("lsh_bands", classOf[LshBandHashes], 3 to 3,

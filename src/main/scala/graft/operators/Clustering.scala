@@ -308,21 +308,6 @@ object Clustering {
       tau: Double = SemDedupTau): DataFrame =
     semDedupWith(vecs, fixedCentroids(k), tau)
 
-  /** Production SemDeDup: the same within-cluster prune, but clustered
-    * by [[kmeans]]-trained centroids instead of the fixed gate grid —
-    * data-adapted clusters make the per-cluster pair sets tighter (real
-    * near-dups co-cluster, unrelated vectors don't), which is the
-    * configuration the paper evaluates. Stays rows-only territory (the
-    * trainer's float centroid sums are partition-order-dependent, same
-    * declaration as `kmeans_assign`); the pruning stage itself is the
-    * gate-proven [[semDedup]] code path.
-    */
-  def semDedupTrained(vecs: DataFrame, k: Int = 16, iters: Int = 3,
-      tau: Double = SemDedupTau): DataFrame = {
-    val (_, cents) = kmeans(vecs, k = k, iters = iters)
-    semDedupWith(vecs, cents.toIndexedSeq, tau)
-  }
-
   /** Salt-bucket fan-out for the within-cluster dominance scan: each
     * cluster's candidate set splits across this many independent
     * groups, so a duplicate-heavy cluster never serializes into one
@@ -341,8 +326,7 @@ object Clustering {
   final case class SemVec(vec_id: Long, cluster: Int, bucket: Int,
       probe: Boolean, embedding: Array[Float], norm: Double)
 
-  /** [[semDedup]] against caller-supplied centroids (shared by the fixed
-    * gate entry and [[semDedupTrained]]).
+  /** [[semDedup]]'s body, against the given centroids.
     *
     * The within-cluster dominance test runs as a per-(cluster, bucket)
     * `mapGroups` kernel rather than a self-join: the join formulation

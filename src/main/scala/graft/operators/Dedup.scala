@@ -635,83 +635,6 @@ object Dedup {
     verifiedPairs(candidates, sh, tNum.toDouble / tDen)
   }
 
-  /** Best rational approximation of `t` with denominator ≤ `maxDen`,
-    * by continued-fraction convergents. Exact for every decimal-literal
-    * threshold a caller would write (0.8 → 4/5, 0.85 → 17/20,
-    * 0.9 → 9/10): the double nearest such a literal has the literal as
-    * its best small-denominator rational. Backs the deprecated
-    * `threshold: Double` compatibility overloads below.
-    */
-  private[graft] def toRational(t: Double, maxDen: Long = 1000000L): (Long, Long) = {
-    require(t > 0.0 && t <= 1.0, s"threshold must be in (0, 1], got $t")
-    var (p0, q0, p1, q1) = (0L, 1L, 1L, 0L) // convergents h₋₂/k₋₂ = 0/1, h₋₁/k₋₁ = 1/0
-    var x = t
-    var done = false
-    while (!done) {
-      val a = math.floor(x).toLong
-      val p2 = a * p1 + p0
-      val q2 = a * q1 + q0
-      if (q2 > maxDen) done = true
-      else {
-        p0 = p1; q0 = q1; p1 = p2; q1 = q2
-        val frac = x - a
-        if (frac < 1e-12) done = true else x = 1.0 / frac
-      }
-    }
-    (p1, q1)
-  }
-
-  // ---- Deprecated Double-threshold compatibility overloads -------------
-  // The r13 rational-threshold change (`threshold: Double` → `tNum/tDen`,
-  // motivated in [[jaccardPairsPrefix]]'s scaladoc: exact integer prefix
-  // bounds, no double-ceil boundary bugs) broke external Double callers.
-  // These shims convert through [[toRational]] and delegate; internal
-  // code and the gated entries use the rational forms directly.
-
-  @deprecated("thresholds are rationals now (exact prefix arithmetic); " +
-    "use jaccardPairsPrefix(docs, tNum, tDen, n) — this overload converts " +
-    "via the nearest rational", "0.1.0")
-  def jaccardPairsPrefix(docs: DataFrame, threshold: Double, n: Int): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    jaccardPairsPrefix(docs, tn, td, n)
-  }
-
-  @deprecated("thresholds are rationals now; use clusters(docs, tNum, tDen)",
-    "0.1.0")
-  def clusters(docs: DataFrame, threshold: Double): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    clusters(docs, tn, td)
-  }
-
-  @deprecated("thresholds are rationals now; use survivors(docs, tNum, tDen)",
-    "0.1.0")
-  def survivors(docs: DataFrame, threshold: Double): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    survivors(docs, tn, td)
-  }
-
-  @deprecated("thresholds are rationals now; use softDedupWeights(docs, tNum, tDen)",
-    "0.1.0")
-  def softDedupWeights(docs: DataFrame, threshold: Double): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    softDedupWeights(docs, tn, td)
-  }
-
-  @deprecated("thresholds are rationals now; use dupCurve(docs, tNum, tDen)",
-    "0.1.0")
-  def dupCurve(docs: DataFrame, threshold: Double): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    dupCurve(docs, tn, td)
-  }
-
-  @deprecated("thresholds are rationals now; use splitLeakAudit(docs, " +
-    "weights, names, tNum, tDen, salt)", "0.1.0")
-  def splitLeakAudit(docs: DataFrame, weights: Seq[Double],
-      names: Seq[String], threshold: Double): DataFrame = {
-    val (tn, td) = toRational(threshold)
-    splitLeakAudit(docs, weights, names, tn, td)
-  }
-
   /** One-sided CONTAINMENT near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
     * — the asymmetric-duplication detector Jaccard structurally misses.
     * A short doc fully quoted inside a much longer one (snippet inside

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * NO global sort (a range-partitioned sort would also work and give
   * balanced file sizes, but needs sampled boundaries; fixed-width cells
   * keep the rule deterministic and engine-portable, the same trade
-  * `sentenceChunks` makes). The stats rollup is one ordinary aggregation
+  * `sentenceChunksFrom` makes). The stats rollup is one ordinary aggregation
   * on file_id. A real writer would follow with
   * `repartition(file_id).write` — the assignment column IS the shuffle
   * key, so co-locating rows into their files is one exchange.

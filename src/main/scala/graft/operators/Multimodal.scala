@@ -148,31 +148,12 @@ object Multimodal {
           .as("frame_idx"))
       .orderBy(col("doc_id"), col("frame_idx"))
 
-  /** Feature extraction: blob → unit-norm Array[Float] embedding via the
-    * stub pixel decode, again `mapPartitions`-batched. Output schema is
-    * exactly the `embeddings` table shape, so every [[Similarity]]
-    * operator composes downstream (media near-dup = this + cosine LSH).
-    */
-  def extractFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("embedding", ArrayType(FloatType, containsNull = false))))
-    val enc = RowEncoder.encoderFor(schema)
-    blobs(spark, dir).select("doc_id", "blob")
-      .mapPartitions { rows =>
-        rows.map { r =>
-          Row(r.getLong(0), FakeCodec.decodePixels(r.getAs[Array[Byte]]("blob"), 0).toSeq)
-        }
-      }(enc)
-      .orderBy(col("doc_id"))
-  }
-
   /** Byte-histogram feature vectors from (id, blob) rows — the INTEGER
     * half of the stub encoder as floats: 64 exact counts
     * ([[FakeCodec.decodeCounts]], frame 0), each < 2^24 so the float
     * cast is value-preserving and every downstream double product is
     * exact integer arithmetic any engine replays (unlike
-    * [[extractFeatures]]' float-DIVIDED embedding, which is why the
+    * [[extractFeaturesAudit]]'s float-DIVIDED embedding, which is why the
     * cross-modal gate retrieves over counts, not normalized floats).
     * Same mapPartitions batch shape as every decode path here.
     */
@@ -221,7 +202,9 @@ object Multimodal {
     Similarity.ivfXModalTrainedTopK(corpus, queries, k, cells, nProbe, iters)
   }
 
-  /** [[extractFeatures]] with its value-level audit columns: the same
+  /** Feature extraction with value-level audit columns: blob → unit-norm
+    * Array[Float] embedding via the stub pixel decode (`doc_id` and
+    * `embedding` have the `embeddings` table's types). The same
     * per-blob [[FakeCodec]] decode also emits the EXACT integer
     * histogram the embedding was normalized from, rolled up in-plan to
     * `hist_sq = Σcᵢ²` (a BIGINT — the squared norm in count units) and
@@ -231,9 +214,9 @@ object Multimodal {
     * the text bytes — while the Float-normalized `embedding` itself is
     * Float-division arithmetic no cross-engine gate should promise
     * bit-equality on; its tie to the histogram (`embedding = counts /
-    * √hist_sq`, unit norm) is ScalaTest-pinned (MultimodalSpec). Same
-    * scale shape as extractFeatures: one scan-stage mapPartitions, no
-    * shuffle, blobs never leave the executor.
+    * √hist_sq`, unit norm) is ScalaTest-pinned (MultimodalSpec). Scale
+    * shape: one scan-stage mapPartitions, no shuffle, blobs never leave
+    * the executor.
     */
   def extractFeaturesAudit(spark: SparkSession, dir: String): DataFrame = {
     val schema = StructType(Seq(

@@ -3,34 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Trainable document-quality filter — the learned counterpart of the
+/** Logistic document-quality filter — the learned counterpart of the
   * heuristic [[TextAnalysis.qualityScore]]: a logistic model over cheap
   * per-doc text features, the CCNet/fastText-style "quality classifier"
   * every large-scale pretraining pipeline runs between crawl ingest and
   * sampling (the reference has nothing of the kind; pipeline extension in
   * the SURVEY §7.2-M6 family).
   *
-  * Two halves, mirroring the k-means split ([[Clustering]]):
-  *
-  *  - [[logitScore]] — the INFERENCE path, gated: score every doc with a
-  *    fixed weight vector. Features and the linear score are scan-fused
-  *    scalar expressions (zero shuffles, the filter-cascade shape); the
-  *    gate compares the 6-decimal score, the 4-decimal probability and
-  *    the keep decision against DuckDB computing the same arithmetic.
-  *  - [[logitTrain]] — the TRAINER, spec-verified: distributed batch
-  *    gradient descent. Each iteration is ONE aggregate over the feature
-  *    table (4 partial-agg sums crossing the wire per partition); the
-  *    weight vector (4 doubles) lives driver-side by construction, like
-  *    the k×dim k-means centroids. Gradient float-sum order is
-  *    partition-dependent, so the trainer is deliberately not oracle-
-  *    gated (the same declared reason `kmeans_assign` is rows-only);
-  *    QualityModelSpec pins convergence and accuracy on planted
-  *    separable data instead.
+  * [[logitScore]] is the gated INFERENCE path: score every doc with a
+  * fixed weight vector. Features and the linear score are scan-fused
+  * scalar expressions (zero shuffles, the filter-cascade shape); the gate
+  * compares the 6-decimal score, the 4-decimal probability and the keep
+  * decision against DuckDB computing the same arithmetic.
   *
   * 100 TB shape: inference is embarrassingly parallel (no shuffle at
-  * all); training cost is iterations × one corpus scan of 3 doubles per
-  * row — and the feature table it scans is the materialized-once output
-  * of [[features]], not the raw text.
+  * all).
   */
 object QualityModel {
 
@@ -266,31 +253,5 @@ object QualityModel {
         (col("po_micro") - col("pe_micro")).as("kappa_num"),
         (lit(1000000L) - col("pe_micro")).as("kappa_den"))
       .orderBy(col("lf_a"), col("lf_b"))
-  }
-
-  /** Batch gradient descent on the logistic loss. `feats` must carry
-    * f1/f2/f3 and a 0/1 `labelCol`. Returns the learned
-    * (bias, w1, w2, w3). One aggregate job per iteration; nothing but
-    * the 4-double gradient ever reaches the driver.
-    */
-  def logitTrain(feats: DataFrame, labelCol: String, iters: Int = 50,
-      lr: Double = 1.0): Array[Double] = {
-    var w = Array.fill(4)(0.0)
-    val cached = feats.select(col("f1"), col("f2"), col("f3"),
-      col(labelCol).cast("double").as("y")).cache()
-    // counting the CACHED projection materializes the cache and sizes n
-    // in the same single pass — no separate uncached scan
-    val n = cached.count().toDouble
-    try {
-      for (_ <- 0 until iters) {
-        val err = (lit(1.0) / (lit(1.0) + exp(-linear(w)))) - col("y")
-        val g = cached.agg(
-          sum(err).as("g0"), sum(err * col("f1")).as("g1"),
-          sum(err * col("f2")).as("g2"), sum(err * col("f3")).as("g3"))
-          .head()
-        w = Array.tabulate(4)(i => w(i) - lr * g.getDouble(i) / n)
-      }
-      w
-    } finally cached.unpersist()
   }
 }

@@ -79,30 +79,26 @@ object Sentences {
       .withColumn("n_tokens",
         size(split(col("sentence"), "\\s+")).cast("long"))
 
-  /** Sentence-level exact dedup decision table: every sentence keeps or
-    * drops by first-occurrence ((doc_id, sent_id) order) of its
-    * NORMALIZED form (lowercase, terminal punctuation stripped). The
-    * decision is an aggregate on the full-128-bit md5 of the normalized
-    * sentence (the repo's text-identity standard) followed by a
-    * digest-keyed join — partial aggregation absorbs boilerplate
-    * sentences repeated across millions of documents, where a
-    * sentence-partitioned window would hot-spot.
-    */
-  def sentenceDedup(docs: DataFrame): DataFrame =
-    // The segmented table feeds BOTH sides of the decision (the first-
-    // occurrence aggregate and the probe join), and the two consumers
-    // shuffle on h at different plan depths, so Catalyst/AQE cannot reuse
-    // one exchange — without materialization the synthesis + segmentation
-    // subtree executes twice (measured as two full passes in the 10×
-    // stress). Materialize it once — the same stored-intermediate policy
-    // as the PQ code index and the PageRank edge list; a production
-    // pipeline would land this table in the lake as its own ETL stage.
-    sentenceDedupFrom(sentenceSegment(docs).localCheckpoint())
-
-  /** [[sentenceDedup]] over an ALREADY-MATERIALIZED segmented table
-    * ([[sentenceSegment]] output): the two digest consumers re-derive
-    * the scalar norm/md5 columns from the materialized rows — cheaper
-    * than materializing a second, wider copy.
+  /** Sentence-level exact dedup decision table over a segmented table
+    * ([[sentenceSegment]] output): every sentence keeps or drops by
+    * first-occurrence ((doc_id, sent_id) order) of its NORMALIZED form
+    * (lowercase, terminal punctuation stripped). The decision is an
+    * aggregate on the full-128-bit md5 of the normalized sentence (the
+    * repo's text-identity standard) followed by a digest-keyed join —
+    * partial aggregation absorbs boilerplate sentences repeated across
+    * millions of documents, where a sentence-partitioned window would
+    * hot-spot.
+    *
+    * The segmented table feeds BOTH sides of the decision (the
+    * first-occurrence aggregate and the probe join), and the two
+    * consumers shuffle on h at different plan depths, so Catalyst/AQE
+    * cannot reuse one exchange: an unmaterialized input runs synthesis +
+    * segmentation twice (measured as two full passes in the 10× stress).
+    * Pass a materialized table — the stored-intermediate policy of the
+    * PQ code index and the PageRank edge list; a production pipeline
+    * lands it in the lake as its own ETL stage. The two digest consumers
+    * re-derive the scalar norm/md5 columns from the materialized rows —
+    * cheaper than materializing a second, wider copy.
     */
   def sentenceDedupFrom(segmented: DataFrame): DataFrame = {
     val sents = segmented
@@ -121,7 +117,8 @@ object Sentences {
   /** Default token budget for the gated sentence-chunking entry. */
   val ChunkBudget = 32L
 
-  /** Sentence-preserving chunking: consecutive sentences pack into
+  /** Sentence-preserving chunking of a segmented table
+    * ([[sentenceSegment]] output): consecutive sentences pack into
     * chunks of ~`budget` tokens; a sentence belongs to the chunk its
     * START offset falls in (chunk_id = tokens-before div budget), so no
     * sentence is ever split — a chunk may overflow by at most one
@@ -135,13 +132,6 @@ object Sentences {
     *
     * Windows partition by doc_id (balanced); the rollup is an ordinary
     * groupBy. Output rows = chunks, ~corpus_tokens/budget.
-    */
-  def sentenceChunks(docs: DataFrame, budget: Long = ChunkBudget): DataFrame =
-    sentenceChunksFrom(sentenceSegment(docs), budget)
-
-  /** [[sentenceChunks]] over a pre-segmented table — the chunking plan
-    * itself is single-consumer, so this variant exists for callers that
-    * already hold the materialized segmentation.
     */
   def sentenceChunksFrom(segmented: DataFrame,
       budget: Long = ChunkBudget): DataFrame = {
@@ -166,7 +156,7 @@ object Sentences {
 
   /** Session-shared segmented table for the gated family: segmentation
     * is ONE landed ETL stage in a production pipeline (the
-    * stored-intermediate policy [[sentenceDedup]] documents), and the
+    * stored-intermediate policy [[sentenceDedupFrom]] documents), and the
     * dedup and chunking reports both read it — so the gated entries
     * share one [[PlanCache]]-materialized segmentation per corpus
     * instead of re-running synthesis + segmentation per report. The

@@ -11,38 +11,12 @@ import org.apache.spark.sql.functions._
   * The reference's stage-2 Condorcet job funnels ALL data through one key
   * (`mj_exe/maple_vote_two.go:10-21` prefixes every line with "1") — the
   * canonical skew pathology: one reducer does the whole job. Catalyst's
-  * partial aggregation already defuses that for algebraic aggregates;
-  * [[saltedAgg]] is the general two-phase form for when a grouping key's
-  * value distribution is pathological and the aggregate is algebraic
-  * (sum/count/min/max — anything with a merge step).
+  * partial aggregation already defuses that for algebraic aggregates,
+  * and the gated two-phase salted form is [[Analytics.skewSaltedAgg]].
+  * What is left here is the skewed join ([[skewSplitJoin]]) and the
+  * repeated fact-fact join ([[bucketize]]).
   */
 object Skew {
-
-  /** Two-phase salted sum-aggregation: phase 1 groups on
-    * (key, salt = row-position mod saltBuckets) so a hot key's rows spread
-    * over `saltBuckets` reducers; phase 2 merges the per-salt partials.
-    * Output is identical to `df.groupBy(keys).agg(sum...)` — the salt is
-    * internal, and because it cancels in phase 2 its assignment needs no
-    * cross-run stability (a content hash would collapse IDENTICAL
-    * duplicate rows of the hot key into one salt bucket — exactly the
-    * constant-key count/sum workload the salt exists for). The positional
-    * salt is a nondeterministic expression, so its map stage is
-    * INDETERMINATE: on a fetch failure Spark rolls the whole stage back
-    * and re-runs it (SPARK-23243) rather than mixing attempts —
-    * correctness holds, at the cost of wider retries. Use when AQE skew
-    * handling isn't enough (e.g. a single key holding >10% of rows).
-    */
-  def saltedSum(df: DataFrame, keys: Seq[String], valueCol: String,
-      saltBuckets: Int = 32): DataFrame = {
-    val keyCols = keys.map(col)
-    val salted = df.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(saltBuckets.toLong)))
-    salted
-      .groupBy(keyCols :+ col("__salt"): _*)
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(keyCols: _*)
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"))
-  }
 
   /** Broadcast the heavy hitters, shuffle the rest: split a join on
     * whether the left key is in `hotKeys` (a small driver-known set),
@@ -174,8 +148,8 @@ object Skew {
     * reads co-partitioned buckets — the scan's HashPartitioning(key)
     * satisfies BOTH the join and the groupBy distribution, so the whole
     * query plans without a single hash exchange (only the presentation
-    * range-sort shuffles; BucketJoinSpec pins the exchange-free property
-    * with broadcast disabled, the fact-fact regime). The write pays the
+    * range-sort shuffles; SkewSpec's "bucket_join gate: no hash exchange
+    * anywhere…" pins the exchange-free property). The write pays the
     * one shuffle-equivalent pass that every later join on the key skips
     * — the standard layout investment for a fact table joined
     * repeatedly across a pipeline. Grouping keys come from the BUCKETED

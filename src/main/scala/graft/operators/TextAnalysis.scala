@@ -1,17 +1,17 @@
 package graft.operators
 
 import graft.Engine.Tables
-import graft.functions.Fnv1a64.fnv1a64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over `documents` — language ID, quality
   * scoring, token counting, fingerprinting (pipeline extensions,
-  * SURVEY.md §7.2-M6). Everything except the fingerprint is built from
-  * codegen'd built-ins so the whole stage fuses; the fingerprint is a
-  * native Catalyst expression ([[graft.functions.Fnv1a64]]) with its own
-  * doGenCode — still zero UDFs.
+  * SURVEY.md §7.2-M6). Everything is built from codegen'd built-ins so
+  * the whole stage fuses, except winnowing and text normalization, which
+  * are native Catalyst expressions ([[graft.functions.WinnowFps]],
+  * [[graft.functions.NormText]]) with their own doGenCode — still zero
+  * UDFs.
   */
 object TextAnalysis {
 
@@ -146,8 +146,7 @@ object TextAnalysis {
     * fingerprint) and over the sorted token multiset (order-insensitive
     * "bag fingerprint" — catches shuffled near-copies). Both digests are
     * engine-portable ([[md5_60]]), so the driver hash-compares them
-    * against DuckDB bit-for-bit. [[fnvFingerprint]] is the custom-codegen
-    * variant of the same query.
+    * against DuckDB bit-for-bit.
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).documents
@@ -155,21 +154,6 @@ object TextAnalysis {
         col("doc_id"),
         md5_60(col("text")).as("fp"),
         md5_60(concat_ws(" ", sort_array(split(trim(col("text")), "\\s+")))).as("bag_fp"))
-      .orderBy(col("doc_id"))
-
-  /** FNV-1a 64 fingerprint — same shape as [[fingerprint]] but through the
-    * native codegen expression [[graft.functions.Fnv1a64]] (one fused
-    * 8-byte-at-a-time pass, ~3× cheaper than md5's block cipher — the
-    * production choice when the digest never leaves Spark). No DuckDB
-    * oracle (FNV needs byte access DuckDB lacks); verified by ScalaTest
-    * against an independent Scala implementation.
-    */
-  def fnvFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents
-      .select(
-        col("doc_id"),
-        fnv1a64(col("text")).as("fp"),
-        fnv1a64(concat_ws(" ", sort_array(split(trim(col("text")), "\\s+")))).as("bag_fp"))
       .orderBy(col("doc_id"))
 
   /** Winnowing fingerprints (the MOSS scheme): hash every k-char gram,
@@ -591,25 +575,6 @@ object TextAnalysis {
       .orderBy(col("rk"))
   }
 
-  /** Full BPE trainer (Sennrich et al. 2016): `nMerges` rounds of
-    * count-top-pair-then-merge, returning the learned merge list in
-    * order. Gating stays on the single-iteration [[bpePairCounts]] (an
-    * n-round trainer has no closed-form SQL oracle — same split as the
-    * k-means trainer vs [[Clustering.kmeansFixedAssign]]); the loop is
-    * ScalaTest-verified against a sequential in-memory reference. This
-    * strict-sequential spelling is the semantic oracle; a production
-    * 32k-merge vocab runs [[bpeTrainBatched]], which compresses the
-    * one-job-per-merge pacing to one job per `batch` merges.
-    *
-    * Scale shape: the corpus is scanned ONCE (word count); every merge
-    * round runs on the DISTINCT word table — vocabulary-sized, millions
-    * of rows where the corpus has trillions of tokens — and ships one
-    * (pair, count) row to the driver. The merge itself is a higher-order
-    * left fold over each word's symbol array (greedy leftmost,
-    * non-overlapping — "aaa" + (a,a) → [aa, a]); interpreted HOF cost is
-    * fine off the corpus path. Lineage is cut with localCheckpoint every
-    * few rounds so round N's plan doesn't embed N−1 fold expressions.
-    */
   /** One BPE merge applied to a symbol array: every left-to-right
     * adjacent (a, b) pair collapses to the merged symbol — a single
     * in-row fold, shared by the trainer loop and [[bpeEncode]] so the
@@ -623,6 +588,23 @@ object TextAnalysis {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
         .otherwise(concat(acc, array(s))))
 
+  /** Full BPE trainer (Sennrich et al. 2016): `nMerges` rounds of
+    * count-top-pair-then-merge, returning the learned merge list in
+    * order. Gating stays on the single-iteration [[bpePairCounts]] (an
+    * n-round trainer has no closed-form SQL oracle — same split as the
+    * k-means trainer vs [[Clustering.kmeansFixedAssign]]); the loop is
+    * ScalaTest-verified against a sequential in-memory reference. It
+    * runs one driver-paced job per merge.
+    *
+    * Scale shape: the corpus is scanned ONCE (word count); every merge
+    * round runs on the DISTINCT word table — vocabulary-sized, millions
+    * of rows where the corpus has trillions of tokens — and ships one
+    * (pair, count) row to the driver. The merge itself is a higher-order
+    * left fold over each word's symbol array (greedy leftmost,
+    * non-overlapping — "aaa" + (a,a) → [aa, a]); interpreted HOF cost is
+    * fine off the corpus path. Lineage is cut with localCheckpoint every
+    * few rounds so round N's plan doesn't embed N−1 fold expressions.
+    */
   def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(String, String, Long)] = {
     require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
     var words = docs
@@ -653,87 +635,6 @@ object TextAnalysis {
       }
     }
     merges.toSeq
-  }
-
-  /** Result of [[bpeTrainBatched]]: the learned merges in application
-    * order plus the number of driver-paced Spark rounds the loop took —
-    * the quantity the batching exists to compress (one count job per
-    * ROUND, not per merge).
-    */
-  final case class BpeBatchedResult(merges: Seq[(String, String, Long)],
-      rounds: Int)
-
-  /** Batched BPE trainer — the 32k-vocab scale path [[bpeTrain]]'s
-    * scaladoc owes: instead of one driver-paced Spark job per merge, each
-    * round counts pairs ONCE, pulls the top `batch * poolFactor`
-    * candidates (TakeOrdered — no global sort), and greedily accepts up
-    * to `batch` pairs whose symbol supports are PAIRWISE DISJOINT, all
-    * applied in one chained fold. Disjointness is what makes the batch
-    * honest: merging (a, b) only perturbs counts of pairs touching `a`
-    * or `b`, so every accepted pair's count — and the relative order the
-    * selection used — is still exact at its own apply time, and in-round
-    * apply order is irrelevant. This is the classic batched-BPE
-    * approximation (production trainers ship it): it can diverge from
-    * strict sequential BPE only when a merge would have PROMOTED a new
-    * pair (containing the just-merged symbol) above the batch's
-    * remaining picks — at `batch = 1` the loop IS sequential BPE
-    * (spec-pinned). Recorded counts are the pre-round counts the
-    * selection saw.
-    *
-    * Scale shape: a 32k-merge vocab at `batch = 256` is ~125 count jobs
-    * over the vocabulary-sized distinct-word table instead of 32k; the
-    * corpus is still touched exactly once (the initial word count).
-    * Lineage is cut with one localCheckpoint per round (each round
-    * stacks `batch` fold expressions).
-    */
-  def bpeTrainBatched(docs: DataFrame, nMerges: Int, batch: Int = 8,
-      poolFactor: Int = 8): BpeBatchedResult = {
-    require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
-    require(batch >= 1, s"need batch >= 1, got $batch")
-    require(poolFactor >= 1, s"need poolFactor >= 1, got $poolFactor")
-    var words = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("word"))
-      .filter(length(col("word")) >= 1)
-      .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      .select(split(col("word"), "").as("syms"), col("c"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (merges.size < nMerges && !exhausted) {
-      rounds += 1
-      val want = math.min(batch, nMerges - merges.size)
-      val pool = words
-        .filter(size(col("syms")) >= 2)
-        .select(col("c"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] AS a, syms[i] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("c")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(want * poolFactor).collect()
-      if (pool.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val it = pool.iterator
-        while (accepted.size < want && it.hasNext) {
-          val r = it.next()
-          val (a, b) = (r.getString(0), r.getString(1))
-          if (!used(a) && !used(b)) {
-            accepted += ((a, b, r.getLong(2)))
-            used += a
-            used += b
-          }
-        }
-        merges ++= accepted
-        words = accepted
-          .foldLeft(words) { case (df, (a, b, _)) =>
-            df.select(applyMergeExpr(col("syms"), a, b).as("syms"), col("c"))
-          }
-          .localCheckpoint()
-      }
-    }
-    BpeBatchedResult(merges.toSeq, rounds)
   }
 
   /** BPE ENCODE — the tokenizer's apply half: segment every word with a

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The SDFS namespace (SURVEY §2.2 S1-S5), restated for Spark: a flat
@@ -83,173 +83,9 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   def readText(name: String): Dataset[String] = spark.read.textFile(p(name).toString)
 
-  /** Bucketed table: the storage-side answer to repeated joins/aggs on
-    * one key. Writing pre-hash-partitions (and pre-sorts) the rows into
-    * `numBuckets` files per key hash, so every later equi-join or
-    * aggregation on the bucket key between co-bucketed tables plans with
-    * NO Exchange on either side — at 100 TB the shuffle this removes is
-    * the dominant cost of every fact-to-fact join, and it is removed
-    * once at write time instead of paid per query. (The reference's
-    * closest analogue is the FNV key→node placement,
-    * `maple_juice/maple_juice.go:817-849` — same idea: co-locate by key
-    * hash so the reduce needs no further movement.)
-    */
-  def saveBucketed(df: org.apache.spark.sql.DataFrame, name: String,
-      numBuckets: Int, bucketCol: String): Unit =
-    df.write.mode("overwrite")
-      .option("path", p(name).toString)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(name)
-
-  /** Read a bucketed table back (bucket metadata lives in the catalog,
-    * so this goes through the table name, not the path).
-    */
-  def table(name: String): org.apache.spark.sql.DataFrame = spark.table(name)
-
-  /** Hive-style partitioned parquet: directory-per-value layout so a
-    * predicate on the partition column prunes whole directories at plan
-    * time (PartitionFilters) — the scan never opens non-matching files.
-    * The partition column must be low-cardinality (event_type, date):
-    * high-cardinality partitioning produces the classic
-    * millions-of-tiny-files failure at scale.
-    */
-  def savePartitioned(df: org.apache.spark.sql.DataFrame, name: String,
-      partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(p(name).toString)
-
-  def readParquet(name: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(p(name).toString)
-
-  /** CSV with an EXPLICIT schema — never schema inference, which costs an
-    * extra full pass over the data and can silently re-type columns
-    * between runs (fatal to a reproducible 100 TB recipe). Header
-    * written/expected so files stay self-describing for other tools.
-    */
-  def saveCsv(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(p(name).toString)
-
-  /** multiLine: the writer quotes fields containing line breaks (text
-    * corpora routinely have them); without it the reader would split
-    * records mid-field and corrupt the round-trip. Cost: multiLine CSV
-    * parses per-FILE, not per-split — parallelism comes from the many
-    * part files the save wrote, so keep them reasonably sized.
-    */
-  def readCsv(name: String, schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
-    spark.read.schema(schema).option("header", "true")
-      .option("multiLine", "true").csv(p(name).toString)
-
-  /** Fault-tolerant CSV ingest: PERMISSIVE mode with the malformed line
-    * captured whole in `_corrupt_record` instead of either killing the
-    * job (FAILFAST) or silently dropping rows (DROPMALFORMED) — at crawl
-    * scale some rows ARE broken and the pipeline must quarantine them,
-    * not die at hour nine. CAVEAT (Spark restriction since 2.3): a query
-    * that references ONLY `_corrupt_record` from raw CSV (e.g.
-    * `.filter($"_corrupt_record".isNotNull).count()`) throws — project
-    * the data columns alongside it, or `.cache()` the frame first, when
-    * splitting good rows from quarantined ones. The caller's schema gets
-    * the extra string column appended here (skipped if already present,
-    * so a schema captured from a previous permissive read round-trips).
-    */
-  def readCsvPermissive(name: String,
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame = {
-    val withCorrupt =
-      if (schema.fieldNames.contains("_corrupt_record")) schema
-      else schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    spark.read
-      .schema(withCorrupt)
-      .option("header", "true").option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(p(name).toString)
-  }
-
-  /** Parquet read with schema evolution: union the footers of every file
-    * (`mergeSchema`) so a table whose later appends added columns reads
-    * as the superset schema, old files yielding NULL for new columns —
-    * how a long-lived lake table grows fields without rewriting
-    * petabytes. Costs a footer read per file; keep it off (the default
-    * [[readParquet]]) when the schema is known stable.
-    */
-  def readParquetMerged(name: String): org.apache.spark.sql.DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(p(name).toString)
-
-  /** JSON-lines with an explicit schema (same inference prohibition).
-    * Schema'd reads also let Catalyst prune unread fields at the parser —
-    * `ReadSchema` applies to JSON like it does to parquet.
-    */
-  def saveJson(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-    df.write.mode("overwrite").json(p(name).toString)
-
-  def readJson(name: String, schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
-    spark.read.schema(schema).json(p(name).toString)
-
-  /** ORC — the second columnar format after parquet; same pushdown and
-    * pruning behavior (`PushedFilters`/`ReadSchema` both apply), useful
-    * when the surrounding lake is Hive-flavored. Schema travels in the
-    * file footer, so reads need no explicit schema.
-    */
-  def saveOrc(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-    df.write.mode("overwrite").orc(p(name).toString)
-
-  def readOrc(name: String): org.apache.spark.sql.DataFrame =
-    spark.read.orc(p(name).toString)
-
   /** Append-concat text sink (E11 semantics — unordered concatenation). */
   def writeText(ds: Dataset[String], name: String, singleFile: Boolean = false): Unit =
     graft.operators.MapleJuice.writeText(ds, p(name).toString, singleFile)
-
-  /** Small-file compaction — the maintenance pass every long-lived lake
-    * table needs: streaming/incremental appends accumulate thousands of
-    * KB-sized part files, and at scale the NameNode/object-store listing
-    * plus per-file open cost dominates scans. Rewrites the table into
-    * ⌈bytes/targetFileBytes⌉ files via a round-robin repartition (keeps
-    * no ordering promise — parquet row-group stats still prune), staged
-    * into a sibling temp dir then swapped in via two renames (old→backup,
-    * staged→live, delete backup). On HDFS renames are atomic, so a reader
-    * races only the instant between the two renames (retryable
-    * not-found), never a partially written table; on copy-based object
-    * stores the swap degrades to best-effort and every rename result is
-    * checked so a failure surfaces instead of silently dropping the
-    * table. Refuses Hive-partitioned layouts (directory-per-value would
-    * be flattened, silently destroying partition pruning — compact the
-    * leaf directories individually instead). Bucketed tables live in the
-    * session catalog, not this namespace, and are not addressable here.
-    * Returns the new file count.
-    */
-  def compact(name: String, targetFileBytes: Long = 128L << 20): Int = {
-    val path = p(name)
-    val tmp = new Path(path.getParent, s".${path.getName}__compacting")
-    val bak = new Path(path.getParent, s".${path.getName}__precompact")
-    // crash recovery: a previous compact that died between its two renames
-    // (old→backup done, staged→live not) left the ONLY copy of the table
-    // in the hidden backup. Restore it before anything else — this makes
-    // compact crash-recoverable, not just failure-recoverable (a re-run
-    // would otherwise throw at listStatus with the data invisible).
-    if (!fs.exists(path) && fs.exists(bak))
-      require(fs.rename(bak, path),
-        s"compact: could not restore $name from interrupted-compact backup $bak")
-    require(!fs.listStatus(path).exists(s => s.isDirectory && s.getPath.getName.contains("=")),
-      s"$name has a Hive-partitioned layout; compact its partition directories individually")
-    val bytes = fs.getContentSummary(path).getLength
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    fs.delete(tmp, true); fs.delete(bak, true)
-    // mergeSchema: a schema-evolved table (readParquetMerged's contract)
-    // must compact to its SUPERSET schema — a single-footer read could
-    // pick an old file and silently drop later-added columns
-    spark.read.option("mergeSchema", "true").parquet(path.toString)
-      .repartition(parts).write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(path, bak), s"compact: could not stage old $name aside")
-    if (!fs.rename(tmp, path)) { // roll back so the table is never lost
-      fs.rename(bak, path)
-      throw new IllegalStateException(s"compact: swap failed for $name; original restored")
-    }
-    fs.delete(bak, true)
-    parts
-  }
 
   def path(name: String): String = p(name).toString
 }

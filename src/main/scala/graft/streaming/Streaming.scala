@@ -164,20 +164,6 @@ object Streaming {
       .select(col("purchase_id"), col("user_id"), col("purchase_ts"), col("click_ts"))
   }
 
-  /** Streaming exact deduplication on an id column: watermarked
-    * `dropDuplicates`, the ingest-side twin of [[graft.operators.Dedup]] —
-    * duplicate ids arriving within the watermark horizon are dropped
-    * exactly once, and the dedup state is purged as the watermark
-    * advances (bounded memory; an unwatermarked streaming dedup would
-    * grow forever).
-    */
-  def dedupStream(events: DataFrame, idCol: String = "event_id",
-      watermarkDelay: String = "1 hour"): DataFrame =
-    events
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("event_ts", watermarkDelay)
-      .dropDuplicates(idCol, "event_ts")
-
   /** Content-based streaming dedup: drop any document whose text
     * fingerprint was already seen, even when the duplicates carry
     * DIFFERENT timestamps — the crawl-ingest case (`dropDuplicates`

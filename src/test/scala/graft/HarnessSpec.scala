@@ -81,6 +81,16 @@ class HarnessSpec extends AnyFunSuite with SparkTestSession {
       "/x/b.json")
   }
 
+  test("commit outside a work tree is \"unknown\", and git's complaint stays off stderr") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val stamp = try Harness.commitIn(new java.io.File(Scratch.dir("graft-harness-nogit-")))
+    finally System.setErr(saved)
+    assert(stamp === "unknown")
+    assert(err.toString === "")
+  }
+
   test("Scratch.dir registers its directory; the hook's cleanup removes it with its files") {
     spark // Spark installs its own shutdown hook with the session
     val d = Paths.get(Scratch.dir("graft-harness-scratch-"))

@@ -52,31 +52,6 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     assert(plan.contains("ReadSchema: struct<event_id:bigint>"), plan.take(1500))
   }
 
-  test("co-bucketed tables join and aggregate with zero Exchange") {
-    import org.apache.spark.sql.functions.col
-    val tmp = Scratch.dir("graft-bucket")
-    val wh = new sources.Warehouse(spark, tmp)
-    val t = Engine.Tables(spark, dir)
-    wh.saveBucketed(t.orders, "orders_bkt", 8, "o_custkey")
-    wh.saveBucketed(t.customer, "customer_bkt", 8, "c_custkey")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
-      // bucketed round-trip is lossless
-      assert(wh.table("orders_bkt").count() === t.orders.count())
-      // join + agg on the bucket key: the write-time hash layout replaces
-      // BOTH runtime shuffles — the property that makes repeated
-      // fact-to-fact joins affordable at 100 TB
-      val joined = wh.table("orders_bkt")
-        .join(wh.table("customer_bkt"), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_custkey"))
-        .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join grew a shuffle:\n${plan.take(3000)}")
-      assert(plan.contains("SortMergeJoin"), plan.take(1500))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("q1: whole-stage codegen covers the aggregation pipeline") {
     // AQE only collapses codegen stages at execution → materialize first
     val df = SparkEntry.queries("q1_pricing_summary")(spark, dir)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestSession
-import graft.functions.Fnv1a64.fnv1a64
 import graft.functions.VecDot.vecDot
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,30 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Native Catalyst expressions: codegen path (through a DataFrame select)
   * must agree with the interpreted twin and with known external vectors.
   */
-class Fnv1a64Spec extends AnyFunSuite with SparkTestSession {
-
-  test("matches published FNV-1a 64 test vectors") {
-    // independent interpreted implementation
-    assert(Fnv1a64.hash("".getBytes("UTF-8")) === Fnv1a64.Offset)
-    assert(Fnv1a64.hash("a".getBytes("UTF-8")) ===
-      java.lang.Long.parseUnsignedLong("af63dc4c8601ec8c", 16))
-    assert(Fnv1a64.hash("foobar".getBytes("UTF-8")) ===
-      java.lang.Long.parseUnsignedLong("85944171f73967e8", 16))
-  }
-
-  test("codegen path equals interpreted implementation, incl. unicode") {
-    import spark.implicits._
-    val inputs = Seq("", "a", "hello world", "naïve café", "数据引擎", "x" * 10000)
-    val got = inputs.toDF("s").select(fnv1a64(col("s"))).as[Long].collect()
-    assert(got.toSeq === inputs.map(s => Fnv1a64.hash(s.getBytes("UTF-8"))))
-  }
-
-  test("null propagates") {
-    val r = spark.sql("SELECT fnv1a64(CAST(NULL AS STRING))").collect()
-    assert(r.head.isNullAt(0))
-  }
-}
-
 class VecDotSpec extends AnyFunSuite with SparkTestSession {
 
   test("float arrays: known dot product") {

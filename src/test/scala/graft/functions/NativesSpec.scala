@@ -18,7 +18,6 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
       ("org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate", 1 to 3),
     "bloom_might_contain" ->
       ("org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain", 2 to 2),
-    "fnv1a64" -> ("graft.functions.Fnv1a64", 1 to 1),
     "hilbert_xy2d" -> ("graft.functions.HilbertIdx", 3 to 3),
     "lsh_bands" -> ("graft.functions.LshBandHashes", 3 to 3),
     "maxsim_micro" -> ("graft.functions.MaxSimMicro", 4 to 4),
@@ -42,7 +41,7 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
       .collectFirst { case l if l.startsWith("Class:") => l.stripPrefix("Class:").trim }
       .getOrElse(fail(s"DESCRIBE FUNCTION $name has no Class line"))
 
-  test("the registrar injects exactly the 17 pinned names") {
+  test("the registrar injects exactly the 16 pinned names") {
     val injected = scala.collection.mutable.ArrayBuffer.empty[String]
     val ext = new SparkSessionExtensions {
       override def injectFunction(
@@ -53,7 +52,7 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
     }
     Natives.register(ext)
     assert(injected.sorted.toSeq === pinned.keys.toSeq.sorted)
-    assert(injected.length === 17)
+    assert(injected.length === 16)
   }
 
   test("every name resolves in Engine.session and a newSession() child, same class") {

@@ -121,20 +121,6 @@ class ClusteringSpec extends AnyFunSuite with SparkTestSession {
     assert(survivors === baseSurvivors)
   }
 
-  test("semDedupTrained prunes planted copies under trained centroids") {
-    import spark.implicits._
-    val orig = graft.Engine.Tables(spark, "/root/testdata/sf0.001").embeddings
-      .select("vec_id", "embedding")
-    // identical copies: same argmin input ⇒ same cluster under ANY
-    // centroids, so domination is guaranteed regardless of training
-    val copies = orig.select(
-      (col("vec_id") + lit(100000L)).as("vec_id"), col("embedding"))
-    val survivors = Clustering.semDedupTrained(orig.unionByName(copies), k = 8)
-      .select("vec_id").as[Long].collect().toSet
-    assert(survivors.nonEmpty && survivors.forall(_ < 100000L),
-      "a planted copy survived trained-centroid semdedup")
-  }
-
   test("semDedup matches an in-memory assignment + pruning reference") {
     val vecs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").embeddings
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)

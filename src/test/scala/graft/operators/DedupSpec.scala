@@ -614,28 +614,6 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("toRational recovers exact small-denominator thresholds") {
-    assert(Dedup.toRational(0.8) === ((4L, 5L)))
-    assert(Dedup.toRational(0.85) === ((17L, 20L)))
-    assert(Dedup.toRational(0.9) === ((9L, 10L)))
-    assert(Dedup.toRational(1.0) === ((1L, 1L)))
-    assert(Dedup.toRational(2.0 / 3.0) === ((2L, 3L)))
-    intercept[IllegalArgumentException](Dedup.toRational(0.0))
-    intercept[IllegalArgumentException](Dedup.toRational(1.5))
-  }
-
-  test("deprecated Double-threshold overloads agree with the rational forms") {
-    val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
-    // the shim converts 0.9 → 9/10, so results must be IDENTICAL rows
-    val viaDouble = (Dedup.clusters(docs, 0.9): @annotation.nowarn("cat=deprecation"))
-      .collect().toSeq
-    val viaRational = Dedup.clusters(docs, 9L, 10L).collect().toSeq
-    assert(viaDouble === viaRational)
-    val sDouble = (Dedup.survivors(docs, 0.9): @annotation.nowarn("cat=deprecation"))
-      .count()
-    assert(sDouble === Dedup.survivors(docs, 9L, 10L).count())
-  }
-
   test("splitLeakAudit: exactly the cross-split subset of the jaccard pairs, labels consistent") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents

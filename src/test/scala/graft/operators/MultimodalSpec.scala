@@ -45,26 +45,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("feature extraction emits unit-norm embeddings, Similarity-composable") {
-    import org.apache.spark.sql.functions.col
-    val feats = Multimodal.extractFeatures(spark, dir)
-    val schema = feats.schema("embedding").dataType
-    assert(schema.simpleString === "array<float>")
-    // composes with the similarity operators (same column contract)
-    val dup = Similarity.nearDupPairs(
-      feats.withColumnRenamed("doc_id", "vec_id"), threshold = 0.999999)
-    val exactDups = dup.collect()
-    // unit norm on every vector
-    feats.collect().foreach { r =>
-      val v = r.getSeq[Float](1)
-      val norm = math.sqrt(v.map(x => x * x.toDouble).sum)
-      assert(math.abs(norm - 1.0) < 1e-4)
-    }
-    // near-dup by features must at least be symmetric-consistent (no crash,
-    // ids come from doc_ids)
-    exactDups.foreach(r => assert(r.getLong(0) < r.getLong(1)))
-  }
-
   test("xmodalTopK: image-kind corpus only; a text query's own image is the rank-1 hit") {
     val out = Multimodal.xmodalTopK(spark, dir).collect()
     // 10 text-side queries × top-10 image-side neighbors

@@ -42,24 +42,6 @@ class QualityModelSpec extends AnyFunSuite with SparkTestSession {
     assert(got(0L)._3 === 1 && got(1L)._3 === 0)
   }
 
-  test("logitTrain converges on separable planted data") {
-    import spark.implicits._
-    // label = 1 iff f2 is high: linearly separable in the feature space
-    val rows = (0 until 400).map { i =>
-      val f2 = if (i % 2 == 0) 0.9 + (i % 10) * 0.01 else 0.1 + (i % 10) * 0.01
-      (3.0 + (i % 7) * 0.1, f2, 0.5, if (i % 2 == 0) 1 else 0)
-    }
-    val feats = rows.toDF("f1", "f2", "f3", "label")
-    val w = QualityModel.logitTrain(feats, "label", iters = 80, lr = 2.0)
-    // the separating direction must load positively on f2
-    assert(w(2) > 0, s"learned f2 weight not positive: ${w.mkString(",")}")
-    val correct = rows.count { case (f1, f2, f3, y) =>
-      val z = w(0) + w(1) * f1 + w(2) * f2 + w(3) * f3
-      (if (z > 0) 1 else 0) == y
-    }
-    assert(correct >= 380, s"train accuracy ${correct / 400.0} below 0.95")
-  }
-
   test("gated scorer splits the real corpus non-trivially") {
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
     val kept = QualityModel.logitScore(docs)

@@ -64,7 +64,8 @@ class SentencesSpec extends AnyFunSuite with SparkTestSession {
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val docs = Seq((1L, base), (5L, base), (7L, "unique words only here"))
       .toDF("doc_id", "text")
-    val got = Sentences.sentenceDedup(Sentences.sentenced(docs)).collect()
+    val got = Sentences.sentenceDedupFrom(
+      Sentences.sentenceSegment(Sentences.sentenced(docs))).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(3)).toMap
     val byDoc = got.groupBy(_._1._1).view.mapValues(_.values.toSeq).toMap
     assert(byDoc(1L).forall(_ == 1), "first occurrences must keep")
@@ -89,7 +90,7 @@ class SentencesSpec extends AnyFunSuite with SparkTestSession {
           h60(xs.map(_._2).mkString(" "))))
       }
     }
-    val got = Sentences.sentenceChunks(sented).collect()
+    val got = Sentences.sentenceChunksFrom(Sentences.sentenceSegment(sented)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got === expected)

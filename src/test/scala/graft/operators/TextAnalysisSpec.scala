@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestSession
-import graft.functions.Fnv1a64
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TextAnalysis operators run on a crafted `documents` parquet table (the
@@ -84,15 +83,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
     assert((fps(0L) intersect fps(1L)).nonEmpty)
     // density: far fewer fingerprints than character positions
     assert(fps(0L).size < docs.filter($"doc_id" === 0L).head.getString(1).length / 2)
-  }
-
-  test("fnvFingerprint equals the independent FNV-1a implementation") {
-    val rows = TextAnalysis.fnvFingerprint(spark, dir).collect()
-    val byId = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val text = "the cat and the dog, the end."
-    assert(byId(0L)._1 === Fnv1a64.hash(text.getBytes("UTF-8")))
-    val bag = text.trim.split("\\s+").sorted.mkString(" ")
-    assert(byId(0L)._2 === Fnv1a64.hash(bag.getBytes("UTF-8")))
   }
 
   test("redactPii: masks every class, counts them, leaves clean text alone") {
@@ -353,72 +343,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
     // first merge must be the top-1 of the gated single-iteration query
     val top = TextAnalysis.bpePairCounts(real).head()
     assert((top.getString(1), top.getString(2), top.getLong(3)) === got.head)
-  }
-
-  test("bpeTrainBatched: batch=1 IS sequential BPE; batch>1 compresses rounds") {
-    val real = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
-    // batch = 1: identical selection every round → identical merge list
-    val seq8 = TextAnalysis.bpeTrain(real, nMerges = 8)
-    val b1 = TextAnalysis.bpeTrainBatched(real, nMerges = 8, batch = 1)
-    assert(b1.merges === seq8)
-    assert(b1.rounds === 8)
-    // batch = 4: the driver-paced round count is the thing batching
-    // buys — pinned at ceil(nMerges / batch) on the fixture
-    val b4 = TextAnalysis.bpeTrainBatched(real, nMerges = 8, batch = 4)
-    assert(b4.merges.size === 8)
-    assert(b4.rounds <= 2, s"rounds=${b4.rounds}")
-    // within each round the accepted pairs' symbol supports are disjoint
-    b4.merges.grouped(4).foreach { round =>
-      val syms = round.flatMap(m => Seq(m._1, m._2))
-      assert(syms.distinct.size === syms.size, s"overlap in $round")
-    }
-    // the first pick of round 1 is ALWAYS sequential BPE's first merge
-    assert(b4.merges.head === seq8.head)
-  }
-
-  test("bpeTrainBatched matches an in-memory batched reference") {
-    def applyMerge(s: List[String], a: String, b: String): List[String] = {
-      val acc = scala.collection.mutable.ListBuffer.empty[String]
-      for (x <- s) {
-        if (acc.nonEmpty && acc.last == a && x == b) acc(acc.size - 1) = a + b
-        else acc += x
-      }
-      acc.toList
-    }
-    val real = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
-    val (nMerges, batch, poolFactor) = (12, 4, 8)
-    var words = real.select("text").collect().map(_.getString(0))
-      .flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
-      .groupBy(identity).toSeq
-      .map { case (w, xs) => w.split("").toList -> xs.length.toLong }
-    val expected = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    while (expected.size < nMerges) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-        .withDefaultValue(0L)
-      words.foreach { case (syms, c) =>
-        syms.sliding(2).foreach {
-          case List(a, b) => counts((a, b)) += c
-          case _ =>
-        }
-      }
-      val want = math.min(batch, nMerges - expected.size)
-      val pool = counts.toSeq.sortBy { case ((a, b), c) => (-c, a, b) }
-        .take(want * poolFactor)
-      val used = scala.collection.mutable.Set.empty[String]
-      val accepted = pool.iterator
-        .filter { case ((a, b), _) =>
-          if (used(a) || used(b)) false
-          else { used += a; used += b; true }
-        }
-        .take(want)
-        .map { case ((a, b), c) => (a, b, c) }.toList
-      expected ++= accepted
-      accepted.foreach { case (a, b, _) =>
-        words = words.map { case (syms, c) => applyMerge(syms, a, b) -> c }
-      }
-    }
-    val got = TextAnalysis.bpeTrainBatched(real, nMerges, batch, poolFactor)
-    assert(got.merges === expected.toSeq)
   }
 
   test("bpeEncode: trained merges segment docs like an in-memory encoder") {

@@ -90,25 +90,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     } finally q.stop()
   }
 
-  test("dedupStream drops in-horizon duplicate ids, keeps state bounded") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(Long, Long, String)] // event_id, ts(ns), type
-    val df = input.toDF().toDF("event_id", "ts", "event_type")
-    val q = Streaming.dedupStream(df, watermarkDelay = "10 minutes")
-      .select("event_id").writeStream
-      .format("memory").queryName("deduped").outputMode("append").start()
-    try {
-      val base = 10 * H // clear of the initial watermark
-      input.addData((1L, base, "click"), (1L, base, "click"), (2L, base + 5, "view"))
-      q.processAllAvailable()
-      input.addData((1L, base, "click"), (3L, base + 10, "view")) // 1 is a dup again
-      q.processAllAvailable()
-      val ids = spark.table("deduped").as[Long].collect().toSeq
-      assert(ids.sorted === Seq(1L, 2L, 3L), s"got $ids")
-    } finally q.stop()
-  }
-
   test("enrichWithDim: stream-static left join matches batch, keeps unknown users") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

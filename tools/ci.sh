@@ -22,8 +22,11 @@
 #                              of `src/test` for `/root/reference` only in
 #                              RefFixture and RefBinarySpec (specs read the
 #                              reference's inputs through RefFixture, which
-#                              falls back to the repo's copies).
-#   4. `sbt test`            — the full ScalaTest suite (42+ suites).
+#                              falls back to the repo's copies); and of
+#                              `src/main` for `@deprecated`: a caller this
+#                              repo does not have gets no compatibility
+#                              shim, so none may return.
+#   4. `sbt test`            — the full ScalaTest suite.
 #   5. `perfbench/test_metrics.py` — the benchmark harness's self-tests.
 #   6. `tools/deepcheck.sh`  — graft.Verify over EVERY gate at sf0.1,
 #                              hash-compared against the DuckDB oracle
@@ -53,7 +56,7 @@ if [ "$(echo "$inj" | grep -c .)" != 1 ] ||
   echo "[ci] FAIL: add native functions to graft.functions.Natives; Engine.session installs it once"
   exit 1
 fi
-echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code"
+echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code, no deprecated shims in main code"
 stray=$( (grep -rn 'def main(' src/main |
     grep -vE '^src/main/scala/graft/(Bench|Verify|Stress|Explain|Cli)\.scala:'
   grep -rn 'SPARK_GRAFT_CPUS' src/main | grep -v '^src/main/scala/graft/Harness\.scala:'
@@ -61,10 +64,11 @@ stray=$( (grep -rn 'def main(' src/main |
     grep -v '^src/main/scala/graft/Scratch\.scala:'
   grep -rnF '/root/reference' src/test |
     grep -vE '^src/test/scala/graft/(RefFixture|RefBinarySpec)\.scala:'
+  grep -rnF '@deprecated' src/main
   ) || true)
 if [ -n "$stray" ]; then
   echo "$stray"
-  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path"
+  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims"
   exit 1
 fi
 echo "[ci] 4/6 sbt test"
