@@ -103,15 +103,11 @@ object Bench {
       if (validCanaries.isEmpty) -1.0 else validCanaries(validCanaries.size / 2)
     val canaryNorm =
       if (canaryMedian > 0) total * (canaryRefSec / canaryMedian) else -1.0
-    // named in the artifact (round-14 verdict #4): see Gate.cachedIntermediate
-    val cachedArr =
-      gates.filter(_.cachedIntermediate).map(g => jstr(g.name)).mkString("[", ",", "]")
     val common = s""""value":${fmt(total)},"unit":"sec","n_queries":${results.size},""" +
       s""""n_err":${errs.size},"cold_total":${fmt(coldTotal)},"warm_total":${fmt(total)},""" +
       s""""canary_sec":${fmt(canary)},"canary_series":$canaryArr,""" +
       s""""canary_ref_sec":${fmt(canaryRefSec)},"canary_median":${fmt(canaryMedian)},""" +
       s""""warm_total_canary_norm":${fmt(canaryNorm)},""" +
-      s""""cached_intermediate":$cachedArr,""" +
       // every committed artifact self-identifies the code it measured
       // (round-11 verdict #8)
       s""""errors":$emap,"commit":"${Harness.commit}","sf":"$sfDir""""

@@ -81,8 +81,8 @@ object Engine {
     * it via `.schema(...)` is exactly what a real catalog (Hive/Iceberg
     * metastore) provides at scale. Keyed by absolute path, so distinct
     * fixture dirs (tests, stress replicas) never collide; the fixture
-    * contract is immutable table files (TESTDATA.md), same as every
-    * PlanCache entry.
+    * contract is immutable table files (TESTDATA.md); the mtime in the
+    * key (below) catches a path rewritten anyway.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()

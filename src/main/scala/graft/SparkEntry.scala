@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit}
+import org.apache.spark.sql.functions.col
 import graft.Engine.Tables
 import graft.operators.{Analytics, Clustering, Dedup, HeavyHitters, Monitoring, Multimodal, Packing, Posttraining, QualityModel, Relational, Retrieval, Similarity, Skew, TextAnalysis, Workloads}
 
@@ -21,20 +21,12 @@ object SparkEntry {
   /** One gate: an operator or workload from SURVEY.md §2's inventory (or
     * a pipeline extension) as the Spark function `run(spark, sfDir)`,
     * and `oracleSql`, its DuckDB equivalent over the same parquet tables,
-    * which the correctness gate hash-compares against at sf0.01.
-    *
-    * `cachedIntermediate` marks a gate whose timed Bench pass reads a
-    * PlanCache-warm materialized intermediate built during the warm-up
-    * pass (the near-dup pair table, the sentence segmentation, the
-    * sorted-turns table of the post-training family), the production
-    * landed-intermediate shape. Its warm time prices the downstream
-    * computation only; the full recompute is priced by the uncached
-    * gates (dedup_prefix, sent_segment) and by Bench's cold_total. Bench
-    * names these gates in its artifact so round-over-round totals can
-    * separate accounting moves from plan wins.
+    * which the correctness gate hash-compares against at sf0.01. A gate
+    * computes every intermediate it reads inside its own plan, so its
+    * time is its own work and a rewritten input is read fresh.
     */
   final case class Gate(name: String, run: (SparkSession, String) => DataFrame,
-      oracleSql: String, cachedIntermediate: Boolean = false)
+      oracleSql: String)
 
   /** The gate table from its entries, refusing a repeated name (a map
     * literal would silently keep only one of the two).
@@ -141,7 +133,7 @@ object SparkEntry {
     * chain — ends at `inter` (verified pair intersections) and `sizes`;
     * `dedup_jaccard` appends its SELECT. (`split_leak_audit` moved to
     * [[uncappedJaccardPairsOracle]] when the audit became a reader of
-    * the exact prefix screen's landed pair table.)
+    * the exact prefix screen's pair set.)
     */
   private def jaccardAdaptiveCteSql: String =
     s"""WITH sh AS (
@@ -184,7 +176,7 @@ object SparkEntry {
 
   /** The UNCAPPED exact Jaccard pair set at threshold 4/5 — the oracle
     * for the prefix screen (zero recall loss, so the full pair set IS
-    * its specification) and for every reader of the landed pair table
+    * its specification) and for every reader of that pair set
     * (`split_leak_audit`). Stated without any cap or prefix machinery:
     * DuckDB never reproduces the xxhash64 prefix order; a single pair
     * the prefix/positional filters wrongly dropped hash-mismatches.
@@ -1875,7 +1867,7 @@ object SparkEntry {
     // clusters = transitive closure over the exact near-dup pairs (the
     // LSH pair set equals the exact set — see dedup_minhash_lsh above)
     Gate("dedup_clusters", Dedup.dedupClusters(_, _),
-      dedupClustersOracle, cachedIntermediate = true),
+      dedupClustersOracle),
     // the forced distributed-label-propagation twin must produce the
     // IDENTICAL clustering — one shared oracle string pins driver-
     // union-find vs RDD-loop path equality at every gated SF
@@ -1887,7 +1879,7 @@ object SparkEntry {
     // exercised only by un-gated probes.
     Gate("dedup_clusters_loop",
       (s, d) => Dedup.clusters(Tables(s, d).documents, smallGraphMaxEdges = 0L),
-      dedupClustersOracle, cachedIntermediate = true),
+      dedupClustersOracle),
     // retention contract: every cluster keeps its minimum member, docs in
     // no cluster keep themselves (same pair set + closure as dedup_clusters)
     Gate("dedup_survivors", (s, d) => Dedup.survivors(Tables(s, d).documents),
@@ -1917,7 +1909,7 @@ object SparkEntry {
            SELECT u, min(comp) AS component FROM r GROUP BY u)
          SELECT doc_id FROM documents
          WHERE doc_id NOT IN (SELECT u FROM reach WHERE u != component)
-         ORDER BY doc_id""", cachedIntermediate = true),
+         ORDER BY doc_id"""),
     // 5-gram train/eval leakage: eval = doc_id % 20 == 0, drop train docs
     // sharing any 5-gram with eval, keep the rest
     Gate("decon_survivors", Dedup.deconSurvivors(_, _), deconOracleSql),
@@ -2207,7 +2199,7 @@ object SparkEntry {
          FROM documents d
          LEFT JOIN reach r ON d.doc_id = r.u
          LEFT JOIN csize s ON r.component = s.component
-         ORDER BY d.doc_id""", cachedIntermediate = true),
+         ORDER BY d.doc_id"""),
     // duplication-rate curve: same pair set + closure; fixed power-of-two
     // k ladder with zero-count rows kept
     Gate("dup_curve", (s, d) => Dedup.dupCurve(Tables(s, d).documents),
@@ -2248,7 +2240,7 @@ object SparkEntry {
              // n_total AS BIGINT) AS frac_micro
          FROM perdoc CROSS JOIN (VALUES (1), (2), (4), (8), (16), (32)) ks(k),
               tot
-         GROUP BY k, n_total ORDER BY k""", cachedIntermediate = true),
+         GROUP BY k, n_total ORDER BY k"""),
     Gate("minhash_mergeable",
       (s, d) => Dedup.minhashMergeable(Tables(s, d).documents),
       minhashMergeableOracleSql),
@@ -3020,7 +3012,7 @@ object SparkEntry {
            string_split(transcript, '|')[1] AS first_turn,
            string_split(transcript, '|')[-1] AS last_turn,
            md5(transcript) AS fp
-         FROM a ORDER BY user_id""", cachedIntermediate = true),
+         FROM a ORDER BY user_id"""),
     // GRPO advantage: exact integer numerator v·n − Σv (the engine never
     // divides); DuckDB's windowed sum over BIGINT is HUGEINT, so cast.
     // The quantization mirrors boundedMicro's ±2^41 loud bound (see
@@ -3085,7 +3077,7 @@ object SparkEntry {
            CAST(length(coalesce(a.transcript, '')) AS BIGINT) AS kept_chars,
            md5(coalesce(a.transcript, '')) AS fp_kept
          FROM tot LEFT JOIN a ON tot.user_id = a.user_id
-         ORDER BY tot.user_id""", cachedIntermediate = true),
+         ORDER BY tot.user_id"""),
     // the UPDATE-mode streaming spelling of the same transform must land
     // the identical pair set — one oracle string, zero drift possible
     Gate("stream_dpo", streaming.StreamQueries.dpoEvents(_, _), dpoPairsOracle),
@@ -3127,7 +3119,7 @@ object SparkEntry {
          FROM (SELECT * FROM r WHERE rb = 1) b
          JOIN (SELECT * FROM r WHERE rw = 1) w ON b.user_id = w.user_id
          WHERE b.v > w.v
-         ORDER BY prompt_id""", cachedIntermediate = true),
+         ORDER BY prompt_id"""),
     // pass@k (Chen et al. 2021): both binomials cancel to products of k
     // consecutive non-negative longs — exact integer division; n < k
     // groups report the degenerate any-pass verdict (and dodge the zero
@@ -3673,7 +3665,7 @@ object SparkEntry {
          SELECT doc_id, sent_id, n_tokens,
            CASE WHEN row_number() OVER (PARTITION BY norm
                ORDER BY doc_id, sent_id) = 1 THEN 1 ELSE 0 END AS keep
-         FROM normed ORDER BY doc_id, sent_id""", cachedIntermediate = true),
+         FROM normed ORDER BY doc_id, sent_id"""),
     // start-offset bucketing: chunk = tokens-before div budget, so the
     // chunk rule is one running sum in both engines; digest rebuilt from
     // sent_id-ordered sentences
@@ -3691,7 +3683,7 @@ object SparkEntry {
            count(*) AS n_sents, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
            ${duckMd5_60("string_agg(sentence, ' ' ORDER BY sent_id)")}
              AS chunk_md5_60
-         FROM cum GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id""", cachedIntermediate = true),
+         FROM cum GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id"""),
     Gate("lang_balance",
       (s, d) =>
         operators.Sampling.langBalance(graft.Engine.Tables(s, d).documents),
@@ -3741,7 +3733,7 @@ object SparkEntry {
            jac
          FROM pairs
          WHERE ${splitCaseOnSql("doc_a")} <> ${splitCaseOnSql("doc_b")}
-         ORDER BY doc_a, doc_b""", cachedIntermediate = true),
+         ORDER BY doc_a, doc_b"""),
     // the two-keyings leakage rollup over the same uncapped pair set:
     // doc-keyed labels vs source-grouped labels, counted per keying
     Gate("split_leak_stats",
@@ -3770,7 +3762,7 @@ object SparkEntry {
              AS BIGINT) AS n_leaked,
            CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
              * 1000000 // count(*) AS BIGINT) AS leak_micro
-         FROM labeled GROUP BY keying ORDER BY keying""", cachedIntermediate = true),
+         FROM labeled GROUP BY keying ORDER BY keying"""),
     Gate("split_assign",
       (s, d) => {
         import org.apache.spark.sql.functions.col

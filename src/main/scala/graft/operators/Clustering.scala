@@ -186,7 +186,6 @@ object Clustering {
     // k >= 2: the argmin builds least() over k structs, which Spark
     // requires to have at least two arguments (k = 1 is degenerate anyway)
     require(k >= 2 && iters >= 1, s"need k >= 2, iters >= 1; got k=$k iters=$iters")
-    val spark = vecs.sparkSession
 
     val elemIsFloat = vecs.schema(embCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(

@@ -521,18 +521,13 @@ object Dedup {
     * assignment exists precisely to make this list empty by
     * construction).
     *
-    * Scale shape — the audit is a READER of dedup's landed pair table,
-    * never its own screen: the pair set is the PlanCache-materialized
-    * exact prefix screen ([[jaccardPairsPrefix]] — EXACT, zero recall
-    * loss), computed once per (corpus, threshold) and shared with every
-    * consumer AT THE SAME THRESHOLD ([[splitLeakStats]] here; the
-    * clustering family caches its own 9/10 entry — a pipeline running
-    * both pays one screen per threshold, not one per consumer), and
-    * both split labels derive IN-ROW from the pair's own ids via
+    * Scale shape — one exact prefix screen ([[jaccardPairsPrefix]] —
+    * EXACT, zero recall loss) in the audit's own plan, and both split
+    * labels derive IN-ROW from the pair's own ids via
     * [[Sampling.splitOf]] — the same md5 bucket scalar the assignment
     * gate uses — so the audit adds ZERO joins and zero shuffles beyond
-    * the intermediate it reads. Threshold as the family's exact
-    * rational (default 4/5, the `dedup_prefix` gate's).
+    * the screen. Threshold as the family's exact rational (default 4/5,
+    * the `dedup_prefix` gate's).
     */
   def splitLeakAudit(docs: DataFrame, weights: Seq[Double],
       names: Seq[String], tNum: Long = 4, tDen: Long = 5,
@@ -977,7 +972,7 @@ object Dedup {
 
   /** Leakage-rate rollup comparing the two split keyings — the release
     * dashboard number behind [[splitLeakAudit]]'s work-list: over the
-    * SAME landed near-dup pair table, how many pairs straddle splits
+    * SAME near-dup pair set, how many pairs straddle splits
     * under (a) the doc-keyed assignment (`split_assign`) and (b) the
     * source-grouped assignment (`group_split`), as exact micro-rates.
     * Grouped splitting co-locates SAME-source near-dups by construction
@@ -990,29 +985,29 @@ object Dedup {
     * right quarantine is the [[splitLeakAudit]] work-list, not
     * re-keying — the decision the dashboard number exists to drive.
     *
-    * Scale shape: one pair-table scan (the PlanCache intermediate,
-    * stats-materialized so the two doc_id joins that fetch each side's
-    * `source` broadcast the PAIR side, never shuffling the corpus), one
-    * union of two in-row labelings, one 2-group aggregate.
+    * Scale shape: one prefix screen, two doc_id joins that fetch each
+    * side's `source` (the pair side is duplicate-volume-bounded), then
+    * ONE pass that labels every pair under both keyings — an in-row
+    * two-element explode, so the screen's cogroup runs once — and one
+    * 2-group aggregate.
     */
   def splitLeakStats(docs: DataFrame, weights: Seq[Double],
       names: Seq[String], tNum: Long = 4, tDen: Long = 5): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
-    val pairs = nearDupPairs(docs, tNum, tDen)
-    def labeled(in: DataFrame, keying: String, a: Column, b: Column,
-        salt: String) =
-      in.select(lit(keying).as("keying"),
-        Sampling.splitOf(a, weights, names, salt).as("split_a"),
-        Sampling.splitOf(b, weights, names, salt).as("split_b"))
-    // the doc keying needs only the pair ids already in the cached
-    // table; only the source keying pays the two source-fetch joins
-    val withSrc = pairs
+    val withSrc = nearDupPairs(docs, tNum, tDen)
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("src_a")),
         Seq("doc_a"))
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("src_b")),
         Seq("doc_b"))
-    labeled(pairs, "doc", col("doc_a"), col("doc_b"), "split:")
-      .unionByName(labeled(withSrc, "source", col("src_a"), col("src_b"), "gsplit:"))
+    def labeled(keying: String, a: Column, b: Column, salt: String) =
+      struct(lit(keying).as("keying"),
+        Sampling.splitOf(a, weights, names, salt).as("split_a"),
+        Sampling.splitOf(b, weights, names, salt).as("split_b"))
+    withSrc
+      .select(explode(array(
+        labeled("doc", col("doc_a"), col("doc_b"), "split:"),
+        labeled("source", col("src_a"), col("src_b"), "gsplit:"))).as("l"))
+      .select(col("l.*"))
       .groupBy(col("keying"))
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("split_a") =!= col("split_b"), 1L).otherwise(0L))
@@ -1032,27 +1027,14 @@ object Dedup {
     * oracle/fallback spellings and the scale escape hatch for
     * dup-saturated corpora where even prefix volume grows.
     *
-    * The pair table is MATERIALIZED ONCE PER (corpus, threshold) and
-    * shared session-wide through a [[PlanCache]] (canonicalized-plan
-    * key, persist MEMORY_AND_DISK, bounded entries — mechanism and
-    * rationale documented there): all four clustering consumers
-    * ([[clusters]], [[survivors]], [[softDedupWeights]], [[dupCurve]])
-    * run the same screen over the same corpus, and in a production
-    * pipeline the pair set is a persisted intermediate table computed
-    * once per curation run, not re-derived per report. The cached value
-    * is duplicate-volume-sized (1M pairs = ~16 MB at the 20× probe),
-    * and its materialized stats let the downstream
-    * duplicate-volume-bounded joins broadcast on actual sizes.
-    * Cached inputs are assumed immutable for the session (the landed-
-    * intermediate contract); after an in-session rewrite of the corpus
-    * files, call [[PlanCache.invalidate]] to drop the materialization.
+    * Each consumer runs the screen inside its own plan: a gate's time
+    * is its own work, and a corpus rewritten mid-session is read fresh.
+    * Every consumer reads the pair set exactly once (the clustering
+    * reports through [[connectedComponents]], which persists its edge
+    * list for its own iterations), so no report pays the screen twice.
     */
-  private val pairCache = new PlanCache()
-
   private def nearDupPairs(docs: DataFrame, tNum: Long, tDen: Long): DataFrame =
-    pairCache.getOrMaterialize(docs, (tNum, tDen)) {
-      jaccardPairsPrefix(docs, tNum, tDen)
-    }
+    jaccardPairsPrefix(docs, tNum, tDen)
 
   /** End-to-end duplicate clustering: exact prefix-screened near-dup
     * pairs → connected components → one row per cluster with its

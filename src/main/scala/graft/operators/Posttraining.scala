@@ -111,29 +111,14 @@ object Posttraining {
   def chatAssemble(events: DataFrame): DataFrame =
     chatAssembleOn(events).orderBy(col("user_id"))
 
-  /** Landed-intermediate cache for [[sortedTurns]] — the family's one
-    * corpus-sized shared table (it carries every rendered turn string),
-    * so DISK_ONLY by the [[PlanCache]] taxonomy: an on-heap corpus cache
-    * would squeeze execution memory for the joins that follow (the
-    * sentence-segmentation lesson). One materialization per (events
-    * input) serves the assembly gate, the truncation gate and
-    * [[posttrainCurate]]'s survivor stage — previously each consumer
-    * re-ran the collapse aggregate from its own events scan.
-    */
-  private val turnsCache = new PlanCache(maxEntries = 2,
-    level = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-
   /** The shared turn pipeline: render `event_type:score_micro`, group
     * per prompt, sort in-row by (ts, event_id) — ONE definition of the
     * rendering both fingerprinting gates hash, so the format can never
     * drift between assembly and truncation. Returns (user_id, ss) with
-    * `ss` the ordered turn strings. Materialized once per events input
-    * via [[turnsCache]].
+    * `ss` the ordered turn strings. Each consumer collapses its own
+    * events scan, so a rewritten events table is read fresh.
     */
-  private def sortedTurns(events: DataFrame): DataFrame =
-    turnsCache.getOrMaterialize(events, "sortedTurns")(sortedTurnsBuild(events))
-
-  private def sortedTurnsBuild(events: DataFrame): DataFrame = {
+  private def sortedTurns(events: DataFrame): DataFrame = {
     val turn = concat_ws(":", col("event_type"),
       floor(col("value") * lit(1e6)).cast("long").cast("string"))
     events
@@ -282,9 +267,7 @@ object Posttraining {
     * SEMI-joins back against the log (broadcast at dimension scale —
     * survivors are a user-cardinality projection of two columns), so
     * the pairing aggregate only reads surviving rows. The response log
-    * is scanned twice (assembly + pairing) — the production shape lands
-    * the assembly as an intermediate and pays one scan per consumer,
-    * exactly like the clustering family's pair table.
+    * is scanned twice, once per consumer (assembly + pairing).
     */
   def posttrainCurate(events: DataFrame, minTurns: Long = 3): DataFrame = {
     val survivors = chatAssembleOn(events)

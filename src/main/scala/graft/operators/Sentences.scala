@@ -84,32 +84,28 @@ object Sentences {
     * first-occurrence ((doc_id, sent_id) order) of its NORMALIZED form
     * (lowercase, terminal punctuation stripped). The decision is an
     * aggregate on the full-128-bit md5 of the normalized sentence (the
-    * repo's text-identity standard) followed by a digest-keyed join —
-    * partial aggregation absorbs boilerplate sentences repeated across
-    * millions of documents, where a sentence-partitioned window would
-    * hot-spot.
+    * repo's text-identity standard) followed by a digest-keyed join.
     *
     * The segmented table feeds BOTH sides of the decision (the
-    * first-occurrence aggregate and the probe join), and the two
-    * consumers shuffle on h at different plan depths, so Catalyst/AQE
-    * cannot reuse one exchange: an unmaterialized input runs synthesis +
-    * segmentation twice (measured as two full passes in the 10× stress).
-    * Pass a materialized table — the stored-intermediate policy of the
-    * PQ code index and the PageRank edge list; a production pipeline
-    * lands it in the lake as its own ETL stage. The two digest consumers
-    * re-derive the scalar norm/md5 columns from the materialized rows —
-    * cheaper than materializing a second, wider copy.
+    * first-occurrence aggregate and the probe join). Both read ONE
+    * digest-keyed shuffle of it: the rows are repartitioned by h up
+    * front, and both consumers reference the same four columns (which
+    * is why `n_tokens` rides in the min struct — it never decides the
+    * min, since (doc_id, sent_id) is unique), so the second exchange is
+    * a reused one and synthesis + segmentation run once. The aggregate
+    * and the join then need no further shuffle; a boilerplate sentence
+    * repeated across millions of documents streams through one sorted
+    * aggregate and one join, never a buffered window.
     */
   def sentenceDedupFrom(segmented: DataFrame): DataFrame = {
+    val row = struct(col("doc_id"), col("sent_id"), col("n_tokens"))
     val sents = segmented
-      .withColumn("norm",
-        lower(regexp_replace(col("sentence"), "[.!?]+$", "")))
-      .withColumn("h", md5(col("norm")))
-    val firsts = sents.groupBy(col("h"))
-      .agg(min(struct(col("doc_id"), col("sent_id"))).as("first"))
+      .select(col("doc_id"), col("sent_id"), col("n_tokens"),
+        md5(lower(regexp_replace(col("sentence"), "[.!?]+$", ""))).as("h"))
+      .repartition(col("h"))
+    val firsts = sents.groupBy(col("h")).agg(min(row).as("first"))
     sents.join(firsts, Seq("h"))
-      .withColumn("keep",
-        (struct(col("doc_id"), col("sent_id")) === col("first")).cast("int"))
+      .withColumn("keep", (row === col("first")).cast("int"))
       .select(col("doc_id"), col("sent_id"), col("n_tokens"), col("keep"))
       .orderBy(col("doc_id"), col("sent_id"))
   }
@@ -154,40 +150,13 @@ object Sentences {
       .orderBy(col("doc_id"), col("chunk_id"))
   }
 
-  /** Session-shared segmented table for the gated family: segmentation
-    * is ONE landed ETL stage in a production pipeline (the
-    * stored-intermediate policy [[sentenceDedupFrom]] documents), and the
-    * dedup and chunking reports both read it — so the gated entries
-    * share one [[PlanCache]]-materialized segmentation per corpus
-    * instead of re-running synthesis + segmentation per report. The
-    * segmentation pass's own full cost stays measured by the UNCACHED
-    * `sent_segment` gate ([[segmentDocs]] — same policy as the dedup
-    * family's uncached `dedup_prefix` screen gate). Corpus-sized (it
-    * carries the full sentence text, ≈ tokens/[[SentenceEvery]] rows),
-    * so it persists DISK_ONLY: an on-heap corpus-sized cache squeezes
-    * unified execution memory for every heavy join that follows in the
-    * same executor (measured at the 20× probe — see [[PlanCache]]'s
-    * level scaladoc), and the production shape for a landed
-    * intermediate is the lake, not executor memory. Bounded at 4
-    * corpora. Cached inputs are assumed immutable for the session (the
-    * landed-intermediate contract); after an in-session rewrite of the
-    * corpus files, call [[PlanCache.invalidate]] to drop the
-    * materialization.
-    */
-  private val segCache = new PlanCache(
-    level = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-  private def segmentedCached(docs: DataFrame): DataFrame =
-    segCache.getOrMaterialize(docs, "segmented") {
-      sentenceSegment(docs)
-    }
-
   def segmentDocs(spark: SparkSession, dir: String): DataFrame =
     sentenceSegment(sentenced(Tables(spark, dir).documents))
       .orderBy(col("doc_id"), col("sent_id"))
 
   def dedupDocs(spark: SparkSession, dir: String): DataFrame =
-    sentenceDedupFrom(segmentedCached(sentenced(Tables(spark, dir).documents)))
+    sentenceDedupFrom(sentenceSegment(sentenced(Tables(spark, dir).documents)))
 
   def chunksDocs(spark: SparkSession, dir: String): DataFrame =
-    sentenceChunksFrom(segmentedCached(sentenced(Tables(spark, dir).documents)))
+    sentenceChunksFrom(sentenceSegment(sentenced(Tables(spark, dir).documents)))
 }

@@ -5,8 +5,6 @@ import graft.functions.VecDot.vecDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Similarity search over the `embeddings` table (Array[Float], dim 64) —
   * pipeline extension (SURVEY.md §7.2-M6).

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Engine.Tables
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,19 +55,19 @@ object Skew {
     * logical name never race each other's DROP/delete/CREATE. The
     * returned frame reads the session's own physical table.
     *
-    * Session-end cleanup: every physical table this session creates is
-    * registered with the same application-end hook that evicts the
-    * [[PlanCache]] — the hook drops the catalog entry (via a WEAK
-    * session reference, so registration never pins the session — the
-    * r14 leak class) and deletes the warehouse files through the
-    * warehouse URI's Hadoop FileSystem. Only a session KILLED without
-    * its context ever stopping still orphans files — that residue is
-    * the warehouse TTL policy's janitorial surface, now the exception
-    * rather than the rule.
+    * Session-end cleanup: the first physical table a session creates
+    * installs one [[sessionEndListener]] on its context, and on
+    * application end it drops every table that session landed — the
+    * catalog entry (via a WEAK session reference, so registration never
+    * pins the session) and the warehouse files, through the warehouse
+    * URI's Hadoop FileSystem. Only a session KILLED without its context
+    * ever stopping still orphans files — that residue is the warehouse
+    * TTL policy's janitorial surface, now the exception rather than the
+    * rule.
     */
   def bucketize(spark: SparkSession, df: DataFrame, table: String,
       key: String, buckets: Int = 32): DataFrame = {
-    val phys = s"${table}_${PlanCache.sessionId(spark).replace("-", "")}"
+    val phys = physicalName(spark, table)
     spark.sql(s"DROP TABLE IF EXISTS `$phys`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), phys)
@@ -77,39 +78,76 @@ object Skew {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet")
       .saveAsTable(phys)
-    registerCleanup(spark, phys, loc, hadoopConf)
+    landedTables(spark).putIfAbsent(phys, drop(spark, phys, loc, hadoopConf))
     spark.table(phys)
   }
 
-  /** One cleanup hook per (session, physical table), idempotent across
-    * re-bucketize calls of the same logical table in one session. */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Stable per-session id. Spark's public SparkSession exposes no
+    * session UUID, so one is minted: the map is weakly keyed and its
+    * String values hold no reference to the session, so a dropped
+    * session's entry is collectable.
+    */
+  private val sessionIds = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String]())
 
-  private def registerCleanup(spark: SparkSession, phys: String,
+  private[graft] def sessionId(spark: SparkSession): String =
+    sessionIds.computeIfAbsent(spark,
+      _ => java.util.UUID.randomUUID().toString.replace("-", ""))
+
+  /** The session-scoped PHYSICAL name [[bucketize]] writes `table` under. */
+  private[graft] def physicalName(spark: SparkSession, table: String): String =
+    s"${table}_${sessionId(spark)}"
+
+  /** Per session id: each physical table landed, with the cleanup that
+    * drops it. Keyed by the id String, never the session, so an entry
+    * never pins its session.
+    */
+  private val landed = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentHashMap[String, () => Unit]]()
+
+  /** This session's landed tables, installing its [[sessionEndListener]]
+    * the first time the session lands one. */
+  private def landedTables(spark: SparkSession) = {
+    val sid = sessionId(spark)
+    landed.computeIfAbsent(sid, _ => {
+      spark.sparkContext.addSparkListener(sessionEndListener(sid))
+      new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
+    })
+  }
+
+  /** Best-effort drop of one landed table. The session is held weakly:
+    * a cleanup strongly capturing it would pin it in [[landed]]. If the
+    * session is already collected, the catalog died with it; the file
+    * delete still runs.
+    */
+  private def drop(spark: SparkSession, phys: String,
       loc: org.apache.hadoop.fs.Path,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Unit = {
-    val sid = PlanCache.sessionId(spark)
-    if (cleanupRegistered.add(s"$sid/$phys")) {
-      // weak: a hook strongly capturing the session would pin it in the
-      // hook registry — exactly the value-refs-key leak PlanCache's
-      // scaladoc documents. If the session is already collected, the
-      // catalog died with it; the file delete still runs.
-      val weakSpark = new java.lang.ref.WeakReference(spark)
-      PlanCache.addSessionEndHook(spark) { () =>
-        cleanupRegistered.remove(s"$sid/$phys")
-        val s = weakSpark.get()
-        if (s != null && !s.sparkContext.isStopped) {
-          try s.sql(s"DROP TABLE IF EXISTS `$phys`")
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        try {
-          val fsys = loc.getFileSystem(hadoopConf)
-          if (fsys.exists(loc)) fsys.delete(loc, true)
-        } catch { case scala.util.control.NonFatal(_) => () }
+      hadoopConf: org.apache.hadoop.conf.Configuration): () => Unit = {
+    val weakSpark = new java.lang.ref.WeakReference(spark)
+    () => {
+      val s = weakSpark.get()
+      if (s != null && !s.sparkContext.isStopped) {
+        try s.sql(s"DROP TABLE IF EXISTS `$phys`")
+        catch { case scala.util.control.NonFatal(_) => () }
       }
+      try {
+        val fsys = loc.getFileSystem(hadoopConf)
+        if (fsys.exists(loc)) fsys.delete(loc, true)
+      } catch { case scala.util.control.NonFatal(_) => () }
     }
   }
+
+  /** The application-end cleanup, factored so a spec can fire it
+    * directly: delivery of `onApplicationEnd` at context stop is Spark's
+    * contract, the drops it triggers are ours.
+    */
+  private[graft] def sessionEndListener(sessionId: String): SparkListener =
+    new SparkListener {
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+        val tables = landed.remove(sessionId)
+        if (tables != null) tables.values.forEach(_.apply())
+      }
+    }
 
   /** Gated entry for [[skewSplitJoin]]: enrich every event with its
     * user's market segment, routing the heaviest users through the

@@ -211,28 +211,31 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("sent_dedup: decision is an aggregate + digest join, not a sentence window") {
-    val plan = planOf("sent_dedup")
-    // partial_min before the shuffle: boilerplate sentences combine
-    // map-side instead of hot-spotting one window task
+    val df = SparkEntry.queries("sent_dedup")(spark, dir)
+    df.collect() // AQE reuse decisions only exist in the final plan
+    val plan = df.queryExecution.executedPlan.toString
+    val finalPlan = plan.split("== Initial Plan ==").head
+    // the first-occurrence decision is a min aggregate on the digest
     assert(plan.contains("partial_min") || plan.contains("Partial"),
-      s"map-side partial missing:\n${plan.take(2500)}")
+      s"first-occurrence aggregate missing:\n${plan.take(2500)}")
     assert(!plan.contains("CartesianProduct"), plan.take(2500))
     // no window partitioned by the sentence digest anywhere in the plan
     assert(!plan.toLowerCase.contains("window"), plan.take(2500))
-    // the segmented table is MATERIALIZED once — both the first-occurrence
-    // aggregate and the probe join must scan the session's cached
-    // segmentation, not re-run the synthesis (which executes the
-    // documents scan twice)
-    assert("InMemoryTableScan".r.findAllIn(plan).length >= 2,
-      s"both digest consumers must read the cached segmentation:\n${plan.take(2500)}")
-    // the cached subtree prints under each InMemoryTableScan, so a
-    // FileScan line appears per consumer — but as the SAME relation
-    // (identical output attribute ids). Re-run synthesis would be two
-    // independent scans with distinct expression ids.
-    val scanOutputs = """FileScan parquet \[([^\]]*)\]""".r
-      .findAllMatchIn(plan).map(_.group(1)).toSet
-    assert(scanOutputs.size <= 1,
-      s"synthesis re-ran (distinct parquet scans $scanOutputs):\n${plan.take(2500)}")
+    // both digest consumers (the aggregate and the probe join) read ONE
+    // shuffle of the segmentation: the second is a reused exchange, and
+    // synthesis + segmentation scan the documents once
+    assert(finalPlan.contains("ReusedExchange"),
+      s"both digest consumers must read one shuffle:\n${finalPlan.take(4000)}")
+    val scans = "FileScan parquet".r.findAllIn(finalPlan).length
+    assert(scans === 1, s"synthesis re-ran ($scans documents scans):\n${finalPlan.take(4000)}")
+  }
+
+  test("split_leak_stats: one prefix screen labels both keyings") {
+    val plan = planOf("split_leak_stats")
+    // the doc and source keyings are labeled in one pass over the
+    // source-joined pairs, so the prefix screen's cogroup runs once
+    val cogroups = "CoGroup".r.findAllIn(plan).length
+    assert(cogroups === 1, s"expected one prefix-screen cogroup, got $cogroups:\n${plan.take(4000)}")
   }
 
   test("pq_adc_topk: lookup fused in the scan, no join keyed on the corpus") {
@@ -423,18 +426,11 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       plan.take(2000))
   }
 
-  test("posttrain_curate: assembly reads the cached turns table, one events scan") {
+  test("posttrain_curate: one events scan per consumer, survivors semi-join back") {
     val plan = planOf("posttrain_curate")
-    // the survivor stage consumes the PlanCache-landed sorted-turns
-    // intermediate (one materialization per events input, shared with
-    // chat_assemble/chat_truncate) instead of re-collapsing the events
-    // log from its own scan
-    assert(plan.contains("InMemoryTableScan"),
-      s"assembly must read the cached turns intermediate:\n${plan.take(2500)}")
-    // the pairing side is then the ONLY live parquet read of events in
-    // the composed plan (the cached subtree's FileScan prints under the
-    // InMemoryTableScan but does not execute; distinct attribute sets
-    // identify genuinely separate scans)
+    // the survivor stage collapses the events log once (assembly) and
+    // the pairing side reads it once more; distinct attribute sets
+    // identify genuinely separate scans
     val eventScans = """FileScan parquet \[([^\]]*)\]""".r
       .findAllMatchIn(plan).map(_.group(1)).toSet
     assert(eventScans.size <= 2,

@@ -615,7 +615,6 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("splitLeakAudit: exactly the cross-split subset of the jaccard pairs, labels consistent") {
-    import org.apache.spark.sql.functions.col
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
     val (w, n) = (Seq(0.8, 0.1, 0.1), Seq("train", "val", "test"))
     val audit = Dedup.splitLeakAudit(docs, w, n).collect()
@@ -657,14 +656,13 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("splitLeakStats: doc keying matches the audit; source keying co-locates same-source pairs") {
-    import org.apache.spark.sql.functions.col
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
     val (w, n) = (Seq(0.8, 0.1, 0.1), Seq("train", "val", "test"))
     val stats = Dedup.splitLeakStats(docs, w, n).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val (nPairsDoc, leakedDoc, microDoc) = stats("doc")
     val (nPairsSrc, leakedSrc, microSrc) = stats("source")
-    assert(nPairsDoc === nPairsSrc) // same landed pair table under both keyings
+    assert(nPairsDoc === nPairsSrc) // same pair set under both keyings
     // the doc-keyed leak count IS the audit's work-list length (the
     // audit reads the same pair table at the same threshold)
     assert(leakedDoc === Dedup.splitLeakAudit(docs, w, n).count())

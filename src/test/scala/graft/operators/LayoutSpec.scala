@@ -65,7 +65,6 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
 
   test("hilbertIndex matches the classic xy2d reference on a dense grid") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // the full 32×32 sub-grid scaled up into the 10-bit domain exercises
     // every rotation state of the top 5 levels
     val pts = for (x <- 0L until 32L; y <- 0L until 32L) yield (x * 32, y * 32)
@@ -79,7 +78,6 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
 
   test("Hilbert locality: consecutive indices are always grid neighbors") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // THE property Morton lacks (its index makes diagonal jumps across
     // power-of-two boundaries): walk a full 32×32 curve via the scaled
     // embedding and check every step moves exactly one cell

@@ -133,7 +133,6 @@ class PackingSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("lengthBatches: buckets honor bounds, batches stay within budget + one doc") {
-    import org.apache.spark.sql.functions.col
     val docs = graft.Engine.Tables(spark, dir).documents
     val rows = Packing.lengthBatches(docs, Budget).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PosttrainingSpec extends AnyFunSuite with SparkTestSession {

@@ -239,7 +239,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("lshMultiProbeTopK: subset of brute force with identical cosines; banding beats the unbanded path on jittered replicas") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val base = graft.Engine.Tables(spark, "/root/testdata/sf0.01").embeddings
       .select("vec_id", "embedding")
@@ -526,7 +525,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("hardNegatives: nearest different-label vectors, never own label") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val r = new scala.util.Random(13)
     def rand() = Array.fill(64)((r.nextDouble() - 0.5).toFloat).toSeq
     // labels by parity; plant for query 0 a near-identical vector with

@@ -85,20 +85,13 @@ class SkewSpec extends AnyFunSuite with SparkTestSession {
     assert(rows.toSeq === again.toSeq)
   }
 
-  /** The session-scoped PHYSICAL name bucketize writes under (mirrors
-    * the derivation in [[Skew.bucketize]] — the scoping is internal, so
-    * the orphan test must aim at the real location).
-    */
-  private def physName(s: org.apache.spark.sql.SparkSession, table: String) =
-    s"${table}_${PlanCache.sessionId(s).replace("-", "")}"
-
   test("bucketize survives an orphaned warehouse directory") {
     import spark.implicits._
     // simulate a fresh in-memory catalog over a prior JVM's surviving
     // files: a directory at the SCOPED managed location with NO catalog
     // entry (managed-table CREATE refuses a non-empty location;
     // bucketize must clear it rather than die)
-    val phys = physName(spark, "t_orphan_b")
+    val phys = Skew.physicalName(spark, "t_orphan_b")
     val loc = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), phys)
     spark.sql(s"DROP TABLE IF EXISTS `$phys`")
@@ -134,7 +127,7 @@ class SkewSpec extends AnyFunSuite with SparkTestSession {
     assert(both._1 === Set(1), s"session 1 read foreign rows: ${both._1}")
     assert(both._2 === Set(2), s"session 2 read foreign rows: ${both._2}")
     Seq(s1 -> "t_race_b", s2 -> "t_race_b").foreach { case (s, t) =>
-      s.sql(s"DROP TABLE IF EXISTS `${physName(s, t)}`")
+      s.sql(s"DROP TABLE IF EXISTS `${Skew.physicalName(s, t)}`")
     }
   }
 
@@ -144,15 +137,15 @@ class SkewSpec extends AnyFunSuite with SparkTestSession {
     val df = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("key", "v")
     val back = Skew.bucketize(s, df, "t_cleanup_b", "key", buckets = 4)
     assert(back.count() === 50)
-    val phys = physName(s, "t_cleanup_b")
+    val phys = Skew.physicalName(s, "t_cleanup_b")
     val loc = new java.io.File(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), phys)
     assert(s.catalog.tableExists(phys), "bucketize must land a catalog entry")
     assert(loc.exists(), "bucketize must land warehouse files")
-    // fire the application-end eviction hook directly, same contract as
-    // PlanCacheSpec: delivering onApplicationEnd at stop() is Spark's
-    // contract, the cleanup it triggers is ours
-    PlanCache.sessionEndListener(PlanCache.sessionId(s))
+    // fire Skew's application-end listener directly: delivering
+    // onApplicationEnd at stop() is Spark's contract, the cleanup it
+    // triggers is ours
+    Skew.sessionEndListener(Skew.sessionId(s))
       .onApplicationEnd(org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
     assert(!s.catalog.tableExists(phys),
       "session-end hook must drop the scoped catalog entry")

@@ -209,7 +209,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
 
   test("novelty: copies score 0, unique docs score 1, overlap in between") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"),   // all shingles unique → 1.0
       (2L, "one two three four five"),          // exact copy of 3 → 0.0
@@ -418,8 +417,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestSession {
       dp(n)
     }
     val real = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
-    val words = real.select("text").collect().map(_.getString(0))
-      .flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
     val got = TextAnalysis.unigramEncode(real).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val docs = real.select("doc_id", "text").collect()

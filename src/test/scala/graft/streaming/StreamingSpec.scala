@@ -581,7 +581,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("StreamGate parquet: dedupContentStream equals the batch exact dedup") {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     // real corpus streamed in doc_id order, then a full RE-CRAWL wave
     // (same texts, new ids, later ts) — the stream must admit exactly
     // one copy per distinct text, which is precisely what the
@@ -628,7 +627,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("StreamGate parquet: qualityFilterStream equals the gated batch scorer") {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val docs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").documents
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     var input: MemoryStream[(Long, String)] = null

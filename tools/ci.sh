@@ -26,7 +26,10 @@
 #                              `src/main` for `@deprecated`: a caller this
 #                              repo does not have gets no compatibility
 #                              shim, so none may return.
-#   4. `sbt test`            — the full ScalaTest suite.
+#   4. `sbt test`            — the full ScalaTest suite. Its compile fails
+#                              on any unused import, private, local or
+#                              implicit in main or test code (build.sbt's
+#                              `-Wunused` flags are fatal).
 #   5. `perfbench/test_metrics.py` — the benchmark harness's self-tests.
 #   6. `tools/deepcheck.sh`  — graft.Verify over EVERY gate at sf0.1,
 #                              hash-compared against the DuckDB oracle
@@ -71,7 +74,7 @@ if [ -n "$stray" ]; then
   echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims"
   exit 1
 fi
-echo "[ci] 4/6 sbt test"
+echo "[ci] 4/6 sbt test (unused code fails the compile)"
 sbt -batch test
 echo "[ci] 5/6 perfbench self-tests"
 python3 perfbench/test_metrics.py
