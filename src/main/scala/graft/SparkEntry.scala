@@ -503,20 +503,6 @@ object SparkEntry {
                FROM sdoc),
               UNNEST(generate_series(1, len(arr))) AS s2(i))"""
 
-  /** BPE-encode oracle: the greedy leftmost non-overlapping merge fold,
-    * restated as a chain of [[operators.TextAnalysis.PinnedBpeMerges]]
-    * `replace`s over a delimiter-wrapped symbol string. Each symbol is
-    * wrapped as ␟sym␟ (chr(31), absent from the corpus alphabet), so
-    * word "ab" becomes "␟a␟␟b␟"; merge (a,b) is
-    * replace("␟a␟␟b␟" → "␟ab␟"). SQL `replace` scans left to right and
-    * resumes AFTER each replacement — exactly the fold's semantics: a
-    * just-merged symbol can't re-merge within the same round (it would
-    * need a = a+b), and each symbol's own delimiters keep adjacent
-    * matches from stealing a shared boundary. Validated against an
-    * independent fold implementation over the full fixture vocabulary.
-    * n_bpe = symbol count of the final wrapped string; the corpus side
-    * is the same word-explode + integer sums as wc_wordcount.
-    */
   /** Unigram-LM Viterbi DP restated in DuckDB: the identical packed
     * integer min-plus recurrence (cost·1024 + n_pieces — see
     * [[operators.TextAnalysis.unigramW]]) unrolled to
@@ -592,6 +578,20 @@ object SparkEntry {
        GROUP BY doc_id ORDER BY doc_id"""
   }
 
+  /** BPE-encode oracle: the greedy leftmost non-overlapping merge fold,
+    * restated as a chain of [[operators.TextAnalysis.PinnedBpeMerges]]
+    * `replace`s over a delimiter-wrapped symbol string. Each symbol is
+    * wrapped as ␟sym␟ (chr(31), absent from the corpus alphabet), so
+    * word "ab" becomes "␟a␟␟b␟"; merge (a,b) is
+    * replace("␟a␟␟b␟" → "␟ab␟"). SQL `replace` scans left to right and
+    * resumes AFTER each replacement — exactly the fold's semantics: a
+    * just-merged symbol can't re-merge within the same round (it would
+    * need a = a+b), and each symbol's own delimiters keep adjacent
+    * matches from stealing a shared boundary. Validated against an
+    * independent fold implementation over the full fixture vocabulary.
+    * n_bpe = symbol count of the final wrapped string; the corpus side
+    * is the same word-explode + integer sums as wc_wordcount.
+    */
   private def bpeEncodeOracleSql: String = {
     val d = "chr(31)"
     val dd = s"$d || $d"
@@ -633,9 +633,6 @@ object SparkEntry {
        FROM perdoc p JOIN documents d USING (doc_id)
        GROUP BY d.lang ORDER BY d.lang"""
 
-  /** Quality-score oracle body — shared by `text_quality` and
-    * `quality_ntile` so the score definition can't drift between them.
-    */
   /** Shared by `decon_survivors` and `decon_bloom`: the bloom path's
     * contract is bit-equality with the exact path, enforced by gating
     * both against this single string.
@@ -656,6 +653,9 @@ object SparkEntry {
          AND doc_id NOT IN (SELECT doc_id FROM contaminated)
        ORDER BY doc_id"""
 
+  /** Quality-score oracle body — shared by `text_quality` and
+    * `quality_ntile` so the score definition can't drift between them.
+    */
   private val qualityOracleBody: String =
     """SELECT doc_id,
        round((CAST(len(list_distinct(w)) AS DOUBLE) / len(w)
@@ -665,10 +665,6 @@ object SparkEntry {
                     regexp_split_to_array(trim(text), '\s+') AS w
              FROM documents)"""
 
-  /** SimHash replicated in SQL: per-bit sign sums, then bit assembly —
-    * generated once here so the constants (60 bits) can never drift from
-    * [[operators.Dedup.SimhashBits]].
-    */
   /** The shared SimHash CTE chain (`tok`/`bits`/`sh(doc_id, simhash)`) —
     * one SQL spelling of the fingerprint for both the batch pair gate
     * and the streaming quarantine gate, so the two can never drift on
@@ -694,6 +690,10 @@ object SparkEntry {
          sh AS (SELECT doc_id, CAST($assemble AS BIGINT) AS simhash FROM bits)"""
   }
 
+  /** SimHash replicated in SQL: per-bit sign sums, then bit assembly —
+    * generated once here so the constants (60 bits) can never drift from
+    * [[operators.Dedup.SimhashBits]].
+    */
   private def simhashOracle: String =
     s"""$simhashShCtes
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -727,18 +727,6 @@ object SparkEntry {
          FROM hits GROUP BY doc_id, band
          ORDER BY doc_id, band"""
 
-  /** Random-hyperplane LSH replicated in SQL. The hyperplane weights are
-    * deterministic driver-side constants ([[operators.Similarity
-    * .planeWeights]]); they are inlined as a literal VALUES table, so the
-    * oracle exercises the exact same planes without needing xxhash64 in
-    * DuckDB. Dot products evaluate left-to-right in double on both
-    * engines (VecDot ≡ list_sum∘list_transform), so the sign of every
-    * signature bit — and hence bucket membership, candidates and the
-    * final rerank — matches bit-for-bit.
-    */
-  /** Exact brute-force cosine top-k — also the baseline CTE inside the
-    * ann_recall audit, so the two spellings can never drift.
-    */
   /** PQ/ADC top-k oracle chain — shared by the `pq_adc_topk` gate, the
     * `ann_recall_pq` audit, and (at shortlist width) the
     * `pq_rerank_topk` funnel's stage 1, so the spellings can never
@@ -886,6 +874,9 @@ object SparkEntry {
          SELECT q_id, rk, vec_id, d2_micro FROM reranked
          WHERE rk <= 10 ORDER BY q_id, rk"""
 
+  /** Exact brute-force cosine top-k — also the baseline CTE inside the
+    * ann_recall audit, so the two spellings can never drift.
+    */
   private val annTopkOracle: String =
     """WITH base AS (
            SELECT vec_id, embedding,
@@ -952,10 +943,6 @@ object SparkEntry {
          ORDER BY x_id"""
   }
 
-  /** IVF probe-path restatement (seed centroids = first 16 vectors,
-    * argmax-cosine cells with larger-id ties, top-4 probe lists) —
-    * shared by the `ann_ivf` gate and the `ann_recall_ivf` audit.
-    */
   /** Shared by `ivf_upsert` and `stream_upsert`: the streaming ingest
     * twin's landed table must equal the batch assignment bit-for-bit,
     * enforced by gating both against this single string.
@@ -1164,6 +1151,10 @@ object SparkEntry {
            CAST(sum(length(value)) AS BIGINT) AS n_value_chars
          FROM s GROUP BY key ORDER BY key"""
 
+  /** IVF probe-path restatement (seed centroids = first 16 vectors,
+    * argmax-cosine cells with larger-id ties, top-4 probe lists) —
+    * shared by the `ann_ivf` gate and the `ann_recall_ivf` audit.
+    */
   private val annIvfOracle: String =
     """WITH base AS (
            SELECT vec_id, embedding,
@@ -1211,6 +1202,15 @@ object SparkEntry {
          SELECT q_id, rk, neighbor_id, cos FROM ranked
          WHERE rk <= 10 ORDER BY q_id, rk"""
 
+  /** Random-hyperplane LSH replicated in SQL. The hyperplane weights are
+    * deterministic driver-side constants ([[operators.Similarity
+    * .planeWeights]]); they are inlined as a literal VALUES table, so the
+    * oracle exercises the exact same planes without needing xxhash64 in
+    * DuckDB. Dot products evaluate left-to-right in double on both
+    * engines (VecDot ≡ list_sum∘list_transform), so the sign of every
+    * signature bit — and hence bucket membership, candidates and the
+    * final rerank — matches bit-for-bit.
+    */
   private def annLshOracle: String = {
     val w = operators.Similarity.planeWeights(8)
     val rows = w.zipWithIndex
@@ -4440,18 +4440,6 @@ object SparkEntry {
          GROUP BY iv_id ORDER BY iv_id"""),
   )
 
-  /** Trained-k-means oracle: unroll [[operators.Clustering.kmeans]]'s
-    * 3 Lloyd iterations as a CTE chain (the [[pageRankOracleSql]]
-    * technique). Each stage is engine-exact by construction: init is
-    * the first k vectors by vec_id; every distance is the same
-    * left-to-right double `c² − 2·v·c` the kmeans_fixed gate proved
-    * bit-identical (list_sum ≡ the native kernel's sequential fold);
-    * the centroid update sums floor(x·1e6) BIGINTs (exact in any
-    * order) and divides `s/(1e6·n)` in double — so the trained
-    * centroids, and therefore every assignment, match Spark's
-    * bit-for-bit. Empty clusters keep their previous position (the
-    * LEFT JOIN's NULL branch), mirroring the trainer's clone.
-    */
   /** The micro-quantized Lloyd chain as CTEs, parameterized so one
     * builder serves the full-dim `kmeans_assign` oracle AND the four
     * per-subspace chains of the `pq_trained_codes` oracle: `pfx`
@@ -4508,6 +4496,18 @@ object SparkEntry {
     head +: steps
   }
 
+  /** Trained-k-means oracle: unroll [[operators.Clustering.kmeans]]'s
+    * 3 Lloyd iterations as a CTE chain (the [[pageRankOracleSql]]
+    * technique). Each stage is engine-exact by construction: init is
+    * the first k vectors by vec_id; every distance is the same
+    * left-to-right double `c² − 2·v·c` the kmeans_fixed gate proved
+    * bit-identical (list_sum ≡ the native kernel's sequential fold);
+    * the centroid update sums floor(x·1e6) BIGINTs (exact in any
+    * order) and divides `s/(1e6·n)` in double — so the trained
+    * centroids, and therefore every assignment, match Spark's
+    * bit-for-bit. Empty clusters keep their previous position (the
+    * LEFT JOIN's NULL branch), mirroring the trainer's clone.
+    */
   private def kmeansAssignOracleSql: String = {
     val k = 16; val iters = 3; val dim = 64
     val chain = kmeansChainCtes("", k, iters, dim,

@@ -2,11 +2,12 @@ package graft.operators
 
 import graft.Engine.Tables
 import graft.functions.VecDot.vecDot
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Distributed Lloyd k-means over the embeddings table — the clustering
   * stage a training-data pipeline runs before IVF indexing, corpus
@@ -22,7 +23,9 @@ import org.apache.spark.sql.functions._
   *  - the centroid update shuffles only (cluster, dim, partial-sum)
   *    triples after map-side partial aggregation: k·dim rows total,
   *    independent of corpus size;
-  *  - vectors are never collected; only the k·dim aggregate comes back.
+  *  - vectors are never collected; only the k·dim aggregate comes back —
+  *    except below [[lloyd]]'s driver-arm budget, where one collect
+  *    replaces the init job and every iteration job.
   *
   * Determinism: init is the first k vectors by vec_id (no RNG), argmin
   * breaks distance ties toward the lower cluster id, and every distance
@@ -59,29 +62,36 @@ object Clustering {
     graft.functions.PqArgmin.pqArgminDist(emb, cents.toIndexedSeq, 0, dim)
   }
 
-  /** (assignments, centroids): assignments = (vec_id, cluster, dist2);
-    * centroids = driver-side array indexed by cluster id.
+  /** The size budget of [[lloyd]]'s driver arm: a training frame whose
+    * Catalyst size estimate is at most this many bytes is collected ONCE
+    * and every chain's Lloyd loop runs on the driver — zero scheduler
+    * round-trips instead of one distributed job per iteration. 64 MiB ≈
+    * a quarter-million 64-dim float vectors: trivially driver-sized, and
+    * the regime the sample-bounded trainers produce by construction at
+    * ANY corpus size.
     */
-  /** Conf key for the driver-arm size gate of [[kmeans]]: a training
-    * input whose Catalyst size estimate is at most this many bytes is
-    * collected ONCE and the Lloyd loop runs on the driver — zero
-    * scheduler round-trips instead of one distributed job per
-    * iteration. 0 disables the arm (every iteration distributed — the
-    * A/B spec's control and the unconditional at-scale path). The
-    * arithmetic is identical by construction (see [[driverLloyd]]), so
-    * the arm is a pure scheduling optimization: gate hashes cannot
-    * move. Default 64 MiB ≈ a quarter-million 64-dim float vectors —
-    * trivially driver-sized, and exactly the regime the sample-bounded
-    * trainers produce by construction at ANY corpus size.
-    */
-  val DriverMaxBytesKey = "spark.graft.kmeans.driverMaxBytes"
-  private val DriverMaxBytesDefault = 64L * 1024 * 1024
+  private val DriverMaxBytes = 64L * 1024 * 1024
 
-  /** The Lloyd loop on driver-collected rows — the SAME arithmetic as
-    * the distributed path, operation for operation: assignment is the
-    * [[graft.functions.PqArgmin]] recipe (c² = left-to-right Scala
-    * square sum, dot accumulates left-to-right in double, score =
-    * c² − 2·dot, strict < keeps the smaller centroid id); the update
+  /** Whether [[lloyd]] trains on `train` on the driver. The Catalyst
+    * estimate is validated as BigInt BEFORE use (the derivedGridB
+    * sentinel discipline): a missing-stats lineage reports
+    * defaultSizeInBytes ≈ Long.MaxValue and a garbage estimate lands
+    * outside (0, budget] — both run distributed, the direction that is
+    * always safe.
+    */
+  private[graft] def takesDriverArm(train: DataFrame): Boolean = {
+    val est: BigInt =
+      try train.queryExecution.optimizedPlan.stats.sizeInBytes
+      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
+    est > 0 && est <= BigInt(DriverMaxBytes)
+  }
+
+  /** The Lloyd loop on driver-collected rows from `init` — the SAME
+    * arithmetic as [[lloyd]]'s distributed arm, operation for operation:
+    * assignment is the [[graft.functions.PqArgmin]] recipe (c² =
+    * left-to-right Scala square sum, dot accumulates left-to-right in
+    * double, score = c² − 2·dot, strict < keeps the smaller centroid
+    * id); the update
     * sums floor(x·1e6) longs (associative — partitioning order never
     * mattered, which is WHY a driver loop can be bit-identical) and
     * divides s / (1e6·n); empty clusters keep their previous position.
@@ -90,8 +100,9 @@ object Clustering {
     * in-process.
     */
   private def driverLloyd(rows: Array[Array[Double]],
-      init: Array[Array[Double]], k: Int, iters: Int,
-      dim: Int): Array[Array[Double]] = {
+      init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
+    val k = init.length
+    val dim = init.head.length
     var cents = init
     for (_ <- 1 to iters) {
       val norms = cents.map(c => c.map(x => x * x).sum)
@@ -122,123 +133,100 @@ object Clustering {
     cents
   }
 
-  /** The driver-arm gate + collect, factored out so MULTI-chain trainers
-    * (the IVF-PQ stack trains one coarse chain plus m per-subspace book
-    * chains over the SAME rows) can pay ONE collect for all chains
-    * instead of one per chain — at gate scale the chains' cost is
-    * scheduler round-trips, not arithmetic. Returns the rows ordered by
-    * `idCol` (sorted on the DRIVER under Spark's own ordering for the
-    * id's type — for strings UTF-8 byte order, not Java's `compareTo` —
-    * so with unique ids the order equals the distributed `orderBy`
-    * without paying its range-exchange job) as exact double-widened
-    * arrays when the validated Catalyst size estimate fits the
-    * [[DriverMaxBytesKey]] budget; None = run distributed, the direction
-    * that is always safe.
+  /** One Lloyd chain for [[lloyd]]: the vector column it trains on (any
+    * array<float> or array<double> expression over the training frame),
+    * its cluster count and its iteration count.
     */
-  private[graft] def driverArmRows(vecs: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): Option[Array[Array[Double]]] = {
-    val spark = vecs.sparkSession
-    // size-gate on the Catalyst estimate, validated as BigInt BEFORE
-    // use (the derivedGridB sentinel discipline): a missing-stats
-    // lineage reports defaultSizeInBytes ≈ Long.MaxValue and a garbage
-    // estimate lands outside (0, maxBytes] — both fall back to the
-    // distributed loop
-    val maxBytes = spark.conf.getOption(DriverMaxBytesKey)
-      .map(_.toLong).getOrElse(DriverMaxBytesDefault)
-    val est: BigInt =
-      try vecs.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    if (!(maxBytes > 0 && est > 0 && est <= BigInt(maxBytes))) None
-    else {
-      val elemIsFloat = vecs.schema(embCol).dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-        case _ => false
-      }
-      val idType = vecs.schema(idCol).dataType
+  private[graft] final case class Chain(vec: Column, k: Int, iters: Int)
+
+  /** The Lloyd trainer: each chain's centroids (indexed by cluster id)
+    * after `iters` iterations over the rows of `train`, starting from the
+    * chain's vectors of the first `k` rows by `idCol`. The arm is decided
+    * once, for every chain, by [[takesDriverArm]]:
+    *  - driver: ONE collect of the id plus every chain's vector column,
+    *    sorted on the driver under Spark's own ordering for the id's type
+    *    (for strings UTF-8 byte order, not Java's `compareTo`; with unique
+    *    ids this is the distributed `orderBy` without its range-exchange
+    *    job), then [[driverLloyd]] per chain;
+    *  - distributed: per chain, an `orderBy(id).limit(k)` init and one
+    *    micro-sum aggregate per iteration — the only path for training
+    *    frames past the budget.
+    * Both arms read each chain's vectors through the same Spark
+    * expression and run the same arithmetic, so the centroids are
+    * bit-identical (ClusteringSpec and SimilaritySpec pin it): the arm is
+    * scheduling, never arithmetic.
+    */
+  private[graft] def lloyd(train: DataFrame, chains: Seq[Chain],
+      idCol: String = "vec_id"): IndexedSeq[Array[Array[Double]]] = {
+    chains.foreach(c => require(c.k >= 2 && c.iters >= 1,
+      s"need k >= 2, iters >= 1; got k=${c.k} iters=${c.iters}"))
+    val vecCols = chains.indices.map(i => s"__v$i")
+    val frame = train.select(col(idCol) +: chains.zip(vecCols).map {
+      case (c, name) => c.vec.as(name) }: _*)
+    // the float→double element widening is exact, so reading every
+    // vector as doubles up front keeps the kernel's per-element casts
+    val isFloat = vecCols.map(name => frame.schema(name).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
+    def doubles(r: Row, pos: Int, i: Int): Array[Double] =
+      if (isFloat(i)) r.getSeq[Float](pos).map(_.toDouble).toArray
+      else r.getSeq[Double](pos).toArray
+    if (takesDriverArm(train)) {
+      val idType = frame.schema(idCol).dataType
       val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
       // None (a null id) sorts first, as in an ascending orderBy
       val idOrder = Ordering.Option(TypeUtils.getInterpretedOrdering(idType))
-      // the float→double element cast is exact, so converting up front
-      // preserves the distributed kernel's per-element cast semantics
-      Some(vecs.select(col(idCol), col(embCol)).collect()
-        .sortBy(r => Option(toCatalyst(r.get(0))))(idOrder)
-        .map { r =>
-          if (elemIsFloat) r.getSeq[Float](1).map(_.toDouble).toArray
-          else r.getSeq[Double](1).toArray
-        })
+      val rows = frame.collect().sortBy(r => Option(toCatalyst(r.get(0))))(idOrder)
+      chains.indices.map { i =>
+        val c = chains(i)
+        require(rows.length >= c.k, s"corpus has fewer than k=${c.k} vectors")
+        val vs = rows.map(doubles(_, i + 1, i))
+        driverLloyd(vs, vs.take(c.k), c.iters)
+      }
+    } else chains.indices.map { i =>
+      val c = chains(i)
+      val v = vecCols(i)
+      var centroids = frame.orderBy(col(idCol)).limit(c.k).select(col(v))
+        .collect().map(doubles(_, 0, i))
+      require(centroids.length == c.k, s"corpus has fewer than k=${c.k} vectors")
+      val dim = centroids.head.length
+      for (_ <- 1 to c.iters) {
+        // new centroid = per-dimension mean of assigned vectors: explode to
+        // (cluster, dim, micro) and aggregate — k·dim result rows, map-side
+        // partial sums carry the corpus weight. Elements enter as
+        // floor(x·1e6) Longs (binary floor of the IEEE product —
+        // deliberately NOT round(), see labelCentroids), so the sums are
+        // exact integers in any order and the mean below is bit-identical
+        // on every engine, under every partitioning, and to
+        // [[driverLloyd]]'s in-process loop.
+        val sums = frame
+          .select(bestCentroid(centroids.toSeq, col(v)).getField("c_id").as("cluster"),
+            posexplode(col(v)).as(Seq("d", "x")))
+          .select(col("cluster"), col("d"),
+            floor(col("x").cast("double") * lit(1e6)).cast("long").as("micro"))
+          .groupBy(col("cluster"), col("d"))
+          .agg(sum(col("micro")).as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = centroids.map(_.clone()) // empty clusters keep position
+        sums.groupBy(_.getInt(0)).foreach { case (p, rows) =>
+          val m = new Array[Double](dim)
+          rows.foreach(r => m(r.getInt(1)) = r.getLong(2) / (1e6 * r.getLong(3)))
+          next(p) = m
+        }
+        centroids = next
+      }
+      centroids
     }
   }
 
-  /** [[driverLloyd]] on pre-collected rows with the trainer's init rule
-    * (first k rows in id order) — the entry point for callers that share
-    * one [[driverArmRows]] collect across several chains.
+  /** Lloyd k-means of `vecs`' `embCol` (see [[lloyd]]) with the final
+    * assignment: (assignments, centroids), assignments = (id, cluster,
+    * dist2), centroids indexed by cluster id.
     */
-  private[graft] def lloydOnRows(rows: Array[Array[Double]], k: Int,
-      iters: Int): Array[Array[Double]] = {
-    require(k >= 2 && iters >= 1, s"need k >= 2, iters >= 1; got k=$k iters=$iters")
-    require(rows.length >= k, s"corpus has fewer than k=$k vectors")
-    driverLloyd(rows, rows.take(k).map(_.clone()), k, iters, rows.head.length)
-  }
-
   def kmeans(vecs: DataFrame, k: Int = 16, iters: Int = 5,
       idCol: String = "vec_id", embCol: String = "embedding"): (DataFrame, Array[Array[Double]]) = {
-    // k >= 2: the argmin builds least() over k structs, which Spark
-    // requires to have at least two arguments (k = 1 is degenerate anyway)
-    require(k >= 2 && iters >= 1, s"need k >= 2, iters >= 1; got k=$k iters=$iters")
-
-    val elemIsFloat = vecs.schema(embCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-
-    val armRows = driverArmRows(vecs, idCol, embCol)
-    var centroids: Array[Array[Double]] = null
-    if (armRows.isDefined) {
-      // ONE collect replaces the init job plus every iteration job
-      centroids = lloydOnRows(armRows.get, k, iters)
-    } else {
-      centroids = vecs
-        .orderBy(col(idCol)).limit(k)
-        .select(col(embCol)).collect()
-        .map { r =>
-          if (elemIsFloat) r.getSeq[Float](0).map(_.toDouble).toArray
-          else r.getSeq[Double](0).toArray
-        }
-      require(centroids.length == k, s"corpus has fewer than k=$k vectors")
-    }
-    val dim = centroids.head.length
-
-    def assigned: DataFrame =
-      vecs.withColumn("cluster",
-        bestCentroid(centroids.toSeq, col(embCol)).getField("c_id"))
-
-    for (_ <- 1 to iters if armRows.isEmpty) {
-      // new centroid = per-dimension mean of assigned vectors: explode to
-      // (cluster, dim, micro) and aggregate — k·dim result rows, map-side
-      // partial sums carry the corpus weight. Elements enter as
-      // floor(x·1e6) Longs (binary floor of the IEEE product —
-      // deliberately NOT round(), see labelCentroids), so the sums are
-      // exact integers in any order and the mean below is bit-identical
-      // on every engine and under every partitioning — and, for the same
-      // reason, identical to [[driverLloyd]]'s in-process loop.
-      val sums = assigned
-        .select(col("cluster"), posexplode(col(embCol)).as(Seq("d", "x")))
-        .select(col("cluster"), col("d"),
-          floor(col("x").cast("double") * lit(1e6)).cast("long").as("micro"))
-        .groupBy(col("cluster"), col("d"))
-        .agg(sum(col("micro")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = Array.tabulate(k)(i => centroids(i).clone()) // empty clusters keep position
-      sums.groupBy(_.getInt(0)).foreach { case (c, rows) =>
-        val v = new Array[Double](dim)
-        rows.foreach(r => v(r.getInt(1)) = r.getLong(2) / (1e6 * r.getLong(3)))
-        next(c) = v
-      }
-      centroids = next
-    }
-
+    val centroids = lloyd(vecs, Seq(Chain(col(embCol), k, iters)), idCol).head
     // dist2 = ||v||² + (||c||² - 2·v·c) — the second term is exactly the
     // struct field the argmin already minimized.
     val best = bestCentroid(centroids.toSeq, col(embCol))

@@ -238,6 +238,21 @@ object Dedup {
     v
   }
 
+  /** One doc's sorted-signature row exploded to its B grid cells: the
+    * row side (doc_a resolution) owns grid row bucket(doc), the column
+    * side (doc_b) owns grid column bucket(doc). `xxhash64` here and in
+    * the pair-cell expression are the same function with the same
+    * default seed, so a pair and its two signatures always meet.
+    */
+  private def replicaCells(sets: DataFrame, tag: Int,
+      rowSide: Boolean, b: Int): DataFrame = {
+    val cells =
+      if (rowSide) s"transform(sequence(0, ${b - 1}), j -> pmod(xxhash64(doc_id), $b) * $b + j)"
+      else s"transform(sequence(0, ${b - 1}), i -> i * $b + pmod(xxhash64(doc_id), $b))"
+    sets.select(explode(expr(cells)).as("cell"), lit(tag).as("tag"),
+      col("doc_id").as("doc"), col("hs"), col("n_sh"))
+  }
+
   /** Exact intersection counts for a candidate pair set with signature
     * shuffle ONCE PER (grid cell, doc) — never per pair.
     *
@@ -283,21 +298,6 @@ object Dedup {
     * pair present in both sets tables (inner-join semantics). Same
     * counts as the r15 join shape — a pure restructure.
     */
-  /** One doc's sorted-signature row exploded to its B grid cells: the
-    * row side (doc_a resolution) owns grid row bucket(doc), the column
-    * side (doc_b) owns grid column bucket(doc). `xxhash64` here and in
-    * the pair-cell expression are the same function with the same
-    * default seed, so a pair and its two signatures always meet.
-    */
-  private def replicaCells(sets: DataFrame, tag: Int,
-      rowSide: Boolean, b: Int): DataFrame = {
-    val cells =
-      if (rowSide) s"transform(sequence(0, ${b - 1}), j -> pmod(xxhash64(doc_id), $b) * $b + j)"
-      else s"transform(sequence(0, ${b - 1}), i -> i * $b + pmod(xxhash64(doc_id), $b))"
-    sets.select(explode(expr(cells)).as("cell"), lit(tag).as("tag"),
-      col("doc_id").as("doc"), col("hs"), col("n_sh"))
-  }
-
   private def gridVerifiedCounts(candidates: DataFrame, sa: DataFrame,
       sb: DataFrame, sizeRatioMin: Option[Double]): DataFrame = {
     val spark = candidates.sparkSession
@@ -369,16 +369,6 @@ object Dedup {
       .toDF("doc_a", "doc_b", "na", "nb", "n_inter")
   }
 
-  /** Exact n-gram Jaccard near-dup pairs: self-join on distinct shingles,
-    * count the intersection per pair, Jaccard = |∩| / (|A|+|B|-|∩|).
-    * Candidate fan-out is bounded by shingle document-frequency; at scale
-    * pass `maxDf` — candidate generation then skips shingles present in
-    * > maxDf docs (the self-join's quadratic hot keys) and survivors are
-    * re-verified over ALL shingles via [[verifiedPairs]]: a pair whose
-    * entire overlap is ubiquitous shingles may be missed (one-sided,
-    * like LSH recall) but every reported value is the true Jaccard.
-    * Jaccard is a ratio of exact ints → bit-identical in any engine.
-    */
   /** Capped candidate generation: ONE groupBy(h) produces each shingle's
     * (bounded) posting list and the ordered pairs expand IN the array —
     * replaces the df-aggregate + rare-join + self-join spelling, which
@@ -484,6 +474,16 @@ object Dedup {
       sh, threshold)
   }
 
+  /** Exact n-gram Jaccard near-dup pairs: self-join on distinct shingles,
+    * count the intersection per pair, Jaccard = |∩| / (|A|+|B|-|∩|).
+    * Candidate fan-out is bounded by shingle document-frequency; at scale
+    * pass `maxDf` — candidate generation then skips shingles present in
+    * > maxDf docs (the self-join's quadratic hot keys) and survivors are
+    * re-verified over ALL shingles via [[verifiedPairs]]: a pair whose
+    * entire overlap is ubiquitous shingles may be missed (one-sided,
+    * like LSH recall) but every reported value is the true Jaccard.
+    * Jaccard is a ratio of exact ints → bit-identical in any engine.
+    */
   def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3,
       maxDf: Option[Int] = None): DataFrame = {
     // every shuffle (distinct, self-join, sizes) runs on 8-byte hashes
@@ -678,24 +678,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** MinHash signature + banded LSH near-dup pairs (the 100 TB path).
-    *
-    * Shingles are hashed to 64-bit with xxhash64; the i-th "permutation" is
-    * a plain deterministic rehash h_i(x) = xxhash64(i, x) — xxhash64 mixes
-    * its seed-per-column thoroughly, so the 64 rehashes behave as
-    * independent hash functions for minwise estimation (the classic
-    * (a·x+b) mod p framing would need overflow-safe 122-bit multiply in
-    * Long arithmetic for its theoretical guarantee; a keyed rehash gives
-    * the same practical recall with one codegen'd call). Each h_i is
-    * min-reduced per doc into a signature; signatures are cut into `bands`
-    * bands; docs sharing any band hash become candidates (one groupBy on
-    * the band key — fan-out controlled, no all-pairs). Candidates are then
-    * verified with the exact shingle-set Jaccard, so the final output
-    * equals [[jaccardPairs]] at the same threshold whenever LSH recall
-    * reaches every true pair (at threshold 0.9, 16 bands × 4 rows: miss
-    * probability (1-0.9⁴)¹⁶ ≈ 4e-8; verified empirically in ScalaTest
-    * against the exact pairs, at both sf0.01 and sf0.1).
-    */
   /** (doc_id, band, band_hash) rows: the minhash signature cut into LSH
     * band keys. Signature: for each i, min over shingles of
     * xxhash64(i, h) — a deterministic keyed rehash, no RNG, overflow-free
@@ -725,6 +707,24 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
   }
 
+  /** MinHash signature + banded LSH near-dup pairs (the 100 TB path).
+    *
+    * Shingles are hashed to 64-bit with xxhash64; the i-th "permutation" is
+    * a plain deterministic rehash h_i(x) = xxhash64(i, x) — xxhash64 mixes
+    * its seed-per-column thoroughly, so the 64 rehashes behave as
+    * independent hash functions for minwise estimation (the classic
+    * (a·x+b) mod p framing would need overflow-safe 122-bit multiply in
+    * Long arithmetic for its theoretical guarantee; a keyed rehash gives
+    * the same practical recall with one codegen'd call). Each h_i is
+    * min-reduced per doc into a signature; signatures are cut into `bands`
+    * bands; docs sharing any band hash become candidates (one groupBy on
+    * the band key — fan-out controlled, no all-pairs). Candidates are then
+    * verified with the exact shingle-set Jaccard, so the final output
+    * equals [[jaccardPairs]] at the same threshold whenever LSH recall
+    * reaches every true pair (at threshold 0.9, 16 bands × 4 rows: miss
+    * probability (1-0.9⁴)¹⁶ ≈ 4e-8; verified empirically in ScalaTest
+    * against the exact pairs, at both sf0.01 and sf0.1).
+    */
   def minhashLshPairs(docs: DataFrame, threshold: Double, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
     val sh = shingleHashes(docs, n)
@@ -801,6 +801,22 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 
+  /** Edge-count ceiling for the driver-side union-find fast path
+    * (counted on the DIRECTED edge RDD — 2× the pair count). At the
+    * ceiling the collected graph is 1M (Long, Long) tuples ≈ 16 MB of
+    * payload, ~100 MB transient with JVM boxing + the union-find map —
+    * comfortably inside any production driver heap, and solved in
+    * milliseconds where even ONE distributed round costs ~1 s of
+    * scheduler overhead (measured; and the 10×-stress 440k-edge graph
+    * paid ~4-5 s/gate in loop rounds under the old 100k ceiling for a
+    * graph the driver solves instantly). A near-dup graph is bounded by
+    * duplicate volume, not corpus size, so most real corpora live under
+    * this ceiling; past it, the co-partitioned RDD loop takes over
+    * unchanged (the 20× stress probe's ~2M-edge graph still exercises
+    * it). The same hybrid GraphFrames ships for its CC.
+    */
+  val SmallGraphMaxEdges = 1000000L
+
   /** Connected components over a near-dup pair set — the stage that turns
     * PAIRS into duplicate CLUSTERS so exactly one canonical doc survives
     * per group (pairs alone over-delete: a~b and b~c with keep-min drops
@@ -842,22 +858,6 @@ object Dedup {
     * rather than failing, matching the lenient semantics of the other
     * approximate dedup paths.
     */
-  /** Edge-count ceiling for the driver-side union-find fast path
-    * (counted on the DIRECTED edge RDD — 2× the pair count). At the
-    * ceiling the collected graph is 1M (Long, Long) tuples ≈ 16 MB of
-    * payload, ~100 MB transient with JVM boxing + the union-find map —
-    * comfortably inside any production driver heap, and solved in
-    * milliseconds where even ONE distributed round costs ~1 s of
-    * scheduler overhead (measured; and the 10×-stress 440k-edge graph
-    * paid ~4-5 s/gate in loop rounds under the old 100k ceiling for a
-    * graph the driver solves instantly). A near-dup graph is bounded by
-    * duplicate volume, not corpus size, so most real corpora live under
-    * this ceiling; past it, the co-partitioned RDD loop takes over
-    * unchanged (the 20× stress probe's ~2M-edge graph still exercises
-    * it). The same hybrid GraphFrames ships for its CC.
-    */
-  val SmallGraphMaxEdges = 1000000L
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 15,
       smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
     import org.apache.spark.HashPartitioner

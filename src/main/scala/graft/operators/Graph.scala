@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality — fixed-iteration PageRank over a document link
@@ -53,9 +53,6 @@ object Graph {
   /** 0.15 teleport base in rank micro-units. */
   val BaseMicro = 150000L
 
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Deterministic in-plan link synthesis: doc d emits OutDegree edges
     * d → lo + (md5_60("edge:" ++ d ++ ":" ++ j) mod n) for j = 1..k, where
     * [lo, lo+n) is the (contiguous) doc_id domain taken from a one-row
@@ -68,7 +65,7 @@ object Graph {
     val bounds = ids.agg(min(col("src")).as("__lo"), count(lit(1)).as("__n"))
     val targets = (1 to OutDegree).map(j =>
       col("__lo") + pmod(
-        h60(concat(lit("edge:"), col("src").cast("string"), lit(s":$j"))),
+        TextAnalysis.md5_60(concat(lit("edge:"), col("src").cast("string"), lit(s":$j"))),
         col("__n")))
     ids.crossJoin(broadcast(bounds))
       .select(col("src"), explode(array(targets: _*)).as("dst"))

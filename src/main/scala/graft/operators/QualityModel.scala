@@ -28,12 +28,6 @@ object QualityModel {
     */
   val GateWeights: Array[Double] = Array(-3.15, 0.45, 1.2, 0.8)
 
-  /** Per-doc features, all derived from integer token statistics so both
-    * engines compute bit-identical inputs (the only transcendental is the
-    * final ln): f1 = ln(1 + #tokens), f2 = distinct-token ratio,
-    * f3 = ratio of tokens ≥ 3 chars (the [[TextAnalysis.qualityScore]]
-    * long-token signal).
-    */
   /** The three feature expressions, shared by every entry point so the
     * projected ([[features]]) and in-place ([[logitScoreWide]]) paths
     * compute bit-identical scores.
@@ -46,6 +40,12 @@ object QualityModel {
       size(filter(w, t => length(t) >= 3)).cast("double") / nTok)
   }
 
+  /** Per-doc features, all derived from integer token statistics so both
+    * engines compute bit-identical inputs (the only transcendental is the
+    * final ln): f1 = ln(1 + #tokens), f2 = distinct-token ratio,
+    * f3 = ratio of tokens ≥ 3 chars (the [[TextAnalysis.qualityScore]]
+    * long-token signal).
+    */
   def features(docs: DataFrame): DataFrame = {
     val Seq(f1, f2, f3) = featureExprs
     docs.select(col("doc_id"), f1.as("f1"), f2.as("f2"), f3.as("f3"))

@@ -20,8 +20,7 @@ object Sampling {
   private val Buckets = 1_000_000L
 
   private def bucket(keyCol: Column, salt: String): Column =
-    pmod(conv(substring(md5(concat(lit(salt), keyCol.cast("string"))), 1, 15), 16, 10)
-      .cast("long"), lit(Buckets))
+    pmod(TextAnalysis.md5_60(concat(lit(salt), keyCol.cast("string"))), lit(Buckets))
 
   private def gate(keyCol: Column, fraction: Column, salt: String): Column =
     bucket(keyCol, salt) < (lit(Buckets) * fraction).cast("long")
@@ -252,24 +251,6 @@ object Sampling {
       .orderBy(col("doc_id"))
   }
 
-  /** Temperature-based source mixture (UniMax / multilingual-LM
-    * sampling): per-source admission rates proportional to
-    * `share^α` (α = 1/2 here — square-root temperature), renormalized,
-    * scaled to a token `budget` — big sources are damped, small ones
-    * upweighted, the standard fix for head-language dominance applied
-    * at the SOURCE level. Admission itself is the usual salted-md5 gate
-    * (deterministic, partitioning-invariant, monotone in the rate).
-    *
-    * Engine-exactness discipline: every data-derived rate is carried in
-    * INTEGER micro-units. `w = floor(sqrt(n_s/N)·1e6)` (sqrt is
-    * correctly rounded in IEEE — identical bits in any engine), target
-    * tokens `t_s = (budget·w) div Σw` and the admission threshold
-    * `min(1e6, (1e6·t_s) div n_s)` are pure BIGINT division — a double
-    * quotient + floor could disagree with true integer division when
-    * rounding crosses an integer, so `div` it is. The per-source table
-    * is source-cardinality-sized; the corpus side is one scan + one
-    * broadcast join, no shuffle.
-    */
   /** Shared rate table for [[mixTemperature]]/[[mixUpsample]]: per
     * source, its token count `n_s` and temperature-scaled token target
     * `t_s = (budget·w) div Σw` with `w = floor(sqrt(n_s/N)·1e6)`. The
@@ -298,6 +279,24 @@ object Sampling {
       .select(col("source"), col("n_s"), col("t_s"))
   }
 
+  /** Temperature-based source mixture (UniMax / multilingual-LM
+    * sampling): per-source admission rates proportional to
+    * `share^α` (α = 1/2 here — square-root temperature), renormalized,
+    * scaled to a token `budget` — big sources are damped, small ones
+    * upweighted, the standard fix for head-language dominance applied
+    * at the SOURCE level. Admission itself is the usual salted-md5 gate
+    * (deterministic, partitioning-invariant, monotone in the rate).
+    *
+    * Engine-exactness discipline: every data-derived rate is carried in
+    * INTEGER micro-units. `w = floor(sqrt(n_s/N)·1e6)` (sqrt is
+    * correctly rounded in IEEE — identical bits in any engine), target
+    * tokens `t_s = (budget·w) div Σw` and the admission threshold
+    * `min(1e6, (1e6·t_s) div n_s)` are pure BIGINT division — a double
+    * quotient + floor could disagree with true integer division when
+    * rounding crosses an integer, so `div` it is. The per-source table
+    * is source-cardinality-sized; the corpus side is one scan + one
+    * broadcast join, no shuffle.
+    */
   def mixTemperature(docs: DataFrame, budget: Long,
       salt: String = "mixt:"): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Engine.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,13 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Sentences {
 
-  /** The engine-portable 60-bit md5 digest (same spelling as
-    * [[TextAnalysis.md5_60]], local copy to keep this module
-    * self-contained).
-    */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Average synthesized sentence length: token i ends a sentence when
     * md5_60("sent:" ++ token ++ ":" ++ i) ≡ 0 (mod this).
     */
@@ -55,7 +48,7 @@ object Sentences {
     val w = split(trim(col("text")), "\\s+")
     val punct = transform(w, (t, i) =>
       concat(t, when(
-        h60(concat(lit("sent:"), t, lit(":"), (i + 1).cast("string")))
+        TextAnalysis.md5_60(concat(lit("sent:"), t, lit(":"), (i + 1).cast("string")))
           % SentenceEvery === 0 || (i + 1) === size(w),
         lit(".")).otherwise(lit(""))))
     docs.select(col("doc_id"), array_join(punct, " ").as("text"))
@@ -144,7 +137,7 @@ object Sentences {
         array_join(expr(
           "transform(sort_array(collect_list(struct(sent_id, sentence))), x -> x.sentence)"),
           " ").as("__sc_text"))
-      .withColumn("chunk_md5_60", h60(col("__sc_text")))
+      .withColumn("chunk_md5_60", TextAnalysis.md5_60(col("__sc_text")))
       .select(col("doc_id"), col("chunk_id"), col("n_sents"),
         col("n_tokens"), col("chunk_md5_60"))
       .orderBy(col("doc_id"), col("chunk_id"))

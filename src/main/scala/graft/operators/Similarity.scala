@@ -34,6 +34,28 @@ object Similarity {
   private def withNorm(vecs: DataFrame): DataFrame =
     vecs.withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
 
+  /** `vecs` with `norm` and `unit`: the embedding divided by its norm,
+    * cast back to float — what the trained IVF cells train on. Lloyd
+    * over unit vectors is spherical k-means, whose L2 objective
+    * coincides with the cosine assignment the index uses. The norm
+    * enters the lambda as an array element, not as `norm` itself:
+    * CollapseProject inlines a once-referenced `norm` into the lambda
+    * body, which then recomputes the 64-element dot product per element
+    * (111 → 79 ms per collect of the sf0.1 vectors on a 4-core VM; the
+    * floats are bit-identical).
+    */
+  private def withUnit(vecs: DataFrame): DataFrame =
+    withNorm(vecs).withColumn("unit", expr(
+      "zip_with(embedding, array_repeat(norm, size(embedding)), (x, n) -> cast(x / n AS float))"))
+
+  /** Trained IVF cells: the centroids of one Lloyd chain over the
+    * [[withUnit]] vectors of `train`, with their norms.
+    */
+  private def trainedCells(train: DataFrame, cells: Int,
+      iters: Int): Array[(Int, Array[Double], Double)] =
+    centroidsWithNorm(Clustering.lloyd(withUnit(train),
+      Seq(Clustering.Chain(col("unit"), cells, iters))).head)
+
   private def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
     round(vecDot(a, b) / (na * nb), 4)
 
@@ -237,6 +259,16 @@ object Similarity {
       k = 10)
   }
 
+  /** First-`cells` seed centroids as (id, weights, norm) — driver-sized
+    * by construction (cells × dim doubles).
+    */
+  private def seedCentroids(base: DataFrame,
+      cells: Int): Array[(Int, Array[Double], Double)] =
+    base.filter(col("vec_id") < cells)
+      .select(col("vec_id").cast("int").as("c_id"), col("embedding"), col("norm"))
+      .collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2)))
+
   /** IVF (inverted-file) ANN — the second scale path, complementary to
     * LSH: partition the corpus into `cells` by nearest centroid, probe
     * only the `nProbe` best cells per query, exact-rerank the survivors.
@@ -251,33 +283,12 @@ object Similarity {
     * shuffle `cells`× the data). greatest() over (cos, c_id) structs
     * gives a deterministic argmax.
     */
-  /** First-`cells` seed centroids as (id, weights, norm) — driver-sized
-    * by construction (cells × dim doubles).
-    */
-  private def seedCentroids(base: DataFrame,
-      cells: Int): Array[(Int, Array[Double], Double)] =
-    base.filter(col("vec_id") < cells)
-      .select(col("vec_id").cast("int").as("c_id"), col("embedding"), col("norm"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2)))
-
   def ivfTopK(vecs: DataFrame, numQueries: Int = 10, k: Int = 10,
       cells: Int = 16, nProbe: Int = 4): DataFrame = {
     val base = withNorm(vecs)
     ivfWithCentroids(base, seedCentroids(base, cells), numQueries, k, nProbe)
   }
 
-  /** IVF with TRAINED centroids: spherical k-means ([[Clustering.kmeans]]
-    * over unit-normalized vectors, so its L2 objective coincides with the
-    * cosine assignment the index uses) supplies the cell structure
-    * instead of the first-k seed vectors — same index layout, assignment
-    * expression and probe path. On clustered corpora (the case that
-    * matters: real embedding spaces are clustered) trained centroids
-    * cover the data's regions where arbitrary seeds may all fall in one —
-    * ScalaTest asserts the recall advantage on separable clusters and a
-    * stable floor on the near-uniform testdata. Rows-only gate upstream
-    * for the same reason as kmeans itself.
-    */
   /** Gated entry for the TRAINED-centroid IVF path — hash-gated since
     * round 18: the unit-normalization is a float cast of exact double
     * arithmetic, the trainer is the engine-exact integer-micro Lloyd
@@ -289,12 +300,18 @@ object Similarity {
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
     ivfTopKKmeans(Tables(spark, dir).embeddings)
 
+  /** IVF with TRAINED centroids: spherical k-means ([[trainedCells]])
+    * supplies the cell structure instead of the first-k seed vectors —
+    * same index layout, assignment expression and probe path. On
+    * clustered corpora (the case that matters: real embedding spaces are
+    * clustered) trained centroids cover the data's regions where
+    * arbitrary seeds may all fall in one — ScalaTest asserts the recall
+    * advantage on separable clusters and a stable floor on the
+    * near-uniform testdata.
+    */
   def ivfTopKKmeans(vecs: DataFrame, numQueries: Int = 10, k: Int = 10,
       cells: Int = 16, nProbe: Int = 4, iters: Int = 3): DataFrame = {
-    val unit = withNorm(vecs).select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x / norm AS float))").as("embedding"))
-    val (_, centroids) = Clustering.kmeans(unit, k = cells, iters = iters)
-    ivfWithCentroids(withNorm(vecs), centroidsWithNorm(centroids),
+    ivfWithCentroids(withNorm(vecs), trainedCells(vecs, cells, iters),
       numQueries, k, nProbe)
   }
 
@@ -331,12 +348,9 @@ object Similarity {
   def ivfTopKKmeansSampled(vecs: DataFrame, numQueries: Int = 10,
       k: Int = 10, cells: Int = 16, nProbe: Int = 4, iters: Int = 3,
       fraction: Double = IvfKmeansSampleFraction): DataFrame = {
-    val unit = withNorm(vecs).select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x / norm AS float))").as("embedding"))
-    val sample = Sampling.deterministicSample(unit, "vec_id", fraction,
+    val sample = Sampling.deterministicSample(vecs, "vec_id", fraction,
       salt = IvfKmeansSampleSalt)
-    val (_, centroids) = Clustering.kmeans(sample, k = cells, iters = iters)
-    ivfWithCentroids(withNorm(vecs), centroidsWithNorm(centroids),
+    ivfWithCentroids(withNorm(vecs), trainedCells(sample, cells, iters),
       numQueries, k, nProbe)
   }
 
@@ -374,7 +388,7 @@ object Similarity {
     * ([[Multimodal.xmodalTopK]] sends text-encoder queries against
     * image-encoder vectors; both encoders must land in one space, which
     * is the CLIP-style contract this operator assumes of its inputs).
-    * Training is [[Clustering.kmeans]] over the unit-normalized corpus
+    * Training is [[trainedCells]] over the unit-normalized corpus
     * (the [[ivfTopKKmeans]] discipline, engine-exact integer-micro
     * Lloyd), assignment/probing reuse [[centScores]] so cell semantics
     * cannot drift from the single-modality paths. No self-exclusion:
@@ -389,10 +403,7 @@ object Similarity {
   def ivfXModalTrainedTopK(corpus: DataFrame, queries: DataFrame,
       k: Int = 10, cells: Int = 16, nProbe: Int = 4,
       iters: Int = 2): DataFrame = {
-    val unit = withNorm(corpus).select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x / norm AS float))").as("embedding"))
-    val (_, centroids) = Clustering.kmeans(unit, k = cells, iters = iters)
-    val cents = centroidsWithNorm(centroids)
+    val cents = trainedCells(corpus, cells, iters)
     val scores = centScores(cents)
     val assigned = withNorm(corpus).withColumn("cell",
       greatest(scores: _*).getField("c_id"))
@@ -413,10 +424,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  /** Cell assignment + broadcast probe-list queries, shared by the IVF
-    * top-k and IVF-kNN paths: returns (assigned corpus with `cell`,
-    * broadcast query batch with `q_probes`).
-    */
   /** Per-centroid (cos, c_id) score structs against the row's
     * `embedding`/`norm` — the one assignment expression every IVF path
     * (build, probe, and incremental upsert) shares, so cell semantics
@@ -432,6 +439,10 @@ object Similarity {
     }
   }
 
+  /** Cell assignment + broadcast probe-list queries, shared by the IVF
+    * top-k and IVF-kNN paths: returns (assigned corpus with `cell`,
+    * broadcast query batch with `q_probes`).
+    */
   private def ivfAssignments(base: DataFrame,
       cents: Array[(Int, Array[Double], Double)],
       numQueries: Int, nProbe: Int): (DataFrame, DataFrame) = {
@@ -644,23 +655,6 @@ object Similarity {
       }
     }
 
-  /** Product-quantization encoding — the memory-compression half of
-    * IVF-PQ, the index structure ANN systems actually run at 10⁹–10¹¹
-    * vectors: the 64-dim float vector (256 bytes) becomes m=4 one-byte
-    * codes (64× smaller), each code the nearest of k=16 codebook
-    * centroids for that 16-dim subspace. A 100 TB embedding corpus
-    * quantizes to ~1.6 TB of codes — the difference between "index fits
-    * in cluster RAM" and "it doesn't".
-    *
-    * Scale shape: codebooks are literals compiled into the plan
-    * (m·k·subDim = 1024 doubles), each code is an argmin over k fused
-    * [[vecDot]] calls on an array slice — assignment happens entirely
-    * inside the scan's codegen stage: zero shuffles, zero joins, output
-    * grows with rows only. dist uses c² − 2·v·c (the v² term is constant
-    * per subvector and drops out of the argmin), every double op in the
-    * identical left-to-right order the DuckDB oracle evaluates, ties on
-    * equal distance broken by centroid id in both engines.
-    */
   /** The m per-subspace PQ code columns (argmin over k codebook
     * centroids) — shared by [[pqEncode]] and the IVF-PQ index builder so
     * the two can never disagree on code assignment.
@@ -685,6 +679,23 @@ object Similarity {
         j * subDim, subDim).as(s"code$j")
     }
 
+  /** Product-quantization encoding — the memory-compression half of
+    * IVF-PQ, the index structure ANN systems actually run at 10⁹–10¹¹
+    * vectors: the 64-dim float vector (256 bytes) becomes m=4 one-byte
+    * codes (64× smaller), each code the nearest of k=16 codebook
+    * centroids for that 16-dim subspace. A 100 TB embedding corpus
+    * quantizes to ~1.6 TB of codes — the difference between "index fits
+    * in cluster RAM" and "it doesn't".
+    *
+    * Scale shape: codebooks are literals compiled into the plan
+    * (m·k·subDim = 1024 doubles), each code is an argmin over k fused
+    * [[vecDot]] calls on an array slice — assignment happens entirely
+    * inside the scan's codegen stage: zero shuffles, zero joins, output
+    * grows with rows only. dist uses c² − 2·v·c (the v² term is constant
+    * per subvector and drops out of the argmin), every double op in the
+    * identical left-to-right order the DuckDB oracle evaluates, ties on
+    * equal distance broken by centroid id in both engines.
+    */
   private def pqEncode(vecs: DataFrame, m: Int, k: Int,
       dim: Int): DataFrame =
     vecs.select(col("vec_id") +: pqCodeCols(m, k, dim): _*)
@@ -695,7 +706,7 @@ object Similarity {
 
   /** TRAINED per-subspace PQ codebooks — the production path the
     * dyadic-grid gate deliberately forgoes: subspace j's codebook is
-    * the k centroids of [[Clustering.kmeans]] run on the corpus's j-th
+    * the k centroids of a [[Clustering.lloyd]] chain on the corpus's j-th
     * subvectors (Lloyd iterations with integer-micro centroid updates —
     * partition-invariant and engine-exact, the `kmeans_assign`
     * discipline), so codes adapt to the data's actual density and the
@@ -707,45 +718,27 @@ object Similarity {
     * near-tie (jittered-replica) corpus the true top-k's worst ADC
     * rank band under trained codebooks shrinks vs the dyadic grid.
     *
-    * Scale shape: m independent trainings, each [[Clustering.kmeans]]'s
-    * two-aggregate-per-iteration scan (k·subDim driver state); encoding
-    * is the same scan-fused [[graft.functions.PqArgmin]] kernel as
-    * [[pqCodes]] with the trained books compiled in as literals.
+    * Scale shape: the m chains go to ONE [[Clustering.lloyd]] call, so
+    * one size check decides where all of them run: below the driver
+    * budget one collect of the m subvector columns feeds every chain;
+    * past it each chain is one aggregate scan per iteration (k·subDim
+    * driver state). Encoding is the same scan-fused
+    * [[graft.functions.PqArgmin]] kernel as [[pqCodes]] with the trained
+    * books compiled in as literals.
     */
   def pqCodebooksTrained(vecs: DataFrame, m: Int = 4, k: Int = 16,
       dim: Int = 64, iters: Int = 2): IndexedSeq[IndexedSeq[Array[Double]]] =
-    // one collect feeds all m chains in the driver regime (the size gate
-    // is on the FULL-dim frame — conservative: whenever it passes, every
-    // narrower per-subspace frame would have passed too)
-    Clustering.driverArmRows(vecs) match {
-      case Some(rows) => pqBooksFromRows(rows, m, k, dim, iters)
-      case None => IndexedSeq.tabulate(m) { j =>
-        val subDim = dim / m
-        require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-        val sub = vecs.select(col("vec_id"),
-          expr(s"transform(sequence(${j * subDim + 1}, ${(j + 1) * subDim}), " +
-            "d -> element_at(embedding, d))").as("embedding"))
-        val (_, cents) = Clustering.kmeans(sub, k, iters)
-        cents.toIndexedSeq
-      }
-    }
+    Clustering.lloyd(vecs, bookChains(m, k, dim, iters)).map(_.toIndexedSeq)
 
-  /** The m per-subspace Lloyd chains on ONE pre-collected row set — the
-    * shared-collect spelling of [[pqCodebooksTrained]]'s driver arm.
-    * Each chain sees exactly the rows the distributed `transform(...)`
-    * slice frame would produce: contiguous [j·subDim, (j+1)·subDim)
-    * elements in vec_id order, floats widened to double exactly — so
-    * the books are bit-identical (SimilaritySpec pins it).
+  /** The m per-subspace Lloyd chains of [[pqCodebooksTrained]]: chain j
+    * trains on elements [j·subDim, (j+1)·subDim) of `embedding`.
     */
-  private def pqBooksFromRows(rows: Array[Array[Double]], m: Int, k: Int,
-      dim: Int, iters: Int): IndexedSeq[IndexedSeq[Array[Double]]] = {
+  private def bookChains(m: Int, k: Int, dim: Int,
+      iters: Int): Seq[Clustering.Chain] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    IndexedSeq.tabulate(m) { j =>
-      val sub = rows.map(v =>
-        java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
-      Clustering.lloydOnRows(sub, k, iters).toIndexedSeq
-    }
+    (0 until m).map(j =>
+      Clustering.Chain(slice(col("embedding"), j * subDim + 1, subDim), k, iters))
   }
 
   /** Gate entry: the m per-subspace codes under the TRAINED codebooks —
@@ -978,34 +971,14 @@ object Similarity {
       shortlist: Int): DataFrame = {
     require(shortlist >= topK, s"shortlist $shortlist must be >= topK $topK")
     val subDim = dim / m
-    // Five Lloyd chains (1 coarse-cell + m books) train over the SAME
-    // rows: in the driver regime ONE collect feeds them all instead of
-    // one scan per chain — at gate scale the chains' cost was scheduler
-    // round-trips, at 100 TB the sampled arm's slice is driver-sized by
-    // construction so the same sharing applies. The unit-normalize for
-    // the cell chain replays the distributed spelling op for op
-    // (vec_dot's left-to-right double square-sum, x/norm in double,
-    // cast to float) so the centroids are bit-identical
-    // (SimilaritySpec pins it).
-    val armRows = Clustering.driverArmRows(train)
-    val (centroids, books) = armRows match {
-      case Some(rows) =>
-        val unitRows = rows.map { v =>
-          var s = 0.0
-          var i = 0
-          while (i < v.length) { s += v(i) * v(i); i += 1 }
-          val norm = math.sqrt(s)
-          v.map(x => ((x / norm).toFloat).toDouble)
-        }
-        (Clustering.lloydOnRows(unitRows, cells, cellIters),
-          pqBooksFromRows(rows, m, k, dim, bookIters))
-      case None =>
-        val unit = withNorm(train).select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x / norm AS float))").as("embedding"))
-        (Clustering.kmeans(unit, k = cells, iters = cellIters)._2,
-          pqCodebooksTrained(train, m, k, dim, bookIters))
-    }
-    val cents = centroidsWithNorm(centroids)
+    // the coarse-cell chain and the m book chains train over the SAME
+    // rows, so one trainer call decides one arm for all of them (below
+    // the budget: one collect feeds every chain)
+    val trained = Clustering.lloyd(withUnit(train),
+      Clustering.Chain(col("unit"), cells, cellIters) +:
+        bookChains(m, k, dim, bookIters))
+    val cents = centroidsWithNorm(trained.head)
+    val books = trained.tail.map(_.toIndexedSeq)
     val scores = centScores(cents)
     // the stored index: (cell, codes) + the embedding for the refine
     // stage, one scan, materialized once
@@ -1070,23 +1043,6 @@ object Similarity {
 
   // ------------------------------------------------- kNN classification
 
-  /** k-nearest-neighbor majority-vote classification — the standard
-    * embedding-space auto-labeler (quality/domain/topic tagging of an
-    * unlabeled crawl against a labeled seed set). Query vectors
-    * (vec_id < `numQueries`, standing in for the unlabeled batch) are
-    * scored against the labeled pool (every other vector), the top `k`
-    * by cosine vote with their `label`, and the majority label wins
-    * (ties broken toward the smaller label id — deterministic in both
-    * engines).
-    *
-    * Scale shape: same as [[bruteForceTopK]] — the query batch is
-    * broadcast, scoring is one [[vecDot]]-codegen'd pass over the
-    * labeled corpus with a per-query bounded top-k aggregate on the (rows ×
-    * queries) scored set, and the vote is a queries×labels-sized
-    * aggregate. The corpus is never shuffled; for query batches past
-    * broadcast size the LSH/IVF probe paths substitute for the scan
-    * exactly as in [[lshTopK]]/[[ivfTopK]].
-    */
   /** Shared kNN vote: per query, rank `scored` (q_id, vec_id, label,
     * cos) by cosine with vec_id tiebreak, keep the top `k`, and elect
     * the majority label (ties toward the smaller label id). Both windows
@@ -1105,6 +1061,23 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
+  /** k-nearest-neighbor majority-vote classification — the standard
+    * embedding-space auto-labeler (quality/domain/topic tagging of an
+    * unlabeled crawl against a labeled seed set). Query vectors
+    * (vec_id < `numQueries`, standing in for the unlabeled batch) are
+    * scored against the labeled pool (every other vector), the top `k`
+    * by cosine vote with their `label`, and the majority label wins
+    * (ties broken toward the smaller label id — deterministic in both
+    * engines).
+    *
+    * Scale shape: same as [[bruteForceTopK]] — the query batch is
+    * broadcast, scoring is one [[vecDot]]-codegen'd pass over the
+    * labeled corpus with a per-query bounded top-k aggregate on the (rows ×
+    * queries) scored set, and the vote is a queries×labels-sized
+    * aggregate. The corpus is never shuffled; for query batches past
+    * broadcast size the LSH/IVF probe paths substitute for the scan
+    * exactly as in [[lshTopK]]/[[ivfTopK]].
+    */
   def knnClassify(vecs: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
     val base = withNorm(vecs)
     val queries = broadcast(base
@@ -1271,6 +1244,30 @@ object Similarity {
   /** Neighborhood size k for the margin denominators. */
   val BitextMarginK = 4
 
+  /** X-side batch bound for the two gated entries: the gate mines the
+    * evens below this id against the FULL Y side — the ann gates'
+    * query-batch discipline applied to mining (covers every fixture SF
+    * whole; on the 10× stress it becomes an incremental batch-vs-corpus
+    * mine instead of a quadratic corpus×corpus blow-up). Callers mining
+    * everything bring an index-shaped plan ([[bitextMarginIvf]] with
+    * corpus-scaled cells) — the exhaustive spelling refuses X batches
+    * past [[BitextMaxXRows]] by actual count, not by id predicate.
+    */
+  val BitextGateXMaxId = 2000L
+
+  /** Hard ceiling on the broadcast X batch of [[bitextMargin]] — the
+    * BoundedGlobal rule applied to the one remaining place a public
+    * API default could reach an unbounded broadcast: an id predicate
+    * (`xMaxId`) bounds nothing when ids are sparse or the caller keeps
+    * the `Long.MaxValue` default, so the ACTUAL row count is checked
+    * (one cheap count over the already-filtered X side) and the call
+    * fails loudly past this many rows instead of dissolving into a
+    * driver/executor OOM mid-broadcast. Full-corpus mining belongs on
+    * [[bitextMarginIvf]], whose candidate volume is cell-bounded and
+    * whose only broadcast is the centroid table.
+    */
+  val BitextMaxXRows = 100000L
+
   /** Margin-based bitext mining over the embedding space — the parallel-
     * corpus mining stage of a multilingual pretraining pipeline: the
     * corpus splits into two "languages" (here deterministically by
@@ -1301,30 +1298,6 @@ object Similarity {
     * IVF cells ([[ivfTopK]]) before scoring; the margin arithmetic is
     * unchanged.
     */
-  /** X-side batch bound for the two gated entries: the gate mines the
-    * evens below this id against the FULL Y side — the ann gates'
-    * query-batch discipline applied to mining (covers every fixture SF
-    * whole; on the 10× stress it becomes an incremental batch-vs-corpus
-    * mine instead of a quadratic corpus×corpus blow-up). Callers mining
-    * everything bring an index-shaped plan ([[bitextMarginIvf]] with
-    * corpus-scaled cells) — the exhaustive spelling refuses X batches
-    * past [[BitextMaxXRows]] by actual count, not by id predicate.
-    */
-  val BitextGateXMaxId = 2000L
-
-  /** Hard ceiling on the broadcast X batch of [[bitextMargin]] — the
-    * BoundedGlobal rule applied to the one remaining place a public
-    * API default could reach an unbounded broadcast: an id predicate
-    * (`xMaxId`) bounds nothing when ids are sparse or the caller keeps
-    * the `Long.MaxValue` default, so the ACTUAL row count is checked
-    * (one cheap count over the already-filtered X side) and the call
-    * fails loudly past this many rows instead of dissolving into a
-    * driver/executor OOM mid-broadcast. Full-corpus mining belongs on
-    * [[bitextMarginIvf]], whose candidate volume is cell-bounded and
-    * whose only broadcast is the centroid table.
-    */
-  val BitextMaxXRows = 100000L
-
   def bitextMargin(vecs: DataFrame, k: Int = BitextMarginK,
       thresholdMicro: Long = BitextMarginThresholdMicro,
       xMaxId: Long = Long.MaxValue,

@@ -242,6 +242,11 @@ object TextAnalysis {
 
   // --------------------------------------------------- sequence chunking
 
+  /** Default chunk geometry — interpolated into the DuckDB oracle too,
+    * so the two sides can't drift. */
+  val ChunkTokens = 32
+  val ChunkStride = 24
+
   /** Stride chunking — cut each document into fixed-size token windows
     * with overlap (`chunkTokens` wide, advancing `stride` tokens), the
     * context-window packing step before tokenization in a pre-training /
@@ -255,11 +260,6 @@ object TextAnalysis {
     * Emits the chunk's token count and portable digest (not the text) so
     * the gate hash-compares bytes without shipping the corpus twice.
     */
-  /** Default chunk geometry — interpolated into the DuckDB oracle too,
-    * so the two sides can't drift. */
-  val ChunkTokens = 32
-  val ChunkStride = 24
-
   def docChunks(docs: DataFrame, chunkTokens: Int = ChunkTokens,
       stride: Int = ChunkStride): DataFrame = {
     require(chunkTokens > 0 && stride > 0 && stride <= chunkTokens,
@@ -320,6 +320,9 @@ object TextAnalysis {
 
   // ------------------------------------------------- vocabulary coverage
 
+  /** Default vocab size — interpolated into the DuckDB oracle too. */
+  val VocabK = 500
+
   /** Tokenizer-prep vocabulary: the corpus-wide top-`k` whitespace tokens
     * by frequency, each with its rank and the cumulative share of ALL
     * corpus token occurrences covered through that rank — the curve a
@@ -337,9 +340,6 @@ object TextAnalysis {
     * stays lazy. `(cnt DESC, token)` is a total order: token is the
     * group-by key, hence unique.
     */
-  /** Default vocab size — interpolated into the DuckDB oracle too. */
-  val VocabK = 500
-
   def vocabCoverage(docs: DataFrame, k: Int = VocabK): DataFrame = {
     val counts = docs
       .select(explode(split(trim(col("text")), "\\s+")).as("token"))
@@ -363,15 +363,6 @@ object TextAnalysis {
 
   // --------------------------------------------------- filter cascade
 
-  /** Ordered quality-filter cascade (the CCNet/Gopher-style rejection
-    * funnel): every document gets the FIRST rule it fails — too short →
-    * low alphabetic ratio → high token repetition — or `keep`. Emitting
-    * the verdict (not just the survivors) is the point: the per-rule
-    * rejection counts are the dashboard a curation pipeline watches to
-    * see which rule is eating the corpus, and re-runs stay comparable
-    * rule by rule. Pure per-row expressions — a narrow scan-fused pass,
-    * zero shuffles at any corpus size.
-    */
   /** Canonicalized-text fingerprints: md5-60 of [[graft.functions
     * .NormText]]-normalized text (NFC + casefold + whitespace collapse),
     * next to the raw fingerprint — the pair a dedup pipeline compares to
@@ -392,6 +383,15 @@ object TextAnalysis {
   val CascadeMinAlpha = 0.78
   val CascadeMinDistinct = 0.35
 
+  /** Ordered quality-filter cascade (the CCNet/Gopher-style rejection
+    * funnel): every document gets the FIRST rule it fails — too short →
+    * low alphabetic ratio → high token repetition — or `keep`. Emitting
+    * the verdict (not just the survivors) is the point: the per-rule
+    * rejection counts are the dashboard a curation pipeline watches to
+    * see which rule is eating the corpus, and re-runs stay comparable
+    * rule by rule. Pure per-row expressions — a narrow scan-fused pass,
+    * zero shuffles at any corpus size.
+    */
   def filterCascade(spark: SparkSession, dir: String,
       minTokens: Int = CascadeMinTokens, minAlpha: Double = CascadeMinAlpha,
       minDistinct: Double = CascadeMinDistinct): DataFrame = {
@@ -680,22 +680,6 @@ object TextAnalysis {
 
   // --------------------------------------- fill-in-middle transformation
 
-  /** FIM (fill-in-middle) transformation (Bavarian et al. 2022) — the
-    * data-prep transform behind infilling-capable code/LLM training:
-    * a deterministic `rate` fraction of docs is rewritten from
-    * `prefix middle suffix` to `<PRE>prefix<SUF>suffix<MID>middle`, so
-    * the model learns to generate the middle conditioned on both sides;
-    * the rest pass through untouched (the paper's 50/50 joint recipe).
-    *
-    * Everything is derived from md5 of the doc key — the selection gate
-    * and both character cut points — so the transform is a pure function
-    * of the data (the [[Sampling]] determinism standard): reproducible
-    * on any partitioning and replayable by the DuckDB oracle character
-    * for character. Cut points are uniform over the character length;
-    * `c1 <= c2` by least/greatest. Pure scalar expressions — zero
-    * shuffles, the scan-fused shape; [[fimTransformOn]] is the
-    * sort-free form a stream can run.
-    */
   /** Pinned merge list for the gated `bpe_encode` entry: the 16 merges a
     * committed [[bpeTrain]](documents, 16) run learns at sf0.01, frozen
     * as literals — the pin-the-nondeterminism move that gated
@@ -989,6 +973,22 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** FIM (fill-in-middle) transformation (Bavarian et al. 2022) — the
+    * data-prep transform behind infilling-capable code/LLM training:
+    * a deterministic `rate` fraction of docs is rewritten from
+    * `prefix middle suffix` to `<PRE>prefix<SUF>suffix<MID>middle`, so
+    * the model learns to generate the middle conditioned on both sides;
+    * the rest pass through untouched (the paper's 50/50 joint recipe).
+    *
+    * Everything is derived from md5 of the doc key — the selection gate
+    * and both character cut points — so the transform is a pure function
+    * of the data (the [[Sampling]] determinism standard): reproducible
+    * on any partitioning and replayable by the DuckDB oracle character
+    * for character. Cut points are uniform over the character length;
+    * `c1 <= c2` by least/greatest. Pure scalar expressions — zero
+    * shuffles, the scan-fused shape; [[fimTransformOn]] is the
+    * sort-free form a stream can run.
+    */
   def fimTransform(docs: DataFrame, rate: Double = 0.5): DataFrame =
     fimTransformOn(docs, rate).orderBy(col("doc_id"))
 
@@ -996,9 +996,7 @@ object TextAnalysis {
     * run (a global sort is illegal on an unbounded stream).
     */
   def fimTransformOn(docs: DataFrame, rate: Double = 0.5): DataFrame = {
-    def h60(salt: String) =
-      conv(substring(md5(concat(lit(salt), col("doc_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long")
+    def h60(salt: String) = md5_60(concat(lit(salt), col("doc_id").cast("string")))
     val n = length(col("text")).cast("long")
     val h1 = pmod(h60("fim1:"), greatest(n, lit(1L)))
     val h2 = pmod(h60("fim2:"), greatest(n, lit(1L)))

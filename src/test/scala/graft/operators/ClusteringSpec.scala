@@ -31,6 +31,12 @@ class ClusteringSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  /** `frame` over RDD lineage: same rows, but Catalyst has no size
+    * estimate for it (defaultSizeInBytes), so it takes the distributed arm.
+    */
+  private def rddCopy(frame: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(frame.rdd, frame.schema)
+
   test("kmeans driver arm is bit-identical to the distributed loop") {
     // the size-gated driver arm is a pure scheduling optimization: the
     // integer-micro sums are associative and the argmin replays the
@@ -45,16 +51,16 @@ class ClusteringSpec extends AnyFunSuite with SparkTestSession {
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x / norm AS float))").as("embedding"))
     for (frame <- Seq(vecs, unit)) {
+      val copy = rddCopy(frame)
+      assert(Clustering.takesDriverArm(frame), "driver arm not taken")
+      assert(!Clustering.takesDriverArm(copy), "RDD copy took the driver arm")
       val (aDrv, cDrv) = Clustering.kmeans(frame, k = 8, iters = 3)
+      val (aDist, cDist) = Clustering.kmeans(copy, k = 8, iters = 3)
+      assert(cDrv.map(_.toSeq).toSeq === cDist.map(_.toSeq).toSeq,
+        "centroids diverged between arms")
       val drvAssign = aDrv.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-      spark.conf.set(Clustering.DriverMaxBytesKey, "0")
-      try {
-        val (aDist, cDist) = Clustering.kmeans(frame, k = 8, iters = 3)
-        assert(cDrv.map(_.toSeq).toSeq === cDist.map(_.toSeq).toSeq,
-          "centroids diverged between arms")
-        val distAssign = aDist.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-        assert(drvAssign === distAssign, "assignments diverged between arms")
-      } finally spark.conf.unset(Clustering.DriverMaxBytesKey)
+      val distAssign = aDist.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
+      assert(drvAssign === distAssign, "assignments diverged between arms")
     }
   }
 
@@ -71,14 +77,13 @@ class ClusteringSpec extends AnyFunSuite with SparkTestSession {
       col("embedding"))
     for (frame <- Seq(intIds, strIds)) {
       val idType = frame.schema("vec_id").dataType
-      assert(Clustering.driverArmRows(frame).isDefined, s"$idType: driver arm not taken")
+      val copy = rddCopy(frame)
+      assert(Clustering.takesDriverArm(frame), s"$idType: driver arm not taken")
+      assert(!Clustering.takesDriverArm(copy), s"$idType: RDD copy took the driver arm")
       val (_, cDrv) = Clustering.kmeans(frame, k = 8, iters = 3)
-      spark.conf.set(Clustering.DriverMaxBytesKey, "0")
-      try {
-        val (_, cDist) = Clustering.kmeans(frame, k = 8, iters = 3)
-        assert(cDrv.map(_.toSeq).toSeq === cDist.map(_.toSeq).toSeq,
-          s"$idType: centroids diverged between arms")
-      } finally spark.conf.unset(Clustering.DriverMaxBytesKey)
+      val (_, cDist) = Clustering.kmeans(copy, k = 8, iters = 3)
+      assert(cDrv.map(_.toSeq).toSeq === cDist.map(_.toSeq).toSeq,
+        s"$idType: centroids diverged between arms")
     }
   }
 

@@ -1182,21 +1182,30 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     }
   }
   test("shared-collect trained chains are bit-identical to the distributed loop") {
-    // pqCodebooksTrained and the ivf_pq stack now feed all five Lloyd
-    // chains from ONE driverArmRows collect; forcing the distributed
-    // path (driverMaxBytes=0) must land the exact same books, centroids
-    // and gate rows — the arm is scheduling, never arithmetic
+    // every trained entry point trains through Clustering.lloyd, which
+    // feeds all of a call's chains from ONE collect when the training
+    // frame fits the driver budget. An RDD-lineage copy of the same rows
+    // has no size estimate and takes the distributed loop: the books,
+    // centroids and rows must be identical — the arm is scheduling,
+    // never arithmetic
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val table: Seq[(String, DataFrame => Seq[Any])] = Seq(
+      "pqCodebooksTrained" -> (f => Similarity.pqCodebooksTrained(f).map(_.map(_.toSeq))),
+      "pqTrainedCodes" -> (f => rows(Similarity.pqTrainedCodes(f))),
+      "pqTrainedRerankTopK" -> (f => rows(Similarity.pqTrainedRerankTopK(f))),
+      "ivfTopKKmeans" -> (f => rows(Similarity.ivfTopKKmeans(f))),
+      "ivfTopKKmeansSampled" -> (f => rows(Similarity.ivfTopKKmeansSampled(f))),
+      "ivfPqTrainedTopK" -> (f => rows(Similarity.ivfPqTrainedTopK(f))),
+      "ivfPqTrainedSampledTopK" -> (f => rows(Similarity.ivfPqTrainedSampledTopK(f))),
+      "ivfXModalTrainedTopK" -> (f => rows(Similarity.ivfXModalTrainedTopK(f,
+        f.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"), col("embedding"))))))
     val vecs = graft.Engine.Tables(spark, "/root/testdata/sf0.001").embeddings
-    val booksShared = Similarity.pqCodebooksTrained(vecs)
-    val stackShared = Similarity.ivfPqTrainedTopK(vecs).collect().map(_.toSeq).toSeq
-    spark.conf.set(Clustering.DriverMaxBytesKey, "0")
-    try {
-      val booksDist = Similarity.pqCodebooksTrained(vecs)
-      assert(booksShared.map(_.map(_.toSeq)) === booksDist.map(_.map(_.toSeq)),
-        "trained books diverged between shared-collect and distributed arms")
-      val stackDist = Similarity.ivfPqTrainedTopK(vecs).collect().map(_.toSeq).toSeq
-      assert(stackShared === stackDist,
-        "ivf_pq_trained_topk rows diverged between arms")
-    } finally spark.conf.unset(Clustering.DriverMaxBytesKey)
+    val copy = spark.createDataFrame(vecs.rdd, vecs.schema)
+    assert(Clustering.takesDriverArm(vecs), "parquet frame missed the driver arm")
+    assert(!Clustering.takesDriverArm(copy), "RDD copy took the driver arm")
+    val diverged = table.collect { case (name, run) if run(vecs) != run(copy) => name }
+    assert(diverged.isEmpty, s"diverged between the arms: ${diverged.mkString(", ")}")
   }
 }

@@ -25,7 +25,16 @@
 #                              falls back to the repo's copies); and of
 #                              `src/main` for `@deprecated`: a caller this
 #                              repo does not have gets no compatibility
-#                              shim, so none may return.
+#                              shim, so none may return; and of `src/main`
+#                              for an orphaned scaladoc (a `/** */` block
+#                              directly followed by another, so it
+#                              documents nothing); and of `src/main` for
+#                              `spark.graft.*` conf keys: exactly
+#                              `spark.graft.dedup.gridB` and
+#                              `spark.graft.dedup.maxCellSigBytes`, the
+#                              remedies the dedup grid cell's loud failure
+#                              names (a value with one setting in use is a
+#                              constant, not a knob).
 #   4. `sbt test`            — the full ScalaTest suite. Its compile fails
 #                              on any unused import, private, local or
 #                              implicit in main or test code (build.sbt's
@@ -59,7 +68,7 @@ if [ "$(echo "$inj" | grep -c .)" != 1 ] ||
   echo "[ci] FAIL: add native functions to graft.functions.Natives; Engine.session installs it once"
   exit 1
 fi
-echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code, no deprecated shims in main code"
+echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code, no deprecated shims, orphaned scaladocs or new conf keys in main code"
 stray=$( (grep -rn 'def main(' src/main |
     grep -vE '^src/main/scala/graft/(Bench|Verify|Stress|Explain|Cli)\.scala:'
   grep -rn 'SPARK_GRAFT_CPUS' src/main | grep -v '^src/main/scala/graft/Harness\.scala:'
@@ -68,10 +77,13 @@ stray=$( (grep -rn 'def main(' src/main |
   grep -rnF '/root/reference' src/test |
     grep -vE '^src/test/scala/graft/(RefFixture|RefBinarySpec)\.scala:'
   grep -rnF '@deprecated' src/main
+  grep -rlPz '\*/[ \t]*\n\s*/\*\*' src/main | sed 's/$/: orphaned scaladoc/'
+  grep -rnoE 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' src/main |
+    grep -vE ':spark\.graft\.dedup\.(gridB|maxCellSigBytes)$'
   ) || true)
 if [ -n "$stray" ]; then
   echo "$stray"
-  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims"
+  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims, no scaladoc that documents nothing, and no spark.graft.* key but dedup.gridB and dedup.maxCellSigBytes"
   exit 1
 fi
 echo "[ci] 4/6 sbt test (unused code fails the compile)"
