@@ -1,16 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `lsh_bands(embedding, bits, bands)` — ALL the random-hyperplane LSH
-  * band hashes of a float vector in ONE native expression: band b packs
+  * band hashes of a float vector in ONE native kernel: band b packs
   * the sign bits of planes [b·rows, (b+1)·rows) into a long, rows =
   * bits/bands.
   *
@@ -19,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * trees — a projection so large that whole-stage codegen's method-size
   * splitter shreds it into hundreds of tiny calls, each re-reading the
   * array header; measured ~10× slower than this single fused pass at
-  * sf0.1. Here the plane matrix lives in one flat double[] (a codegen
-  * reference object, ~100 KB at 192×64 — shipped once per task, not per
-  * row) and the hot loop is a dense bits×dim FMA sweep the JIT
-  * vectorizes.
+  * sf0.1. Here the plane matrix lives in one flat double[] (bound once
+  * per call and shipped as a codegen reference object, ~100 KB at 192×64
+  * — once per task, not per row) and the hot loop is a dense bits×dim
+  * FMA sweep the JIT vectorizes.
   *
   * Sign semantics are bit-identical to `vec_dot(v, w_p) > 0`: the dot
   * accumulates cast-to-double floats left-to-right, and the plane
@@ -30,38 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * lattice `Similarity.planeWeights` builds (seed-42 XXH64 of the
   * decimal index string — the SQL builtin's exact value).
   */
-case class LshBandHashes(child: Expression, bits: Int, bands: Int,
-    dim: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) if bits % bands == 0 && bits / bands <= 63 =>
-      TypeCheckResult.TypeCheckSuccess
-    case ArrayType(FloatType, _) =>
-      TypeCheckResult.TypeCheckFailure(
-        s"lsh_bands requires bands | bits and bits/bands <= 63, got bits=$bits bands=$bands")
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"lsh_bands requires array<float>, got $other")
-  }
-
-  @transient private lazy val planes: Array[Double] =
-    LshBandHashes.planesFor(bits, dim)
-
-  override def nullSafeEval(input: Any): Any =
-    LshBandHashes.compute(input.asInstanceOf[ArrayData], bits, bands, dim, planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lshPlanes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LshBandHashes.compute($c, $bits, $bands, $dim, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshBandHashes =
-    copy(child = newChild)
-}
-
 object LshBandHashes {
+
+  /** The embedding width the planes span. */
+  final val Dim = 64
 
   /** Flat [bits·dim] plane matrix; the same lattice as
     * `Similarity.planeWeights` (kept in sync by SimilaritySpec parity).
@@ -83,7 +52,7 @@ object LshBandHashes {
       w
     })
 
-  /** Shared by interpreted eval and generated code: one dense pass.
+  /** The kernel: one dense pass.
     * Vectors shorter than `dim` are treated as zero-padded (a plane's
     * tail contributes nothing), matching vec_dot's min-length loop.
     */

@@ -1,16 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** `maxsim_micro(qv, emb, tokens, subDim)` — the ColBERT-style MaxSim
   * late-interaction score of two flat multi-token vectors as ONE native
-  * codegen expression:
+  * codegen kernel:
   *
   *   Σ_{i<tokens} max_{j<tokens} floor(dot(qv[i·S..], emb[j·S..]) · 1e6)
   *
@@ -30,49 +26,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Odd-input discipline (never occurs in the embeddings fixture, which
   * FixtureSchemaSpec pins as non-null 64-d float arrays): a NULL array
-  * is null (BinaryExpression null-intolerance, same as the HOF spelling
-  * whose aggregate over a null array is null); an array shorter than
-  * tokens·subDim is a LOUD error — the SQL spelling's `element_at`
+  * is null (every kernel call propagates null inputs, same as the HOF
+  * spelling whose aggregate over a null array is null); an array shorter
+  * than tokens·subDim is a LOUD error — the SQL spelling's `element_at`
   * (failOnError) throws there too, and silently zero-padding a
   * truncated embedding at 100 TB is how wrong scores ship quietly.
   */
-case class MaxSimMicro(left: Expression, right: Expression, tokens: Int,
-    subDim: Int) extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _))
-        if tokens >= 1 && subDim >= 1 =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) =>
-      TypeCheckResult.TypeCheckFailure(
-        s"maxsim_micro requires array<float|double> arguments and tokens/subDim >= 1, " +
-          s"got $l, $r, tokens=$tokens, subDim=$subDim")
-  }
-
-  private def isFloat(dt: DataType): Boolean =
-    dt.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    MaxSimMicro.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
-      tokens, subDim, isFloat(left.dataType), isFloat(right.dataType))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, e) =>
-      s"${ev.value} = graft.functions.MaxSimMicro.compute($q, $e, $tokens, " +
-        s"$subDim, ${isFloat(left.dataType)}, ${isFloat(right.dataType)});")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MaxSimMicro =
-    copy(left = newLeft, right = newRight)
-}
-
 object MaxSimMicro {
 
-  /** Shared by interpreted eval and generated code: the fused
-    * tokens × tokens × subDim loop nest. Inner sub-dot accumulates
-    * left-to-right in double (elements widened exactly as the SQL
+  /** The kernel: the fused tokens × tokens × subDim loop nest. Inner
+    * sub-dot accumulates left-to-right in double (elements widened exactly as the SQL
     * CAST), quantizes floor(s·1e6) to long, maxes over the corpus
     * token j, sums over the query token i — the identical operation
     * order as the HOF spelling, so every intermediate double and the

@@ -1,49 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode text normalization as one codegen'd expression: NFC
+/** `norm_text(text)` — Unicode text normalization as one codegen'd kernel: NFC
   * composition → simple per-codepoint lowercase → ASCII-whitespace
   * collapse → edge trim. The canonicalization every dedup/fingerprint pass should
   * run first, so "Café" and "Café" (decomposed) hash
   * identically — without it, byte-level dedup silently misses visually
   * identical documents.
   *
-  * One native expression (pattern of [[WinnowFps]]: `doGenCode` emits a
-  * static-helper call, keeping whole-stage codegen) instead of chaining
-  * three interpreted regex/UDF steps; the semantics are replicated in
+  * One native kernel (called from whole-stage codegen like every row of
+  * [[Natives]]) instead of chaining three interpreted regex/UDF steps;
+  * the semantics are replicated in
   * the DuckDB oracle as `trim(regexp_replace(lower(nfc_normalize(x)),
   * '\s+', ' ', 'g'))`.
   */
-case class NormText(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"norm_text requires a string argument, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NormText.normalizeUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormText.normalizeUTF8($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormText =
-    copy(child = newChild)
-}
-
 object NormText {
 
-  /** Shared by interpreted eval and generated code. Whitespace collapse
+  /** The normalization [[normalizeUTF8]] runs. Whitespace collapse
     * is ASCII-class (`[ \t\n\f\r]`) to match the `\s` the SQL
     * oracles use; NFC and lowercase come from the JDK (ICU-equivalent
     * for the BMP text this corpus carries).
@@ -83,6 +59,7 @@ object NormText {
     sb.toString
   }
 
+  /** The kernel. */
   def normalizeUTF8(u: UTF8String): UTF8String =
     UTF8String.fromString(normalize(u.toString))
 

@@ -1,25 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{array, call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructField, StructType}
 
 /** `pq_argmin(vec, offset, subDim, centroids)` — nearest-centroid argmin
   * over a plan-literal codebook for the `[offset, offset+subDim)` slice
   * of a vector: the quantization kernel of PQ encoding, IVF cell
-  * assignment and k-means, as ONE native expression.
+  * assignment and k-means, as ONE native kernel.
   *
   * Replaces the `least(struct(d, c_id), …)` formulation: that tree is
   * k struct allocations + a k-deep comparator chain per evaluation, and
   * at m·k = 64 codebook entries the collapsed generated method left
   * whole-stage codegen JIT-hostile — the 10×-sf0.1 encode measured
   * ~90 µs/row (1.8 s / 20 k rows) against ~1 µs of actual arithmetic.
-  * Here the codebook and its precomputed norms ride as reference
-  * objects and the evaluation is two tight primitive loops.
+  * Here the codebook and its norms, computed once per call from the
+  * literal, ride as reference objects and the evaluation is two tight
+  * primitive loops.
   *
   * Bit-parity with the struct path (which the `pq_codes` /
   * `kmeans_fixed_assign` gates proved against DuckDB) is by
@@ -30,68 +29,39 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * smallest centroid id (strict `<`), exactly the struct comparator's
   * lexicographic (d, c_id) order.
   */
-case class PqArgmin(child: Expression, centroids: Array[Array[Double]],
-    offset: Int, subDim: Int) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_argmin requires array<float|double>, got $t")
-  }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  /** c² per centroid — the SAME left-to-right Scala sum the struct
-    * formulation inlined as `lit(c.map(x => x*x).sum)`.
-    */
-  @transient private lazy val norms: Array[Double] =
-    centroids.map(c => c.map(x => x * x).sum)
-
-  override def nullSafeEval(input: Any): Any =
-    PqArgmin.argmin(input.asInstanceOf[ArrayData], elemIsFloat,
-      centroids, norms, offset, subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("pqCents", centroids, "double[][]")
-    val nRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PqArgmin.argmin(" +
-        s"$a, $elemIsFloat, $cRef, $nRef, $offset, $subDim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqArgmin =
-    copy(child = newChild)
-}
-
 object PqArgmin {
 
-  /** Shared by interpreted eval and generated code. */
+  /** The kernel: the id of the centroid with the smallest
+    * `c² − 2·v·c` (`norms` holds each c²).
+    */
   def argmin(a: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
       norms: Array[Double], offset: Int, subDim: Int): Int = {
-    val lim = math.min(subDim, math.max(0, a.numElements() - offset))
     var best = 0
     var bestD = Double.PositiveInfinity
     var p = 0
     while (p < cents.length) {
-      val c = cents(p)
-      var dot = 0.0
-      var j = 0
-      while (j < lim) {
-        val idx = offset + j
-        if (!a.isNullAt(idx)) {
-          val x = if (isFloat) a.getFloat(idx).toDouble else a.getDouble(idx)
-          dot += x * c(j)
-        }
-        j += 1
-      }
-      val d = norms(p) - 2.0 * dot
+      val d = norms(p) - 2.0 * dot(a, isFloat, cents(p), offset, subDim)
       if (d < bestD) { bestD = d; best = p }
       p += 1
     }
     best
+  }
+
+  /** `v·c` over the `[offset, offset+subDim)` slice; null elements add 0. */
+  private[functions] def dot(a: ArrayData, isFloat: Boolean, c: Array[Double],
+      offset: Int, subDim: Int): Double = {
+    val lim = math.min(subDim, math.max(0, a.numElements() - offset))
+    var dot = 0.0
+    var j = 0
+    while (j < lim) {
+      val idx = offset + j
+      if (!a.isNullAt(idx)) {
+        val x = if (isFloat) a.getFloat(idx).toDouble else a.getDouble(idx)
+        dot += x * c(j)
+      }
+      j += 1
+    }
+    dot
   }
 
   /** Column-level entry point (resolves by name through [[Natives]]). */
@@ -115,70 +85,15 @@ object PqArgmin {
   * the same drop-in kernel. One GenericInternalRow per row instead of
   * k struct allocations and a k-deep comparator chain.
   */
-case class PqArgminDist(child: Expression, centroids: Array[Array[Double]],
-    offset: Int, subDim: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("d", DoubleType, nullable = false),
-    StructField("c_id", IntegerType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_argmin_dist requires array<float|double>, got $t")
-  }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val norms: Array[Double] =
-    centroids.map(c => c.map(x => x * x).sum)
-
-  override def nullSafeEval(input: Any): Any =
-    PqArgminDist.argminRow(input.asInstanceOf[ArrayData], elemIsFloat,
-      centroids, norms, offset, subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("pqCents", centroids, "double[][]")
-    val nRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PqArgminDist.argminRow(" +
-        s"$a, $elemIsFloat, $cRef, $nRef, $offset, $subDim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqArgminDist =
-    copy(child = newChild)
-}
-
 object PqArgminDist {
 
-  /** Shared by interpreted eval and generated code — same loop as
-    * [[PqArgmin.argmin]], carrying the winning distance out.
+  /** The kernel: [[PqArgmin.argmin]]'s winner and its distance, the same
+    * loop's arithmetic recomputed for that one centroid.
     */
   def argminRow(a: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
-      norms: Array[Double], offset: Int, subDim: Int)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    val lim = math.min(subDim, math.max(0, a.numElements() - offset))
-    var best = 0
-    var bestD = Double.PositiveInfinity
-    var p = 0
-    while (p < cents.length) {
-      val c = cents(p)
-      var dot = 0.0
-      var j = 0
-      while (j < lim) {
-        val idx = offset + j
-        if (!a.isNullAt(idx)) {
-          val x = if (isFloat) a.getFloat(idx).toDouble else a.getDouble(idx)
-          dot += x * c(j)
-        }
-        j += 1
-      }
-      val d = norms(p) - 2.0 * dot
-      if (d < bestD) { bestD = d; best = p }
-      p += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestD, best))
+      norms: Array[Double], offset: Int, subDim: Int): InternalRow = {
+    val best = PqArgmin.argmin(a, isFloat, cents, norms, offset, subDim)
+    val d = norms(best) - 2.0 * PqArgmin.dot(a, isFloat, cents(best), offset, subDim)
+    new GenericInternalRow(Array[Any](d, best))
   }
 }

@@ -1,16 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `shingle_hashes(text, n)` — ALL word-n-gram xxhash64 values of a
-  * document in ONE native expression: the hot first stage of every
+  * document in ONE native kernel: the hot first stage of every
   * dedup/novelty/decontamination path
   * ([[graft.operators.Dedup.rawShingles]] + `xxhash64(shingle)`),
   * producing `size(tokens) − n + 1` longs per doc (empty array when the
@@ -32,38 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * SQL `split` keeps leading/trailing empty tokens) and the per-window
   * join+hash loop is the same code path the `ngram_any_in` probe uses —
   * the pair whose agreement with the SQL spelling is already
-  * spec-pinned; ShingleHashesSpec additionally pins THIS expression
+  * spec-pinned; ShingleHashesSpec additionally pins THIS kernel
   * against the full SQL pipeline on real and adversarial docs.
   */
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes requires a string argument, got ${child.dataType}")
-    else if (n < 1)
-      TypeCheckResult.TypeCheckFailure(s"shingle_hashes requires n >= 1, got n=$n")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.hashes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleHashes.hashes($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
 object ShingleHashes {
 
-  /** Shared by interpreted eval and generated code: tokenize once, hash
-    * every n-window. Same join+hash operations as [[NgramAnyIn.anyIn]],
-    * collecting instead of probing.
+  /** The kernel: tokenize once, hash every n-window with the
+    * [[NgramAnyIn.anyIn]] probe's own n-gram hash, collecting instead of
+    * probing.
     */
   def hashes(s: UTF8String, n: Int): GenericArrayData = {
     val toks = NgramAnyIn.sqlWhitespaceTokens(s.toString)
@@ -72,15 +44,7 @@ object ShingleHashes {
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i <= toks.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      val g = UTF8String.fromString(sb.toString)
-      out(i) = XXH64.hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L)
+      out(i) = NgramAnyIn.ngramHash(toks, i, n, sb)
       i += 1
     }
     new GenericArrayData(out)

@@ -3,14 +3,10 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 60-bit SimHash of a document as ONE native expression: text → long
+/** `simhash60(text)` — 60-bit SimHash of a document as ONE native kernel: text → long
   * fingerprint, bit-identical to the declarative
   * tokenize→md5-60→sign-sum→pack pipeline it replaces (and to the DuckDB
   * oracle SQL): tokens are maximal runs between Java-regex `\s`
@@ -31,26 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * dominate by orders of magnitude — and the hot loop stays inside
   * whole-stage codegen.
   */
-case class SimHash60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"simhash60 requires a string argument, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash60.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash60.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash60 =
-    copy(child = newChild)
-}
-
 object SimHash60 {
 
   final val Bits = 60
@@ -65,7 +41,7 @@ object SimHash60 {
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Shared by interpreted eval and generated code. One pass over the
+  /** The kernel. One pass over the
     * UTF-16 string; per token one md5 over its UTF-8 bytes. Zero tokens
     * (empty/all-whitespace text) hashes to 0L — callers that must match
     * the declarative pipeline's dropped-empty-doc semantics filter those

@@ -1,15 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Winnowing fingerprints (the MOSS scheme) as ONE native expression:
+/** `winnow_fps(text, k, w)` — winnowing fingerprints (the MOSS scheme) as ONE native kernel:
   * text → array of distinct selected gram-hash minima.
   *
   * Semantics are bit-identical to the declarative three-`transform`
@@ -23,38 +19,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * inside the row, so nothing downstream needs a dedup exchange) —
   * measured 4.0 s → sub-second on the sf0.1 bench.
   *
-  * k and w arrive as foldable int literals (checked at bind time), so
+  * k and w arrive as foldable int literals (checked at analysis), so
   * plans stay serializable and the registry signature stays SQL-callable:
   * `winnow_fps(text, 5, 4)`.
   */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"winnow_fps requires a string argument, got ${child.dataType}")
-    else if (k < 1 || w < 1)
-      TypeCheckResult.TypeCheckFailure(s"winnow_fps requires k >= 1 and w >= 1, got k=$k w=$w")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowFps.compute(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowFps.compute($c, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-}
-
 object WinnowFps {
 
   private final val Mod = 1000000007L
   private final val Base = 257L
 
-  /** Shared by interpreted eval and generated code. One primitive pass:
+  /** The kernel. One primitive pass:
     * decode code points, roll the polynomial per gram, take window minima,
     * sort + unique in place. No boxing, no intermediate ArrayData.
     */

@@ -149,7 +149,7 @@ object Analytics {
     // JOIN n) so building this DataFrame stays lazy like every other entry
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val tf = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
+      .select(col("doc_id"), explode(TextAnalysis.whitespaceTokens(col("text"))).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))

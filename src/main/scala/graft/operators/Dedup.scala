@@ -33,7 +33,7 @@ object Dedup {
     * tokenization.
     */
   private[graft] def rawShingles(docs: DataFrame, n: Int): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = TextAnalysis.whitespaceTokens(col("text"))
     docs
       .select(col("doc_id"), toks.as("w"))
       .filter(size(col("w")) >= n)
@@ -116,9 +116,9 @@ object Dedup {
 
   /** Per-doc sorted signature sets: hash sets sorted ONCE per document
     * (O(s log s), amortized over every candidate pair the doc appears
-    * in) so the per-pair verify is the zero-allocation
-    * sorted_intersect_count merge kernel — see the ArrayIntersect GC
-    * analysis in [[graft.functions.SortedIntersectCount]].
+    * in) so the per-pair verify is the zero-allocation two-pointer
+    * merge — see the ArrayIntersect GC analysis in
+    * [[graft.functions.SortedIntersectCount]].
     */
   private def docSets(sh: DataFrame): DataFrame = sh.groupBy(col("doc_id"))
     .agg(array_sort(collect_set(col("h"))).as("hs"),
@@ -777,7 +777,7 @@ object Dedup {
       // SQL trim strips ASCII spaces only, so a tabs/newlines-only doc
       // would pass a length check yet tokenize to nothing, diverging from
       // the vocab-join formulation (and the oracle), which drop it
-      .filter(exists(split(trim(col("text")), "\\s+"), t => length(t) > 0))
+      .filter(exists(TextAnalysis.whitespaceTokens(col("text")), t => length(t) > 0))
       .select(col("doc_id"),
         graft.functions.SimHash60.simhash60(col("text")).as("simhash"))
 
@@ -1539,7 +1539,7 @@ object Dedup {
     * crosses the wire.
     */
   def spanRemove(docs: DataFrame, k: Int = 5, minDf: Int = 2): DataFrame = {
-    val base = docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+    val base = docs.select(col("doc_id"), TextAnalysis.whitespaceTokens(col("text")).as("w"))
     // (doc_id, i, h): 0-based start position i of each k-gram, keyed by
     // its md5 (positions matter here, unlike rawShingles' occurrences)
     val pos = base

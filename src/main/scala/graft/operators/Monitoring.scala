@@ -47,7 +47,7 @@ object Monitoring {
   def corpusCard(docs: DataFrame): DataFrame =
     docs.agg(
         count(lit(1)).as("n_docs"),
-        sum(size(split(trim(col("text")), "\\s+")).cast("long"))
+        sum(TextAnalysis.tokenCount(col("text")))
           .as("n_tokens"),
         countDistinct(col("lang")).as("n_langs"),
         countDistinct(col("source")).as("n_sources"),

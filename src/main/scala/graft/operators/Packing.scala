@@ -46,7 +46,7 @@ object Packing {
   private def tokenOffsets(docs: DataFrame, salt: String,
       keys: Seq[String] = Nil): DataFrame = {
     val keyCols = keys.map(col)
-    val tok = size(split(trim(col("text")), "\\s+")).cast("long")
+    val tok = TextAnalysis.tokenCount(col("text"))
     val skey = md5(concat(lit(salt), col("doc_id").cast("string")))
     val base = docs
       .select(keyCols :+ col("doc_id") :+ tok.as("tok") :+ skey.as("skey"): _*)
@@ -122,7 +122,7 @@ object Packing {
     require(budget > 0, s"token budget must be positive, got $budget")
     require(bounds == bounds.sorted && bounds.distinct == bounds,
       s"bucket bounds must be strictly increasing, got $bounds")
-    val tok = size(split(trim(col("text")), "\\s+")).cast("long")
+    val tok = TextAnalysis.tokenCount(col("text"))
     val bucket = bounds.zipWithIndex.foldRight(
       lit(bounds.length).cast("int"): Column) { case ((b, i), acc) =>
       when(tok < b, lit(i).cast("int")).otherwise(acc)

@@ -40,7 +40,7 @@ object Pipeline {
     // 4. deterministic hash-gated sample — the final corpus cut
     Sampling.deterministicSample(admitted, "doc_id", sampleFraction, "cur:")
       .select(col("doc_id"), col("lang"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("tok"),
+        TextAnalysis.tokenCount(col("text")).as("tok"),
         col("z"))
       .orderBy(col("doc_id"))
   }

@@ -33,7 +33,7 @@ object QualityModel {
     * compute bit-identical scores.
     */
   private def featureExprs: Seq[Column] = {
-    val w = split(trim(col("text")), "\\s+")
+    val w = TextAnalysis.whitespaceTokens(col("text"))
     val nTok = size(w).cast("double")
     Seq(log(lit(1.0) + nTok),
       size(array_distinct(w)).cast("double") / nTok,
@@ -122,7 +122,7 @@ object QualityModel {
       weights: Array[Double] = GateWeights): DataFrame = {
     val z = linearOf(weights, featureExprs)
     val prob4 = round(lit(1.0) / (lit(1.0) + exp(-z)), 4)
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = TextAnalysis.whitespaceTokens(col("text"))
     val cascadeKeep = when(
       size(toks) < TextAnalysis.CascadeMinTokens ||
         TextAnalysis.alphaRatioExpr < TextAnalysis.CascadeMinAlpha ||
@@ -167,7 +167,7 @@ object QualityModel {
     * gate) where a global sort is neither possible nor meaningful.
     */
   def weakLabelsOn(docs: DataFrame): DataFrame = {
-    val w = split(trim(col("text")), "\\s+")
+    val w = TextAnalysis.whitespaceTokens(col("text"))
     docs.select(col("doc_id"), col("n_chars"),
         size(w).cast("long").as("nt"),
         size(array_distinct(w)).cast("long").as("nd"),

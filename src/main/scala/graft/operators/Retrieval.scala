@@ -33,7 +33,7 @@ object Retrieval {
   def bm25TopK(docs: DataFrame, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75, topK: Int = 100): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val toks = filter(split(trim(col("text")), "\\s+"),
+    val toks = filter(TextAnalysis.whitespaceTokens(col("text")),
       t => length(t) > 0)
     val tfCols = terms.indices.map { i =>
       size(filter(col("toks"), t => t === lit(terms(i))))

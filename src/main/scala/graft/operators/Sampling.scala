@@ -164,7 +164,7 @@ object Sampling {
     */
   def langBalance(docs: DataFrame, salt: String = "bal:"): DataFrame = {
     val d = docs.select(col("doc_id"), col("lang"),
-      size(split(trim(col("text")), "\\s+")).cast("double").as("tok"))
+      size(TextAnalysis.whitespaceTokens(col("text"))).cast("double").as("tok"))
     // integer-valued doubles: all sums exact, so frac is bit-identical
     // in any engine and under any partitioning. The corpus total and
     // language count ride in as a broadcast 1-row scalar frame (the
@@ -217,7 +217,7 @@ object Sampling {
   def dsirWeights(docs: DataFrame, targetPred: Column): DataFrame = {
     val toks = docs
       .select(col("doc_id"), targetPred.as("is_t"),
-        explode(split(trim(col("text")), "\\s+")).as("token"))
+        explode(TextAnalysis.whitespaceTokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
     val tf = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -301,7 +301,7 @@ object Sampling {
       salt: String = "mixt:"): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
     val d = docs.select(col("doc_id"), col("source"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("tok"))
+      TextAnalysis.tokenCount(col("text")).as("tok"))
     val rates = tempTargets(d, budget)
       .withColumn("rate_micro",
         least(lit(1000000L), expr("(1000000 * t_s) div n_s")))
@@ -327,7 +327,7 @@ object Sampling {
       salt: String = "ups:"): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
     val d = docs.select(col("doc_id"), col("source"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("tok"))
+      TextAnalysis.tokenCount(col("text")).as("tok"))
     val rates = tempTargets(d, budget)
       .withColumn("f_micro", expr("(1000000 * t_s) div n_s"))
       .select(col("source").as("__us_source"), col("f_micro"))

@@ -45,7 +45,7 @@ object Sentences {
     * higher-order transform: zero shuffles.
     */
   def sentenced(docs: DataFrame): DataFrame = {
-    val w = split(trim(col("text")), "\\s+")
+    val w = TextAnalysis.whitespaceTokens(col("text"))
     val punct = transform(w, (t, i) =>
       concat(t, when(
         TextAnalysis.md5_60(concat(lit("sent:"), t, lit(":"), (i + 1).cast("string")))

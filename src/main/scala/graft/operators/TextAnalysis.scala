@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * scoring, token counting, fingerprinting (pipeline extensions,
   * SURVEY.md §7.2-M6). Everything is built from codegen'd built-ins so
   * the whole stage fuses, except winnowing and text normalization, which
-  * are native Catalyst expressions ([[graft.functions.WinnowFps]],
-  * [[graft.functions.NormText]]) with their own doGenCode — still zero
-  * UDFs.
+  * are native kernels ([[graft.functions.WinnowFps]],
+  * [[graft.functions.NormText]]) called from the generated code — still
+  * zero UDFs.
   */
 object TextAnalysis {
 
@@ -21,7 +21,7 @@ object TextAnalysis {
     * count. All integers → engine-exact.
     */
   def textStats(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = whitespaceTokens(col("text"))
     Tables(spark, dir).documents
       .select(
         col("doc_id"),
@@ -44,7 +44,7 @@ object TextAnalysis {
     * memory per row.
     */
   def repetition(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = whitespaceTokens(col("text"))
     Tables(spark, dir).documents
       .select(col("doc_id"), toks.as("w"))
       .filter(size(col("w")) >= 2)
@@ -75,7 +75,7 @@ object TextAnalysis {
     * ratio 0, not a DIVIDE_BY_ZERO under Spark 4's default ANSI mode
     * (token denominators are safe — split of '' is [''], size ≥ 1).
     */
-  private def qtToks = split(trim(col("text")), "\\s+")
+  private def qtToks = whitespaceTokens(col("text"))
   private[graft] def alphaRatioExpr: Column =
     length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
       greatest(length(col("text")), lit(1)).cast("double")
@@ -110,7 +110,7 @@ object TextAnalysis {
       "fr" -> Seq("le", "la", "les", "des", "et", "une"),
       "es" -> Seq("el", "los", "las", "que", "y", "una"),
       "de" -> Seq("der", "die", "das", "und", "ein", "nicht"))
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = whitespaceTokens(col("text"))
     def hits(ws: Seq[String]): Column =
       size(filter(toks, t => t.isin(ws.map(lit): _*)))
     val scored = Tables(spark, dir).documents.select(
@@ -142,6 +142,17 @@ object TextAnalysis {
   private[graft] def md5_60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** The one whitespace tokenization of a text column: SQL `trim` strips
+    * ASCII spaces only (never \t/\n/\r) and SQL `split` keeps leading and
+    * trailing empty tokens. The native n-gram kernels restate it
+    * ([[graft.functions.NgramAnyIn.sqlWhitespaceTokens]]), and the DuckDB
+    * oracles spell it `regexp_split_to_array(trim(text), '\s+')`.
+    */
+  private[graft] def whitespaceTokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** The [[whitespaceTokens]] count as a bigint. */
+  private[graft] def tokenCount(text: Column): Column = size(whitespaceTokens(text)).cast("long")
+
   /** Document fingerprint: 60-bit md5 digest over the raw text (whole-doc
     * fingerprint) and over the sorted token multiset (order-insensitive
     * "bag fingerprint" — catches shuffled near-copies). Both digests are
@@ -153,7 +164,7 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         md5_60(col("text")).as("fp"),
-        md5_60(concat_ws(" ", sort_array(split(trim(col("text")), "\\s+")))).as("bag_fp"))
+        md5_60(concat_ws(" ", sort_array(whitespaceTokens(col("text"))))).as("bag_fp"))
       .orderBy(col("doc_id"))
 
   /** Winnowing fingerprints (the MOSS scheme): hash every k-char gram,
@@ -266,7 +277,7 @@ object TextAnalysis {
       s"need 0 < stride <= chunkTokens, got stride=$stride chunk=$chunkTokens")
     val (c, s) = (chunkTokens, stride)
     docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+      .select(col("doc_id"), whitespaceTokens(col("text")).as("w"))
       .select(col("doc_id"), posexplode(expr(
         s"""transform(
               sequence(0, CASE WHEN size(w) <= $c THEN 0
@@ -297,7 +308,7 @@ object TextAnalysis {
     * task.
     */
   def ngramLm(spark: SparkSession, dir: String, topN: Int = 20): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = whitespaceTokens(col("text"))
     val counted = Tables(spark, dir).documents
       .select(col("lang"), toks.as("w"))
       .filter(size(col("w")) >= 2)
@@ -342,7 +353,7 @@ object TextAnalysis {
     */
   def vocabCoverage(docs: DataFrame, k: Int = VocabK): DataFrame = {
     val counts = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("token"))
+      .select(explode(whitespaceTokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("t")).scalar()
@@ -472,7 +483,7 @@ object TextAnalysis {
   def docPerplexity(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),
-        explode(split(trim(col("text")), "\\s+")).as("token"))
+        explode(whitespaceTokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
     val tf = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -513,7 +524,7 @@ object TextAnalysis {
   def tokenEntropy(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),
-        explode(split(trim(col("text")), "\\s+")).as("token"))
+        explode(whitespaceTokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
     toks
       .groupBy(col("doc_id"), xxhash64(col("token")).as("h"))
@@ -556,7 +567,7 @@ object TextAnalysis {
     */
   def bpePairCounts(docs: DataFrame, topN: Int = BpePairK): DataFrame = {
     val words = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(explode(whitespaceTokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
     val pairs = words
@@ -608,7 +619,7 @@ object TextAnalysis {
   def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(String, String, Long)] = {
     require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
     var words = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(explode(whitespaceTokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
       .select(split(col("word"), "").as("syms"), col("c"))
@@ -655,7 +666,7 @@ object TextAnalysis {
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     require(merges.nonEmpty, "need at least one merge")
     val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(col("doc_id"), explode(whitespaceTokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 1)
     val vocab0 = toks.select(col("word")).distinct()
       .select(col("word"), split(col("word"), "").as("syms"))
@@ -792,7 +803,7 @@ object TextAnalysis {
     */
   def unigramEncode(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(col("doc_id"), explode(whitespaceTokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 1)
     val vocab = toks.select(col("word")).distinct()
       .withColumn("word", when(length(col("word")) > UnigramMaxWordLen,
@@ -917,7 +928,7 @@ object TextAnalysis {
     */
   def wordpieceEncode(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(col("doc_id"), explode(whitespaceTokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 1)
     val vocab = toks.select(col("word")).distinct()
       .withColumn("word", when(length(col("word")) > WordpieceMaxWordLen,
@@ -1067,7 +1078,7 @@ object TextAnalysis {
          |      array(concat('<extra_id_', CAST(acc.k AS STRING), '>'))),
          |    'k', acc.k, 'prev', acc.prev))""".stripMargin)
     docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+      .select(col("doc_id"), whitespaceTokens(col("text")).as("w"))
       .withColumn("r", folded)
       .select(col("doc_id"),
         col("r.k").as("n_spans"),

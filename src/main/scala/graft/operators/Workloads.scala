@@ -35,7 +35,7 @@ object Workloads {
     */
   def wordCount(lines: DataFrame, textCol: String): DataFrame =
     lines
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
+      .select(explode(TextAnalysis.whitespaceTokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))

@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import org.json4s.{JInt, JLong, JObject}
+import org.json4s.jackson.JsonMethods
 
 /** DataSource V2 reader for the reference's native table format — SDFS
   * line-text tables where each line is `<key> <rest...>` and the key is
@@ -527,50 +529,24 @@ private class LineMicroBatchStream(path: String, splitBytes: Long,
 }
 
 private case class LineOffset(lens: Map[String, Long]) extends Offset {
-  // deterministic key order so offset equality is textual equality
-  override def json(): String = lens.toSeq.sorted
-    .map { case (f, n) => s"""${LineOffset.q(f)}:$n""" }
-    .mkString("{", ",", "}")
+  // keys sorted, so equal offsets are equal strings
+  override def json(): String =
+    JsonMethods.compact(JObject(lens.toList.sorted.map { case (f, n) => f -> JLong(n) }))
 }
 
 private object LineOffset {
-  def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-  } + "\""
-
   def parse(o: Offset): Map[String, Long] = o match {
     case LineOffset(m) => m
     case other => fromJson(other.json())
   }
 
-  /** Minimal parser for the flat {"file":len,...} object [[LineOffset.json]]
-    * emits (keys may contain escaped quotes/backslashes, values are
-    * plain longs).
-    */
-  def fromJson(json: String): Map[String, Long] = {
-    val body = json.trim.stripPrefix("{").stripSuffix("}")
-    if (body.isEmpty) Map.empty
-    else {
-      val out = Map.newBuilder[String, Long]
-      var i = 0
-      while (i < body.length) {
-        require(body.charAt(i) == '"', s"bad offset json at $i: $json")
-        i += 1
-        val sb = new StringBuilder
-        while (body.charAt(i) != '"') {
-          if (body.charAt(i) == '\\') i += 1
-          sb.append(body.charAt(i)); i += 1
-        }
-        i += 1 // closing quote
-        require(body.charAt(i) == ':', s"bad offset json at $i: $json")
-        i += 1
-        val numStart = i
-        while (i < body.length && body.charAt(i) != ',') i += 1
-        out += sb.toString -> body.substring(numStart, i).toLong
-        if (i < body.length) i += 1 // comma
-      }
-      out.result()
-    }
+  /** The flat `{"file":len,...}` object [[LineOffset.json]] emits. */
+  def fromJson(json: String): Map[String, Long] = JsonMethods.parse(json) match {
+    case JObject(fields) => fields.map {
+      case (f, JInt(n)) => f -> n.toLong
+      case (f, v)       => throw new IllegalArgumentException(s"bad offset of $f: $v in $json")
+    }.toMap
+    case other => throw new IllegalArgumentException(s"bad offset json: $other")
   }
 }
 

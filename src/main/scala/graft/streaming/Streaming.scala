@@ -536,7 +536,7 @@ object Streaming {
     import spark.implicits._
     val banded = docs
       // same surviving-token filter as the batch simhash
-      .filter(exists(split(trim(col("text")), "\\s+"), t => length(t) > 0))
+      .filter(exists(graft.operators.TextAnalysis.whitespaceTokens(col("text")), t => length(t) > 0))
       .select(col("doc_id"),
         graft.functions.SimHash60.simhash60(col("text")).as("fp"))
       .select(col("doc_id"), col("fp"),
@@ -710,7 +710,7 @@ object Streaming {
     import spark.implicits._
     docs
       .select(col("doc_id"), col("lang"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("tok"))
+        graft.operators.TextAnalysis.tokenCount(col("text")).as("tok"))
       .as[AdmitDoc]
       .groupByKey(_.lang)
       .flatMapGroupsWithState[AdmitState, Admitted](

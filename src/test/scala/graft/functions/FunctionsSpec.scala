@@ -5,8 +5,9 @@ import graft.functions.VecDot.vecDot
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native Catalyst expressions: codegen path (through a DataFrame select)
-  * must agree with the interpreted twin and with known external vectors.
+/** Native kernels: the codegen path (through a DataFrame select) must
+  * agree with the kernel function called directly and with known external
+  * vectors.
   */
 class VecDotSpec extends AnyFunSuite with SparkTestSession {
 
@@ -158,7 +159,7 @@ class SimHash60Spec extends AnyFunSuite with SparkTestSession {
     val got = cases.map(_._1).toDF("s")
       .selectExpr("norm_text(s)").as[String].collect().toSeq
     assert(got === cases.map(_._2))
-    // interpreted twin agrees (codegen/eval parity)
+    // the kernel's normalization called directly agrees
     cases.foreach { case (in, want) => assert(NormText.normalize(in) === want) }
     // both spellings of café now fingerprint identically
     val fps = Seq(decomposedCafe, precomposed).toDF("s")
@@ -209,7 +210,7 @@ class PqArgminSpec extends AnyFunSuite with SparkTestSession {
 }
 
 class SortedIntersectCountSpec extends AnyFunSuite with SparkTestSession {
-  import SortedIntersectCount.sortedIntersectCount
+  import SortedIntersectCount.merge
 
   test("equals size(array_intersect) on randomized sorted sets (seeded)") {
     import spark.implicits._
@@ -219,36 +220,19 @@ class SortedIntersectCountSpec extends AnyFunSuite with SparkTestSession {
       val b = Seq.fill(rng.nextInt(60))(rng.nextInt(80).toLong).distinct.sorted
       (a.toArray, b.toArray)
     }
-    val got = rows.toDF("a", "b").select(
-      sortedIntersectCount(col("a"), col("b")).as("native"),
-      size(array_intersect(col("a"), col("b"))).as("spark")).collect()
-    assert(got.forall(r => r.getInt(0) == r.getInt(1)))
+    val want = rows.toDF("a", "b").select(size(array_intersect(col("a"), col("b"))))
+      .as[Int].collect()
+    assert(rows.map { case (a, b) => merge(a, b) } === want.toSeq)
   }
 
   test("empty / disjoint / identical / negative-spanning inputs") {
-    import spark.implicits._
     val cases = Seq(
       (Array.empty[Long], Array(1L, 2L), 0),
       (Array(1L, 3L, 5L), Array(2L, 4L, 6L), 0),
       (Array(Long.MinValue, -7L, 0L, Long.MaxValue),
         Array(Long.MinValue, -7L, 0L, Long.MaxValue), 4),
       (Array(-5L, 1L, 9L), Array(-5L, 9L, 10L), 2))
-    val got = cases.map { case (a, b, _) =>
-      Seq((a, b)).toDF("a", "b")
-        .select(sortedIntersectCount(col("a"), col("b"))).head().getInt(0)
-    }
-    assert(got === cases.map(_._3))
-  }
-
-  test("null array propagates; null elements (array_sort tail) ignored") {
-    val r1 = spark.sql(
-      "SELECT sorted_intersect_count(CAST(NULL AS ARRAY<BIGINT>), array(1L))").collect()
-    assert(r1.head.isNullAt(0))
-    // array_sort ascending parks nulls last: the scan must stop there
-    // having already counted every non-null match
-    val r2 = spark.sql(
-      "SELECT sorted_intersect_count(array(1L, 2L, NULL), array(2L, NULL))").collect()
-    assert(r2.head.getInt(0) === 1)
+    assert(cases.map { case (a, b, _) => merge(a, b) } === cases.map(_._3))
   }
 
   test("agrees with array_intersect on real shingle sets (interpreted twin too)") {
@@ -259,23 +243,11 @@ class SortedIntersectCountSpec extends AnyFunSuite with SparkTestSession {
     val pairs = sets.select(col("doc_id").as("a_id"), col("hs").as("ha"))
       .crossJoin(sets.select(col("doc_id").as("b_id"), col("hs").as("hb")))
       .filter(col("a_id") < col("b_id")).limit(2000)
-    val rows = pairs.select(
-      sortedIntersectCount(col("ha"), col("hb")).as("native"),
-      size(array_intersect(col("ha"), col("hb"))).as("spark"),
+    val rows = pairs.select(size(array_intersect(col("ha"), col("hb"))).as("spark"),
       col("ha"), col("hb")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      assert(r.getInt(0) === r.getInt(1))
-      // interpreted twin (nullSafeEval) against the codegen result
-      val ha = r.getSeq[Long](2).toArray
-      val hb = r.getSeq[Long](3).toArray
-      var (i, j, c) = (0, 0, 0)
-      while (i < ha.length && j < hb.length) {
-        if (ha(i) < hb(j)) i += 1
-        else if (ha(i) > hb(j)) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-      assert(c === r.getInt(0))
+      assert(merge(r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray) === r.getInt(0))
     }
   }
 
@@ -297,7 +269,7 @@ class SortedIntersectCountSpec extends AnyFunSuite with SparkTestSession {
     rows.foreach { r =>
       assert(r.getLong(0) === r.getLong(2))
       assert(r.getLong(1) === r.getLong(3))
-      // interpreted twin (nullSafeEval path) against the codegen result
+      // an in-memory reference against the codegen result
       val v = r.getSeq[Float](4).toArray
       def ref(off: Int, means: Array[Long]): Long =
         (0 until 32).foldLeft(0L)((acc, d) =>
@@ -456,5 +428,88 @@ class ShingleHashesSpec extends AnyFunSuite with SparkTestSession {
     val docs = Seq((0L, Option.empty[String]), (1L, Some("x y z"))).toDF("doc_id", "text")
     val got = kernelHashes(docs, 2).collect()
     assert(got.forall(_.getLong(0) == 1L) && got.length == 2)
+  }
+}
+
+/** The one kernel expression: both evaluation paths agree for every
+  * scalar kernel, and a call's identity is its name and arguments.
+  */
+class KernelCallSpec extends AnyFunSuite with SparkTestSession
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+  import org.apache.spark.sql.execution.WholeStageCodegenExec
+
+  private val fixture = "/root/testdata/sf0.001"
+
+  /** A 4 × 16 codebook as a SQL literal. */
+  private val book = (0 until 4).map(c =>
+    (0 until 16).map(d => s"${((c * 16 + d) % 7 - 3) / 10.0}D").mkString("array(", ", ", ")"))
+    .mkString("array(", ", ", ")")
+
+  /** Every scalar kernel as (table, SQL over its `text` or `embedding`). */
+  private def calls(hashes: Seq[Long]): Seq[(String, String)] = Seq(
+    "documents" -> "norm_text(text)",
+    "documents" -> "simhash60(text)",
+    "documents" -> "shingle_hashes(text, 3)",
+    "documents" -> "winnow_fps(text, 5, 4)",
+    "documents" -> s"ngram_any_in(text, 3, array(${hashes.map(h => s"${h}L").mkString(", ")}))",
+    "embeddings" -> "vec_dot(embedding, embedding)",
+    "embeddings" -> "vec_dot(embedding, array(0.5D, -0.25D, 2D))",
+    "embeddings" -> "lsh_bands(embedding, 64, 8)",
+    "embeddings" -> "maxsim_micro(embedding, embedding, 4, 16)",
+    "embeddings" -> s"pq_argmin(embedding, 16, 16, $book)",
+    "embeddings" -> s"pq_argmin_dist(embedding, 0, 16, $book)",
+    "embeddings" -> "sign_pack(embedding, 32, array_repeat(0L, 32))",
+    "embeddings" -> ("hilbert_xy2d(pmod(CAST(embedding[0] * 1e6 AS BIGINT), 256), " +
+      "pmod(CAST(embedding[1] * 1e6 AS BIGINT), 256), 8)"))
+
+  /** `sql` over `table`'s fixture rows, the first row's input nulled in
+    * the data (not a literal, which constant folding would evaluate).
+    */
+  private def run(s: SparkSession, table: String, sql: String): (Seq[Row], Boolean) = {
+    val (id, in) = if (table == "documents") ("doc_id", "text") else ("vec_id", "embedding")
+    val t = graft.Engine.Tables(s, fixture).table(table)
+    val first = t.agg(min(col(id))).head().get(0)
+    val df = t.select(col(id), when(col(id) === lit(first), lit(null)).otherwise(col(in)).as(in))
+      .selectExpr(id, s"$sql AS out")
+    val rows = df.collect().sortBy(_.getLong(0)).toSeq
+    (rows, find(df.queryExecution.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).nonEmpty)
+  }
+
+  test("codegen and interpreted eval agree for every scalar kernel, null input included") {
+    val hashes = graft.Engine.Tables(spark, fixture).documents
+      .select(explode(ShingleHashes.shingleHashes(col("text"), 3)))
+      .limit(5).collect().map(_.getLong(0)).toSeq
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val kernels = calls(hashes).map(_._2.takeWhile(_ != '(')).toSet
+    assert(kernels.size === 12, kernels)
+    for ((table, sql) <- calls(hashes)) {
+      val (compiled, wholeStage) = run(spark, table, sql)
+      val (evaluated, wholeStageOff) = run(interpreted, table, sql)
+      assert(wholeStage && !wholeStageOff, sql)
+      assert(compiled.head.isNullAt(1), s"$sql: null input")
+      assert(compiled.size > 1 && compiled.tail.forall(!_.isNullAt(1)), sql)
+      assert(evaluated === compiled, sql)
+    }
+  }
+
+  test("two separately built calls with equal arguments are semanticEquals") {
+    def kernel(df: DataFrame): Expression =
+      df.queryExecution.analyzed.expressions.head.asInstanceOf[Alias].child
+    // one frame per table: its attributes are the calls' shared input
+    val t = graft.Engine.Tables(spark, fixture)
+    val (docs, vecs) = (t.documents, t.embeddings)
+    val a = kernel(docs.select(ShingleHashes.shingleHashes(col("text"), 3)))
+    val b = kernel(docs.select(ShingleHashes.shingleHashes(col("text"), 3)))
+    assert(a.isInstanceOf[KernelCall] && (a ne b))
+    assert(a.semanticEquals(b))
+    val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0))
+    def pq(c: Seq[Array[Double]]) =
+      kernel(vecs.select(PqArgmin.pqArgmin(col("embedding"), c, 0, 2)))
+    assert(pq(cents).semanticEquals(pq(cents.map(_.clone))))
+    assert(!pq(cents).semanticEquals(pq(Seq(Array(2.0, 0.0)))))
   }
 }

@@ -28,7 +28,6 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
     "shingle_hashes" -> ("graft.functions.ShingleHashes", 2 to 2),
     "sign_pack" -> ("graft.functions.SignPack", 3 to 3),
     "simhash60" -> ("graft.functions.SimHash60", 1 to 1),
-    "sorted_intersect_count" -> ("graft.functions.SortedIntersectCount", 2 to 2),
     "topk_structs" -> ("graft.functions.TopKStructs", 2 to 2),
     "vec_dot" -> ("graft.functions.VecDot", 2 to 2),
     "winnow_fps" -> ("graft.functions.WinnowFps", 3 to 3))
@@ -41,7 +40,7 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
       .collectFirst { case l if l.startsWith("Class:") => l.stripPrefix("Class:").trim }
       .getOrElse(fail(s"DESCRIBE FUNCTION $name has no Class line"))
 
-  test("the registrar injects exactly the 16 pinned names") {
+  test("the registrar injects exactly the 15 pinned names") {
     val injected = scala.collection.mutable.ArrayBuffer.empty[String]
     val ext = new SparkSessionExtensions {
       override def injectFunction(
@@ -52,7 +51,7 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
     }
     Natives.register(ext)
     assert(injected.sorted.toSeq === pinned.keys.toSeq.sorted)
-    assert(injected.length === 16)
+    assert(injected.length === 15)
   }
 
   test("every name resolves in Engine.session and a newSession() child, same class") {
@@ -99,6 +98,29 @@ class NativesSpec extends AnyFunSuite with SparkTestSession {
       val e = intercept[Throwable](t.selectExpr(call.replace("$", "c")))
       assert(causes(e).exists(c => c.getMessage != null &&
         c.getMessage.contains(s"$name: $arg must")), s"$name/$arg: $e")
+    }
+  }
+
+  test("a wrong input type fails at analysis, naming the function") {
+    val calls = Seq(
+      "hilbert_xy2d" -> "hilbert_xy2d(s, x, 8)",
+      "lsh_bands" -> "lsh_bands(s, 8, 4)",
+      "maxsim_micro" -> "maxsim_micro(s, v, 1, 1)",
+      "ngram_any_in" -> "ngram_any_in(v, 2, array(1L))",
+      "norm_text" -> "norm_text(v)",
+      "pq_argmin" -> "pq_argmin(s, 0, 1, array(array(1D)))",
+      "pq_argmin_dist" -> "pq_argmin_dist(s, 0, 1, array(array(1D)))",
+      "shingle_hashes" -> "shingle_hashes(v, 2)",
+      "sign_pack" -> "sign_pack(s, 0, array_repeat(0L, 32))",
+      "simhash60" -> "simhash60(v)",
+      "vec_dot" -> "vec_dot(s, v)",
+      "winnow_fps" -> "winnow_fps(v, 5, 4)")
+    assert(calls.map(_._1).toSet === pinned.keySet.filterNot(n =>
+      n.startsWith("bloom_") || n == "topk_structs"))
+    val t = spark.range(1).selectExpr("id AS x", "array(CAST(1.0 AS FLOAT)) AS v", "'a b c' AS s")
+    for ((name, call) <- calls) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](t.selectExpr(call))
+      assert(e.getMessage.contains(s"$name requires"), s"$call: ${e.getMessage}")
     }
   }
 }

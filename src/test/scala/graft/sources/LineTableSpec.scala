@@ -14,6 +14,17 @@ class LineTableSpec extends AnyFunSuite with SparkTestSession {
     spark.read.format("graft.sources.LineTable")
       .option("path", dir).option("maxSplitBytes", split).load()
 
+  test("stream offsets: quote, backslash and non-ASCII paths round-trip; sorted keys") {
+    val lens = Map("/data/z.txt" -> 3L, "/data/a\"q\\b/caf\u00e9.txt" -> 12L)
+    // offset JSON as checkpoints already hold it: `"` and `\` escaped,
+    // every other character as it is
+    val written = "{\"/data/a\\\"q\\\\b/caf\u00e9.txt\":12,\"/data/z.txt\":3}"
+    assert(LineOffset(lens).json() === written)
+    assert(LineOffset.fromJson(written) === lens)
+    assert(LineOffset.fromJson(LineOffset(lens).json()) === lens)
+    assert(LineOffset.fromJson(LineOffset(Map.empty).json()) === Map.empty)
+  }
+
   test("every line read exactly once at ANY split size") {
     val dir = graft.Scratch.dir("lt-split-")
     val lines = (0 until 200).map(i => s"key${i % 7} payload $i with words")

@@ -34,7 +34,13 @@
 #                              `spark.graft.dedup.maxCellSigBytes`, the
 #                              remedies the dedup grid cell's loud failure
 #                              names (a value with one setting in use is a
-#                              constant, not a knob).
+#                              constant, not a knob); and of `src/main` for
+#                              `doGenCode` outside graft.functions.KernelCall
+#                              (a scalar kernel is one plain function and
+#                              one Natives row, never its own expression
+#                              class) and for `split(trim(` outside
+#                              TextAnalysis.whitespaceTokens (the one
+#                              whitespace tokenization).
 #   4. `sbt test`            — the full ScalaTest suite. Its compile fails
 #                              on any unused import, private, local or
 #                              implicit in main or test code (build.sbt's
@@ -68,7 +74,7 @@ if [ "$(echo "$inj" | grep -c .)" != 1 ] ||
   echo "[ci] FAIL: add native functions to graft.functions.Natives; Engine.session installs it once"
   exit 1
 fi
-echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code, no deprecated shims, orphaned scaladocs or new conf keys in main code"
+echo "[ci] 3/6 one harness path in main code, one scratch-dir rule in main and test code, one reference-fixture path in test code, no deprecated shims, orphaned scaladocs, new conf keys, per-kernel expression classes or second tokenization spelling in main code"
 stray=$( (grep -rn 'def main(' src/main |
     grep -vE '^src/main/scala/graft/(Bench|Verify|Stress|Explain|Cli)\.scala:'
   grep -rn 'SPARK_GRAFT_CPUS' src/main | grep -v '^src/main/scala/graft/Harness\.scala:'
@@ -80,10 +86,12 @@ stray=$( (grep -rn 'def main(' src/main |
   grep -rlPz '\*/[ \t]*\n\s*/\*\*' src/main | sed 's/$/: orphaned scaladoc/'
   grep -rnoE 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' src/main |
     grep -vE ':spark\.graft\.dedup\.(gridB|maxCellSigBytes)$'
+  grep -rn 'doGenCode' src/main | grep -v '^src/main/scala/graft/functions/KernelCall\.scala:'
+  grep -rnE '(^|[^_[:alnum:]])split\(trim\(' src/main | grep -v 'def whitespaceTokens('
   ) || true)
 if [ -n "$stray" ]; then
   echo "$stray"
-  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims, no scaladoc that documents nothing, and no spark.graft.* key but dedup.gridB and dedup.maxCellSigBytes"
+  echo "[ci] FAIL: mains are Bench/Verify/Stress/Explain/Cli, sessions come from Harness.session, scratch dirs from Scratch.dir, reference inputs from RefFixture.path; main code has no @deprecated shims, no scaladoc that documents nothing, no spark.graft.* key but dedup.gridB and dedup.maxCellSigBytes, no doGenCode but KernelCall's (add a kernel as a function and a Natives row) and no split(trim( but TextAnalysis.whitespaceTokens"
   exit 1
 fi
 echo "[ci] 4/6 sbt test (unused code fails the compile)"
